@@ -9,19 +9,22 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 
 /** Scan relation fed DIRECTLY from the planned file list (path + length
-  * from manifest metadata) instead of `spark.read.parquet(paths: _*)`.
+  * from manifest metadata) instead of `spark.read.parquet(paths: _*)` —
+  * the data-file read of every `ScanBuilder.toDF`.
   *
-  * Why it exists (the 100-TB planning bug it removes): the path-list API
-  * builds an InMemoryFileIndex, which issues one driver-side filesystem
-  * getFileStatus per path and keeps every path string in the plan — at
-  * millions of surviving files the PLAN becomes the driver object even
-  * when the entries were pruned distributed. Iceberg manifests already
-  * know each file's size, so this index serves Spark's FileIndex
+  * The path-list API builds an InMemoryFileIndex, which globs each path,
+  * issues one driver-side filesystem getFileStatus per path and keeps
+  * every path string in the plan: a fixed cost on every small scan, and
+  * at millions of surviving files the PLAN becomes the driver object
+  * even when the entries were pruned distributed. Iceberg manifests
+  * already know each file's size, so this index serves Spark's FileIndex
   * contract from metadata alone: zero filesystem listing/stat calls, one
   * PartitionDirectory, and a plan that prints the index class instead of
-  * a million-string location list. Parquet pushdown/codegen are
-  * untouched — downstream of the FileIndex this IS the native parquet
-  * scan (FileSourceScanExec + vectorized reader + PushedFilters). */
+  * a location list. Its FileStatus carries no block locations, so Spark
+  * schedules these splits without locality preferences. Parquet
+  * pushdown/codegen are untouched — downstream of the FileIndex this IS
+  * the native parquet scan (FileSourceScanExec + vectorized reader +
+  * PushedFilters). */
 final class ManifestFileIndex(files: Seq[(String, Long)]) extends FileIndex {
 
   override def rootPaths: Seq[Path] = Nil
@@ -46,8 +49,7 @@ final class ManifestFileIndex(files: Seq[(String, Long)]) extends FileIndex {
 
 object FileListRelation {
   /** Parquet DataFrame over an explicit file list with a known schema —
-    * the scale path `ScanBuilder.toDF` switches to past
-    * `graft.plan.file-list-threshold` files. */
+    * how `ScanBuilder.toDF` reads every group of parquet data files. */
   def parquet(spark: SparkSession, files: Seq[(String, Long)],
       schema: StructType): DataFrame = {
     val relation = HadoopFsRelation(

@@ -659,8 +659,11 @@ final class IceTable private (
   /** Live delete-file entries of a snapshot (position + equality deletes,
     * §2.8 — the reference models these but rejects them at plan time,
     * table_scan.cc:288-291; here they feed the merge-on-read anti-joins). */
-  def planDeleteEntries(snapshot: Snapshot): Seq[ManifestEntry] = {
-    val manifests = ManifestAvro.readManifestList(snapshot.manifestList)
+  def planDeleteEntries(snapshot: Snapshot): Seq[ManifestEntry] =
+    liveDeleteEntries(ManifestAvro.readManifestList(snapshot.manifestList))
+
+  /** [[planDeleteEntries]] over a snapshot's already-decoded manifest list. */
+  private[ice] def liveDeleteEntries(manifests: Seq[ManifestFile]): Seq[ManifestEntry] = {
     val deletes = manifests.filter(_.content == ManifestContent.Deletes)
     // read.delete-planning-mode (table_properties.h:205): auto sizes via
     // the same estimated-entry threshold as data planning; `distributed`
@@ -697,8 +700,13 @@ final class IceTable private (
     * files must not materialize every entry as driver objects — reference
     * anchor: PlanFiles, table_scan.cc:264-296, which has no such bound). */
   def planEntries(snapshot: Snapshot, rowFilter: Option[Bound],
-      pathFilter: Option[Set[String]] = None): Seq[ManifestEntry] = {
-    val manifests = ManifestAvro.readManifestList(snapshot.manifestList)
+      pathFilter: Option[Set[String]] = None): Seq[ManifestEntry] =
+    planDataEntries(snapshot, ManifestAvro.readManifestList(snapshot.manifestList),
+      rowFilter, pathFilter)
+
+  /** [[planEntries]] over the snapshot's already-decoded manifest list. */
+  private[ice] def planDataEntries(snapshot: Snapshot, manifests: Seq[ManifestFile],
+      rowFilter: Option[Bound], pathFilter: Option[Set[String]]): Seq[ManifestEntry] = {
     val dataManifests = manifests.filter(_.content == ManifestContent.Data)
     val scanSchema = snapshot.schemaId.flatMap(meta.schemaById).getOrElse(schema)
 
@@ -1141,40 +1149,51 @@ final class ScanBuilder(table: IceTable) {
     }
   }
 
-  def planFiles(): Seq[FileScanTask] = resolveSnapshot() match {
-    case None => Nil
-    case Some(snap) =>
-      val bound = filterExpr.map(e => Binder.bind(e, table.schema, caseSensitive))
-      val tasks0 = incremental match {
-        case Some((from, to)) =>
-          table.planAppendsBetween(from, to)
+  def planFiles(): Seq[FileScanTask] = plan(withDeletes = false)._1
+
+  /** The scan's data tasks plus the live delete entries it must apply
+    * (none for an incremental append scan), from ONE decode of the
+    * snapshot's manifest list. */
+  private[ice] def planFilesWithDeletes(): (Seq[FileScanTask], Seq[ManifestEntry]) =
+    plan(withDeletes = true)
+
+  private def plan(withDeletes: Boolean): (Seq[FileScanTask], Seq[ManifestEntry]) =
+    resolveSnapshot() match {
+      case None => (Nil, Nil)
+      case Some(snap) =>
+        lazy val manifests = ManifestAvro.readManifestList(snap.manifestList)
+        lazy val deletes = table.liveDeleteEntries(manifests)
+        val bound = filterExpr.map(e => Binder.bind(e, table.schema, caseSensitive))
+        val tasks0 = incremental match {
+          case Some((from, to)) =>
+            table.planAppendsBetween(from, to)
+              .map(e => FileScanTask(e.dataFile, e.specId,
+                e.sequenceNumber, e.snapshotId))
+          // restrictPaths rides INTO planning (driver or executor side), so
+          // a restricted scan of a million-file snapshot collects only the
+          // restricted entries, not the whole live set
+          case None => table.planDataEntries(snap, manifests, bound, restrictPaths)
             .map(e => FileScanTask(e.dataFile, e.specId,
               e.sequenceNumber, e.snapshotId))
-        // restrictPaths rides INTO planning (driver or executor side), so
-        // a restricted scan of a million-file snapshot collects only the
-        // restricted entries, not the whole live set
-        case None => table.planEntries(snap, bound, restrictPaths)
-          .map(e => FileScanTask(e.dataFile, e.specId,
-            e.sequenceNumber, e.snapshotId))
-      }
-      val tasks = restrictPaths match {
-        case Some(ps) => tasks0.filter(t => ps.contains(t.file.filePath))
-        case None => tasks0
-      }
-      limitRows match {
-        // metadata-level truncation is only sound when every planned row
-        // is a result row: no residual filter, no pending deletes
-        case Some(n) if filterExpr.isEmpty &&
-            resolveSnapshot().forall(s => table.planDeleteEntries(s).isEmpty) =>
-          var acc = 0L
-          tasks.takeWhile { t =>
-            val take = acc < n
-            acc += t.file.recordCount
-            take
-          }
-        case _ => tasks
-      }
-  }
+        }
+        val tasks = restrictPaths match {
+          case Some(ps) => tasks0.filter(t => ps.contains(t.file.filePath))
+          case None => tasks0
+        }
+        val limited = limitRows match {
+          // metadata-level truncation is only sound when every planned row
+          // is a result row: no residual filter, no pending deletes
+          case Some(n) if filterExpr.isEmpty && deletes.isEmpty =>
+            var acc = 0L
+            tasks.takeWhile { t =>
+              val take = acc < n
+              acc += t.file.recordCount
+              take
+            }
+          case _ => tasks
+        }
+        (limited, if (withDeletes && incremental.isEmpty) deletes else Nil)
+    }
 
   /** Metadata-answered exact row count — the engine-API twin of the V2
     * aggregate pushdown. Some(n) only when manifests PROVE the count: no
@@ -1217,7 +1236,7 @@ final class ScanBuilder(table: IceTable) {
     val spark = IceTable.scanSession(spark0, table.properties)
     spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
     val s = scanSchema
-    val tasks = planFiles()
+    val (tasks, deleteEntries) = planFilesWithDeletes()
     val sparkSchema = SparkConv.toSpark(s)
     if (tasks.isEmpty) {
       return spark.createDataFrame(
@@ -1226,8 +1245,8 @@ final class ScanBuilder(table: IceTable) {
     val dataDirPrefixes = table.dataRoots.map(ManifestAvro.stripFileScheme)
     val plainSchema = org.apache.spark.sql.types.StructType(
       sparkSchema.fields.map(_.copy(metadata = org.apache.spark.sql.types.Metadata.empty)))
-    // manifest-known file sizes feed ManifestFileIndex past the file-list
-    // threshold (zero driver stat calls on the scale path)
+    // manifest-known file sizes feed ManifestFileIndex (zero driver
+    // listing or stat calls)
     val lenByPath: Map[String, Long] = tasks.map(t =>
       ManifestAvro.stripFileScheme(t.file.filePath) -> t.file.fileSizeInBytes).toMap
 
@@ -1321,14 +1340,10 @@ final class ScanBuilder(table: IceTable) {
         ts.map(t => (t, ManifestAvro.stripFileScheme(t.file.filePath)))
           .partition { case (t, p) => fileHasIds(t, p) }
       def read(schema: org.apache.spark.sql.types.StructType, ps: Seq[String]) = {
-        // past the threshold, serve the file list from manifest metadata
-        // (ManifestFileIndex): no per-path driver stat, no million-string
-        // plan — the scale path for snapshots with very many files
-        val base =
-          if (ps.size > table.metadata.property(TableProperties.ScanFileListThreshold))
-            FileListRelation.parquet(spark, ps.map(p =>
-              p -> lenByPath.getOrElse(p, 0L)), schema)
-          else spark.read.schema(schema).parquet(ps: _*)
+        // the file list and sizes come from manifest metadata
+        // (ManifestFileIndex): no glob, no per-path driver stat, no
+        // path-list plan
+        val base = FileListRelation.parquet(spark, ps.map(p => p -> lenByPath(p)), schema)
         if (withPosCols)
           base.withColumn("__file",
             regexp_replace(col("_metadata.file_path"), "^file:/*", "/"))
@@ -1460,9 +1475,7 @@ final class ScanBuilder(table: IceTable) {
     // (_file, _pos); equality deletes null-safe anti-join on their id
     // columns. Sequence-number visibility: position deletes apply to data
     // files with dataSeq <= deleteSeq; equality deletes to dataSeq < deleteSeq.
-    val deleteEntries =
-      if (incremental.isDefined) Nil // append-only semantics
-      else resolveSnapshot().map(table.planDeleteEntries).getOrElse(Nil)
+    // An incremental scan planned no deletes (append-only semantics).
     // `_deleted` switches MoR from filtering to MARKING: every row stays,
     // with a flag saying whether a delete applies (metadata_columns.h)
     val wantDeleted = metaCols.contains("_deleted")

@@ -748,6 +748,10 @@ private[connector] final class GraftBatchScan(table: IceTable,
     * execution time; setting it invalidates the plan cache so the next
     * `planInputPartitions` re-prunes manifests/files. */
   @volatile private var runtimeExpr: Option[IceExpr] = None
+  // the snapshot the first plan resolved: a runtime-filter re-plan reads
+  // it again, so the narrowed splits stay a subset of the first plan's
+  // (the reader factory built from that plan covers them)
+  @volatile private var replanSnapshotId: Option[Long] = pinnedSnapshotId
   private val plannedCache =
     new java.util.concurrent.atomic.AtomicReference[PlannedScan]()
 
@@ -763,7 +767,7 @@ private[connector] final class GraftBatchScan(table: IceTable,
   private def doPlan(): PlannedScan = {
     val builder = {
       val b = table.newScan()
-      pinnedSnapshotId.foreach(b.useSnapshot)
+      replanSnapshotId.foreach(b.useSnapshot)
       pruneExpr.foreach(b.filter)
       runtimeExpr.foreach(b.filter)
       b
@@ -772,9 +776,10 @@ private[connector] final class GraftBatchScan(table: IceTable,
     // a pushed LIMIT pre-planned just enough files (delete-free scan by
     // construction); a later runtime filter would re-plan past it, but
     // Spark never pushes a limit under a join, so the two cannot meet
-    val tasks = limitFiles.getOrElse(builder.planFiles())
-    val deleteEntries: Seq[ManifestEntry] =
-      snap.map(table.planDeleteEntries).getOrElse(Nil)
+    val (tasks, deleteEntries) = limitFiles match {
+      case Some(ts) => (ts, snap.map(table.planDeleteEntries).getOrElse(Nil))
+      case None => builder.planFilesWithDeletes()
+    }
     val posDeletes = deleteEntries.filter(_.dataFile.content == FileContent.PositionDeletes)
     val eqDeletes = deleteEntries.filter(_.dataFile.content == FileContent.EqualityDeletes)
 
@@ -925,7 +930,9 @@ private[connector] final class GraftBatchScan(table: IceTable,
   override def filter(predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit = {
     val converted = predicates.toSeq.flatMap(p => V2PredicateToIce.convert(p, table))
     if (converted.nonEmpty) {
-      val before = planned.parts.size
+      val first = planned
+      val before = first.parts.size
+      replanSnapshotId = first.snapshotId
       runtimeExpr = Some((runtimeExpr.toSeq ++ converted).reduce(IceExpr.and))
       plannedCache.set(null)
       GraftRuntimeFilterStats.plansWithRuntimeFilter.incrementAndGet()
@@ -998,7 +1005,23 @@ private[connector] final class GraftBatchScan(table: IceTable,
 
   // ---- reader factory (driver-built closures, executor-run) ----
 
+  // Spark asks for a factory while planning and again on the plan's
+  // clone it executes; both read the same plan, so build once per plan
+  private val factoryCache =
+    new java.util.concurrent.atomic.AtomicReference[(PlannedScan, PartitionReaderFactory)]()
+
   override def createReaderFactory(): PartitionReaderFactory = {
+    val plan = planned
+    val cached = factoryCache.get()
+    if (cached != null && (cached._1 eq plan)) cached._2
+    else {
+      val f = buildReaderFactory(plan.splits)
+      factoryCache.set((plan, f))
+      f
+    }
+  }
+
+  private def buildReaderFactory(splits: Seq[GraftScanSplit]): PartitionReaderFactory = {
     val spark = SparkSession.active
     // field-id column resolution for our own files (rename-safe); files
     // without ids (addFiles-registered) read by current name
@@ -1013,7 +1036,7 @@ private[connector] final class GraftBatchScan(table: IceTable,
     val dataRequired = StructType(required.fields.filterNot(f =>
       f.name == "_file" || f.name == "_last_updated_sequence_number"))
 
-    val eqCols: Seq[String] = planned.splits.flatMap(_.deletes.eqDeletes.flatMap(_._3)).distinct
+    val eqCols: Seq[String] = splits.flatMap(_.deletes.eqDeletes.flatMap(_._3)).distinct
     val fullByName = SparkConv.toSpark(table.schema).fields.map(f => f.name -> f).toMap
     // the executor must SEE equality-delete key columns even when the
     // query pruned them away; read them, anti-filter, then project back
@@ -1071,9 +1094,25 @@ private[connector] final class GraftBatchScan(table: IceTable,
 
     val posDeleteSchema = GraftReaderFactory.PosDeleteSchema
     val eqSchemas: Map[Seq[String], StructType] =
-      planned.splits.flatMap(_.deletes.eqDeletes.map(_._3)).distinct
+      splits.flatMap(_.deletes.eqDeletes.map(_._3)).distinct
         .map(cols => cols -> StructType(cols.map(c =>
           fullByName(c).copy(metadata = Metadata.empty)))).toMap
+
+    // build only the reader slots the planned splits can reach: every
+    // reader build broadcasts the session's Hadoop conf, so a delete-free
+    // scan of this library's own files pays for one reader, not six. A
+    // runtime (DPP) filter re-plans the same snapshot and only narrows
+    // the splits, so the slots built here still cover every split read.
+    type Read = PartitionedFile => Iterator[InternalRow]
+    def slot(name: String, needed: Boolean)(build: => Read): Read =
+      if (needed) build else GraftReaderFactory.unbuilt(name)
+    val dataCombos = splits.map(s => (s.useFieldIds, s.deletes.hasPositional)).toSet
+    val posNeeds = splits.flatMap(_.deletes.posDeleteFiles)
+      .map(f => GraftReaderFactory.deleteReadersFor(f._3))
+    val eqNeeds: Map[Seq[String], Seq[(Boolean, Boolean)]] =
+      splits.flatMap(_.deletes.eqDeletes).groupBy(_._3).map { case (cols, fs) =>
+        cols -> fs.map(f => GraftReaderFactory.deleteReadersFor(f._4))
+      }
 
     // v3 initial-defaults as catalyst values keyed by field id, with the
     // ordinal each occupies in the read schema (absent when the query
@@ -1117,14 +1156,26 @@ private[connector] final class GraftBatchScan(table: IceTable,
       }.toMap
 
     GraftReaderFactory(
-      readIds = mkReader(readSchemaIds, v1Filters.toSeq),
-      readIdsRaw = mkReader(readSchemaIds, Nil),
-      readPlain = mkReader(plain, v1Filters.toSeq),
-      readPlainRaw = mkReader(plain, Nil),
-      readPosDeletes = mkReader(posDeleteSchema, Nil),
-      readEqDeletes = eqSchemas.map { case (cols, s) => cols -> mkReader(s, Nil) },
-      readPosDeletesOrc = mkOrcReader(posDeleteSchema),
-      readEqDeletesOrc = eqSchemas.map { case (cols, s) => cols -> mkOrcReader(s) },
+      readIds = slot("readIds", dataCombos((true, false)))(
+        mkReader(readSchemaIds, v1Filters.toSeq)),
+      readIdsRaw = slot("readIdsRaw", dataCombos((true, true)))(
+        mkReader(readSchemaIds, Nil)),
+      readPlain = slot("readPlain", dataCombos((false, false)))(
+        mkReader(plain, v1Filters.toSeq)),
+      readPlainRaw = slot("readPlainRaw", dataCombos((false, true)))(
+        mkReader(plain, Nil)),
+      readPosDeletes = slot("readPosDeletes", posNeeds.exists(_._1))(
+        mkReader(posDeleteSchema, Nil)),
+      readEqDeletes = eqSchemas.map { case (cols, s) =>
+        cols -> slot(cols.mkString("readEqDeletes(", ",", ")"),
+          eqNeeds(cols).exists(_._1))(mkReader(s, Nil))
+      },
+      readPosDeletesOrc = slot("readPosDeletesOrc", posNeeds.exists(_._2))(
+        mkOrcReader(posDeleteSchema)),
+      readEqDeletesOrc = eqSchemas.map { case (cols, s) =>
+        cols -> slot(cols.mkString("readEqDeletesOrc(", ",", ")"),
+          eqNeeds(cols).exists(_._2))(mkOrcReader(s))
+      },
       readSchema = readSchemaIds,
       eqSchemas = eqSchemas,
       outputTemplate = outputTemplate,
@@ -1461,6 +1512,26 @@ private[connector] object GraftReaderFactory {
     } catch { case _: java.io.EOFException => false
     } finally in.close()
   }
+
+  private def normFormat(format: String): String =
+    if (format == null) "" else format.toUpperCase(java.util.Locale.ROOT)
+
+  /** The container readers a delete file of manifest format `format` may
+    * need, as (parquet, ORC) — the dispatch of `deleteFileRows`: avro
+    * decodes without either, and an absent or unknown format is sniffed
+    * and may land on both. */
+  def deleteReadersFor(format: String): (Boolean, Boolean) = normFormat(format) match {
+    case "AVRO" => (false, false)
+    case "ORC" => (false, true)
+    case "PARQUET" => (true, false)
+    case _ => (true, true)
+  }
+
+  /** A reader slot the planned splits cannot reach: reaching it anyway
+    * means the factory no longer covers its splits, so fail loudly. */
+  def unbuilt(slot: String): PartitionedFile => Iterator[InternalRow] =
+    f => throw new IllegalStateException(
+      s"reader $slot was not built for this scan, yet ${f.filePath} needs it")
 }
 
 private[connector] final case class GraftReaderFactory(
@@ -1513,7 +1584,7 @@ private[connector] final case class GraftReaderFactory(
       graft.ice.manifest.AvroData.fileRows(path, schema)
         .map(r => conv(r).asInstanceOf[InternalRow])
     }
-    (if (format == null) "" else format.toUpperCase(java.util.Locale.ROOT)) match {
+    GraftReaderFactory.normFormat(format) match {
       case "AVRO" => avroRows
       case "ORC" => rows(orcRead, pf(path, size))
       case "PARQUET" => rows(parquetRead, pf(path, size))

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.avro.Schema.{Parser => AvroParser}
 import org.apache.avro.file.{DataFileReader, DataFileWriter}
-import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
+import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -286,7 +286,7 @@ object AvroData {
       start: Long, end: Long,
       mappedNames: Map[Long, Seq[String]]): Iterator[Row] = {
     val reader = new DataFileReader[GenericRecord](
-      new File(path), new GenericDatumReader[GenericRecord]())
+      new File(path), ManifestAvro.genericDatumReader())
     // sync-marker split (the reference's split unit, avro_reader.cc:
     // 127-130, same protocol as avro-mapred): advance to the first block
     // boundary at/after `start`, stop once the reader passes `end` — each
@@ -371,7 +371,7 @@ object AvroData {
     * helper for addFiles; at write time prefer recording counts. */
   def countRecords(path: String): Long = {
     val reader = new DataFileReader[GenericRecord](
-      new File(path), new GenericDatumReader[GenericRecord]())
+      new File(path), ManifestAvro.genericDatumReader())
     try {
       var n = 0L
       while (reader.hasNext) { n += reader.getBlockCount; reader.nextBlock() }

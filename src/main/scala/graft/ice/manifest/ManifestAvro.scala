@@ -296,21 +296,30 @@ object ManifestAvro {
 
   // ---------------- manifest list ----------------
 
-  /** Read a manifest list (S3; manifest_reader_internal.cc:551-579).
-    * Handles both v1 (missing content/sequence fields) and v2 layouts. */
+  /** A datum reader over its own `GenericData`. The global
+    * `GenericData.get()` keeps a fast-reader cache keyed weakly by each
+    * file's parsed schema whose values reference their keys, so entries
+    * are never collected: reading through it retains one reader per
+    * manifest read for the life of the JVM. A private instance lets the
+    * cache die with the reader. */
+  private[ice] def genericDatumReader(): GenericDatumReader[GenericRecord] =
+    new GenericDatumReader[GenericRecord](null, null, new GenericData())
+
   /** Avro file-level metadata (e.g. "format-version") of a manifest or
     * manifest list. */
   def fileMetadata(path: String, io: FileIO = LocalFileIO): Map[String, String] = {
     val reader = new DataFileReader[GenericRecord](
-      io.newInput(stripFileScheme(path)), new GenericDatumReader[GenericRecord]())
+      io.newInput(stripFileScheme(path)), genericDatumReader())
     try reader.getMetaKeys.asScala
       .map(k => k -> Option(reader.getMetaString(k)).getOrElse("")).toMap
     finally reader.close()
   }
 
+  /** Read a manifest list (S3; manifest_reader_internal.cc:551-579).
+    * Handles both v1 (missing content/sequence fields) and v2 layouts. */
   def readManifestList(path: String, io: FileIO = LocalFileIO): IndexedSeq[ManifestFile] = {
     val reader = new DataFileReader[GenericRecord](
-      io.newInput(stripFileScheme(path)), new GenericDatumReader[GenericRecord]())
+      io.newInput(stripFileScheme(path)), genericDatumReader())
     try {
       reader.iterator.asScala.map { r =>
         val partitions = (r.get("partitions") match {
@@ -416,7 +425,7 @@ object ManifestAvro {
       parent: Option[ManifestFile] = None,
       io: FileIO = LocalFileIO): IndexedSeq[ManifestEntry] = {
     val reader = new DataFileReader[GenericRecord](
-      io.newInput(stripFileScheme(path)), new GenericDatumReader[GenericRecord]())
+      io.newInput(stripFileScheme(path)), genericDatumReader())
     try {
       val inherit: ManifestEntry => ManifestEntry =
         parent.map(InheritableMetadata.apply).getOrElse(identity)

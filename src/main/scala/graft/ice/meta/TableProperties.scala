@@ -425,13 +425,6 @@ object TableProperties {
     Key("read.delete-planning-mode", "auto",
       _.trim.toLowerCase(java.util.Locale.ROOT))
 
-  // scan reading (graft extension): beyond this many planned files, the
-  // parquet read goes through ManifestFileIndex (file list + sizes served
-  // from manifest metadata — no per-path driver stat, no path-list plan)
-  // instead of spark.read.parquet(paths: _*)
-  val ScanFileListThreshold: Key[Long] =
-    Key("graft.plan.file-list-threshold", 10000L, _.trim.toLong)
-
   def get[T](props: Map[String, String], key: Key[T]): T =
     props.get(key.name).map(key.parse).getOrElse(key.default)
 

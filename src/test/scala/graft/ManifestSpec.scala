@@ -136,6 +136,34 @@ class ManifestSpec extends AnyFunSuite {
     assert(Conversions.fromBytes(IntT, b.partitions.head.upperBound.get) == 9)
   }
 
+  test("repeated manifest reads leave the global Avro reader cache unchanged") {
+    // GenericData.get()'s fast-reader cache keys readers by each read's
+    // parsed schema and never drops them: decoding through it would add
+    // an entry per manifest read for the life of the JVM
+    def globalReaderCacheSize(): Int = {
+      val builder = org.apache.avro.generic.GenericData.get().getFastReaderBuilder()
+      val f = classOf[org.apache.avro.io.FastReaderBuilder].getDeclaredField("readerCache")
+      f.setAccessible(true)
+      f.get(builder).asInstanceOf[java.util.Map[_, _]].size
+    }
+    val dir = java.nio.file.Files.createTempDirectory("mcache").toString
+    val entries = (1 to 3).map(i => ManifestEntry(ManifestStatus.Added, None, None, None,
+      DataFile(FileContent.Data, s"$dir/data-$i.parquet", "PARQUET",
+        IndexedSeq.empty, recordCount = 10L * i, fileSizeInBytes = 100L * i)))
+    val mf = ManifestAvro.writeManifest(s"$dir/m0.avro", entries,
+      StructT(IndexedSeq.empty), specId = 0, snapshotId = 1L, sequenceNumber = 1L)
+    ManifestAvro.writeManifestList(s"$dir/snap-1.avro", Seq(mf),
+      snapshotId = 1L, parentSnapshotId = None, sequenceNumber = 1L)
+
+    val before = globalReaderCacheSize()
+    (1 to 50).foreach { _ =>
+      assert(ManifestAvro.readManifestList(s"$dir/snap-1.avro").size == 1)
+      assert(ManifestAvro.readManifest(s"$dir/m0.avro", StructT(IndexedSeq.empty),
+        Some(mf)).map(_.dataFile.recordCount) == Seq(10L, 20L, 30L))
+    }
+    assert(globalReaderCacheSize() <= before)
+  }
+
   test("decimal partition values round trip through fixed") {
     val dir = java.nio.file.Files.createTempDirectory("mandec").toString
     val partType = StructT(IndexedSeq(

@@ -395,14 +395,19 @@ class TableSpec extends AnyFunSuite with BeforeAndAfterAll {
     val cat = new DirCatalog(tmpWarehouse())
     val raw = spark.read.parquet(s"$sfDir/orders.parquet")
     val schema = SparkConv.fromSpark(raw.schema)
-    // threshold 0 forces every parquet read through ManifestFileIndex
-    val t = IceTable.create(cat, TableIdentifier.parse("db.flist"), schema,
-      properties = Map("graft.plan.file-list-threshold" -> "0"))
+    // every parquet read of toDF goes through ManifestFileIndex
+    val t = IceTable.create(cat, TableIdentifier.parse("db.flist"), schema)
     t.append(spark).appendDataFrame(raw.limit(400))
     t.append(spark).appendDataFrame(raw.limit(800).except(raw.limit(400)))
 
     val df = t.newScan().toDF(spark)
     assert(df.count() == 800)
+    // oracle: the path-list read of the same planned files
+    val paths = t.newScan().planFiles()
+      .map(f => graft.ice.manifest.ManifestAvro.stripFileScheme(f.file.filePath))
+    val oracle = spark.read.parquet(paths: _*)
+    def sorted(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toString).sorted.toSeq
+    assert(sorted(df) == sorted(oracle))
     // the plan carries the metadata-fed index, not an InMemoryFileIndex
     // path list (the driver-object bug this path removes)
     val plan = df.queryExecution.executedPlan.toString
@@ -414,6 +419,7 @@ class TableSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(fplan.contains("PushedFilters: [IsNotNull(o_totalprice), GreaterThan(o_totalprice"), fplan.take(3000))
     assert(filtered.count() ==
       raw.limit(800).where(col("o_totalprice") > 100000.0).count())
+    assert(sorted(filtered) == sorted(oracle.where(col("o_totalprice") > 100000.0)))
     // values survive, not just counts
     val a = df.agg(sum("o_totalprice")).head.getDouble(0)
     val b = raw.limit(800).agg(sum("o_totalprice")).head.getDouble(0)
@@ -426,6 +432,12 @@ class TableSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(files.length == 2, files.toSeq)
     assert(files.forall(f => f.endsWith(".parquet")))
     assert(withMeta.where(col("_pos") === 0).count() == 2)
+    // _file/_pos agree with the path-list read's _metadata columns
+    def filePos(d: org.apache.spark.sql.DataFrame, file: String, pos: String) =
+      d.select(regexp_replace(col(file), "^file:/*", "/"), col(pos)).collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSet
+    assert(filePos(withMeta, "_file", "_pos") ==
+      filePos(oracle, "_metadata.file_path", "_metadata.row_index"))
   }
 
   test("file-list scan path executes MoR position deletes") {
@@ -434,13 +446,18 @@ class TableSpec extends AnyFunSuite with BeforeAndAfterAll {
     val raw = spark.read.parquet(s"$sfDir/region.parquet")
     val schema = SparkConv.fromSpark(raw.schema)
     val t = IceTable.create(cat, TableIdentifier.parse("db.flistdel"), schema,
-      properties = Map(
-        "graft.plan.file-list-threshold" -> "0",
-        "write.delete.mode" -> "merge-on-read"))
+      properties = Map("write.delete.mode" -> "merge-on-read"))
     t.append(spark).appendDataFrame(raw)
     t.delete(spark).deleteWherePositional(E.lt("r_regionkey", Literal.long(2)))
     val after = t.newScan().toDF(spark)
     assert(after.count() == raw.where(col("r_regionkey") >= 2).count())
     assert(after.agg(min("r_regionkey")).head.getAs[Number](0).longValue >= 2L)
+    // oracle: the path-list read of the planned data files, minus the
+    // deleted rows
+    val paths = t.newScan().planFiles()
+      .map(f => graft.ice.manifest.ManifestAvro.stripFileScheme(f.file.filePath))
+    val oracle = spark.read.parquet(paths: _*).where(col("r_regionkey") >= 2)
+    assert(after.collect().map(_.toString).sorted.toSeq ==
+      oracle.collect().map(_.toString).sorted.toSeq)
   }
 }
