@@ -1238,14 +1238,12 @@ object SparkEntry {
     // misses): directed containment |A∩B|/|A| >= 0.8 via asymmetric
     // PPJoin — contained side prefix-filters, container side posts all
     "d9_containment_pairs" -> ((s, dir) =>
-      // SPARK_GRAFT_D9_PASSES forces the posting-join pass count
-      // (0/unset = auto-sized from corpus volume; 1 = classic single
-      // join). The bounded schedule is what gives d9 a fourth-decade
-      // story: sequential hash-range passes, constant spill.
+      // the posting-join pass count is auto-sized from corpus volume
+      // (postingPasses = 0): the bounded schedule is what gives d9 a
+      // fourth-decade story — sequential hash-range passes, constant
+      // spill
       Dedup.containmentPairs(Tables.scan(s, dir, "documents"),
-        "text", "doc_id", "lang",
-        postingPasses = sys.env.get("SPARK_GRAFT_D9_PASSES")
-          .map(_.trim.toInt).getOrElse(0))),
+        "text", "doc_id", "lang")),
 
     // exact SUBSTRING-level dedup (deduplicate-text-datasets class):
     // maximal spans of 8-token windows occurring in >= 2 distinct docs
@@ -1446,11 +1444,10 @@ object SparkEntry {
       // sides, ids unique in documents), so its hit verdict is
       // unchanged, and a dedup LOSER only adds hit ids that the
       // anti-join's left side no longer contains — dead rows in a
-      // membership probe. The dedup exchange now runs once; hatch keeps
-      // the old probe for A/B, equivalence pinned in OpsSpec + oracle.
-      val probeSide = if (graft.ops.Flags.on("SPARK_GRAFT_NO_PREDEDUP_DECON"))
-        corp else quality.filter(col("doc_id") >= 100)
-      val hits = TextAnalysis.decontaminate(probeSide, bench,
+      // membership probe. The dedup exchange now runs once; equivalence
+      // pinned in OpsSpec + oracle.
+      val hits = TextAnalysis.decontaminate(
+          quality.filter(col("doc_id") >= 100), bench,
           "doc_id", "text", n = 8)
         .select(col("doc_id"))
       corp.join(hits, Seq("doc_id"), "left_anti")
@@ -1474,9 +1471,8 @@ object SparkEntry {
       // same row-set-equivalence argument as pipe_corpus (see the
       // comment there): the dedup window's full-corpus exchange runs
       // once instead of twice, no corpus-sized cache needed
-      val probeSide = if (graft.ops.Flags.on("SPARK_GRAFT_NO_PREDEDUP_DECON"))
-        corp else quality.filter(col("doc_id") >= 100)
-      val hits = TextAnalysis.decontaminate(probeSide, bench,
+      val hits = TextAnalysis.decontaminate(
+          quality.filter(col("doc_id") >= 100), bench,
           "doc_id", "text", n = 8)
         .select(col("doc_id"))
       // persist the cleaned corpus before the fan-out: the mixture stage
@@ -1742,21 +1738,11 @@ object SparkEntry {
       // exactly that winner inside the one asof window, so the r18-era
       // (user, ts) dedup window — a second full exchange + sort of the
       // right side — is redundant; OpsSpec pins tieCol ≡ dedup-window
-      // and the hatch keeps the old plan for A/B
-      val evenEv = ev.filter(col("event_id") % 2 === 0)
-      val right = if (graft.ops.Flags.on("SPARK_GRAFT_NO_ASOF_TIE")) {
-        val wDedup = Window.partitionBy("user_id", "ts")
-          .orderBy(col("event_id").desc)
-        evenEv
-          .withColumn("__rn", row_number().over(wDedup)).filter(col("__rn") === 1)
-          .select(col("user_id"), col("ts"),
-            col("event_id").as("matched_id"), col("value").as("matched_value"))
-      } else evenEv.select(col("user_id"), col("ts"),
-        col("event_id").as("matched_id"), col("value").as("matched_value"))
+      val right = ev.filter(col("event_id") % 2 === 0)
+        .select(col("user_id"), col("ts"),
+          col("event_id").as("matched_id"), col("value").as("matched_value"))
       graft.ops.AsOf.asofJoin(left, right, "user_id", "ts",
-        Seq("matched_id", "matched_value"),
-        tieCol = if (graft.ops.Flags.on("SPARK_GRAFT_NO_ASOF_TIE")) None
-          else Some("matched_id"))
+        Seq("matched_id", "matched_value"), tieCol = Some("matched_id"))
         .select(col("event_id"), col("user_id"), col("matched_id"),
           round(col("matched_value"), 2).as("matched_value"))
     }),
@@ -4391,8 +4377,8 @@ object CatalogDmlFixture {
   import graft.ice.catalog._
 
   // memoized like SqlDmlFixture.ensure: the three existence probes ran
-  // INSIDE the timed region on every run — graft.tools.SplitAB measured
-  // them as the whole 1.4x "regression" on sql_catalog_update's
+  // INSIDE the timed region on every run — a scan-split A/B (r16)
+  // measured them as the whole 1.4x "regression" on sql_catalog_update's
   // fork-iso number (fixture-ensure noise, not the query)
   private val ensured = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 

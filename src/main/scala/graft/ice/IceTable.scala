@@ -122,16 +122,8 @@ final class IceTable private (
     // not resolve older manifests' partition tuples (same resolution as
     // planEntries)
     val snapSchema = s.schemaId.flatMap(meta.schemaById).getOrElse(schema)
-    def estimate(ms: Seq[ManifestFile]): Long = ms.map(m =>
-      (m.addedFilesCount, m.existingFilesCount) match {
-        case (Some(a), Some(e)) => (a + e).toLong
-        case _ => math.max(1L, m.manifestLength / 64)
-      }).sum
-    val threshold = meta.property(TableProperties.PlanDistributedThreshold)
-    val session = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-    session match {
-      case Some(spark) if estimate(droppedM ++ newM) > threshold =>
+    distributedPlanner(droppedM ++ newM, mode = "auto") match {
+      case Some(spark) =>
         // locals only: the closures must not drag the table/catalog along
         val schemaLocal = snapSchema
         val specsLocal: Map[Int, PartitionSpec] =
@@ -391,10 +383,7 @@ final class IceTable private (
     // every per-commit cancelation (see planChanges doc) — the same net
     // multiset from commitCount−1 fewer full-width aggregations
     cancelCarryovers(
-      planChanges(spark, fromSnapshotId, toSnapshotId,
-        // Flags.on, not sys.env.contains: =0 must turn the hatch OFF
-        // (r18 ADVICE — the A/B harness's other flags test the value)
-        cancelPerCommit = graft.ops.Flags.on("SPARK_GRAFT_CDC_PERCOMMIT"))
+      planChanges(spark, fromSnapshotId, toSnapshotId, cancelPerCommit = false)
         .drop("_commit_snapshot_id", "_change_ordinal"))
 
   /** Changelog view with UPDATE pairing (the Iceberg
@@ -656,6 +645,26 @@ final class IceTable private (
     (Seq(s"${meta.location}/data", dataFileDir) ++ hist).distinct
   }
 
+  /** The session to read `manifests` on executors with, or None to read
+    * them on the driver. `mode` is a read.*-planning-mode value:
+    * `local` / `distributed` pin the choice; `auto` distributes once the
+    * estimated entry count passes `graft.plan.distributed-threshold`.
+    * The estimate uses the manifest-list counts when present, else a
+    * conservative bytes/entry guess from the manifest length.
+    * Distributed planning needs an active or default session. */
+  private def distributedPlanner(manifests: Seq[ManifestFile],
+      mode: String): Option[SparkSession] = {
+    val estimated = manifests.map(m =>
+      (m.addedFilesCount, m.existingFilesCount) match {
+        case (Some(a), Some(e)) => (a + e).toLong
+        case _ => math.max(1L, m.manifestLength / 64)
+      }).sum
+    val threshold = meta.property(TableProperties.PlanDistributedThreshold)
+    if (mode == "distributed" || (mode != "local" && estimated > threshold))
+      SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+    else None
+  }
+
   /** Live delete-file entries of a snapshot (position + equality deletes,
     * §2.8 — the reference models these but rejects them at plan time,
     * table_scan.cc:288-291; here they feed the merge-on-read anti-joins). */
@@ -670,18 +679,9 @@ final class IceTable private (
     // forces executor-side manifest reads. Delete entries KEEP their
     // stats either way — path/key bounds scope which data files a delete
     // file can cover.
-    val mode = meta.property(TableProperties.DeletePlanningMode)
-    val estimated = deletes.map(m =>
-      (m.addedFilesCount, m.existingFilesCount) match {
-        case (Some(a), Some(e)) => (a + e).toLong
-        case _ => math.max(1L, m.manifestLength / 64)
-      }).sum
-    val threshold = meta.property(TableProperties.PlanDistributedThreshold)
-    val session = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-    session match {
-      case Some(spark) if mode == "distributed" ||
-          (mode != "local" && estimated > threshold) =>
+    distributedPlanner(deletes,
+        meta.property(TableProperties.DeletePlanningMode)) match {
+      case Some(spark) =>
         planEntriesDistributed(spark, deletes, schema, rowFilter = None,
           stripStats = false)
       case _ =>
@@ -723,24 +723,10 @@ final class IceTable private (
         }
     }
 
-    // estimated entry count drives the driver/distributed choice: use the
-    // manifest-list counts when present, else a conservative bytes/entry
-    // guess from the manifest length
-    val estimatedEntries = pruned.map(m =>
-      (m.addedFilesCount, m.existingFilesCount) match {
-        case (Some(a), Some(e)) => (a + e).toLong
-        case _ => math.max(1L, m.manifestLength / 64)
-      }).sum
-    val threshold = meta.property(TableProperties.PlanDistributedThreshold)
     // read.data-planning-mode (table_properties.h:204): `auto` keeps the
     // threshold heuristic; `local` / `distributed` pin the choice
-    val mode = meta.property(TableProperties.DataPlanningMode)
-    val session = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-
-    session match {
-      case Some(spark) if mode == "distributed" ||
-          (mode != "local" && estimatedEntries > threshold) =>
+    distributedPlanner(pruned, meta.property(TableProperties.DataPlanningMode)) match {
+      case Some(spark) =>
         planEntriesDistributed(spark, pruned, scanSchema, rowFilter, pathFilter)
       case _ =>
         val metricsEval = new MetricsEvaluator
@@ -1242,7 +1228,6 @@ final class ScanBuilder(table: IceTable) {
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sparkSchema)
     }
-    val dataDirPrefixes = table.dataRoots.map(ManifestAvro.stripFileScheme)
     val plainSchema = org.apache.spark.sql.types.StructType(
       sparkSchema.fields.map(_.copy(metadata = org.apache.spark.sql.types.Metadata.empty)))
     // manifest-known file sizes feed ManifestFileIndex (zero driver
@@ -1256,24 +1241,7 @@ final class ScanBuilder(table: IceTable) {
     val nameMapping = table.properties.get(NameMapping.PropertyKey)
       .map(NameMapping.fromJson)
 
-    // Does this file carry parquet field ids? Internal files always do;
-    // external (addFiles-registered) files resolve through the per-commit
-    // summary stamped at registration time — footer probes at PLAN time
-    // are a fallback for legacy snapshots only (at 100 TB, O(files)
-    // driver footer reads during planning would dominate). The summary
-    // map is built ONCE per scan: a per-task snapshotById would be
-    // O(files x snapshots) on a long-lived table.
-    val idSummaryBySnap: Map[Long, String] = table.metadata.snapshots
-      .flatMap(s => s.summary.get(IceTable.FieldIdsSummaryKey)
-        .map(s.snapshotId -> _)).toMap
-    def fileHasIds(t: FileScanTask, p: String): Boolean =
-      dataDirPrefixes.exists(p.startsWith) || {
-        t.snapshotId.flatMap(idSummaryBySnap.get) match {
-          case Some("all") => true
-          case Some("none") => false
-          case _ => ScanBuilder.hasFieldIds(p, spark)
-        }
-      }
+    val fileHasIds = ScanBuilder.fieldIdTest(table, spark)
     // v3 default values in scope of this scan's projection: fields whose
     // initial-default must surface for rows in files written before the
     // column existed. Presence is proven per file from manifest metrics
@@ -1655,6 +1623,30 @@ final class ScanBuilder(table: IceTable) {
 }
 
 object ScanBuilder {
+  /** Does a planned file carry parquet field ids? Internal files (under
+    * a data root) always do; external (addFiles-registered) files
+    * resolve through the per-commit summary stamped at registration
+    * time — footer probes at PLAN time are a fallback for legacy
+    * snapshots only (at 100 TB, O(files) driver footer reads during
+    * planning would dominate). The summary map is built ONCE per call:
+    * a per-task snapshotById would be O(files x snapshots) on a
+    * long-lived table. The returned test takes the task and its
+    * scheme-stripped path. */
+  private[ice] def fieldIdTest(table: IceTable,
+      spark: SparkSession): (FileScanTask, String) => Boolean = {
+    val dataDirPrefixes = table.dataRoots.map(ManifestAvro.stripFileScheme)
+    val idSummaryBySnap: Map[Long, String] = table.metadata.snapshots
+      .flatMap(s => s.summary.get(IceTable.FieldIdsSummaryKey)
+        .map(s.snapshotId -> _)).toMap
+    (t, p) => dataDirPrefixes.exists(p.startsWith) || {
+      t.snapshotId.flatMap(idSummaryBySnap.get) match {
+        case Some("all") => true
+        case Some("none") => false
+        case _ => hasFieldIds(p, spark)
+      }
+    }
+  }
+
   /** Driver-side cache: does this (external) parquet file carry field ids?
     * Probed once per path; internal files skip the probe entirely. */
   private val fieldIdCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()

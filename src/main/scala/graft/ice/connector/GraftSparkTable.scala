@@ -1428,11 +1428,7 @@ private[connector] final case class GraftAggReaderFactory() extends PartitionRea
   * cache — a re-parse is always correct) rather than maintaining LRU
   * chains under concurrent readers. */
 private[connector] object DeleteFileCache {
-  private val maxPositions: Long =
-    sys.env.get("SPARK_GRAFT_DELETE_CACHE_POSITIONS") match {
-      case Some(raw) => scala.util.Try(raw.trim.toLong).getOrElse(64000000L)
-      case None => 64000000L
-    }
+  private val maxPositions = 64000000L
   private val posCache = new java.util.concurrent.ConcurrentHashMap[
     String, java.util.HashMap[String, org.roaringbitmap.longlong.Roaring64Bitmap]]()
   private val eqCache = new java.util.concurrent.ConcurrentHashMap[

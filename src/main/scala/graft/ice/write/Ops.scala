@@ -713,7 +713,26 @@ final class UpdateSchema(table: IceTable) {
     this
   }
 
+  /** Drop a column. Refuses an unknown name, like [[renameColumn]],
+    * and a source column of the default partition spec or the current
+    * sort order: every later append derives partition tuples and sort
+    * keys from those columns, so the drop would leave the table
+    * unwritable. */
   def deleteColumn(name: String): UpdateSchema = {
+    val f = fields.find(_.name == name).getOrElse(
+      throw new IllegalArgumentException(s"no such column $name"))
+    val spec = table.spec
+    spec.fields.find(_.sourceId == f.id).foreach { pf =>
+      throw new IllegalArgumentException(s"cannot drop column $name: it is " +
+        s"the source of partition field ${pf.name} (${pf.transform.name}) " +
+        s"in the default partition spec ${spec.specId}")
+    }
+    val order = table.metadata.defaultSortOrder
+    order.fields.find(_.sourceId == f.id).foreach { sf =>
+      throw new IllegalArgumentException(s"cannot drop column $name: the " +
+        s"current sort order ${order.orderId} sorts by " +
+        s"${sf.transform.name}($name)")
+    }
     fields = fields.filterNot(_.name == name)
     this
   }
@@ -934,6 +953,32 @@ final class RowDelete(table: IceTable, spark: SparkSession) {
       serializableCheck = isolationCheck(TableProperties.WriteUpdateIsolation, bound))
   }
 
+  /** (file_path, pos) of every row of the `matching` files where `cond`
+    * holds — the match set of both merge-on-read deletes. Files carrying
+    * parquet field ids read by id with the table schema; id-less files
+    * (addFiles registrations, split out by `toDF`'s id test) read by
+    * name with an id-free schema. Spark cannot mix both strategies in
+    * one read, so the two reads union. */
+  private def matchedPositions(matching: Seq[FileScanTask],
+      cond: org.apache.spark.sql.Column): DataFrame = {
+    spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+    val sparkSchema = SparkConv.toSpark(table.schema)
+    val plainSchema = org.apache.spark.sql.types.StructType(sparkSchema.fields
+      .map(_.copy(metadata = org.apache.spark.sql.types.Metadata.empty)))
+    val hasIds = ScanBuilder.fieldIdTest(table, spark)
+    val (withIds, idLess) = matching
+      .map(t => (t, ManifestAvro.stripFileScheme(t.file.filePath)))
+      .partition { case (t, p) => hasIds(t, p) }
+    Seq(withIds -> sparkSchema, idLess -> plainSchema).collect {
+      case (files, schema) if files.nonEmpty =>
+        spark.read.schema(schema).parquet(files.map(_._2): _*)
+          .filter(cond)
+          .select(
+            regexp_replace(col("_metadata.file_path"), "^file:/*", "/").as("file_path"),
+            col("_metadata.row_index").as("pos"))
+    }.reduce(_ union _)
+  }
+
   /** Merge-on-read position delete: write (file_path, pos) tuples of
     * matching rows as a delete file; scans anti-join them (§2.8).
     * Reserved field ids 2147483546/2147483545 (metadata_columns.h). */
@@ -943,20 +988,13 @@ final class RowDelete(table: IceTable, spark: SparkSession) {
     val matching = table.newScan().filter(filter).planFiles()
     if (matching.isEmpty)
       return SnapshotProducer.commit(table, spark, DataOperation.Delete, Nil)
-    val paths = matching.map(t => ManifestAvro.stripFileScheme(t.file.filePath))
-    spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    val sparkSchema = SparkConv.toSpark(table.schema)
     // distributed delete-file write: hash-cluster the (file,pos) tuples by
     // file_path so each output delete file covers a disjoint set of data
     // files (spec ordering (file_path, pos) within each) — a wide delete
     // at 100 TB writes through every core, not one
-    val dels = spark.read.schema(sparkSchema).parquet(paths: _*)
-      .filter(cond)
-      .select(
-        regexp_replace(col("_metadata.file_path"), "^file:/*", "/").as("file_path"),
-        col("_metadata.row_index").as("pos"))
+    val dels = matchedPositions(matching, cond)
     val entries = RowDelete.writePositionDeleteEntries(table, spark, dels,
-      paths.size, RowDelete.partitionKeys(table, matching))
+      matching.size, RowDelete.partitionKeys(table, matching))
     SnapshotProducer.commit(table, spark, DataOperation.Delete, Nil,
       addedDeleteEntries = entries,
       serializableCheck = isolationCheck(TableProperties.WriteDeleteIsolation, bound))
@@ -988,16 +1026,8 @@ final class RowDelete(table: IceTable, spark: SparkSession) {
     val matching = table.newScan().filter(filter).planFiles()
     if (matching.isEmpty)
       return SnapshotProducer.commit(table, spark, DataOperation.Delete, Nil)
-    val paths = matching.map(t => ManifestAvro.stripFileScheme(t.file.filePath))
-    spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    val sparkSchema = SparkConv.toSpark(table.schema)
-    val dels = spark.read
-      .schema(sparkSchema).parquet(paths: _*)
-      .filter(cond)
-      .select(
-        regexp_replace(col("_metadata.file_path"), "^file:/*", "/").as("file_path"),
-        col("_metadata.row_index").as("pos"))
-    val (entries, superseded, expected) = buildDVEntries(dels, paths.size)
+    val (entries, superseded, expected) =
+      buildDVEntries(matchedPositions(matching, cond), matching.size)
     if (entries.isEmpty)
       return SnapshotProducer.commit(table, spark, DataOperation.Delete, Nil)
     SnapshotProducer.commit(table, spark, DataOperation.Delete, Nil,

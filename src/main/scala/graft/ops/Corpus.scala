@@ -65,9 +65,11 @@ object Corpus {
     *
     * `quotas`: one row per group with (groupCol, __quota: long,
     * __n: long rows in the group). Rows of `df` whose group is absent
-    * from `quotas` are dropped. */
+    * from `quotas` are dropped. `groupCap` bounds the driver-side
+    * threshold table (see below). */
   private[graft] def takeSmallestByMixKey(df: DataFrame, groupCol: String,
-      idCol: String, quotas: DataFrame, slack: Double = 4.0): DataFrame = {
+      idCol: String, quotas: DataFrame, slack: Double = 4.0,
+      groupCap: Int = 1000000): DataFrame = {
     val thrPlan = quotas.select(col(groupCol), col("__quota").cast("long").as("__quota"),
       col("__n").cast("long").as("__n"))
       .withColumn("__thr",
@@ -84,17 +86,13 @@ object Corpus {
     // Materialize the thresholds ONCE to the driver and reuse them as a
     // local relation: group-count-bounded driver state, same rows, and
     // the corpus is scanned once for counts + once for candidates.
-    // Over the cap (degenerate group cardinality) or under the
-    // SPARK_GRAFT_NO_DRIVER_THRESHOLDS hatch, fall back to the lazy plan.
+    // Over `groupCap` groups (degenerate group cardinality), fall back
+    // to the lazy plan.
     val thrDf = {
-      val cap = 1000000
-      if (Flags.on("SPARK_GRAFT_NO_DRIVER_THRESHOLDS")) thrPlan
-      else {
-        val local = thrPlan.limit(cap + 1).collect()
-        if (local.length > cap) thrPlan
-        else df.sparkSession.createDataFrame(
-          java.util.Arrays.asList(local: _*), thrPlan.schema)
-      }
+      val local = thrPlan.limit(groupCap + 1).collect()
+      if (local.length > groupCap) thrPlan
+      else df.sparkSession.createDataFrame(
+        java.util.Arrays.asList(local: _*), thrPlan.schema)
     }
     val keyed = df.withColumn("__mk", mixKey(col(idCol)))
       .join(broadcast(thrDf), groupCol)
@@ -131,7 +129,7 @@ object Corpus {
     * the data has n = 0 and constrains the budget to B = 0 — the
     * documented "scarcest source sets the budget" contract — instead of
     * being silently dropped by an inner join. */
-  private def mixtureQuotas(df: DataFrame, sourceCol: String,
+  private[graft] def mixtureQuotas(df: DataFrame, sourceCol: String,
       parts: Map[String, Int]): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
@@ -140,29 +138,15 @@ object Corpus {
     // quotas re-scanned the corpus twice (counts + budget). The counts
     // are |parts| rows by construction — collect them once and do the
     // all-integer budget arithmetic on the driver; the corpus is scanned
-    // exactly once here. Hatch: SPARK_GRAFT_NO_DRIVER_THRESHOLDS keeps
-    // the plan form (the A/B "before").
-    if (Flags.on("SPARK_GRAFT_NO_DRIVER_THRESHOLDS")) {
-      val partsDf = parts.toSeq.toDF(sourceCol, "__part")
-      val counts = partsDf
-        .join(df.groupBy(col(sourceCol)).agg(count(lit(1)).as("__n")),
-          Seq(sourceCol), "left")
-        .withColumn("__n", coalesce(col("__n"), lit(0L)))
-      val budget = counts
-        .agg(min(floor(col("__n") / col("__part"))).cast("long").as("__b"))
-      counts.crossJoin(broadcast(budget))
-        .select(col(sourceCol), (col("__part") * col("__b")).as("__quota"),
-          col("__n"))
-    } else {
-      val keys = parts.keys.toSeq
-      val counted = df.filter(col(sourceCol).isin(keys: _*))
-        .groupBy(col(sourceCol)).agg(count(lit(1)).as("__n"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val n = keys.map(s => s -> counted.getOrElse(s, 0L)).toMap
-      val b = keys.map(s => n(s) / parts(s)).min
-      keys.map(s => (s, parts(s) * b, n(s)))
-        .toDF(sourceCol, "__quota", "__n")
-    }
+    // exactly once here.
+    val keys = parts.keys.toSeq
+    val counted = df.filter(col(sourceCol).isin(keys: _*))
+      .groupBy(col(sourceCol)).agg(count(lit(1)).as("__n"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val n = keys.map(s => s -> counted.getOrElse(s, 0L)).toMap
+    val b = keys.map(s => n(s) / parts(s)).min
+    keys.map(s => (s, parts(s) * b, n(s)))
+      .toDF(sourceCol, "__quota", "__n")
   }
 
   /** Deterministic mixture resampling: downsample so the per-source row
@@ -187,23 +171,6 @@ object Corpus {
       "mixture parts must be positive integers")
     takeSmallestByMixKey(df, sourceCol, idCol,
       mixtureQuotas(df, sourceCol, parts), slack)
-  }
-
-  /** The plain-window reference formulation of [[mixtureSample]] — kept
-    * as the bit-equality oracle for the threshold-cut path (pinned in
-    * OpsSpec). Exact but funnels each source through one reducer sort. */
-  private[graft] def mixtureSampleWindow(df: DataFrame, sourceCol: String,
-      idCol: String, parts: Map[String, Int]): DataFrame = {
-    require(parts.nonEmpty && parts.values.forall(_ > 0),
-      "mixture parts must be positive integers")
-    val quotas = mixtureQuotas(df, sourceCol, parts)
-      .select(col(sourceCol), col("__quota"))
-    val w = Window.partitionBy(col(sourceCol))
-      .orderBy(mixKey(col(idCol)), col(idCol))
-    df.join(broadcast(quotas), sourceCol)
-      .withColumn("__rk", row_number().over(w))
-      .filter(col("__rk") <= col("__quota"))
-      .drop("__rk", "__quota")
   }
 
   /** Concat-and-chop sequence packing — the training-example assembly

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.concurrent.duration.Duration
 
 /** Deduplication operators for large-scale training-data pipelines
   * (SURVEY §2.11 north-star). All shapes are shuffle-lean:
@@ -29,62 +30,19 @@ object Dedup {
     * consumer actually uses, so an ids-only consumer (d6) shuffles
     * 16-byte rows here already.
     *
-    * An alternative broadcast-anti-join formulation
-    * ([[exactSurvivorsAntiJoin]]: decide losers on a (hash, id)
+    * A broadcast-anti-join formulation (decide losers on a (hash, id)
     * projection, anti-join them back, never shuffle the corpus) was
-    * built and measured in round 18 and is KEPT only as an env-
-    * selectable variant (`SPARK_GRAFT_EXACT_SURVIVORS=anti`): at sf1
-    * warm it lost at every call site (d6 0.78 vs 0.58 s, pipe_corpus
-    * 3.89 vs 1.64 s, pipe_corpus_full 6.25 vs 4.69 s) because it scans
-    * the input twice — and in the pipelines the input is a filtered
-    * projection whose quality gate (a regex tokenize) re-runs on the
-    * second scan, costing more than the pruned one-pass shuffle saves.
-    * Bit-equality of the two forms is pinned in OpsSpec. */
-  def exactSurvivors(df: DataFrame, textCol: String, idCol: String): DataFrame =
-    if (sys.env.get("SPARK_GRAFT_EXACT_SURVIVORS").contains("anti"))
-      exactSurvivorsAntiJoin(df, textCol, idCol)
-    else {
-      val w = Window.partitionBy(xxhash64(col(textCol))).orderBy(col(idCol))
-      df.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1)
-        .drop("__rn")
-    }
-
-  /** The measured-and-rejected broadcast-anti-join formulation of
-    * [[exactSurvivors]] (see its doc): losers decided on a 16-byte
-    * (hash, id) projection, recovered via broadcast LeftAnti. Requires
-    * unique non-null ids; falls back to the window form past the
-    * broadcast cap. */
-  private[graft] def exactSurvivorsAntiJoin(df: DataFrame, textCol: String,
-      idCol: String): DataFrame = {
-    // precondition CHECK, not just documentation (r18 ADVICE): a
-    // duplicated id in a loser row anti-joins away ALL rows with that id
-    // (including the winner) and a null id never matches the anti-join,
-    // so either silently diverges from the window form. One cheap
-    // aggregate on the env-gated experimental path.
-    val idStats = df.agg(count(lit(1)), count(col(idCol)),
-      countDistinct(col(idCol))).head
-    require(idStats.getLong(0) == idStats.getLong(1) &&
-      idStats.getLong(1) == idStats.getLong(2),
-      s"exactSurvivorsAntiJoin requires unique non-null ids: rows=" +
-        s"${idStats.getLong(0)}, non-null=${idStats.getLong(1)}, " +
-        s"distinct=${idStats.getLong(2)}")
-    val losers = Caches.track(
-      df.select(xxhash64(col(textCol)).as("__h"), col(idCol).as("__i"))
-        .withColumn("__rn", row_number().over(
-          Window.partitionBy(col("__h")).orderBy(col("__i"))))
-        .filter(col("__rn") > 1)
-        .select(col("__i")))
-    if (losers.count() <= MaxBroadcastRows)
-      df.join(broadcast(losers), col(idCol) === col("__i"), "left_anti")
-    else {
-      System.err.println("[dedup] exactSurvivorsAntiJoin: loser set over " +
-        "broadcast cap — falling back to the full-row window form")
-      val w = Window.partitionBy(xxhash64(col(textCol))).orderBy(col(idCol))
-      df.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1)
-        .drop("__rn")
-    }
+    * measured in round 18 and lost at every call site at sf1 warm (d6
+    * 0.78 vs 0.58 s, pipe_corpus 3.89 vs 1.64 s, pipe_corpus_full 6.25
+    * vs 4.69 s): it scans the input twice, and in the pipelines the
+    * input is a filtered projection whose quality gate (a regex
+    * tokenize) re-runs on the second scan, costing more than the pruned
+    * one-pass shuffle saves. */
+  def exactSurvivors(df: DataFrame, textCol: String, idCol: String): DataFrame = {
+    val w = Window.partitionBy(xxhash64(col(textCol))).orderBy(col(idCol))
+    df.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1)
+      .drop("__rn")
   }
 
   /** Tokenize + lowercase: the canonical normalization for shingling.
@@ -503,35 +461,6 @@ object Dedup {
         col("__sp.span_tokens").as("span_tokens"))
   }
 
-  /** The explode + distinct + window reference formulation of the span
-    * merge — kept as the bit-equality oracle for the interval-merge
-    * kernel (pinned in OpsSpec). */
-  private[graft] def substringSpansWindowForm(df: DataFrame, textCol: String,
-      idCol: String, windowTokens: Int, minDocs: Int): DataFrame = {
-    val W = windowTokens
-    val wins = Par.ensure(df.select(col(idCol).as("__id"),
-        TextExprs.windowHashes(col(textCol), W).as("__hs")))
-      .select(col("__id"), posexplode(col("__hs")))
-      .withColumnRenamed("pos", "__p").withColumnRenamed("col", "__h")
-    val flagged = wins.groupBy("__h")
-      .agg(countDistinct(col("__id")).as("__df"))
-      .filter(col("__df") >= minDocs)
-      .select("__h")
-    val covered = wins.join(flagged, Seq("__h"))
-      .select(col("__id"),
-        explode(sequence(col("__p"), col("__p") + lit(W - 1))).as("__t"))
-      .distinct()
-    // islands: consecutive covered positions share (t - row_number)
-    val byDoc = Window.partitionBy("__id").orderBy("__t")
-    covered.withColumn("__g", col("__t") - row_number().over(byDoc))
-      .groupBy(col("__id"), col("__g"))
-      .agg(min("__t").cast("long").as("span_start"),
-        max("__t").cast("long").as("span_end"),
-        count(lit(1)).as("span_tokens"))
-      .select(col("__id").as(idCol), col("span_start"), col("span_end"),
-        col("span_tokens"))
-  }
-
   /** The REMOVAL side of [[substringSpans]]: the corpus with every
     * flagged span stripped from the token stream (cleaning operates on
     * the normalized tokens — output text is kept tokens joined by one
@@ -600,8 +529,13 @@ object Dedup {
     @volatile var changedPerRound: Seq[Long] = Nil
   }
 
+  /** `observeWait` bounds the wait for each round's observed changed
+    * count; a non-positive wait skips the metric, so every round pays
+    * the separate count job (the pre-fusion shape, which specs compare
+    * job counts against). */
   def clustersFromPairs(pairs: DataFrame, aCol: String, bCol: String,
-      maxRounds: Int = 50): DataFrame = {
+      maxRounds: Int = 50,
+      observeWait: Duration = Duration(10, "s")): DataFrame = {
     // MEMORY_AND_DISK, not MEMORY_ONLY: at sf10+ the edge list outgrows
     // storage memory, and a dropped partition recomputes the full
     // upstream pair join once per label-propagation ROUND (measured:
@@ -646,19 +580,15 @@ object Dedup {
       // the listener delivering observed metrics is asynchronous; poll
       // briefly, then fall back to the pre-fusion count job (correctness
       // never depends on the metric arriving)
-      // SPARK_GRAFT_NO_OBSERVE_FUSION: A/B escape hatch — pay the
-      // pre-r19 separate count job per round
-      changed =
-        if (Flags.on("SPARK_GRAFT_NO_OBSERVE_FUSION"))
-          next.filter(col("rep") =!= col("__old")).count()
-        else scala.util.Try(scala.concurrent.Await.result(obs.future,
-            scala.concurrent.duration.Duration(10, "s"))).toOption match {
-          case Some(row) => row.getAs[Long]("changed")
-          case None =>
-            System.err.println("[graft] clustersFromPairs: observed metric " +
-              "missing — falling back to a count job")
-            next.filter(col("rep") =!= col("__old")).count()
-        }
+      val observed =
+        if (observeWait <= Duration.Zero) None
+        else scala.util.Try(
+          scala.concurrent.Await.result(obs.future, observeWait)).toOption
+      changed = observed.map(_.getAs[Long]("changed")).getOrElse {
+        System.err.println("[graft] clustersFromPairs: no observed metric " +
+          s"within $observeWait — falling back to a count job")
+        next.filter(col("rep") =!= col("__old")).count()
+      }
       trajectory += changed
       labels = next.select("id", "rep")
       round += 1
@@ -767,8 +697,7 @@ object Dedup {
       idCol: String, blockCol: String, shingleN: Int): DataFrame = {
     val sh = shingleSets(df, textCol, idCol, blockCol, shingleN)
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est <= BigInt(MaxShinglePersistBytes) &&
-        !Flags.on("SPARK_GRAFT_NO_SHINGLE_PERSIST"))
+    if (est <= BigInt(MaxShinglePersistBytes))
       Caches.track(sh)
     else {
       System.err.println(s"[dedup] shingle sets: input estimate $est B over " +
@@ -781,15 +710,7 @@ object Dedup {
     * keeps the persisted shingle frame within the spill budget the
     * posting join already needs; past it, recompute (the sf30-proven
     * shape). */
-  private[graft] val MaxShinglePersistBytes: Long =
-    sys.env.get("SPARK_GRAFT_SHINGLE_PERSIST_MAX_BYTES") match {
-      case Some(raw) => scala.util.Try(raw.trim.toLong).getOrElse {
-        System.err.println(s"[dedup] SPARK_GRAFT_SHINGLE_PERSIST_MAX_BYTES=" +
-          s"'$raw' is not a long — using default ${16L << 30}")
-        16L << 30
-      }
-      case None => 16L << 30
-    }
+  private[graft] val MaxShinglePersistBytes: Long = 16L << 30
 
   /** Ranked hashed postings — (__id, __n, __s, __rank) with one row per
     * (document, distinct shingle) — the shared candidate-stage input of
@@ -800,8 +721,9 @@ object Dedup {
     * entries with miss => 1.
     *
     * Three-way strategy (guide §1.2 step 1, §2.4):
-    *  1. frequency table fits [[MaxRankMapRows]] (the common regime —
-    *     repeated shingles are a small fraction of postings): collect it
+    *  1. frequency table fits `rankCap` entries (default
+    *     [[MaxRankMapRows]]; the common regime — repeated shingles are
+    *     a small fraction of postings): collect it
     *     to the driver once, broadcast it as a sorted-array map, and
     *     rank WITHIN the row (TextExprs.rankPostings + posexplode) — the
     *     full-posting Exchange(__id) + Sort + row_number Window AND the
@@ -818,7 +740,7 @@ object Dedup {
     * hash values, so even tie-order differences cannot change the
     * emitted multiset). */
   private[graft] def rankedPostings(sh: DataFrame, what: String,
-      forceWindow: Boolean = false): DataFrame = {
+      rankCap: Long = MaxRankMapRows): DataFrame = {
     val postings = sh.select(col("__blk"), col("__id"),
       size(col("__sh")).as("__n"), // int
       explode(col("__sh")).as("__s0"))
@@ -828,18 +750,16 @@ object Dedup {
     // ONE bounded driver collect decides the strategy AND fetches the
     // table (limit cap+1, no separate count job — same discipline as the
     // vocabulary broadcast gate): cap×16 B of arrays, default 128 MB
-    val collected: Option[Array[org.apache.spark.sql.Row]] =
-      if (forceWindow || Flags.on("SPARK_GRAFT_NO_INROW_RANK")) None
+    val collected: Option[Array[org.apache.spark.sql.Row]] = {
+      val cap = math.max(0L, math.min(rankCap, (Int.MaxValue - 2).toLong)).toInt
+      val rows = freqAgg.limit(cap + 1).collect()
+      if (rows.length <= cap) Some(rows)
       else {
-        val cap = math.min(MaxRankMapRows, (Int.MaxValue - 2).toLong).toInt
-        val rows = freqAgg.limit(cap + 1).collect()
-        if (rows.length <= cap) Some(rows)
-        else {
-          System.err.println(s"[dedup] $what: over in-row rank cap " +
-            s"$cap — window-rank fallback")
-          None
-        }
+        System.err.println(s"[dedup] $what: over in-row rank cap " +
+          s"$cap — window-rank fallback")
+        None
       }
+    }
     collected match {
       case Some(rows) =>
         val pairs = rows.map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
@@ -866,15 +786,7 @@ object Dedup {
   /** Entry cap for the in-row rank map (count of REPEATED shingles, not
     * postings): 8M × 16 B = 128 MB of driver arrays / broadcast payload.
     * Past it, [[rankedPostings]] falls back to the window form. */
-  private[graft] val MaxRankMapRows: Long =
-    sys.env.get("SPARK_GRAFT_RANK_MAP_MAX") match {
-      case Some(raw) => scala.util.Try(raw.trim.toLong).getOrElse {
-        System.err.println(
-          s"[dedup] SPARK_GRAFT_RANK_MAP_MAX='$raw' is not a long — using default 8000000")
-        8000000L
-      }
-      case None => 8000000L
-    }
+  private[graft] val MaxRankMapRows: Long = 8000000L
 
   /** PPJoin candidate pairs: distinct (id_a, id_b) that could reach the
     * threshold — every qualifying pair is present (exact recall), and
@@ -898,18 +810,16 @@ object Dedup {
     // its block-equality check) and counts travel as 4-byte ints
     val ranked = rankedPostings(sh, "jaccard shingle-frequency table")
     // prefix length n - ceil(t*n) + 1 in exact integer arithmetic
-    val prefix0 = ranked.filter(col("__rank") <=
-      col("__n") - expr(
-        s"(cast(__n as bigint) * $thresholdNum + $thresholdDen - 1) div $thresholdDen") + 1)
     // ONE shared exchange for the self-join (guide §2.4 "two operations
     // keyed the same way can share one exchange"): both sides of a
     // PPJoin self-join are the SAME prefix-filtered postings, so an
     // explicit hash repartition on the join key makes the second side a
     // ReusedExchange — before, each side shipped its own copy of the
     // prefix postings through an independent Exchange(__s)
-    val prefix =
-      if (Flags.on("SPARK_GRAFT_NO_SHARED_POSTINGS")) prefix0
-      else prefix0.repartition(col("__s"))
+    val prefix = ranked.filter(col("__rank") <=
+      col("__n") - expr(
+        s"(cast(__n as bigint) * $thresholdNum + $thresholdDen - 1) div $thresholdDen") + 1)
+      .repartition(col("__s"))
     val a = prefix.select(col("__s"), col("__id").as("id_a"),
       col("__n").as("__na"), col("__rank").as("__pa"))
     val b = prefix.select(col("__s"), col("__id").as("id_b"),
@@ -1029,19 +939,8 @@ object Dedup {
   /** Row cap for [[broadcastIfUnder]]: ~16-byte (long, int) rows build a
     * HashedRelation well under Spark's 8 GiB broadcast ceiling at this
     * count, and a few hundred MB on the wire is still a sane executor
-    * fan-out on a large cluster. Env-overridable for experiments; a
-    * malformed value falls back to the default with a stderr warning
-    * instead of exploding inside the first Dedup call with an opaque
-    * NumberFormatException at object init. */
-  private[graft] val MaxBroadcastRows: Long =
-    sys.env.get("SPARK_GRAFT_MAX_BCAST_ROWS") match {
-      case Some(raw) => scala.util.Try(raw.trim.toLong).getOrElse {
-        System.err.println(
-          s"[dedup] SPARK_GRAFT_MAX_BCAST_ROWS='$raw' is not a long — using default 60000000")
-        60000000L
-      }
-      case None => 60000000L
-    }
+    * fan-out on a large cluster. */
+  private[graft] val MaxBroadcastRows: Long = 60000000L
 
   /** Corpus-sized signature width: smallest planes with expected bucket
     * occupancy <= 64, floored at 4 (buckets = 2^planes, occupancy = n/2^planes).

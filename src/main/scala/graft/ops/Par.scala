@@ -20,8 +20,6 @@ object Par {
     * parallelism fix — document ids hash evenly — and at production
     * scale (enough input splits) both forms are the identity. */
   def ensureBy(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame = {
-    // A/B escape hatch (perf-experiment harness): fall back to round-robin
-    if (sys.env.contains("SPARK_GRAFT_NO_KEYED_ENSURE")) return ensure(df)
     val want = df.sparkSession.sparkContext.defaultParallelism
     if (needsRepartition(df, want)) df.repartition(want, keys: _*) else df
   }

@@ -262,29 +262,6 @@ object TextAnalysis {
             lit(total.toDouble))) / sum(col("__n").cast("double"))).as("nll"))
   }
 
-  /** The per-occurrence reference formulation of [[unigramNll]] — kept
-    * as the parity oracle for the weighted kernel form (pinned in
-    * OpsSpec: exact n_tokens, nll equal at the operator's 6dp rounding
-    * contract). */
-  private[graft] def unigramNllOccurrenceForm(df0: DataFrame, idCol: String,
-      textCol: String, broadcastMinCount: Long = 1L,
-      maxBroadcastVocab: Long = 8000000L): DataFrame = {
-    val df = Par.ensure(df0)
-    val tok = df.select(col(idCol), explode(Dedup.tokens(col(textCol))).as("__t"))
-    val counts = Caches.track(tok.groupBy("__t").agg(count(lit(1)).as("__c")))
-    val stats = counts.agg(sum(col("__c")).as("__total"),
-      count(when(col("__c") > broadcastMinCount, lit(1))).as("__nkept")).head
-    val total = stats.getLong(0)
-    val common = counts.filter(col("__c") > broadcastMinCount)
-    val joinTable = if (stats.getLong(1) <= maxBroadcastVocab)
-      broadcast(common) else common
-    tok.join(joinTable, Seq("__t"), "left")
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_tokens"),
-        avg(-log(coalesce(col("__c"), lit(broadcastMinCount)).cast("double") /
-          lit(total.toDouble))).as("nll"))
-  }
-
   /** Corpus-bigram conditional NLL — one LM order up from
     * [[unigramNll]]: each doc scores the mean -ln p(w_i | w_{i-1}) with
     * p(b | a) = c(a b) / c(a ·) over corpus bigram / left-context
@@ -335,40 +312,25 @@ object TextAnalysis {
     val nllTerm = -log(
       coalesce(col("__c__b"), lit(broadcastMinCount)).cast("double") /
         coalesce(col("__c__a"), lit(broadcastMinCount)).cast("double"))
-    if (Flags.on("SPARK_GRAFT_NO_BIGRAM_OUTER")) {
-      // reference formulation (spec-pinned oracle for the fused form
-      // below): inner explode drops under-two-token docs entirely, a
-      // back-join against the id column recovers them as zero rows —
-      // a third pass over the corpus plus a doc-keyed join
-      val scored = bg
-        .join(cb, Seq("__b"), "left")
-        .join(ca, Seq("__a"), "left")
-        .groupBy(col(idCol))
-        .agg(count(lit(1)).as("n_bigrams"), avg(nllTerm).as("bigram_nll"))
-      df.select(col(idCol))
-        .join(scored, Seq(idCol), "left")
-        .na.fill(0L, Seq("n_bigrams"))
-        .na.fill(0.0, Seq("bigram_nll"))
-    } else {
-      // fused zero-row recovery (guide §1.2, remove a full pass): the
-      // scoring side explodes OUTER, so an under-two-token doc (empty
-      // bigram array) survives as one all-null row; count(__a) and the
-      // null-guarded avg turn it into the same (0, 0.0) score the
-      // back-join produced, without the third corpus scan or the final
-      // doc-keyed join. Identical per doc while ids are unique (they
-      // are, for every caller in this engine) — pinned vs the reference
-      // form in OpsSpec, including zero-bigram and null-text docs.
-      val bgOuter = df.select(col(idCol),
-          explode_outer(TextExprs.bigrams(col(textCol))).as("__p"))
-        .select(col(idCol), col("__p.a").as("__a"), col("__p.b").as("__b"))
-      bgOuter
-        .join(cb, Seq("__b"), "left")
-        .join(ca, Seq("__a"), "left")
-        .groupBy(col(idCol))
-        .agg(count(col("__a")).as("n_bigrams"),
-          avg(when(col("__a").isNotNull, nllTerm)).as("bigram_nll"))
-        .na.fill(0.0, Seq("bigram_nll"))
-    }
+    // fused zero-row recovery (guide §1.2, remove a full pass): the
+    // scoring side explodes OUTER, so an under-two-token doc (empty
+    // bigram array) survives as one all-null row; count(__a) and the
+    // null-guarded avg turn it into the same (0, 0.0) score a back-join
+    // against the id column would produce, without that third corpus
+    // scan or the final doc-keyed join. Identical per doc while ids are
+    // unique (they are, for every caller in this engine) — pinned vs the
+    // back-join reference form in OpsSpec, including zero-bigram and
+    // null-text docs.
+    val bgOuter = df.select(col(idCol),
+        explode_outer(TextExprs.bigrams(col(textCol))).as("__p"))
+      .select(col(idCol), col("__p.a").as("__a"), col("__p.b").as("__b"))
+    bgOuter
+      .join(cb, Seq("__b"), "left")
+      .join(ca, Seq("__a"), "left")
+      .groupBy(col(idCol))
+      .agg(count(col("__a")).as("n_bigrams"),
+        avg(when(col("__a").isNotNull, nllTerm)).as("bigram_nll"))
+      .na.fill(0.0, Seq("bigram_nll"))
   }
 
   /** PII redaction — the scrub step a training corpus runs before
@@ -463,17 +425,5 @@ object TextAnalysis {
     val quotas = df.groupBy(col(stratumCol)).agg(count(lit(1)).as("__n"))
       .withColumn("__quota", lit(k.toLong))
     Corpus.takeSmallestByMixKey(df, stratumCol, idCol, quotas, slack)
-  }
-
-  /** The plain-window reference formulation of [[stratifiedSample]] —
-    * kept as the bit-equality oracle for the threshold-cut path (pinned
-    * in OpsSpec). */
-  private[graft] def stratifiedSampleWindow(df: DataFrame, stratumCol: String,
-      idCol: String, k: Int): DataFrame = {
-    val w = Window.partitionBy(col(stratumCol))
-      .orderBy(Corpus.mixKey(col(idCol)), col(idCol))
-    df.withColumn("__rk", row_number().over(w))
-      .filter(col("__rk") <= k)
-      .drop("__rk")
   }
 }

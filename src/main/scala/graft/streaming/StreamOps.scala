@@ -129,8 +129,6 @@ object StreamOps {
     * input split count, or skip the sizing. */
   def withInputSizedShuffle[T](s: org.apache.spark.sql.SparkSession,
       inputParts: Int)(f: => T): T = {
-    // A/B escape hatch (perf-experiment harness, like SPARK_GRAFT_D9_PASSES)
-    if (sys.env.contains("SPARK_GRAFT_NO_INPUT_SIZED_STATE")) return f
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     val parts = math.max(1, math.min(inputParts, prev.toInt))
     s.conf.set("spark.sql.shuffle.partitions", parts.toString)

@@ -36,12 +36,7 @@ object PlanDump {
           "text", "doc_id", windowTokens = 8, minDocs = 2)),
       "d7_jaccard_pairs_raw" -> ((s, dir) =>
         graft.ops.Dedup.jaccardExactPairs(graft.Tables.scan(s, dir, "documents"),
-          "text", "doc_id", "lang")),
-      // the r18 x8 rewrite's reference formulation (per-occurrence
-      // explode + avg) — dumpable as the before-plan
-      "x8_unigram_nll_occ" -> ((s, dir) =>
-        graft.ops.TextAnalysis.unigramNllOccurrenceForm(
-          graft.Tables.scan(s, dir, "documents"), "doc_id", "text")))
+          "text", "doc_id", "lang")))
     val queries = graft.SparkEntry.queries ++ raw
     for (name <- names) {
       // recompute snapshot sidecars so a producer's plan shows the real

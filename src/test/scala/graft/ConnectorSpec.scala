@@ -705,6 +705,34 @@ class ConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq("o_orderkey", "price"))
   }
 
+  test("ALTER TABLE DROP COLUMN refuses a partition source; the table stays appendable") {
+    val raw = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
+      .select("o_orderkey", "o_orderstatus", "o_totalprice")
+    val schema = SparkConv.fromSpark(raw.schema)
+    val t = IceTable.create(cat, TableIdentifier.parse("db.dropsrc"), schema,
+      PartitionSpec(0, IndexedSeq(PartitionField(
+        schema.findFieldByName("o_orderstatus").get.id, 1000, "status",
+        graft.ice.transform.IdentityTransform))))
+    t.append(spark).appendDataFrame(raw.limit(50))
+    val err = intercept[Exception](
+      spark.sql("ALTER TABLE ice.db.dropsrc DROP COLUMN o_orderstatus"))
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).toSeq
+    assert(msgs.exists(_.contains("partition field status")), msgs.mkString("; "))
+    assert(spark.table("ice.db.dropsrc").schema.fieldNames.toSeq ==
+      Seq("o_orderkey", "o_orderstatus", "o_totalprice"))
+    spark.sql("INSERT INTO ice.db.dropsrc VALUES (900001, 'F', 1.5), (900002, 'O', 2.5)")
+    val back = spark.table("ice.db.dropsrc")
+    assert(back.count() == 52)
+    assert(back.filter(col("o_orderkey") >= 900001).select("o_orderstatus")
+      .collect().map(_.getString(0)).sorted.toSeq == Seq("F", "O"))
+    // a non-source column still drops; IF EXISTS still skips a missing one
+    spark.sql("ALTER TABLE ice.db.dropsrc DROP COLUMN IF EXISTS nope")
+    spark.sql("ALTER TABLE ice.db.dropsrc DROP COLUMN o_totalprice")
+    assert(spark.table("ice.db.dropsrc").schema.fieldNames.toSeq ==
+      Seq("o_orderkey", "o_orderstatus"))
+  }
+
   test("snapshot_table recurses nested layouts and imports Hive partitions") {
     import java.nio.file.{Files => JFiles}
     val raw = spark.read.parquet("/root/testdata/sf0.001/region.parquet")

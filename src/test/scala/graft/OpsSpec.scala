@@ -226,10 +226,9 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // observed metric instead of a separate count() job per round. An
     // ABSOLUTE job budget is untestable here — AQE materializes each
     // exchange as its own Spark job, so one logical action fans out into
-    // several jobs — so assert DIFFERENTIALLY: the same loop with the
-    // fusion hatched off (SPARK_GRAFT_NO_OBSERVE_FUSION, via sys.props
-    // which Flags lets win over env for in-process A/B) must pay at
-    // least ~one extra job per round.
+    // several jobs — so assert DIFFERENTIALLY: the same loop with a zero
+    // observed-metric wait (every round takes the count-job fallback)
+    // must pay at least ~one extra job per round.
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -256,11 +255,9 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val fused = jobsFor(Dedup.clustersFromPairs(pairs, "id_a", "id_b").collect())
     val rounds = Dedup.ClusterStats.rounds
     assert(rounds == 10) // chain of diameter 9 -> 10 rounds
-    val unfused =
-      try {
-        sys.props("SPARK_GRAFT_NO_OBSERVE_FUSION") = "1"
-        jobsFor(Dedup.clustersFromPairs(pairs, "id_a", "id_b").collect())
-      } finally sys.props -= "SPARK_GRAFT_NO_OBSERVE_FUSION"
+    val unfused = jobsFor(Dedup.clustersFromPairs(pairs, "id_a", "id_b",
+      observeWait = scala.concurrent.duration.Duration.Zero).collect())
+    assert(Dedup.ClusterStats.rounds == rounds)
     // identical plans either way except the per-round count() job; allow
     // slack of 2 for scheduler/AQE job-count jitter between the runs
     assert(unfused - fused >= rounds - 2,
@@ -298,7 +295,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     def keys(d: org.apache.spark.sql.DataFrame) =
       d.select("doc_id", "source").collect()
         .map(r => (r.getLong(0), r.getString(1))).toSet
-    val window = keys(Corpus.mixtureSampleWindow(df, "source", "doc_id", parts))
+    val window = keys(OracleForms.mixtureSampleWindow(df, "source", "doc_id", parts))
     val cut = keys(Corpus.mixtureSample(df, "source", "doc_id", parts))
     assert(cut == window)
     // forced-fallback: a slack so small every group goes deficient —
@@ -307,7 +304,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       slack = 1e-9))
     assert(cutTiny == window)
     // stratified: same equality on the real fixture
-    val strataW = TextAnalysis.stratifiedSampleWindow(docs, "lang", "doc_id", 7)
+    val strataW = OracleForms.stratifiedSampleWindow(docs, "lang", "doc_id", 7)
       .select("lang", "doc_id").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
     val strataC = TextAnalysis.stratifiedSample(docs, "lang", "doc_id", 7)
@@ -319,18 +316,27 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select("lang", "doc_id").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
     assert(strataTiny == strataW)
-    // r19: the quota/threshold tables are now driver-materialized local
-    // relations (one corpus scan instead of re-deriving counts behind
-    // every broadcast build). Pin the hatched plan-form against the
-    // driver-form on both ops — identical selections.
-    try {
-      sys.props("SPARK_GRAFT_NO_DRIVER_THRESHOLDS") = "1"
-      assert(keys(Corpus.mixtureSample(df, "source", "doc_id", parts)) == window)
-      val strataPlanForm = TextAnalysis.stratifiedSample(docs, "lang", "doc_id", 7)
+    // r19: the threshold table is a driver-materialized local relation
+    // (one corpus scan instead of re-deriving counts behind every
+    // broadcast build) up to `groupCap` groups, the lazy plan past it.
+    // Run both ops at the real boundary — cap = group count keeps the
+    // driver table, cap = group count - 1 takes the plan form — and pin
+    // identical selections on each side.
+    val mixQuotas = Corpus.mixtureQuotas(df, "source", parts)
+    val strataQuotas = docs.groupBy(col("lang")).agg(count(lit(1)).as("__n"))
+      .withColumn("__quota", lit(7L))
+    val nStrata = strataQuotas.count().toInt
+    assert(nStrata > 1)
+    for (cap <- Seq(parts.size, parts.size - 1))
+      assert(keys(Corpus.takeSmallestByMixKey(df, "source", "doc_id",
+        mixQuotas, groupCap = cap)) == window, s"mixture groupCap=$cap")
+    for (cap <- Seq(nStrata, nStrata - 1)) {
+      val strata = Corpus.takeSmallestByMixKey(docs, "lang", "doc_id",
+          strataQuotas, groupCap = cap)
         .select("lang", "doc_id").collect()
         .map(r => (r.getString(0), r.getLong(1))).toSet
-      assert(strataPlanForm == strataW)
-    } finally sys.props -= "SPARK_GRAFT_NO_DRIVER_THRESHOLDS"
+      assert(strata == strataW, s"stratified groupCap=$cap")
+    }
   }
 
   test("mixtureSample: a source listed in parts but absent from the data zeroes the budget") {
@@ -342,7 +348,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val kept = Corpus.mixtureSample(df, "source", "doc_id",
       Map("web" -> 3, "books" -> 1, "news" -> 2))
     assert(kept.count() == 0)
-    val keptW = Corpus.mixtureSampleWindow(df, "source", "doc_id",
+    val keptW = OracleForms.mixtureSampleWindow(df, "source", "doc_id",
       Map("web" -> 3, "books" -> 1, "news" -> 2))
     assert(keptW.count() == 0)
   }
@@ -898,7 +904,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(plan.linesIterator.exists(l => l.contains("lang_id") && l.contains("*(")), plan)
   }
 
-  test("exactSurvivors anti-join path equals the full-row window form") {
+  test("exactSurvivors keeps exactly the min id of every distinct text") {
     import spark.implicits._
     // planted duplicates: clones with higher ids must all lose to the
     // original; distinct texts survive untouched
@@ -906,26 +912,29 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         docs.filter("doc_id % 7 = 0").withColumn("doc_id", col("doc_id") + 100000))
       .unionByName(
         docs.filter("doc_id % 11 = 0").withColumn("doc_id", col("doc_id") + 200000))
-    val anti = Dedup.exactSurvivorsAntiJoin(withDups, "text", "doc_id")
     val win = Dedup.exactSurvivors(withDups, "text", "doc_id")
-    assert(anti.count() == win.count())
-    assert(anti.except(win).count() == 0 && win.except(anti).count() == 0)
+    // plain-Spark oracle: the min id per distinct text (null-safe),
+    // full rows
+    val mins = withDups.groupBy(col("text").as("__t"))
+      .agg(min("doc_id").as("__min"))
+    val oracle = withDups.join(mins,
+        col("text") <=> col("__t") && col("doc_id") === col("__min"))
+      .select(withDups.columns.map(col).toSeq: _*)
+    assert(win.count() == oracle.count())
+    assert(win.except(oracle).count() == 0 && oracle.except(win).count() == 0)
     // the clone of a duplicated text never survives; min id always does
-    assert(anti.filter(col("doc_id") >= 100000).count() == 0)
-    // edge: all-identical corpus (one survivor, the min id) — both forms
+    assert(win.filter(col("doc_id") >= 100000).count() == 0)
+    // edge: all-identical corpus (one survivor, the min id)
     val same = Seq((5L, "same text"), (3L, "same text"), (9L, "same text"),
       (7L, "other")).toDF("doc_id", "text")
-    for (form <- Seq(Dedup.exactSurvivors _, Dedup.exactSurvivorsAntiJoin _)) {
-      val s = form(same, "text", "doc_id")
-        .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-      assert(s == Seq(3L, 7L))
-    }
-    // plan shape: the corpus rows are recovered via a broadcast ANTI
-    // join — no full-row hash exchange, no window over the corpus rows
-    // (the only Window runs on the 16-byte (hash, id) projection)
-    val plan = anti.queryExecution.executedPlan.toString
-    assert(plan.contains("LeftAnti"), plan)
-    assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"), plan)
+    val s = Dedup.exactSurvivors(same, "text", "doc_id")
+      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+    assert(s == Seq(3L, 7L))
+    // full rows survive unchanged
+    val ok = Seq((1L, "a"), (2L, "a"), (3L, "b")).toDF("doc_id", "text")
+    val kept = Dedup.exactSurvivors(ok, "text", "doc_id")
+      .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(kept == Seq((1L, "a"), (3L, "b")))
   }
 
   test("codegen simhash kernel is bit-exact with the agg formulation") {
@@ -969,9 +978,18 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // broadcast-map kernel and the row_number window it replaces —
     // rows are unique by (__id, __s), so except-both-ways + equal
     // counts pins the multiset
+    // both strategies run at the real cap boundary: a rank cap equal to
+    // the repeated-shingle count keeps the in-row map, one less takes
+    // the window fallback
+    def repeated(s: org.apache.spark.sql.DataFrame): Long =
+      s.select(col("__blk"), explode(col("__sh")).as("__s0"))
+        .groupBy(xxhash64(col("__blk"), col("__s0"))).count()
+        .filter(col("count") > 1).count()
     val sh = Dedup.shingleSets(docs, "text", "doc_id", "lang", 3)
-    val inRow = Dedup.rankedPostings(sh, "spec in-row")
-    val win = Dedup.rankedPostings(sh, "spec window", forceWindow = true)
+    val nRep = repeated(sh)
+    assert(nRep > 0)
+    val inRow = Dedup.rankedPostings(sh, "spec in-row", rankCap = nRep)
+    val win = Dedup.rankedPostings(sh, "spec window", rankCap = nRep - 1)
     assert(inRow.except(win).count() == 0 && win.except(inRow).count() == 0)
     assert(inRow.count() == win.count())
     // engineered frequency ties and misses: repeated shingles across
@@ -984,10 +1002,14 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       (6L, "a b c d e f", "y")) // other block: same strings, other hashes
       .toDF("doc_id", "text", "lang")
     val csh = Dedup.shingleSets(crafted, "text", "doc_id", "lang", 3)
-    val ci = Dedup.rankedPostings(csh, "spec in-row crafted")
-    val cw = Dedup.rankedPostings(csh, "spec window crafted", forceWindow = true)
+    val cRep = repeated(csh)
+    assert(cRep > 0)
+    val ci = Dedup.rankedPostings(csh, "spec in-row crafted", rankCap = cRep)
+    val cw = Dedup.rankedPostings(csh, "spec window crafted", rankCap = cRep - 1)
     assert(ci.except(cw).count() == 0 && cw.except(ci).count() == 0)
     assert(ci.count() == cw.count())
+    assert(ci.queryExecution.executedPlan.toString.contains("rank_postings"))
+    assert(cw.queryExecution.executedPlan.toString.contains("Window"))
     // plan shape: the in-row form has no Window and no per-doc exchange;
     // the kernel runs inside a whole-stage-codegen span
     val plan = inRow.queryExecution.executedPlan.toString
@@ -1000,29 +1022,9 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(win.queryExecution.executedPlan.toString.contains("Window"))
   }
 
-  test("exactSurvivorsAntiJoin rejects duplicate and null ids (precondition check)") {
-    import spark.implicits._
-    val dup = Seq((1L, "a"), (1L, "a"), (2L, "b")).toDF("doc_id", "text")
-    intercept[IllegalArgumentException] {
-      Dedup.exactSurvivorsAntiJoin(dup, "text", "doc_id").collect()
-    }
-    val withNull = Seq((Some(1L), "a"), (None, "a"), (Some(2L), "b"))
-      .toDF("doc_id", "text")
-    intercept[IllegalArgumentException] {
-      Dedup.exactSurvivorsAntiJoin(withNull, "text", "doc_id").collect()
-    }
-    // clean ids still work and match the window form
-    val ok = Seq((1L, "a"), (2L, "a"), (3L, "b")).toDF("doc_id", "text")
-    val anti = Dedup.exactSurvivorsAntiJoin(ok, "text", "doc_id")
-      .orderBy("doc_id").collect().toSeq
-    val win = Dedup.exactSurvivors(ok, "text", "doc_id")
-      .orderBy("doc_id").collect().toSeq
-    assert(anti == win)
-  }
-
   test("substring span interval-merge is bit-exact with the window formulation") {
     val merged = Dedup.substringSpansCompute(docs, "text", "doc_id", 8, 2)
-    val windowed = Dedup.substringSpansWindowForm(docs, "text", "doc_id", 8, 2)
+    val windowed = OracleForms.substringSpansWindowForm(docs, "text", "doc_id", 8, 2)
     assert(merged.except(windowed).count() == 0 &&
       windowed.except(merged).count() == 0)
     assert(merged.count() == windowed.count()) // multiset equal: keys unique per (doc, start)
@@ -1034,7 +1036,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       (3L, "q r s a b c d q q z z2 z3 a b c d"), // two islands, one shared run
       (4L, "a b c d q q q q q q a b c d")).toDF("doc_id", "text")
     val m = Dedup.substringSpansCompute(crafted, "text", "doc_id", 3, 2)
-    val w = Dedup.substringSpansWindowForm(crafted, "text", "doc_id", 3, 2)
+    val w = OracleForms.substringSpansWindowForm(crafted, "text", "doc_id", 3, 2)
     assert(m.except(w).count() == 0 && w.except(m).count() == 0 &&
       m.count() == w.count())
   }
@@ -1047,7 +1049,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val corpus = docs.select(col("doc_id"), col("text")).unionByName(edge)
     val w = TextAnalysis.unigramNll(corpus, "doc_id", "text")
       .withColumnRenamed("n_tokens", "nt_w").withColumnRenamed("nll", "nll_w")
-    val o = TextAnalysis.unigramNllOccurrenceForm(corpus, "doc_id", "text")
+    val o = OracleForms.unigramNllOccurrenceForm(corpus, "doc_id", "text")
       .withColumnRenamed("n_tokens", "nt_o").withColumnRenamed("nll", "nll_o")
     val j = w.join(o, Seq("doc_id"), "full_outer")
     // row set + exact integer token counts
@@ -1296,10 +1298,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       (d.collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2))))
         .toMap, d.queryExecution.executedPlan.toString)
     val (fused, fusedPlan) = run(TextAnalysis.bigramNll(df, "doc_id", "text"))
-    val (ref, refPlan) = try {
-      sys.props("SPARK_GRAFT_NO_BIGRAM_OUTER") = "1"
-      run(TextAnalysis.bigramNll(df, "doc_id", "text"))
-    } finally sys.props -= "SPARK_GRAFT_NO_BIGRAM_OUTER"
+    val (ref, refPlan) = run(OracleForms.bigramNllBackJoin(df, "doc_id", "text"))
     assert(fused.keySet == ref.keySet)
     ref.foreach { case (k, (n, v)) =>
       assert(fused(k)._1 == n, s"doc $k n_bigrams")

@@ -1485,4 +1485,55 @@ class WriteOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(t.snapshots.exists(_.snapshotId == s1.snapshotId)) // kept by tag
     assert(t.newScan().useRef("v1").toDF(spark).count() == raw.count())
   }
+
+  test("MoR position and DV deletes match rows in own and id-less addFiles files") {
+    for (dv <- Seq(false, true)) {
+      val (t, raw) = freshTable(if (dv) "idless_dv" else "idless_pos")
+      if (dv) t.upgradeFormatVersion(3)
+      // an external file written by plain Spark carries no field ids
+      val dir = java.nio.file.Files.createTempDirectory("idless").toString
+      val external = raw.withColumn("o_orderkey", col("o_orderkey") + 1000000L)
+      external.write.mode("overwrite").parquet(dir)
+      val files = new java.io.File(dir).listFiles().map(_.getPath)
+        .filter(_.endsWith(".parquet")).toSeq
+      t.append(spark).addFiles(files)
+      // the filter matches rows in the own file and in the external one
+      val pred = "o_orderkey % 5 = 2"
+      assert(raw.filter(pred).count() > 0 && external.filter(pred).count() > 0)
+      val del = t.delete(spark)
+      if (dv) del.deleteWhereDV(E.raw(pred)) else del.deleteWherePositional(E.raw(pred))
+      val expected = raw.unionByName(external).filter(s"NOT ($pred)")
+      val got = t.newScan().toDF(spark).select(expected.columns.map(col).toSeq: _*)
+      assert(got.count() == expected.count(), s"dv=$dv")
+      assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty,
+        s"dv=$dv")
+    }
+  }
+
+  test("deleteColumn refuses unknown names and partition or sort-order sources") {
+    val (t, raw) = freshTable("dropsrc", spec = s => PartitionSpec(0,
+      IndexedSeq(PartitionField(s.findFieldByName("o_orderstatus").get.id,
+        1000, "status", IdentityTransform))))
+    t.replaceSortOrder(Seq(SortField(t.schema.findFieldByName("o_orderdate").get.id,
+      IdentityTransform, ascending = true, nullsFirst = true)))
+    val schemaId = t.metadata.currentSchemaId
+    val part = intercept[IllegalArgumentException](
+      t.updateSchema().deleteColumn("o_orderstatus").commit())
+    assert(part.getMessage.contains("partition field status"), part.getMessage)
+    val sort = intercept[IllegalArgumentException](
+      t.updateSchema().deleteColumn("o_orderdate").commit())
+    assert(sort.getMessage.contains("sort order"), sort.getMessage)
+    val unknown = intercept[IllegalArgumentException](
+      t.updateSchema().deleteColumn("nope").commit())
+    assert(unknown.getMessage.contains("no such column nope"))
+    // nothing committed; any other column still drops
+    assert(IceTable.load(t.catalog, t.ident).metadata.currentSchemaId == schemaId)
+    t.updateSchema().deleteColumn("o_orderpriority").commit()
+    // the table stays appendable and partitioned
+    t.append(spark).appendDataFrame(raw.drop("o_orderpriority"))
+    val back = t.newScan().toDF(spark)
+    assert(back.count() == 2 * raw.count())
+    assert(!back.columns.contains("o_orderpriority"))
+    assert(t.newScan().planFiles().forall(_.file.partition.size == 1))
+  }
 }
