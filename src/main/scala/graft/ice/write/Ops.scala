@@ -955,28 +955,32 @@ final class RowDelete(table: IceTable, spark: SparkSession) {
 
   /** (file_path, pos) of every row of the `matching` files where `cond`
     * holds — the match set of both merge-on-read deletes. Files carrying
-    * parquet field ids read by id with the table schema; id-less files
-    * (addFiles registrations, split out by `toDF`'s id test) read by
-    * name with an id-free schema. Spark cannot mix both strategies in
-    * one read, so the two reads union. */
+    * parquet field ids read by id with the table schema. Id-less files
+    * (addFiles registrations, split out by `toDF`'s id test) read through
+    * the scan's `_file`/`_pos` columns, so a predicate sees the same
+    * values a scan does: name-mapped columns, initial-defaults and
+    * identity-partition constants. */
   private def matchedPositions(matching: Seq[FileScanTask],
       cond: org.apache.spark.sql.Column): DataFrame = {
-    spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    val sparkSchema = SparkConv.toSpark(table.schema)
-    val plainSchema = org.apache.spark.sql.types.StructType(sparkSchema.fields
-      .map(_.copy(metadata = org.apache.spark.sql.types.Metadata.empty)))
     val hasIds = ScanBuilder.fieldIdTest(table, spark)
-    val (withIds, idLess) = matching
-      .map(t => (t, ManifestAvro.stripFileScheme(t.file.filePath)))
-      .partition { case (t, p) => hasIds(t, p) }
-    Seq(withIds -> sparkSchema, idLess -> plainSchema).collect {
-      case (files, schema) if files.nonEmpty =>
-        spark.read.schema(schema).parquet(files.map(_._2): _*)
-          .filter(cond)
-          .select(
-            regexp_replace(col("_metadata.file_path"), "^file:/*", "/").as("file_path"),
-            col("_metadata.row_index").as("pos"))
-    }.reduce(_ union _)
+    val (withIds, idLess) = matching.partition(t =>
+      hasIds(t, ManifestAvro.stripFileScheme(t.file.filePath)))
+    val exact = Option.when(withIds.nonEmpty) {
+      spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+      spark.read.schema(SparkConv.toSpark(table.schema))
+        .parquet(withIds.map(t => ManifestAvro.stripFileScheme(t.file.filePath)): _*)
+        .filter(cond)
+        .select(
+          regexp_replace(col("_metadata.file_path"), "^file:/*", "/").as("file_path"),
+          col("_metadata.row_index").as("pos"))
+    }
+    val scanned = Option.when(idLess.nonEmpty) {
+      table.newScan().restrictFiles(idLess.map(_.file.filePath).toSet)
+        .withMetadataColumns("_file", "_pos").toDF(spark)
+        .filter(cond)
+        .select(col("_file").as("file_path"), col("_pos").as("pos"))
+    }
+    (exact ++ scanned).reduce(_ unionByName _)
   }
 
   /** Merge-on-read position delete: write (file_path, pos) tuples of

@@ -774,6 +774,35 @@ class ConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
       orders.filter(col("o_orderstatus") === "F").count())
   }
 
+  test("MoR DELETE on a snapshot_table Hive import matches the partition column") {
+    import java.nio.file.{Files => JFiles}
+    val orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
+      .select("o_orderkey", "o_orderstatus", "o_totalprice")
+    // o_orderstatus lives in directory names only: the delete must see
+    // the value the manifest tuple injects, as scans do
+    val preds = Seq("o_orderstatus = 'P'",
+      "o_orderstatus = 'F' AND o_totalprice > 150000")
+    for ((name, dv) <- Seq("morhive_pos" -> false, "morhive_dv" -> true)) {
+      val hive = JFiles.createTempDirectory(name).toString + "/src"
+      orders.write.partitionBy("o_orderstatus").parquet(hive)
+      spark.sql(s"""CALL ice.system.snapshot_table(
+        source_dir => '$hive', table => 'db.$name')""").collect()
+      val ident = TableIdentifier.parse(s"db.$name")
+      if (dv) IceTable.load(cat, ident).upgradeFormatVersion(3)
+      spark.sql(s"ALTER TABLE ice.db.$name SET TBLPROPERTIES " +
+        "('write.delete.mode' = 'merge-on-read')")
+      preds.foreach(p => spark.sql(s"DELETE FROM ice.db.$name WHERE $p"))
+      val t = IceTable.load(cat, ident)
+      val dels = t.planDeleteEntries(t.currentSnapshot.get)
+      assert(dels.nonEmpty && dels.forall(e => (e.dataFile.fileFormat == "PUFFIN") == dv),
+        dels.map(_.dataFile.fileFormat).mkString(","))
+      val expected = orders.filter(preds.map(p => s"NOT ($p)").mkString(" AND "))
+      assert(expected.count() < orders.count())
+      assert(sortedRows(spark.table(s"ice.db.$name").select(
+        expected.columns.map(col).toSeq: _*)) == sortedRows(expected), name)
+    }
+  }
+
   test("add_files appends a Hive directory into an existing table") {
     import java.nio.file.{Files => JFiles}
     val orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")

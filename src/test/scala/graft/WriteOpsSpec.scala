@@ -1510,6 +1510,37 @@ class WriteOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("MoR position and DV deletes resolve id-less files through the name mapping") {
+    // id-less parquet written under the ORIGINAL names; the table's
+    // current names differ (as after a rename) and the mapping records
+    // the names the file was written under
+    val dir = java.nio.file.Files.createTempDirectory("nmdel").toString
+    val src = spark.range(20).selectExpr("id", "concat('row-', id) AS name")
+    src.coalesce(1).write.parquet(s"$dir/data")
+    val files = new java.io.File(s"$dir/data").listFiles().map(_.getPath)
+      .filter(_.endsWith(".parquet")).toSeq
+    val schema = Schema(0, IndexedSeq(
+      NestedField(1, "record_id", LongT, required = false),
+      NestedField(2, "label", StringT, required = false)))
+    val mapping = NameMapping(Seq(
+      MappedField(Some(1), Seq("id")), MappedField(Some(2), Seq("name"))))
+    for (dv <- Seq(false, true)) {
+      val cat = new DirCatalog(java.nio.file.Files.createTempDirectory("wh").toString)
+      val t = IceTable.create(cat, TableIdentifier.parse(s"db.nmdel_$dv"), schema,
+        properties = Map(NameMapping.PropertyKey -> mapping.toJson) ++
+          (if (dv) Map("format-version" -> "3") else Map.empty))
+      t.append(spark).addFiles(files)
+      val pred = "label IN ('row-3', 'row-7') OR record_id = 11"
+      val del = t.delete(spark)
+      if (dv) del.deleteWhereDV(E.raw(pred)) else del.deleteWherePositional(E.raw(pred))
+      val expected = src.toDF("record_id", "label").filter(s"NOT ($pred)")
+      val got = t.newScan().toDF(spark)
+      assert(got.count() == 17, s"dv=$dv")
+      assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty,
+        s"dv=$dv")
+    }
+  }
+
   test("deleteColumn refuses unknown names and partition or sort-order sources") {
     val (t, raw) = freshTable("dropsrc", spec = s => PartitionSpec(0,
       IndexedSeq(PartitionField(s.findFieldByName("o_orderstatus").get.id,
