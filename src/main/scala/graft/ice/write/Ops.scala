@@ -896,12 +896,9 @@ final class RowDelete(table: IceTable, spark: SparkSession) {
             "merge-on-read delete files would resurrect deleted rows; " +
             "compact().rewriteDataFiles() first")
       }
-      val paths = rewrite.map(t => ManifestAvro.stripFileScheme(t.file.filePath))
-      spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-      val sparkSchema = SparkConv.toSpark(table.schema)
       // keep rows where the predicate is NOT TRUE: a NULL predicate result
       // (e.g. Eq on a null value) must keep the row, not silently drop it
-      val remaining = spark.read.schema(sparkSchema).parquet(paths: _*)
+      val remaining = rewrittenRows(rewrite)
         .filter(!coalesce(cond, lit(false)))
       if (remaining.isEmpty) Nil
       else SnapshotProducer.writeDataFiles(table, spark, remaining)
@@ -933,11 +930,8 @@ final class RowDelete(table: IceTable, spark: SparkSession) {
     val matching = table.newScan().filter(filter).planFiles()
     if (matching.isEmpty)
       return SnapshotProducer.commit(table, spark, DataOperation.Overwrite, Nil)
-    val paths = matching.map(t => ManifestAvro.stripFileScheme(t.file.filePath))
-    spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    val sparkSchema = SparkConv.toSpark(table.schema)
     val hit = coalesce(cond, lit(false))
-    val updated = spark.read.schema(sparkSchema).parquet(paths: _*)
+    val updated = rewrittenRows(matching)
       .select(table.schema.fields.map { f =>
         set.get(f.name) match {
           case Some(sql) =>
@@ -952,6 +946,14 @@ final class RowDelete(table: IceTable, spark: SparkSession) {
       removedPaths = matching.map(_.file.filePath).toSet,
       serializableCheck = isolationCheck(TableProperties.WriteUpdateIsolation, bound))
   }
+
+  /** Every row of the files a copy-on-write delete or update rewrites,
+    * read through the scan so id-less files (addFiles registrations)
+    * resolve like any scan does: name mapping, initial-defaults and
+    * identity-partition constants. Both callers refuse tables carrying
+    * live merge-on-read deletes, so these are exactly the files' rows. */
+  private def rewrittenRows(files: Seq[FileScanTask]): DataFrame =
+    table.newScan().restrictFiles(files.map(_.file.filePath).toSet).toDF(spark)
 
   /** (file_path, pos) of every row of the `matching` files where `cond`
     * holds — the match set of both merge-on-read deletes. Files carrying

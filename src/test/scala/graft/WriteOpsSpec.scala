@@ -1541,6 +1541,75 @@ class WriteOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("CoW delete and update rewrite rows of own and id-less addFiles files") {
+    for (update <- Seq(false, true)) {
+      val (t, raw) = freshTable(if (update) "cow_idless_upd" else "cow_idless_del")
+      // an external file written by plain Spark carries no field ids
+      val dir = java.nio.file.Files.createTempDirectory("cowidless").toString
+      val external = raw.withColumn("o_orderkey", col("o_orderkey") + 1000000L)
+      external.write.mode("overwrite").parquet(dir)
+      val files = new java.io.File(dir).listFiles().map(_.getPath)
+        .filter(_.endsWith(".parquet")).toSeq
+      t.append(spark).addFiles(files)
+      // the filter matches rows in the own file and in the external one
+      // without covering either whole, so both are read and rewritten
+      val pred = "o_orderkey % 5 = 2"
+      assert(raw.filter(pred).count() > 0 && external.filter(pred).count() > 0)
+      val all = raw.unionByName(external)
+      val expected =
+        if (update) {
+          t.delete(spark).updateWhere(E.raw(pred),
+            Map("o_totalprice" -> "o_totalprice + 1000.0"))
+          all.withColumn("o_totalprice", when(org.apache.spark.sql.functions.expr(pred),
+            col("o_totalprice") + 1000.0).otherwise(col("o_totalprice")))
+        } else {
+          t.delete(spark).deleteWhere(E.raw(pred))
+          all.filter(s"NOT ($pred)")
+        }
+      val got = t.newScan().toDF(spark).select(expected.columns.map(col).toSeq: _*)
+      assert(got.count() == expected.count(), s"update=$update")
+      assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty,
+        s"update=$update")
+    }
+  }
+
+  test("CoW delete and update resolve id-less files through the name mapping") {
+    // id-less parquet written under the ORIGINAL names; the table's
+    // current names differ (as after a rename) and the mapping records
+    // the names the file was written under
+    val dir = java.nio.file.Files.createTempDirectory("nmcow").toString
+    val src = spark.range(20).selectExpr("id", "concat('row-', id) AS name")
+    src.coalesce(1).write.parquet(s"$dir/data")
+    val files = new java.io.File(s"$dir/data").listFiles().map(_.getPath)
+      .filter(_.endsWith(".parquet")).toSeq
+    val schema = Schema(0, IndexedSeq(
+      NestedField(1, "record_id", LongT, required = false),
+      NestedField(2, "label", StringT, required = false)))
+    val mapping = NameMapping(Seq(
+      MappedField(Some(1), Seq("id")), MappedField(Some(2), Seq("name"))))
+    val pred = "label IN ('row-3', 'row-7') OR record_id = 11"
+    val base = src.toDF("record_id", "label")
+    for (update <- Seq(false, true)) {
+      val cat = new DirCatalog(java.nio.file.Files.createTempDirectory("wh").toString)
+      val t = IceTable.create(cat, TableIdentifier.parse(s"db.nmcow_$update"), schema,
+        properties = Map(NameMapping.PropertyKey -> mapping.toJson))
+      t.append(spark).addFiles(files)
+      val expected =
+        if (update) {
+          t.delete(spark).updateWhere(E.raw(pred), Map("label" -> "upper(label)"))
+          base.withColumn("label",
+            when(org.apache.spark.sql.functions.expr(pred), upper(col("label"))).otherwise(col("label")))
+        } else {
+          t.delete(spark).deleteWhere(E.raw(pred))
+          base.filter(s"NOT ($pred)")
+        }
+      val got = t.newScan().toDF(spark)
+      assert(got.count() == (if (update) 20 else 17), s"update=$update")
+      assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty,
+        s"update=$update")
+    }
+  }
+
   test("deleteColumn refuses unknown names and partition or sort-order sources") {
     val (t, raw) = freshTable("dropsrc", spec = s => PartitionSpec(0,
       IndexedSeq(PartitionField(s.findFieldByName("o_orderstatus").get.id,
