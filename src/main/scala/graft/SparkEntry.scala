@@ -787,7 +787,7 @@ object SparkEntry {
           "this thin client applies parquet position deletes only")
         val strip = (p: String) => graft.ice.manifest.ManifestAvro.stripFileScheme(p)
         val data = s.read.parquet(plan.tasks.map(t => strip(t.path)): _*)
-          .withColumn("__f", regexp_replace(col("_metadata.file_path"), "^file:/*", "/"))
+          .withColumn("__f", graft.ice.FilePaths.column(col("_metadata.file_path")))
           .withColumn("__p", col("_metadata.row_index"))
         val out =
           if (refd.isEmpty) data

@@ -1,0 +1,63 @@
+package graft.ice
+
+import org.apache.spark.sql.{Column, GraftColumnBridge}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.ice.manifest.ManifestAvro
+
+/** The one mapping from a path as Spark reports it to the path as
+  * manifests and delete files record it. Spark's `_metadata.file_path`
+  * and `input_file_name()` are percent-encoded URIs (`file:/w%20h/x`),
+  * while manifests hold plain paths (`/w h/x`): stripping only the
+  * scheme leaves `%20` in place, so a delete written from the encoded
+  * form never matches its data file under a path with a space. */
+object FilePaths {
+
+  /** A Spark file URI as a plain path: `file` (or no) scheme decodes to
+    * the bare path; other schemes keep scheme and authority with a
+    * decoded path. A string that is not a URI only loses its `file:`
+    * scheme, like a manifest path. */
+  def fromSpark(raw: String): String =
+    try {
+      val u = new java.net.URI(raw)
+      val path = u.getPath
+      if (path == null) raw
+      else if (u.getScheme == null || u.getScheme == "file") path
+      else s"${u.getScheme}://${Option(u.getRawAuthority).getOrElse("")}$path"
+    } catch { case _: java.net.URISyntaxException => ManifestAvro.stripFileScheme(raw) }
+
+  /** [[fromSpark]] over a column, typically `_metadata.file_path`. */
+  def column(c: Column): Column =
+    GraftColumnBridge.column(SparkFilePath(GraftColumnBridge.expression(c)))
+}
+
+/** `graft_file_path(path)`: [[FilePaths.fromSpark]] as an expression.
+  * A scan's rows arrive file by file, so the last decode is reused and
+  * a row costs one byte comparison. */
+final case class SparkFilePath(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = StringType
+  override def prettyName: String = "graft_file_path"
+
+  @transient private[this] var lastRaw: UTF8String = _
+  @transient private[this] var lastPath: UTF8String = _
+
+  def decode(raw: UTF8String): UTF8String = {
+    if (lastRaw == null || !lastRaw.equals(raw)) {
+      lastPath = UTF8String.fromString(FilePaths.fromSpark(raw.toString))
+      lastRaw = raw.clone()
+    }
+    lastPath
+  }
+
+  override protected def nullSafeEval(v: Any): Any = decode(v.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("filePath", this)
+    defineCodeGen(ctx, ev, c => s"$self.decode($c)")
+  }
+
+  override protected def withNewChildInternal(c: Expression): SparkFilePath = copy(child = c)
+}

@@ -108,25 +108,16 @@ object FormatRegistry {
   /** (normalized path -> row count) for ORC files in ONE distributed job
     * (ORC footers aren't parsed driver-side the way parquet's are; the
     * registered formats without footer metrics get record counts only,
-    * so metric pruning treats their files as unknown/included). */
+    * so metric pruning treats their files as unknown/included). A
+    * zero-row file produces NO group at all — callers must getOrElse(0L),
+    * never apply(). */
   def orcRowCounts(spark: SparkSession, paths: Seq[String]): Map[String, Long] = {
     import org.apache.spark.sql.functions.{count, input_file_name, lit}
     if (paths.isEmpty) Map.empty
     else spark.read.orc(paths: _*)
       .groupBy(input_file_name().as("__f")).agg(count(lit(1)).as("__n"))
       .collect()
-      .map(r => (normalizeInputFileName(r.getString(0)), r.getLong(1)))
+      .map(r => (FilePaths.fromSpark(r.getString(0)), r.getLong(1)))
       .toMap
-  }
-
-  /** input_file_name() returns a percent-encoded file URI; decode it so
-    * paths with spaces/%-chars match the plain paths callers key by. A
-    * zero-row file produces NO group at all — callers must getOrElse(0L),
-    * never apply(). */
-  private[ice] def normalizeInputFileName(raw: String): String = {
-    val decoded =
-      try Option(new java.net.URI(raw).getPath).getOrElse(raw)
-      catch { case _: java.net.URISyntaxException => raw }
-    decoded.replaceFirst("^file:/*", "/")
   }
 }

@@ -278,8 +278,7 @@ final class IceTable private (
               val files = dels.select("__dfile").distinct()
                 .collect().map(_.getString(0)).toSeq
               val data = spark.read.schema(sparkSchema).parquet(files: _*)
-                .withColumn("__file",
-                  regexp_replace(col("_metadata.file_path"), "^file:/*", "/"))
+                .withColumn("__file", FilePaths.column(col("_metadata.file_path")))
                 .withColumn("__pos", col("_metadata.row_index"))
               // manifest-known record counts size the join (see
               // IceTable.sizeDeleteSide): compressed-byte estimates
@@ -667,7 +666,8 @@ final class IceTable private (
 
   /** Live delete-file entries of a snapshot (position + equality deletes,
     * §2.8 — the reference models these but rejects them at plan time,
-    * table_scan.cc:288-291; here they feed the merge-on-read anti-joins). */
+    * table_scan.cc:288-291; here they feed the scan's merge-on-read
+    * position mask and equality anti-joins). */
   def planDeleteEntries(snapshot: Snapshot): Seq[ManifestEntry] =
     liveDeleteEntries(ManifestAvro.readManifestList(snapshot.manifestList))
 
@@ -829,7 +829,8 @@ object IceTable {
     * parquet field ids: "all" | "none" | "mixed" (stamped by addFiles). */
   val FieldIdsSummaryKey = "graft.field-ids"
 
-  /** Manifest-driven sizing for the DELETE side of a MoR join: Spark's
+  /** Manifest-driven sizing for the DELETE side of an equality-delete or
+    * CDC join: Spark's
     * own estimate is the delete files' COMPRESSED size, so a
     * well-compressed multi-million-row delete table can slip under the
     * broadcast threshold and stall the scan behind a single-threaded
@@ -1211,6 +1212,15 @@ final class ScanBuilder(table: IceTable) {
     * planned file list, with field-ID-based column resolution and the
     * residual filter pushed into the scan by Catalyst.
     *
+    * Merge-on-read deletes: position deletes and deletion vectors filter
+    * rows inside the scan task through one per-file mask over
+    * `_metadata.file_path`/`_metadata.row_index` (`PositionDeletes`, the
+    * code the V2 connector's reader also uses), so they add no join, no
+    * shuffle and no extra job; under `_deleted` the mask marks instead
+    * of filtering. Equality deletes anti-join (or, for `_deleted`,
+    * left-join) their key columns per group of data files that share the
+    * same visible equality-delete set.
+    *
     * Field-ID resolution (P3): files written by this library carry parquet
     * field ids and are matched by id (rename/evolution-safe); files
     * registered via addFiles may lack ids and fall back to name matching
@@ -1266,17 +1276,47 @@ final class ScanBuilder(table: IceTable) {
         f.fieldType.asInstanceOf[IcePrimitive], f.initialDefault.get))
         .cast(SparkConv.toSparkType(f.fieldType))
 
+    // merge-on-read deletes (§2.8): every delete-bearing file maps to its
+    // visible position deletes (dataSeq <= deleteSeq), which the read
+    // masks; equality deletes (dataSeq < deleteSeq) null-safe anti-join
+    // on their id columns. An incremental scan planned no deletes
+    // (append-only semantics). `_deleted` switches MoR from filtering to
+    // MARKING: every row stays, with a flag saying whether a delete
+    // applies (metadata_columns.h)
+    val posDeletes = deleteEntries.filter(_.dataFile.content == FileContent.PositionDeletes)
+    val eqDeletes = deleteEntries.filter(_.dataFile.content == FileContent.EqualityDeletes)
+    val posByFile: Map[String, FileDeletes] =
+      if (posDeletes.isEmpty) Map.empty
+      else tasks.map(t => ManifestAvro.stripFileScheme(t.file.filePath) ->
+        PositionDeletes.applicable(t, posDeletes)).filterNot(_._2.isEmpty).toMap
+    // the delete-file readers, built once per scan and only for the
+    // container formats its delete files use
+    lazy val (posReadParquet, posReadOrc) =
+      PositionDeletes.readers(spark, posByFile.values.flatMap(_.files))
+    // metadata columns (P6): _file/_pos ride the parquet reader's
+    // _metadata struct; _spec_id/_partition broadcast-join a driver-built
+    // (file -> spec/partition) lookup, which is metadata-sized
+    val wantFilePos = metaCols.nonEmpty
+    val wantDeleted = metaCols.contains("_deleted")
+    // columns every read carries beside the schema's: the file and
+    // position for metadata columns, the position-delete mark for
+    // `_deleted`
+    val helperCols: Seq[Column] =
+      (if (wantFilePos) Seq(col("__file"), col("__pos")) else Nil) ++
+        (if (wantDeleted) Seq(col("__pd")) else Nil)
+
     // per-format dispatch (S16): parquet keeps the specialized path below
     // (field-id projection, _metadata cols); everything else reads through
     // the FormatRegistry. _file/_pos ride the PARQUET reader's _metadata
     // struct, so metadata columns and MoR position deletes require
     // parquet data files — a non-parquet file in such a scan fails loudly.
-    def readPaths(ts: Seq[FileScanTask], withPosCols: Boolean): DataFrame =
+    def readPaths(ts: Seq[FileScanTask]): DataFrame =
       ts.groupBy(_.file.fileFormat.toUpperCase(java.util.Locale.ROOT))
         .toSeq.sortBy(_._1).map {
-          case ("PARQUET", pts) => readParquetPaths(pts, withPosCols)
+          case ("PARQUET", pts) => readParquetPaths(pts)
           case (fmt, fts) =>
-            require(!withPosCols,
+            require(!wantFilePos && !fts.exists(t =>
+                posByFile.contains(ManifestAvro.stripFileScheme(t.file.filePath))),
               s"metadata columns and position deletes require parquet data files; got $fmt")
             // sparkSchema keeps field-id metadata so the Avro reader can
             // resolve columns by id (rename-safe); id-less files fall back
@@ -1299,11 +1339,12 @@ final class ScanBuilder(table: IceTable) {
             val mergedNm = (explicitNm.keySet ++ historicalNm.keySet).map(id =>
               id -> (explicitNm.getOrElse(id, Nil) ++ historicalNm.getOrElse(id, Nil)).distinct)
               .toMap
-            FormatRegistry.reader(fmt)(spark, sparkSchema,
+            val read = FormatRegistry.reader(fmt)(spark, sparkSchema,
               fts.map(t => ManifestAvro.stripFileScheme(t.file.filePath)), mergedNm)
+            if (wantDeleted) read.withColumn("__pd", lit(false)) else read
         }.reduce(_ unionByName _)
 
-    def readParquetPaths(ts: Seq[FileScanTask], withPosCols: Boolean): DataFrame = {
+    def readParquetPaths(ts: Seq[FileScanTask]): DataFrame = {
       val (internalPairs, externalPairs) =
         ts.map(t => (t, ManifestAvro.stripFileScheme(t.file.filePath)))
           .partition { case (t, p) => fileHasIds(t, p) }
@@ -1312,11 +1353,19 @@ final class ScanBuilder(table: IceTable) {
         // (ManifestFileIndex): no glob, no per-path driver stat, no
         // path-list plan
         val base = FileListRelation.parquet(spark, ps.map(p => p -> lenByPath(p)), schema)
-        if (withPosCols)
-          base.withColumn("__file",
-            regexp_replace(col("_metadata.file_path"), "^file:/*", "/"))
-            .withColumn("__pos", col("_metadata.row_index"))
-        else base
+        val refs = ps.flatMap(p => posByFile.get(p).map(p -> _)).toMap
+        val mask = Option.when(refs.nonEmpty)(PositionDeletes.mask(
+          col("_metadata.file_path"), col("_metadata.row_index"), refs,
+          posReadParquet, posReadOrc))
+        val kept = mask match {
+          case Some(m) if !wantDeleted => base.filter(!m)
+          case _ => base
+        }
+        val extra =
+          (if (wantFilePos) Seq(FilePaths.column(col("_metadata.file_path")).as("__file"),
+            col("_metadata.row_index").as("__pos")) else Nil) ++
+            (if (wantDeleted) Seq(mask.getOrElse(lit(false)).as("__pd")) else Nil)
+        if (extra.isEmpty) kept else kept.select(col("*") +: extra: _*)
       }
       def readExternal(ps: Seq[String]): DataFrame = nameMapping match {
         case None if defaultedFields.isEmpty => read(plainSchema, ps)
@@ -1336,7 +1385,7 @@ final class ScanBuilder(table: IceTable) {
                   if (!fileCols.contains(sf.name) && f.initialDefault.isDefined)
                     defaultLit(f).as(sf.name)
                   else col(sf.name)
-              } ++ (if (withPosCols) Seq(col("__file"), col("__pos")) else Nil): _*)
+              } ++ helperCols: _*)
           }.reduce(_ unionByName _)
         case Some(nm) =>
           // group files by their footer column set; within a group each
@@ -1356,7 +1405,7 @@ final class ScanBuilder(table: IceTable) {
                 case (sf, f, None) if f.initialDefault.isDefined =>
                   defaultLit(f).as(sf.name)
                 case (sf, _, None) => lit(null).cast(sf.dataType).as(sf.name)
-              } ++ (if (withPosCols) Seq(col("__file"), col("__pos")) else Nil): _*)
+              } ++ helperCols: _*)
           }.reduce(_ unionByName _)
       }
       // id-carrying files group by which defaulted fields they predate
@@ -1377,7 +1426,7 @@ final class ScanBuilder(table: IceTable) {
                 if (absent(f.id))
                   defaultLit(f).as(f.name, SparkConv.toSparkField(f).metadata)
                 else col(f.name)
-              } ++ (if (withPosCols) Seq(col("__file"), col("__pos")) else Nil): _*)
+              } ++ helperCols: _*)
             }
           }.reduce(_ unionByName _)
       // identity-partition constant injection (Iceberg's constants-map
@@ -1425,7 +1474,7 @@ final class ScanBuilder(table: IceTable) {
                 case None => col(sf.name)
               }
             }.toSeq ++
-              (if (withPosCols) Seq(col("__file"), col("__pos")) else Nil): _*)
+              helperCols: _*)
           }.reduce(_ unionByName _)
       (internalPairs, externalPairs) match {
         case (ps, Nil) => readInternal(ps)
@@ -1434,120 +1483,40 @@ final class ScanBuilder(table: IceTable) {
       }
     }
 
-    // metadata columns (P6): _file/_pos ride the parquet reader's
-    // _metadata struct; _spec_id/_partition broadcast-join a driver-built
-    // (file -> spec/partition) lookup, which is metadata-sized
-    val wantFilePos = metaCols.nonEmpty
-
-    // merge-on-read deletes (§2.8): position deletes anti-join on
-    // (_file, _pos); equality deletes null-safe anti-join on their id
-    // columns. Sequence-number visibility: position deletes apply to data
-    // files with dataSeq <= deleteSeq; equality deletes to dataSeq < deleteSeq.
-    // An incremental scan planned no deletes (append-only semantics).
-    // `_deleted` switches MoR from filtering to MARKING: every row stays,
-    // with a flag saying whether a delete applies (metadata_columns.h)
-    val wantDeleted = metaCols.contains("_deleted")
-    var df =
-      if (deleteEntries.isEmpty) {
-        val base = readPaths(tasks, withPosCols = wantFilePos)
-        if (wantDeleted) base.withColumn("_deleted", lit(false)) else base
-      } else {
-        val posDeletes = deleteEntries.filter(_.dataFile.content == FileContent.PositionDeletes)
-        val eqDeletes = deleteEntries.filter(_.dataFile.content == FileContent.EqualityDeletes)
-        // group data files by the exact set of applicable delete files;
-        // deletion vectors key on (puffin path, blob offset) — one puffin
-        // file holds many per-data-file vectors
-        val groups = tasks.groupBy { t =>
-          (posDeletes.filter(_.sequenceNumber.getOrElse(0L) >= t.sequenceForVisibility)
-            .map(e => (e.dataFile.filePath, e.dataFile.contentOffset)),
-            eqDeletes.filter(_.sequenceNumber.getOrElse(0L) > t.sequenceForVisibility).map(_.dataFile.filePath))
+    // data files group by the exact set of applicable equality deletes
+    var df = tasks.groupBy(t => eqDeletes
+        .filter(_.sequenceNumber.getOrElse(0L) > t.sequenceForVisibility)
+        .map(_.dataFile.filePath))
+      .map { case (eqPaths, groupTasks) =>
+        var g = readPaths(groupTasks)
+        var markers = Seq.empty[String]
+        for ((eqPath, i) <- eqPaths.zipWithIndex) {
+          val eqEntry = eqDeletes.find(_.dataFile.filePath == eqPath).get
+          val eqCols = eqEntry.dataFile.equalityIds.flatMap(id =>
+            table.schema.findFieldById(id).map(_.name))
+          val dels = IceTable.sizeDeleteSide(
+            IceTable.readEqualityDeleteRows(spark, table.schema, eqEntry)
+              .select(eqCols.map(col): _*),
+            eqEntry.dataFile.recordCount)
+          if (!wantDeleted)
+            g = g.join(dels, eqCols.map(c => g(c) <=> dels(c)).reduce(_ && _), "left_anti")
+          else {
+            // distinct: a duplicated key must mark, not multiply, rows
+            val marked = dels.distinct()
+              .select(eqCols.map(c => col(c).as(s"__eq${i}_$c")) :+
+                lit(1).as(s"__ed$i"): _*)
+            markers :+= s"__ed$i"
+            g = g.join(marked,
+              eqCols.map(c => g(c) <=> marked(s"__eq${i}_$c")).reduce(_ && _), "left")
+              .drop(eqCols.map(c => s"__eq${i}_$c"): _*)
+          }
         }
-        groups.map { case ((posKeys, eqPaths), groupTasks) =>
-          val needPos = posKeys.nonEmpty
-          var g = readPaths(groupTasks, withPosCols = needPos || wantFilePos)
-          var markers = Seq.empty[String]
-          if (needPos) {
-            val (dvKeys, pqKeys) = posKeys.partition(_._2.isDefined)
-            val dvDels: Option[DataFrame] = IceTable.expandDeletionVectors(
-              spark, dvKeys.map { case (p, off) =>
-                posDeletes.find(x => x.dataFile.filePath == p &&
-                  x.dataFile.contentOffset == off).get
-              })
-            val pqDels: Option[DataFrame] = IceTable.readPositionDeleteRows(
-              spark, pqKeys.flatMap { case (p, off) =>
-                posDeletes.find(x => x.dataFile.filePath == p &&
-                  x.dataFile.contentOffset == off)
-              })
-            val dels0 = (pqDels.toSeq ++ dvDels.toSeq).reduce(_ unionByName _)
-              // distinct: overlapping position-delete files must mark, not
-              // multiply, rows in `_deleted` marking mode (left join below)
-              .distinct()
-            // MANIFEST-DRIVEN join sizing: Spark estimates the delete
-            // side from its COMPRESSED file bytes, and a well-compressed
-            // (zstd) multi-million-row delete table slips under the
-            // broadcast threshold — a single-threaded 7M-row broadcast
-            // build measured 2x the whole scan. The manifests know the
-            // EXACT record count, so plan from it: small delete sets
-            // broadcast explicitly, large ones hash-join shuffled (build
-            // the hash map on the small per-partition delete slices —
-            // never sort the data side by its 100-char path strings).
-            // an UNMATCHED manifest lookup must never count 0: a path-
-            // normalization or offset mismatch would silently undercount
-            // and re-broadcast a multi-million-row delete set. Unsized
-            // entries force the safe SHUFFLE_HASH path instead.
-            var delUnsized = false
-            def sized(opt: Option[Long]): Long = opt match {
-              case Some(n) => n
-              case None => delUnsized = true; 0L
-            }
-            val delRecords =
-              pqKeys.map(k => sized(posDeletes.find(
-                _.dataFile.filePath == k._1).map(_.dataFile.recordCount))).sum +
-              dvKeys.map { case (p, off) =>
-                sized(posDeletes.find(x => x.dataFile.filePath == p &&
-                  x.dataFile.contentOffset == off)
-                  .map(_.dataFile.recordCount)) }.sum
-            val dels = IceTable.sizeDeleteSide(dels0,
-              if (delUnsized) Long.MaxValue else delRecords)
-            val cond = g("__file") === dels("__dfile") && g("__pos") === dels("__dpos")
-            g =
-              if (!wantDeleted) g.join(dels, cond, "left_anti")
-              else {
-                markers :+= "__pd"
-                g.join(dels.withColumn("__pd", lit(1)), cond, "left")
-                  .drop("__dfile", "__dpos")
-              }
-          }
-          for ((eqPath, i) <- eqPaths.zipWithIndex) {
-            val eqEntry = eqDeletes.find(_.dataFile.filePath == eqPath).get
-            val eqCols = eqEntry.dataFile.equalityIds.flatMap(id =>
-              table.schema.findFieldById(id).map(_.name))
-            val dels = IceTable.sizeDeleteSide(
-              IceTable.readEqualityDeleteRows(spark, table.schema, eqEntry)
-                .select(eqCols.map(col): _*),
-              eqEntry.dataFile.recordCount)
-            if (!wantDeleted)
-              g = g.join(dels, eqCols.map(c => g(c) <=> dels(c)).reduce(_ && _), "left_anti")
-            else {
-              // distinct: a duplicated key must mark, not multiply, rows
-              val marked = dels.distinct()
-                .select(eqCols.map(c => col(c).as(s"__eq${i}_$c")) :+
-                  lit(1).as(s"__ed$i"): _*)
-              markers :+= s"__ed$i"
-              g = g.join(marked,
-                eqCols.map(c => g(c) <=> marked(s"__eq${i}_$c")).reduce(_ && _), "left")
-                .drop(eqCols.map(c => s"__eq${i}_$c"): _*)
-            }
-          }
-          if (wantDeleted)
-            g = g.withColumn("_deleted",
-              if (markers.isEmpty) lit(false)
-              else markers.map(m => col(m).isNotNull).reduce(_ || _))
-              .drop(markers: _*)
-          if (needPos && !wantFilePos) g = g.drop("__file", "__pos")
-          g
-        }.reduce(_ unionByName _)
-      }
+        if (wantDeleted)
+          g = g.withColumn("_deleted",
+            markers.map(m => col(m).isNotNull).foldLeft(col("__pd"))(_ || _))
+            .drop("__pd" +: markers: _*)
+        g
+      }.reduce(_ unionByName _)
     if (wantFilePos) {
       if (metaCols.exists(Set("_spec_id", "_partition", "_row_id",
           "_last_updated_sequence_number"))) {

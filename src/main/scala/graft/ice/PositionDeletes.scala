@@ -1,0 +1,308 @@
+package graft.ice
+
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{Column, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.sources.{Filter => V1Filter}
+import org.apache.spark.sql.types.{BooleanType, DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.vectorized.ColumnarBatch
+import org.apache.spark.unsafe.types.UTF8String
+import org.roaringbitmap.longlong.Roaring64Bitmap
+
+import graft.ice.manifest.{AvroData, ManifestAvro, ManifestEntry, Puffin}
+
+/** The position deletes that apply to one data file: deletion vectors
+  * as puffin (path, offset, length), and position-delete files as
+  * (path, size, manifest fileFormat). The format travels from the
+  * manifest entry so the reader dispatches without sniffing container
+  * magic; "" means unknown and falls back to sniffing. */
+final case class FileDeletes(
+    dvs: Seq[(String, Long, Long)],
+    files: Seq[(String, Long, String)]) {
+  def isEmpty: Boolean = dvs.isEmpty && files.isEmpty
+}
+
+/** Merge-on-read position deletes as a per-data-file row mask: the one
+  * implementation behind both `ScanBuilder.toDF` (through
+  * [[PositionDeleteMask]]) and the V2 connector's reader. A data file's
+  * deleted positions are the union of its deletion vectors and of the
+  * rows naming it in the visible position-delete files; delete files
+  * are parsed once per executor JVM ([[DeleteFileCache]]). */
+object PositionDeletes {
+  type Read = PartitionedFile => Iterator[InternalRow]
+
+  /** The position-delete file schema (spec reserved columns). */
+  val Schema: StructType = StructType(Seq(
+    StructField("file_path", StringType), StructField("pos", LongType)))
+
+  /** The position deletes visible to `t`: a delete applies to data files
+    * with dataSeq <= deleteSeq, and a deletion vector only to the file it
+    * references. Every visible delete file applies; its rows name the
+    * data files it covers. */
+  def applicable(t: FileScanTask, posDeletes: Seq[ManifestEntry]): FileDeletes = {
+    val p = ManifestAvro.stripFileScheme(t.file.filePath)
+    val (dvs, files) = posDeletes
+      .filter(_.sequenceNumber.getOrElse(0L) >= t.sequenceForVisibility)
+      .partition(_.dataFile.contentOffset.isDefined)
+    FileDeletes(
+      dvs.filter(_.dataFile.referencedDataFile.map(ManifestAvro.stripFileScheme).contains(p))
+        .map(e => (ManifestAvro.stripFileScheme(e.dataFile.filePath),
+          e.dataFile.contentOffset.get,
+          e.dataFile.contentSizeInBytes.getOrElse(
+            throw new IllegalStateException(s"DV for $p missing content size")))),
+      files.map(e => (ManifestAvro.stripFileScheme(e.dataFile.filePath),
+        e.dataFile.fileSizeInBytes, e.dataFile.fileFormat)))
+  }
+
+  /** Positions deleted from `dataPath` (a manifest path without scheme). */
+  def deletedPositions(dataPath: String, d: FileDeletes,
+      parquet: Read, orc: Read): Roaring64Bitmap = {
+    val bm = new Roaring64Bitmap()
+    d.dvs.foreach { case (path, off, len) => bm.or(Puffin.readDV(path, off, len)) }
+    d.files.foreach { case (path, size, fmt) =>
+      bm.or(DeleteFileCache.positionsFor(path, size, dataPath,
+        () => fileRows(parquet, orc, Schema, path, size, fmt)))
+    }
+    bm
+  }
+
+  /** The container readers a delete file of manifest format `format` may
+    * need, as (parquet, ORC) — the dispatch of [[fileRows]]: avro decodes
+    * without either, and an absent or unknown format is sniffed and may
+    * land on both. */
+  def readersFor(format: String): (Boolean, Boolean) = normFormat(format) match {
+    case "AVRO" => (false, false)
+    case "ORC" => (false, true)
+    case "PARQUET" => (true, false)
+    case _ => (true, true)
+  }
+
+  /** A reader slot the planned files cannot reach: reaching it anyway
+    * means the reader set no longer covers its files, so fail loudly. */
+  def unbuilt(slot: String): Read =
+    f => throw new IllegalStateException(
+      s"reader $slot was not built for this scan, yet ${f.filePath} needs it")
+
+  /** Spark's row reader for parquet files of `schema` (whole rows, no
+    * batches), with `filters` pushed into the row-group reader. */
+  def parquetReader(spark: SparkSession, schema: StructType, filters: Seq[V1Filter]): Read =
+    new ParquetFileFormat().buildReaderWithPartitionValues(
+      sparkSession = spark,
+      dataSchema = schema,
+      partitionSchema = new StructType(),
+      requiredSchema = schema,
+      filters = filters,
+      options = Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      hadoopConf = spark.sessionState.newHadoopConfWithOptions(Map.empty))
+
+  /** The ORC twin of [[parquetReader]], unfiltered. */
+  def orcReader(spark: SparkSession, schema: StructType): Read =
+    new OrcFileFormat().buildReaderWithPartitionValues(
+      sparkSession = spark,
+      dataSchema = schema,
+      partitionSchema = new StructType(),
+      requiredSchema = schema,
+      filters = Nil,
+      options = Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      hadoopConf = spark.sessionState.newHadoopConfWithOptions(Map.empty))
+
+  /** The (parquet, ORC) position-delete readers for `files`, each built
+    * only when some file's format needs it: every build broadcasts the
+    * session's Hadoop conf. */
+  def readers(spark: SparkSession, files: Iterable[(String, Long, String)]): (Read, Read) = {
+    val needs = files.map(f => readersFor(f._3))
+    (if (needs.exists(_._1)) parquetReader(spark, Schema, Nil) else unbuilt("position-delete parquet"),
+      if (needs.exists(_._2)) orcReader(spark, Schema) else unbuilt("position-delete orc"))
+  }
+
+  /** The rows `read` yields for `p`, unpacking batches. */
+  def rows(read: Read, p: PartitionedFile): Iterator[InternalRow] =
+    read(p).asInstanceOf[Iterator[Any]].flatMap {
+      case b: ColumnarBatch => b.rowIterator().asScala
+      case r: InternalRow => Iterator.single(r)
+    }
+
+  /** Rows of one delete file. The delete plane may be parquet, avro or
+    * ORC (`write.delete.format.default`); dispatch on the manifest format
+    * and sniff container magic only when it is absent or unknown (the
+    * sniff needs a local-FS open). Avro rows decode through AvroData and
+    * convert to catalyst here: delete files have tiny schemas. */
+  def fileRows(parquet: Read, orc: Read, schema: StructType, path: String,
+      size: Long, format: String): Iterator[InternalRow] = {
+    def avroRows: Iterator[InternalRow] = {
+      val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToCatalystConverter(schema)
+      AvroData.fileRows(path, schema).map(r => conv(r).asInstanceOf[InternalRow])
+    }
+    val whole = PartitionedFile(InternalRow.empty, SparkPath.fromPathString(path),
+      0L, size, Array.empty[String], 0L, size, Map.empty)
+    normFormat(format) match {
+      case "AVRO" => avroRows
+      case "ORC" => rows(orc, whole)
+      case "PARQUET" => rows(parquet, whole)
+      case _ =>
+        if (AvroData.isAvroFile(path)) avroRows
+        else if (isOrcFile(path)) rows(orc, whole)
+        else rows(parquet, whole)
+    }
+  }
+
+  /** True when the file starts with the ORC magic `ORC` (fallback only).
+    * readFully loop: a single read() may legitimately short-read. */
+  def isOrcFile(path: String): Boolean = {
+    val f = new java.io.File(path)
+    if (!f.isFile || f.length < 3) return false
+    val in = new java.io.DataInputStream(new java.io.FileInputStream(f))
+    try {
+      val m = new Array[Byte](3)
+      in.readFully(m)
+      m(0) == 'O' && m(1) == 'R' && m(2) == 'C'
+    } catch { case _: java.io.EOFException => false
+    } finally in.close()
+  }
+
+  private def normFormat(format: String): String =
+    if (format == null) "" else format.toUpperCase(java.util.Locale.ROOT)
+
+  /** True for rows of `refs`' files whose position is deleted, over the
+    * scan's raw `_metadata.file_path` and `_metadata.row_index`. */
+  def mask(filePath: Column, rowIndex: Column, refs: Map[String, FileDeletes],
+      parquet: Read, orc: Read): Column =
+    GraftColumnBridge.column(PositionDeleteMask(GraftColumnBridge.expression(filePath),
+      GraftColumnBridge.expression(rowIndex), refs, parquet, orc))
+}
+
+/** `graft_position_deletes(file_path, row_index)`: whether a row's
+  * position is deleted. `refs` maps each delete-bearing data file of
+  * the scan (manifest path without scheme) to its visible deletes; a
+  * file outside it has none. The path goes through [[FilePaths]], and
+  * since rows arrive file by file the file's bitmap is built once per
+  * task, on its first row. `row_index` counts rows from the start of the
+  * file, so a split or a skipped row group keeps positions exact. */
+final case class PositionDeleteMask(left: Expression, right: Expression,
+    refs: Map[String, FileDeletes], parquet: PositionDeletes.Read,
+    orc: PositionDeletes.Read) extends BinaryExpression {
+  override def dataType: DataType = BooleanType
+  override def nullable: Boolean = false
+  override def prettyName: String = "graft_position_deletes"
+  override def toString: String = s"$prettyName($left, $right, ${refs.size} files)"
+
+  @transient private[this] var lastRaw: UTF8String = _
+  @transient private[this] var lastBits: Roaring64Bitmap = _
+
+  def deleted(raw: UTF8String, pos: Long): Boolean = {
+    if (lastRaw == null || !lastRaw.equals(raw)) {
+      val path = FilePaths.fromSpark(raw.toString)
+      lastBits = refs.get(path)
+        .map(PositionDeletes.deletedPositions(path, _, parquet, orc)).orNull
+      lastRaw = raw.clone()
+    }
+    lastBits != null && lastBits.contains(pos)
+  }
+
+  override def eval(input: InternalRow): Any = {
+    val raw = left.eval(input)
+    raw != null && deleted(raw.asInstanceOf[UTF8String], right.eval(input).asInstanceOf[Long])
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("positionDeletes", this)
+    val p = left.genCode(ctx)
+    val r = right.genCode(ctx)
+    ev.copy(code = code"""
+      ${p.code}
+      ${r.code}
+      boolean ${ev.value} = !${p.isNull} && $self.deleted(${p.value}, ${r.value});""",
+      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): PositionDeleteMask = copy(left = newLeft, right = newRight)
+}
+
+/** Per-executor cache of PARSED delete-file content. A position-delete
+  * file covers many data files, and every data SPLIT used to re-read and
+  * re-decompress the whole delete file just to pick out its own rows —
+  * O(splits × delete-file bytes) decompression, the dominant cost of a
+  * wide MoR scan once the delete plane is zstd (the declared default).
+  * Parsing once per executor JVM makes it O(delete files): the natural
+  * cluster shape, where each executor touches a delete file once and
+  * serves all its local splits from the parsed form.
+  *
+  * Keyed by (path, length) — table files are immutable, so a same-path
+  * rewrite (different length) can never serve stale positions; identical
+  * (path, length) implies identical bytes. Bounded by total cached
+  * positions/keys: past the cap the cache clears wholesale (advisory
+  * cache — a re-parse is always correct) rather than maintaining LRU
+  * chains under concurrent readers. */
+object DeleteFileCache {
+  private val maxPositions = 64000000L
+  private val posCache = new java.util.concurrent.ConcurrentHashMap[
+    String, java.util.HashMap[String, Roaring64Bitmap]]()
+  private val eqCache = new java.util.concurrent.ConcurrentHashMap[
+    String, mutable.HashSet[UnsafeRow]]()
+  private val cachedUnits = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Over-cap eviction. NEVER called from inside a computeIfAbsent
+    * mapping function: CHM mapping functions must not update other
+    * mappings (clear() from inside one holds the caller's bin lock while
+    * blocking on bins another mid-compute thread holds — deadlock). Both
+    * caches therefore compute values OUTSIDE the map and publish with
+    * putIfAbsent; a lost race re-parsed redundantly, which is always
+    * correct for an advisory cache. */
+  private def admit(units: Long): Unit = {
+    if (cachedUnits.addAndGet(units) > maxPositions) {
+      posCache.clear(); eqCache.clear(); cachedUnits.set(units)
+    }
+  }
+
+  /** Positions deleted from `dataPath` according to the delete file at
+    * (path, size); `parse` yields the file's (file_path, pos) rows. The
+    * returned bitmap is shared: callers must not modify it. */
+  def positionsFor(path: String, size: Long, dataPath: String,
+      parse: () => Iterator[InternalRow]): Roaring64Bitmap = {
+    val key = s"$path#$size"
+    var byPath = posCache.get(key)
+    if (byPath == null) {
+      val m = new java.util.HashMap[String, Roaring64Bitmap]()
+      var n = 0L
+      parse().foreach { r =>
+        if (!r.isNullAt(0)) {
+          val p = ManifestAvro.stripFileScheme(r.getUTF8String(0).toString)
+          var bm = m.get(p)
+          if (bm == null) { bm = new Roaring64Bitmap(); m.put(p, bm) }
+          bm.addLong(r.getLong(1)); n += 1
+        }
+      }
+      val prev = posCache.putIfAbsent(key, m)
+      if (prev != null) byPath = prev
+      else { admit(n); byPath = m }
+    }
+    val bm = byPath.get(dataPath)
+    if (bm == null) new Roaring64Bitmap() else bm
+  }
+
+  /** The delete-key set of an equality-delete file, parsed once per JVM
+    * (safe to share: the set is read-only after construction and safely
+    * published through the map). `parse` yields projected UnsafeRows. */
+  def eqKeysFor(path: String, size: Long, cols: Seq[String],
+      parse: () => Iterator[UnsafeRow]): mutable.HashSet[UnsafeRow] = {
+    val key = s"$path#$size#${cols.mkString(",")}"
+    val hit = eqCache.get(key)
+    if (hit != null) return hit
+    val keys = new mutable.HashSet[UnsafeRow]()
+    parse().foreach(keys += _)
+    val prev = eqCache.putIfAbsent(key, keys)
+    if (prev != null) prev
+    else { admit(keys.size.toLong); keys }
+  }
+}

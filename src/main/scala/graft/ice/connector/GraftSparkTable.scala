@@ -2,29 +2,24 @@ package graft.ice.connector
 
 import java.util.{Locale, Map => JMap, Set => JSet}
 
-import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.expressions.{Expressions, NullOrdering, SortDirection, SortOrder => V2SortOrder, Transform => V2Transform}
 import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder => V2ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportOrdering, SupportsReportPartitioning, SupportsReportStatistics}
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
-import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
-import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.sources.{Filter => V1Filter}
 import org.apache.spark.sql.types.{DataType, LongType, Metadata, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.sql.vectorized.ColumnarBatch
 
-import graft.ice.{FileScanTask, IceTable, ScanBuilder}
+import graft.ice.{DeleteFileCache, FileDeletes, FileScanTask, IceTable, PositionDeletes, ScanBuilder}
 import graft.ice.expr.{Expr => IceExpr}
-import graft.ice.manifest.{FileContent, ManifestAvro, ManifestEntry, Puffin}
+import graft.ice.manifest.{FileContent, ManifestAvro, ManifestEntry}
 import graft.ice.transform.{BucketTransform, DayTransform, HourTransform, IdentityTransform, MonthTransform, TruncateTransform, YearTransform}
 import graft.ice.types.{SparkConv, TimestampT, TimestampTzT}
 
@@ -54,11 +49,11 @@ import graft.ice.types.{SparkConv, TimestampT, TimestampTzT}
   * Read correctness under row-level deletes: position deletes and v3
   * deletion vectors are applied executor-side per split (position
   * counting against the raw row stream; parquet predicate pushdown is
-  * disabled for delete-bearing files so positions stay exact). Equality
-  * deletes are applied as an executor-side hash-set anti-filter over the
-  * delete files' key columns. All three mirror `ScanBuilder.toDF`'s
-  * sequence-number visibility rules (pos: deleteSeq >= dataSeq, eq:
-  * deleteSeq > dataSeq). */
+  * disabled for delete-bearing files so positions stay exact), through
+  * the same `PositionDeletes` code and visibility rule `ScanBuilder.toDF`
+  * uses. Equality deletes are applied as an executor-side hash-set
+  * anti-filter over the delete files' key columns, with toDF's
+  * sequence-number rule (deleteSeq > dataSeq). */
 final class GraftSparkTable(val table: IceTable, catalogName: String,
     identName: String, warehouse: String,
     pinnedSnapshotId: Option[Long] = None) extends Table with SupportsRead
@@ -784,17 +779,7 @@ private[connector] final class GraftBatchScan(table: IceTable,
     val eqDeletes = deleteEntries.filter(_.dataFile.content == FileContent.EqualityDeletes)
 
     def deletesFor(t: FileScanTask): GraftDeleteSpec = {
-      val p = GraftConnectorUtil.normPath(t.file.filePath)
-      val pos = posDeletes.filter(_.sequenceNumber.getOrElse(0L) >= t.sequenceForVisibility)
-      val (dvEntries, pqEntries) = pos.partition(_.dataFile.contentOffset.isDefined)
-      val dvs = dvEntries.filter(_.dataFile.referencedDataFile
-          .map(GraftConnectorUtil.normPath).contains(p))
-        .map(e => (GraftConnectorUtil.normPath(e.dataFile.filePath),
-          e.dataFile.contentOffset.get,
-          e.dataFile.contentSizeInBytes.getOrElse(
-            throw new IllegalStateException(s"DV for $p missing content size"))))
-      val pq = pqEntries.map(e => (GraftConnectorUtil.normPath(e.dataFile.filePath),
-        e.dataFile.fileSizeInBytes, e.dataFile.fileFormat))
+      val pos = PositionDeletes.applicable(t, posDeletes)
       val eqs = eqDeletes.filter(_.sequenceNumber.getOrElse(0L) > t.sequenceForVisibility)
         .map { e =>
           val cols = e.dataFile.equalityIds.flatMap(id =>
@@ -804,7 +789,7 @@ private[connector] final class GraftBatchScan(table: IceTable,
           (GraftConnectorUtil.normPath(e.dataFile.filePath),
             e.dataFile.fileSizeInBytes, cols, e.dataFile.fileFormat)
         }
-      GraftDeleteSpec(dvs, pq, eqs)
+      GraftDeleteSpec(pos.dvs, pos.files, eqs)
     }
 
     val dataDirPrefixes = table.dataRoots.map(GraftConnectorUtil.normPath)
@@ -1068,31 +1053,14 @@ private[connector] final class GraftBatchScan(table: IceTable,
       }
     }
 
-    def mkReader(schema: StructType, filters: Seq[V1Filter]) = withVectorization {
-      new ParquetFileFormat().buildReaderWithPartitionValues(
-        sparkSession = spark,
-        dataSchema = schema,
-        partitionSchema = new StructType(),
-        requiredSchema = schema,
-        filters = filters,
-        options = Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
-        hadoopConf = spark.sessionState.newHadoopConfWithOptions(Map.empty))
-    }
-
+    def mkReader(schema: StructType, filters: Seq[V1Filter]) =
+      withVectorization(PositionDeletes.parquetReader(spark, schema, filters))
     // ORC twin, for delete planes written under
-    // write.delete.format.default=orc (dispatched by container magic)
-    def mkOrcReader(schema: StructType) = withVectorization {
-      new OrcFileFormat().buildReaderWithPartitionValues(
-        sparkSession = spark,
-        dataSchema = schema,
-        partitionSchema = new StructType(),
-        requiredSchema = schema,
-        filters = Nil,
-        options = Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
-        hadoopConf = spark.sessionState.newHadoopConfWithOptions(Map.empty))
-    }
+    // write.delete.format.default=orc
+    def mkOrcReader(schema: StructType) =
+      withVectorization(PositionDeletes.orcReader(spark, schema))
 
-    val posDeleteSchema = GraftReaderFactory.PosDeleteSchema
+    val posDeleteSchema = PositionDeletes.Schema
     val eqSchemas: Map[Seq[String], StructType] =
       splits.flatMap(_.deletes.eqDeletes.map(_._3)).distinct
         .map(cols => cols -> StructType(cols.map(c =>
@@ -1105,13 +1073,13 @@ private[connector] final class GraftBatchScan(table: IceTable,
     // the splits, so the slots built here still cover every split read.
     type Read = PartitionedFile => Iterator[InternalRow]
     def slot(name: String, needed: Boolean)(build: => Read): Read =
-      if (needed) build else GraftReaderFactory.unbuilt(name)
+      if (needed) build else PositionDeletes.unbuilt(name)
     val dataCombos = splits.map(s => (s.useFieldIds, s.deletes.hasPositional)).toSet
     val posNeeds = splits.flatMap(_.deletes.posDeleteFiles)
-      .map(f => GraftReaderFactory.deleteReadersFor(f._3))
+      .map(f => PositionDeletes.readersFor(f._3))
     val eqNeeds: Map[Seq[String], Seq[(Boolean, Boolean)]] =
       splits.flatMap(_.deletes.eqDeletes).groupBy(_._3).map { case (cols, fs) =>
-        cols -> fs.map(f => GraftReaderFactory.deleteReadersFor(f._4))
+        cols -> fs.map(f => PositionDeletes.readersFor(f._4))
       }
 
     // v3 initial-defaults as catalyst values keyed by field id, with the
@@ -1412,124 +1380,6 @@ private[connector] final case class GraftAggReaderFactory() extends PartitionRea
   }
 }
 
-/** Per-executor cache of PARSED delete-file content. A position-delete
-  * file covers many data files, and every data SPLIT used to re-read and
-  * re-decompress the whole delete file just to pick out its own rows —
-  * O(splits × delete-file bytes) decompression, the dominant cost of a
-  * wide MoR scan once the delete plane is zstd (the declared default).
-  * Parsing once per executor JVM makes it O(delete files): the natural
-  * cluster shape, where each executor touches a delete file once and
-  * serves all its local splits from the parsed form.
-  *
-  * Keyed by (path, length) — table files are immutable, so a same-path
-  * rewrite (different length) can never serve stale positions; identical
-  * (path, length) implies identical bytes. Bounded by total cached
-  * positions/keys: past the cap the cache clears wholesale (advisory
-  * cache — a re-parse is always correct) rather than maintaining LRU
-  * chains under concurrent readers. */
-private[connector] object DeleteFileCache {
-  private val maxPositions = 64000000L
-  private val posCache = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.HashMap[String, org.roaringbitmap.longlong.Roaring64Bitmap]]()
-  private val eqCache = new java.util.concurrent.ConcurrentHashMap[
-    String, mutable.HashSet[UnsafeRow]]()
-  private val cachedUnits = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Over-cap eviction. NEVER called from inside a computeIfAbsent
-    * mapping function: CHM mapping functions must not update other
-    * mappings (clear() from inside one holds the caller's bin lock while
-    * blocking on bins another mid-compute thread holds — deadlock). Both
-    * caches therefore compute values OUTSIDE the map and publish with
-    * putIfAbsent; a lost race re-parsed redundantly, which is always
-    * correct for an advisory cache. */
-  private def admit(units: Long): Unit = {
-    if (cachedUnits.addAndGet(units) > maxPositions) {
-      posCache.clear(); eqCache.clear(); cachedUnits.set(units)
-    }
-  }
-
-  /** Positions deleted from `dataPath` according to the delete file at
-    * (path, size); `parse` yields the file's (file_path, pos) rows. */
-  def positionsFor(path: String, size: Long, dataPath: String,
-      parse: () => Iterator[InternalRow]): org.roaringbitmap.longlong.Roaring64Bitmap = {
-    val key = s"$path#$size"
-    var byPath = posCache.get(key)
-    if (byPath == null) {
-      val m = new java.util.HashMap[String, org.roaringbitmap.longlong.Roaring64Bitmap]()
-      var n = 0L
-      parse().foreach { r =>
-        if (!r.isNullAt(0)) {
-          val p = GraftConnectorUtil.normPath(r.getUTF8String(0).toString)
-          var bm = m.get(p)
-          if (bm == null) { bm = new org.roaringbitmap.longlong.Roaring64Bitmap(); m.put(p, bm) }
-          bm.addLong(r.getLong(1)); n += 1
-        }
-      }
-      val prev = posCache.putIfAbsent(key, m)
-      if (prev != null) byPath = prev
-      else { admit(n); byPath = m }
-    }
-    val bm = byPath.get(dataPath)
-    if (bm == null) new org.roaringbitmap.longlong.Roaring64Bitmap() else bm
-  }
-
-  /** The delete-key set of an equality-delete file, parsed once per JVM
-    * (safe to share: the set is read-only after construction and safely
-    * published through the map). `parse` yields projected UnsafeRows. */
-  def eqKeysFor(path: String, size: Long, cols: Seq[String],
-      parse: () => Iterator[UnsafeRow]): mutable.HashSet[UnsafeRow] = {
-    val key = s"$path#$size#${cols.mkString(",")}"
-    val hit = eqCache.get(key)
-    if (hit != null) return hit
-    val keys = new mutable.HashSet[UnsafeRow]()
-    parse().foreach(keys += _)
-    val prev = eqCache.putIfAbsent(key, keys)
-    if (prev != null) prev
-    else { admit(keys.size.toLong); keys }
-  }
-}
-
-private[connector] object GraftReaderFactory {
-  /** The position-delete file schema (spec reserved columns). */
-  val PosDeleteSchema: StructType = StructType(Seq(
-    StructField("file_path", StringType), StructField("pos", LongType)))
-
-  /** True when the file starts with the ORC magic `ORC` (fallback only —
-    * the split descriptors carry the manifest fileFormat). readFully
-    * loop: a single read() may legitimately short-read. */
-  def isOrcFile(path: String): Boolean = {
-    val f = new java.io.File(path)
-    if (!f.isFile || f.length < 3) return false
-    val in = new java.io.DataInputStream(new java.io.FileInputStream(f))
-    try {
-      val m = new Array[Byte](3)
-      in.readFully(m)
-      m(0) == 'O' && m(1) == 'R' && m(2) == 'C'
-    } catch { case _: java.io.EOFException => false
-    } finally in.close()
-  }
-
-  private def normFormat(format: String): String =
-    if (format == null) "" else format.toUpperCase(java.util.Locale.ROOT)
-
-  /** The container readers a delete file of manifest format `format` may
-    * need, as (parquet, ORC) — the dispatch of `deleteFileRows`: avro
-    * decodes without either, and an absent or unknown format is sniffed
-    * and may land on both. */
-  def deleteReadersFor(format: String): (Boolean, Boolean) = normFormat(format) match {
-    case "AVRO" => (false, false)
-    case "ORC" => (false, true)
-    case "PARQUET" => (true, false)
-    case _ => (true, true)
-  }
-
-  /** A reader slot the planned splits cannot reach: reaching it anyway
-    * means the factory no longer covers its splits, so fail loudly. */
-  def unbuilt(slot: String): PartitionedFile => Iterator[InternalRow] =
-    f => throw new IllegalStateException(
-      s"reader $slot was not built for this scan, yet ${f.filePath} needs it")
-}
-
 private[connector] final case class GraftReaderFactory(
     readIds: PartitionedFile => Iterator[InternalRow],
     readIdsRaw: PartitionedFile => Iterator[InternalRow],
@@ -1551,46 +1401,6 @@ private[connector] final case class GraftReaderFactory(
     constSlots: Map[Int, (Int, org.apache.spark.sql.types.DataType,
       graft.ice.types.IcePrimitive)] = Map.empty) extends PartitionReaderFactory {
 
-  private def pf(path: String, size: Long): PartitionedFile =
-    PartitionedFile(InternalRow.empty, SparkPath.fromPathString(path),
-      0L, size, Array.empty[String], 0L, size, Map.empty)
-
-  private def rows(read: PartitionedFile => Iterator[InternalRow],
-      p: PartitionedFile): Iterator[InternalRow] =
-    read(p).asInstanceOf[Iterator[Any]].flatMap {
-      case b: ColumnarBatch => b.rowIterator().asScala
-      case r: InternalRow => Iterator.single(r)
-    }
-
-  /** Delete-plane file rows: the delete plane may be parquet, avro or
-    * ORC (write.delete.format.default). The split descriptor carries the
-    * manifest entry's fileFormat — dispatch on it directly (container
-    * sniffing needs a java.io open, which breaks on non-local-FS paths);
-    * magic sniffing stays only as the fallback for entries whose format
-    * string is absent/unknown (foreign manifests). Avro rows decode
-    * through AvroData and convert to catalyst here (delete files are
-    * tiny schemas: (file_path, pos) or the equality key columns). */
-  private def deleteFileRows(parquetRead: PartitionedFile => Iterator[InternalRow],
-      orcRead: PartitionedFile => Iterator[InternalRow],
-      schema: StructType, path: String, size: Long,
-      format: String): Iterator[InternalRow] = {
-    def avroRows: Iterator[InternalRow] = {
-      val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
-        .createToCatalystConverter(schema)
-      graft.ice.manifest.AvroData.fileRows(path, schema)
-        .map(r => conv(r).asInstanceOf[InternalRow])
-    }
-    GraftReaderFactory.normFormat(format) match {
-      case "AVRO" => avroRows
-      case "ORC" => rows(orcRead, pf(path, size))
-      case "PARQUET" => rows(parquetRead, pf(path, size))
-      case _ =>
-        if (graft.ice.manifest.AvroData.isAvroFile(path)) avroRows
-        else if (GraftReaderFactory.isOrcFile(path)) rows(orcRead, pf(path, size))
-        else rows(parquetRead, pf(path, size))
-    }
-  }
-
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     // a packed split concatenates its members' iterators — every member
     // keeps its own delete/default/projection state (built lazily, so a
@@ -1611,25 +1421,11 @@ private[connector] final case class GraftReaderFactory(
   private def rowsOf(split: GraftScanSplit): Iterator[InternalRow] = {
     val del = split.deletes
 
-    // positions deleted from THIS file: DV bitmaps + parquet pos-deletes
-    lazy val deletedPos: org.roaringbitmap.longlong.Roaring64Bitmap = {
-      val bm = new org.roaringbitmap.longlong.Roaring64Bitmap()
-      del.dvs.foreach { case (path, off, len) =>
-        bm.or(Puffin.readDV(path, off, len))
-      }
-      if (del.posDeleteFiles.nonEmpty) {
-        val me = split.path
-        del.posDeleteFiles.foreach { case (dp, dsize, dfmt) =>
-          // parsed ONCE per executor JVM and served to every split from
-          // the cache — re-reading the whole delete file per data split
-          // was O(splits x delete bytes) decompression
-          bm.or(DeleteFileCache.positionsFor(dp, dsize, me,
-            () => deleteFileRows(readPosDeletes, readPosDeletesOrc,
-              GraftReaderFactory.PosDeleteSchema, dp, dsize, dfmt)))
-        }
-      }
-      bm
-    }
+    // positions deleted from THIS file: DV bitmaps + position-delete
+    // files, each parsed once per executor JVM (PositionDeletes)
+    lazy val deletedPos: org.roaringbitmap.longlong.Roaring64Bitmap =
+      PositionDeletes.deletedPositions(split.path,
+        FileDeletes(del.dvs, del.posDeleteFiles), readPosDeletes, readPosDeletesOrc)
 
     // equality-delete keys: one hash set per delete schema, matched via
     // UnsafeRow bytes (null-safe by construction: null bits participate)
@@ -1642,7 +1438,7 @@ private[connector] final case class GraftReaderFactory(
           DeleteFileCache.eqKeysFor(path, size, cols, { () =>
             val delProj = UnsafeProjection.create(delSchema.fields.indices.map(i =>
               BoundReference(i, delSchema.fields(i).dataType, nullable = true)))
-            deleteFileRows(readEqDeletes(cols), readEqDeletesOrc(cols),
+            PositionDeletes.fileRows(readEqDeletes(cols), readEqDeletesOrc(cols),
               delSchema, path, size, fmt)
               .map(r => delProj(r).copy())
           })
@@ -1669,7 +1465,7 @@ private[connector] final case class GraftReaderFactory(
 
     // the split's byte range (whole file unless read.split.target-size
     // cut it); position-counted reads are whole-file by construction
-    val base = rows(read, PartitionedFile(InternalRow.empty,
+    val base = PositionDeletes.rows(read, PartitionedFile(InternalRow.empty,
       SparkPath.fromPathString(split.path), split.rangeStart,
       split.rangeLength, Array.empty[String], 0L, split.fileSize, Map.empty))
     var pos = -1L

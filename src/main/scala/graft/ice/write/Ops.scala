@@ -973,7 +973,7 @@ final class RowDelete(table: IceTable, spark: SparkSession) {
         .parquet(withIds.map(t => ManifestAvro.stripFileScheme(t.file.filePath)): _*)
         .filter(cond)
         .select(
-          regexp_replace(col("_metadata.file_path"), "^file:/*", "/").as("file_path"),
+          graft.ice.FilePaths.column(col("_metadata.file_path")).as("file_path"),
           col("_metadata.row_index").as("pos"))
     }
     val scanned = Option.when(idLess.nonEmpty) {
@@ -986,7 +986,7 @@ final class RowDelete(table: IceTable, spark: SparkSession) {
   }
 
   /** Merge-on-read position delete: write (file_path, pos) tuples of
-    * matching rows as a delete file; scans anti-join them (§2.8).
+    * matching rows as a delete file; scans mask those rows (§2.8).
     * Reserved field ids 2147483546/2147483545 (metadata_columns.h). */
   def deleteWherePositional(filter: Expr): Snapshot = {
     val bound = Binder.bind(filter, table.schema)
@@ -1422,7 +1422,7 @@ object RowDelete {
           .collect()
           .map { r =>
             val utf8 = java.nio.charset.StandardCharsets.UTF_8
-            entry(graft.ice.FormatRegistry.normalizeInputFileName(r.getString(0)),
+            entry(graft.ice.FilePaths.fromSpark(r.getString(0)),
               r.getLong(1), "ORC",
               Option(r.getString(2)).map(_.getBytes(utf8)).orNull,
               Option(r.getString(3)).map(_.getBytes(utf8)).orNull)
@@ -1604,7 +1604,7 @@ final class MergeInto(table: IceTable, spark: SparkSession,
       if (allPaths.isEmpty) Nil
       else readRaw(allPaths)
         .select((on.map(col) :+
-          regexp_replace(col("_metadata.file_path"), "^file:/*", "/").as("__file")): _*)
+          graft.ice.FilePaths.column(col("_metadata.file_path")).as("__file")): _*)
         .join(source.select(on.map(col): _*).distinct(), on, "left_semi")
         .select("__file").distinct().collect().map(_.getString(0)).toSeq.sorted
 
@@ -1702,9 +1702,8 @@ final class Compaction(table: IceTable, spark: SparkSession) {
       dvDeletes.flatMap(_.dataFile.referencedDataFile)
         .map(ManifestAvro.stripFileScheme).toSet ++ {
         if (pqPosDeletes.isEmpty) Set.empty[String]
-        else spark.read
-          .parquet(pqPosDeletes.map(e => ManifestAvro.stripFileScheme(e.dataFile.filePath)): _*)
-          .select("file_path").distinct()
+        else graft.ice.IceTable.readPositionDeleteRows(spark, pqPosDeletes).get
+          .select("__dfile").distinct()
           .collect().map(_.getString(0)).toSet
       }
 
@@ -1736,16 +1735,9 @@ final class Compaction(table: IceTable, spark: SparkSession) {
         throw new IllegalStateException("empty table"))
 
     val rewritePaths = toRewrite.map(_.file.filePath).toSet
-    val restricted =
-      if (hasDeletes)
-        // restricted scan with merge-on-read deletes applied, distributed
-        table.newScan().restrictFiles(rewritePaths).toDF(spark)
-      else {
-        // plain re-read of just the files being rewritten (all internal)
-        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-        spark.read.schema(SparkConv.toSpark(table.schema))
-          .parquet(toRewrite.map(t => ManifestAvro.stripFileScheme(t.file.filePath)): _*)
-      }
+    // the scan over just the files being rewritten: merge-on-read
+    // deletes applied, id-less files resolved like any read
+    val restricted = table.newScan().restrictFiles(rewritePaths).toDF(spark)
     val added = SnapshotProducer.writeDataFiles(table, spark, restricted, targetSize,
       inputBytes = toRewrite.map(_.file.fileSizeInBytes).sum)
     // every file a delete applied to was rewritten, so all delete files
@@ -1808,8 +1800,8 @@ final class Compaction(table: IceTable, spark: SparkSession) {
 
   /** Compact accumulated position-delete files WITHOUT touching data
     * files — the maintenance step a streaming MoR upsert makes necessary:
-    * every micro-batch merge adds small delete files, and each one is an
-    * extra anti-join side on every scan. Reads all live parquet
+    * every micro-batch merge adds small delete files, and each one is
+    * another file every delete-bearing scan task parses. Reads all live
     * position-delete files, drops duplicate tuples and tuples whose data
     * file is no longer live, and rewrites them clustered by file_path
     * into ~one delete file per shuffle partition. Deletion vectors

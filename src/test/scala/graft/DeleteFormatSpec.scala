@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -181,6 +182,29 @@ class DeleteFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(t.newScan().toDF(spark).count() == want, "IceTable scan path")
     assert(spark.sql("SELECT count(*) FROM ice.db.df_orc").head.getLong(0) ==
       want, "V2 connector path")
+  }
+
+  for (fmt <- Seq("avro", "orc")) {
+    test(s"data compaction folds a v2 $fmt position-delete plane in") {
+      val name = s"df_compact_$fmt"
+      val t = IceTable.create(cat, TableIdentifier.parse(s"db.$name"),
+        SparkConv.fromSpark(raw.schema),
+        properties = Map("format-version" -> "2",
+          "write.delete.mode" -> "merge-on-read",
+          "write.delete.format.default" -> fmt))
+      t.append(spark).appendDataFrame(raw.repartition(3))
+      t.delete(spark).deleteWherePositional(E.raw("o_orderkey % 5 = 0"))
+      assert(deleteEntries(t).forall(_.dataFile.fileFormat == fmt.toUpperCase))
+      val live = raw.filter("o_orderkey % 5 != 0")
+      def rows(tt: IceTable) = tt.newScan().toDF(spark).select(raw.columns.map(col): _*)
+      def same(a: org.apache.spark.sql.DataFrame) =
+        a.exceptAll(live).isEmpty && live.exceptAll(a).isEmpty
+      assert(same(rows(t)), "before compaction")
+      t.compact(spark).rewriteDataFiles()
+      val fresh = IceTable.load(cat, TableIdentifier.parse(s"db.$name"))
+      assert(deleteEntries(fresh).isEmpty, "compaction folds the delete files in")
+      assert(same(rows(fresh)), "after compaction")
+    }
   }
 
   test("unsupported delete format is rejected at the property boundary") {
