@@ -793,7 +793,7 @@ object SparkEntry {
           if (refd.isEmpty) data
           else {
             val dels = s.read.parquet(refd.map(d => strip(d.path)): _*)
-              .select(regexp_replace(col("file_path"), "^file:/*", "/").as("__df"),
+              .select(graft.ice.FilePaths.storedColumn(col("file_path")).as("__df"),
                 col("pos").as("__dp"))
             data.join(dels,
               data("__f") === dels("__df") && data("__p") === dels("__dp"),

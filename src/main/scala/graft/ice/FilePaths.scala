@@ -1,5 +1,6 @@
 package graft.ice
 
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -29,24 +30,48 @@ object FilePaths {
       else s"${u.getScheme}://${Option(u.getRawAuthority).getOrElse("")}$path"
     } catch { case _: java.net.URISyntaxException => ManifestAvro.stripFileScheme(raw) }
 
+  /** Spark's percent-encoded form of a manifest path, scheme stripped:
+    * what position-delete files and DVs written before Spark paths were
+    * decoded store for it (`/w%20h/x` for `/w h/x`). */
+  def legacyEncoded(path: String): String =
+    try ManifestAvro.stripFileScheme(SparkPath.fromPathString(path).urlEncoded)
+    catch { case _: IllegalArgumentException => path }
+
+  /** Every form under which a delete may name the data file at `path`
+    * (a manifest path without scheme): the path itself and, where it
+    * differs, its [[legacyEncoded]] form. */
+  def storedForms(path: String): Seq[String] = {
+    val enc = legacyEncoded(path)
+    if (enc == path) Seq(path) else Seq(path, enc)
+  }
+
   /** [[fromSpark]] over a column, typically `_metadata.file_path`. */
   def column(c: Column): Column =
-    GraftColumnBridge.column(SparkFilePath(GraftColumnBridge.expression(c)))
+    GraftColumnBridge.column(NormalizedFilePath(GraftColumnBridge.expression(c), stored = false))
+
+  /** `ManifestAvro.stripFileScheme` over a column of stored paths, such
+    * as a position-delete file's `file_path`: the normalisation
+    * `DeleteFileCache` keys delete rows by. */
+  def storedColumn(c: Column): Column =
+    GraftColumnBridge.column(NormalizedFilePath(GraftColumnBridge.expression(c), stored = true))
 }
 
-/** `graft_file_path(path)`: [[FilePaths.fromSpark]] as an expression.
-  * A scan's rows arrive file by file, so the last decode is reused and
+/** `graft_file_path(path)`: [[FilePaths.fromSpark]] as an expression, or
+  * with `stored`, `graft_stored_path(path)`: `ManifestAvro.stripFileScheme`.
+  * A scan's rows arrive file by file, so the last result is reused and
   * a row costs one byte comparison. */
-final case class SparkFilePath(child: Expression) extends UnaryExpression {
+final case class NormalizedFilePath(child: Expression, stored: Boolean) extends UnaryExpression {
   override def dataType: DataType = StringType
-  override def prettyName: String = "graft_file_path"
+  override def prettyName: String = if (stored) "graft_stored_path" else "graft_file_path"
 
   @transient private[this] var lastRaw: UTF8String = _
   @transient private[this] var lastPath: UTF8String = _
 
   def decode(raw: UTF8String): UTF8String = {
     if (lastRaw == null || !lastRaw.equals(raw)) {
-      lastPath = UTF8String.fromString(FilePaths.fromSpark(raw.toString))
+      val s = raw.toString
+      lastPath = UTF8String.fromString(
+        if (stored) ManifestAvro.stripFileScheme(s) else FilePaths.fromSpark(s))
       lastRaw = raw.clone()
     }
     lastPath
@@ -59,5 +84,5 @@ final case class SparkFilePath(child: Expression) extends UnaryExpression {
     defineCodeGen(ctx, ev, c => s"$self.decode($c)")
   }
 
-  override protected def withNewChildInternal(c: Expression): SparkFilePath = copy(child = c)
+  override protected def withNewChildInternal(c: Expression): NormalizedFilePath = copy(child = c)
 }

@@ -955,7 +955,7 @@ object IceTable {
           es.map(e => ManifestAvro.stripFileScheme(e.dataFile.filePath)),
           Map.empty)
       }.reduce(_ unionByName _)
-      .select(regexp_replace(col("file_path"), "^file:/*", "/").as("__dfile"),
+      .select(FilePaths.storedColumn(col("file_path")).as("__dfile"),
         col("pos").as("__dpos")))
   }
 

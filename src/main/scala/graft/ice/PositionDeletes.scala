@@ -53,8 +53,9 @@ object PositionDeletes {
     val (dvs, files) = posDeletes
       .filter(_.sequenceNumber.getOrElse(0L) >= t.sequenceForVisibility)
       .partition(_.dataFile.contentOffset.isDefined)
+    lazy val forms = FilePaths.storedForms(p)
     FileDeletes(
-      dvs.filter(_.dataFile.referencedDataFile.map(ManifestAvro.stripFileScheme).contains(p))
+      dvs.filter(_.dataFile.referencedDataFile.map(ManifestAvro.stripFileScheme).exists(forms.contains))
         .map(e => (ManifestAvro.stripFileScheme(e.dataFile.filePath),
           e.dataFile.contentOffset.get,
           e.dataFile.contentSizeInBytes.getOrElse(
@@ -92,16 +93,19 @@ object PositionDeletes {
     f => throw new IllegalStateException(
       s"reader $slot was not built for this scan, yet ${f.filePath} needs it")
 
-  /** Spark's row reader for parquet files of `schema` (whole rows, no
-    * batches), with `filters` pushed into the row-group reader. */
-  def parquetReader(spark: SparkSession, schema: StructType, filters: Seq[V1Filter]): Read =
+  /** Spark's reader for parquet files of `schema`, with `filters` pushed
+    * into the row-group reader. With `batches` it yields `ColumnarBatch`es
+    * (cast to the row type; [[rows]] unpacks them), which needs
+    * `ParquetFileFormat.supportBatch` to hold for `schema` under `spark`. */
+  def parquetReader(spark: SparkSession, schema: StructType, filters: Seq[V1Filter],
+      batches: Boolean = false): Read =
     new ParquetFileFormat().buildReaderWithPartitionValues(
       sparkSession = spark,
       dataSchema = schema,
       partitionSchema = new StructType(),
       requiredSchema = schema,
       filters = filters,
-      options = Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      options = Map(FileFormat.OPTION_RETURNING_BATCH -> batches.toString),
       hadoopConf = spark.sessionState.newHadoopConfWithOptions(Map.empty))
 
   /** The ORC twin of [[parquetReader]], unfiltered. */
@@ -266,8 +270,9 @@ object DeleteFileCache {
   }
 
   /** Positions deleted from `dataPath` according to the delete file at
-    * (path, size); `parse` yields the file's (file_path, pos) rows. The
-    * returned bitmap is shared: callers must not modify it. */
+    * (path, size); `parse` yields the file's (file_path, pos) rows. Rows
+    * stored under any of the path's [[FilePaths.storedForms]] count. The
+    * returned bitmap may be shared: callers must not modify it. */
   def positionsFor(path: String, size: Long, dataPath: String,
       parse: () => Iterator[InternalRow]): Roaring64Bitmap = {
     val key = s"$path#$size"
@@ -287,8 +292,15 @@ object DeleteFileCache {
       if (prev != null) byPath = prev
       else { admit(n); byPath = m }
     }
-    val bm = byPath.get(dataPath)
-    if (bm == null) new Roaring64Bitmap() else bm
+    val found = FilePaths.storedForms(dataPath).flatMap(p => Option(byPath.get(p)))
+    found match {
+      case Seq() => new Roaring64Bitmap()
+      case Seq(bm) => bm
+      case several =>
+        val bm = new Roaring64Bitmap()
+        several.foreach(bm.or)
+        bm
+    }
   }
 
   /** The delete-key set of an equality-delete file, parsed once per JVM

@@ -12,10 +12,12 @@ import org.apache.spark.sql.connector.expressions.{Expressions, NullOrdering, So
 import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder => V2ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportOrdering, SupportsReportPartitioning, SupportsReportStatistics}
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.execution.datasources.PartitionedFile
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.{Filter => V1Filter}
 import org.apache.spark.sql.types.{DataType, LongType, Metadata, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.ColumnarBatch
 
 import graft.ice.{DeleteFileCache, FileDeletes, FileScanTask, IceTable, PositionDeletes, ScanBuilder}
 import graft.ice.expr.{Expr => IceExpr}
@@ -29,17 +31,25 @@ import graft.ice.types.{SparkConv, TimestampT, TimestampTzT}
   * name-mapping, metadata columns); this connector exists for what only
   * a V2 relation can express:
   *
-  *  - **Storage-partitioned joins**: the scan reports
-  *    `KeyGroupedPartitioning` over the table's partition transforms and
+  *  - **Storage-partitioned joins**: over a bucket spec (every field a
+  *    `bucket` transform) the scan reports `KeyGroupedPartitioning` and
   *    every input split carries its partition tuple (`HasPartitionKey`),
   *    so two tables bucketed on the same key join with ZERO shuffle on
-  *    either side (`spark.sql.sources.v2.bucketing.enabled=true`). At
-  *    100 TB this is the difference between a co-located join and
-  *    shuffling both fact tables.
+  *    either side (`spark.sql.sources.v2.bucketing.enabled=true`). A
+  *    bucket spec fixes its key count to co-locate rows for joins; time,
+  *    identity and truncate specs exist for pruning, so their scans are
+  *    not grouped: they plan packed and sub-split input partitions
+  *    (`SplitPlanning`) like an unpartitioned table, rather than one
+  *    unsplit task per partition value.
   *  - Column pruning + filter pushdown through the connector contract
   *    (`SupportsPushDownRequiredColumns` / `SupportsPushDownFilters`):
   *    pruned columns and translated predicates reach BOTH our
   *    manifest/file pruning and the parquet row-group reader.
+  *  - **Columnar reads**: when every split is a plain read of a field-id
+  *    parquet file (no deletes, initial-defaults, identity constants or
+  *    metadata columns) and the scan session's parquet vectorization
+  *    accepts the read schema, the reader factory hands Spark the
+  *    parquet reader's `ColumnarBatch`es. Any other scan reads rows.
   *
   * Reference anchor: the C++ reference exposes scans through an Arrow
   * stream consumed by external engines (table_scan.cc:120-134); this is
@@ -513,8 +523,10 @@ private[connector] object TopNPlanner {
   }
 }
 
-/** Test/diagnostic hook: split counts before/after the most recent
-  * runtime (DPP) filter application on any V2 scan in this JVM. */
+/** Test/diagnostic hook: planned data-file counts before/after the most
+  * recent runtime (DPP) filter application on any V2 scan in this JVM
+  * (files, not input partitions: packing may fold a pruned scan's files
+  * into as few partitions as the full scan's). */
 object GraftRuntimeFilterStats {
   val plansWithRuntimeFilter = new java.util.concurrent.atomic.AtomicLong()
   @volatile var lastBefore: Long = -1
@@ -727,7 +739,10 @@ private[connector] final class GraftBatchScan(table: IceTable,
       // every surviving file's manifest sort_order_id equals the table's
       // CURRENT sort order — the precondition for reporting per-split
       // output ordering (SupportsReportOrdering)
-      filesSorted: Boolean)
+      filesSorted: Boolean,
+      // every surviving data file is parquet: a precondition of the
+      // columnar read (the batch reader is parquet's)
+      parquetOnly: Boolean)
 
   /** Final planned file set in manifest path form (after static pushdown
     * AND any runtime group filter) — the groups a row-level operation's
@@ -832,13 +847,18 @@ private[connector] final class GraftBatchScan(table: IceTable,
         }
       }
 
-    // SPJ is reportable only when every surviving file lives in the
-    // CURRENT spec (older-spec files have a different tuple shape) and
-    // every transform maps onto the connector grammar
+    // SPJ grouping is reported only for a bucket spec: its fixed key
+    // count exists for co-location, which storage-partitioned joins need.
+    // Time, identity and truncate specs exist for pruning; grouping them
+    // would run one unsplit task per partition value, so they are packed
+    // and sub-split like an unpartitioned table. Every surviving file must
+    // also live in the CURRENT spec (older-spec files have a different
+    // tuple shape) and every transform map onto the connector grammar.
     val specId = table.metadata.defaultSpecId
     val spec = table.metadata.defaultSpec
-    val groupable = spec.fields.nonEmpty && tasks.nonEmpty &&
-      tasks.forall(_.specId == specId) &&
+    val groupable = spec.fields.nonEmpty &&
+      spec.fields.forall(_.transform.isInstanceOf[BucketTransform]) &&
+      tasks.nonEmpty && tasks.forall(_.specId == specId) &&
       GraftConnectorUtil.toV2Transforms(table).exists(_.length == spec.fields.length)
 
     val totalRows = tasks.map(_.file.recordCount).sum
@@ -848,6 +868,7 @@ private[connector] final class GraftBatchScan(table: IceTable,
     val filesSorted = table.metadata.defaultSortOrder.fields.nonEmpty &&
       tasks.nonEmpty &&
       tasks.forall(_.file.sortOrderId.contains(table.metadata.defaultSortOrderId))
+    val parquetOnly = tasks.forall(_.file.fileFormat.equalsIgnoreCase("PARQUET"))
     if (!groupable) {
       val whole = tasks.map { t =>
         val p = GraftConnectorUtil.normPath(t.file.filePath)
@@ -879,7 +900,7 @@ private[connector] final class GraftBatchScan(table: IceTable,
             meta.property(TableProperties.SplitLookback))
         }
       PlannedScan(whole.map(_._2), parts, None, totalRows, snapId, origPaths,
-        deletePaths, filesSorted)
+        deletePaths, filesSorted, parquetOnly)
     } else {
       val keyed = tasks.map { t =>
         val p = GraftConnectorUtil.normPath(t.file.filePath)
@@ -892,7 +913,7 @@ private[connector] final class GraftBatchScan(table: IceTable,
       }
       val nKeys = tasks.map(_.file.partition).distinct.size
       PlannedScan(keyed, keyed, Some(nKeys), totalRows, snapId, origPaths, deletePaths,
-        filesSorted)
+        filesSorted, parquetOnly)
     }
   }
 
@@ -916,13 +937,13 @@ private[connector] final class GraftBatchScan(table: IceTable,
     val converted = predicates.toSeq.flatMap(p => V2PredicateToIce.convert(p, table))
     if (converted.nonEmpty) {
       val first = planned
-      val before = first.parts.size
+      val before = first.splits.size
       replanSnapshotId = first.snapshotId
       runtimeExpr = Some((runtimeExpr.toSeq ++ converted).reduce(IceExpr.and))
       plannedCache.set(null)
       GraftRuntimeFilterStats.plansWithRuntimeFilter.incrementAndGet()
       GraftRuntimeFilterStats.lastBefore = before
-      GraftRuntimeFilterStats.lastAfter = planned.parts.size
+      GraftRuntimeFilterStats.lastAfter = planned.splits.size
     }
   }
 
@@ -1000,14 +1021,18 @@ private[connector] final class GraftBatchScan(table: IceTable,
     val cached = factoryCache.get()
     if (cached != null && (cached._1 eq plan)) cached._2
     else {
-      val f = buildReaderFactory(plan.splits)
+      val f = buildReaderFactory(plan)
       factoryCache.set((plan, f))
       f
     }
   }
 
-  private def buildReaderFactory(splits: Seq[GraftScanSplit]): PartitionReaderFactory = {
-    val spark = SparkSession.active
+  private def buildReaderFactory(plan: PlannedScan): PartitionReaderFactory = {
+    val splits = plan.splits
+    // the readers snapshot their session's conf at build time, so build
+    // them under the table's scan session: its read.*.vectorization.*
+    // settings then reach this scan and never the caller's shared session
+    val spark = IceTable.scanSession(SparkSession.active, table.properties)
     // field-id column resolution for our own files (rename-safe); files
     // without ids (addFiles-registered) read by current name
     spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
@@ -1030,35 +1055,11 @@ private[connector] final class GraftBatchScan(table: IceTable,
     val readSchemaIds = StructType(dataRequired.fields ++ extraEq)
     val plain = StructType(readSchemaIds.fields.map(_.copy(metadata = Metadata.empty)))
 
-    // read.parquet.vectorization.* (table_properties.h:197-200): the
-    // parquet reader builder snapshots the SESSION conf into each
-    // reader's Hadoop configuration at build time — apply the table's
-    // explicit settings around the builds, then restore, so one table's
-    // batch-size/disable choice never leaks into other scans
-    val vectorizationOverrides: Seq[(String, String)] =
-      graft.ice.IceTable.ReadVectorizationConfKeys.flatMap { case (key, confKey) =>
-        if (table.properties.contains(key.name))
-          Some(confKey -> graft.ice.meta.TableProperties
-            .get(table.properties, key).toString)
-        else None
-      }
-    def withVectorization[T](f: => T): T = {
-      if (vectorizationOverrides.isEmpty) return f
-      val saved = vectorizationOverrides.map { case (k, _) =>
-        k -> spark.conf.getOption(k) }
-      vectorizationOverrides.foreach { case (k, v) => spark.conf.set(k, v) }
-      try f finally saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    }
-
     def mkReader(schema: StructType, filters: Seq[V1Filter]) =
-      withVectorization(PositionDeletes.parquetReader(spark, schema, filters))
+      PositionDeletes.parquetReader(spark, schema, filters)
     // ORC twin, for delete planes written under
     // write.delete.format.default=orc
-    def mkOrcReader(schema: StructType) =
-      withVectorization(PositionDeletes.orcReader(spark, schema))
+    def mkOrcReader(schema: StructType) = PositionDeletes.orcReader(spark, schema)
 
     val posDeleteSchema = PositionDeletes.Schema
     val eqSchemas: Map[Seq[String], StructType] =
@@ -1123,9 +1124,20 @@ private[connector] final class GraftBatchScan(table: IceTable,
         }
       }.toMap
 
+    // columnar batches when the session's parquet vectorization accepts
+    // the read schema; row consumers unpack them (PositionDeletes.rows).
+    // The scan reads columnar only when every split is a plain read of a
+    // field-id parquet file: Spark refuses a scan that mixes columnar and
+    // row splits, and deletes, defaults, constants and metadata columns
+    // are applied row by row
+    val batches = new ParquetFileFormat().supportBatch(spark, readSchemaIds)
+    val columnar = batches && plan.parquetOnly && outputTemplate.isEmpty &&
+      splits.forall(s => s.useFieldIds && s.deletes.isEmpty &&
+        s.absentDefaults.isEmpty && s.identityConsts.isEmpty)
+
     GraftReaderFactory(
       readIds = slot("readIds", dataCombos((true, false)))(
-        mkReader(readSchemaIds, v1Filters.toSeq)),
+        PositionDeletes.parquetReader(spark, readSchemaIds, v1Filters.toSeq, batches)),
       readIdsRaw = slot("readIdsRaw", dataCombos((true, true)))(
         mkReader(readSchemaIds, Nil)),
       readPlain = slot("readPlain", dataCombos((false, false)))(
@@ -1148,7 +1160,8 @@ private[connector] final class GraftBatchScan(table: IceTable,
       eqSchemas = eqSchemas,
       outputTemplate = outputTemplate,
       defaultsFill = defaultsFill,
-      constSlots = constSlots)
+      constSlots = constSlots,
+      columnar = columnar)
   }
 }
 
@@ -1399,24 +1412,42 @@ private[connector] final case class GraftReaderFactory(
     // field id -> (read ordinal, spark type, iceberg primitive) for
     // per-split identity-partition constant injection (Hive imports)
     constSlots: Map[Int, (Int, org.apache.spark.sql.types.DataType,
-      graft.ice.types.IcePrimitive)] = Map.empty) extends PartitionReaderFactory {
+      graft.ice.types.IcePrimitive)] = Map.empty,
+    // every split of the scan is a plain field-id parquet read and
+    // `readIds` returns batches: Spark reads the scan as columnar
+    columnar: Boolean = false) extends PartitionReaderFactory {
 
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    // a packed split concatenates its members' iterators — every member
-    // keeps its own delete/default/projection state (built lazily, so a
-    // 50-file bin opens files one at a time)
-    val it: Iterator[InternalRow] = p match {
-      case GraftPackedSplit(members) => members.iterator.flatMap(rowsOf)
-      case s: GraftScanSplit => rowsOf(s)
-    }
-    new PartitionReader[InternalRow] {
-      private var cur: InternalRow = _
+  override def supportColumnarReads(p: InputPartition): Boolean = columnar
+
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    readerOf(splitsOf(p).flatMap(rowsOf))
+
+  override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] =
+    readerOf(splitsOf(p).flatMap(s =>
+      readIds(fileOf(s)).asInstanceOf[Iterator[ColumnarBatch]]))
+
+  // a packed split concatenates its members' iterators — every member
+  // keeps its own delete/default/projection state (built lazily, so a
+  // 50-file bin opens files one at a time)
+  private def splitsOf(p: InputPartition): Iterator[GraftScanSplit] = p match {
+    case GraftPackedSplit(members) => members.iterator
+    case s: GraftScanSplit => Iterator.single(s)
+  }
+
+  private def readerOf[T](it: Iterator[T]): PartitionReader[T] =
+    new PartitionReader[T] {
+      private var cur: T = _
       override def next(): Boolean =
         if (it.hasNext) { cur = it.next(); true } else false
-      override def get(): InternalRow = cur
+      override def get(): T = cur
       override def close(): Unit = ()
     }
-  }
+
+  // the split's byte range (whole file unless read.split.target-size
+  // cut it); position-counted reads are whole-file by construction
+  private def fileOf(split: GraftScanSplit): PartitionedFile =
+    PartitionedFile(InternalRow.empty, SparkPath.fromPathString(split.path),
+      split.rangeStart, split.rangeLength, Array.empty[String], 0L, split.fileSize, Map.empty)
 
   private def rowsOf(split: GraftScanSplit): Iterator[InternalRow] = {
     val del = split.deletes
@@ -1463,11 +1494,7 @@ private[connector] final case class GraftReaderFactory(
         case (false, false) => readPlain
       }
 
-    // the split's byte range (whole file unless read.split.target-size
-    // cut it); position-counted reads are whole-file by construction
-    val base = PositionDeletes.rows(read, PartitionedFile(InternalRow.empty,
-      SparkPath.fromPathString(split.path), split.rangeStart,
-      split.rangeLength, Array.empty[String], 0L, split.fileSize, Map.empty))
+    val base = PositionDeletes.rows(read, fileOf(split))
     var pos = -1L
     val it0 =
       if (!needExactPositions) base

@@ -19,10 +19,12 @@ import scala.collection.mutable.ArrayBuffer
   * bin-packed, with each member charging at least `open-file-cost`
   * bytes so a bin never accumulates thousands of file-open round trips.
   *
-  * NOT applied when the scan reports per-split ordering or
-  * storage-partitioned-join grouping — those contracts are defined over
-  * whole single-file splits (a packed or ranged split neither preserves
-  * a file's sort order claim nor a one-key-per-split guarantee). */
+  * Applied to every scan of an unpartitioned table or of a time,
+  * identity or truncate spec. NOT applied when the scan reports
+  * per-split ordering or storage-partitioned-join grouping (a bucket
+  * spec) — those contracts are defined over whole single-file splits (a
+  * packed or ranged split neither preserves a file's sort order claim
+  * nor a one-key-per-split guarantee). */
 private[graft] object SplitPlanning {
 
   /** Iceberg's minimum adaptive split size: below this, per-task

@@ -1672,10 +1672,10 @@ final class Compaction(table: IceTable, spark: SparkSession) {
     * Delete scoping (the 100-TB property): one position delete touching a
     * single partition must NOT trigger a full-table rewrite. Files are
     * rewritten only when a delete actually applies to them:
-    *  - position deletes: the file is referenced in a delete file's
-    *    file_path column (one distributed DISTINCT over the delete files
-    *    — output is bounded by the live file count) and the
-    *    sequence-number visibility rule holds;
+    *  - position deletes: a delete names the file
+    *    ([[positionDeleteTargets]]: from manifest metadata where it
+    *    suffices, else one distributed DISTINCT over the delete files)
+    *    and the sequence-number visibility rule holds;
     *  - equality deletes: dataSeq < deleteSeq AND the file's column
     *    bounds intersect the delete keys' min/max (bounds-disjoint files
     *    cannot contain a deleted key, so the delete file can still be
@@ -1694,18 +1694,7 @@ final class Compaction(table: IceTable, spark: SparkSession) {
     val eqDeletes = deleteEntries.filter(_.dataFile.content == FileContent.EqualityDeletes)
     val hasDeletes = deleteEntries.nonEmpty
 
-    // data files actually referenced by position-delete tuples; deletion
-    // vectors name their data file in the manifest itself (no file read)
-    val (dvDeletes, pqPosDeletes) =
-      posDeletes.partition(_.dataFile.contentOffset.isDefined)
-    val posTouched: Set[String] =
-      dvDeletes.flatMap(_.dataFile.referencedDataFile)
-        .map(ManifestAvro.stripFileScheme).toSet ++ {
-        if (pqPosDeletes.isEmpty) Set.empty[String]
-        else graft.ice.IceTable.readPositionDeleteRows(spark, pqPosDeletes).get
-          .select("__dfile").distinct()
-          .collect().map(_.getString(0)).toSet
-      }
+    val posTouched = positionDeleteTargets(posDeletes)
 
     // per-equality-delete (seq, key mins/maxs) for bounds pruning
     val metricsEval = new MetricsEvaluator
@@ -1724,7 +1713,8 @@ final class Compaction(table: IceTable, spark: SparkSession) {
     }
 
     def deleteApplies(t: FileScanTask): Boolean =
-      (posTouched.contains(ManifestAvro.stripFileScheme(t.file.filePath)) &&
+      (graft.ice.FilePaths.storedForms(ManifestAvro.stripFileScheme(t.file.filePath))
+        .exists(posTouched.contains) &&
         posDeletes.exists(_.sequenceNumber.getOrElse(0L) >= t.sequenceForVisibility)) ||
         eqApplies(t)
 
@@ -1746,6 +1736,30 @@ final class Compaction(table: IceTable, spark: SparkSession) {
     SnapshotProducer.commit(table, spark, DataOperation.Replace, added,
       removedPaths = rewritePaths ++ removedDeletePaths,
       extraSummary = Map("compacted-files" -> toRewrite.size.toString))
+  }
+
+  /** The data files `posDeletes` name, as their deletes store them
+    * (scheme stripped; see `FilePaths.storedForms`). The manifest names
+    * them for a deletion vector (its referenced file) and for a delete
+    * file whose `file_path` lower and upper bounds are equal (the
+    * writers store untruncated paths). Only delete files whose bounds
+    * span several paths or are missing are read, in one distributed
+    * distinct whose output is bounded by the live file count. */
+  private[ice] def positionDeleteTargets(posDeletes: Seq[ManifestEntry]): Set[String] = {
+    def onePath(e: ManifestEntry): Option[String] =
+      (e.dataFile.lowerBounds.get(RowDelete.PathBoundFieldId),
+        e.dataFile.upperBounds.get(RowDelete.PathBoundFieldId)) match {
+        case (Some(lo), Some(hi)) if java.util.Arrays.equals(lo, hi) =>
+          Some(new String(lo, java.nio.charset.StandardCharsets.UTF_8))
+        case _ => None
+      }
+    val (dvs, files) = posDeletes.partition(_.dataFile.contentOffset.isDefined)
+    val (single, spanning) = files.partition(onePath(_).isDefined)
+    (dvs.flatMap(_.dataFile.referencedDataFile) ++ single.flatMap(onePath))
+      .map(ManifestAvro.stripFileScheme).toSet ++
+      graft.ice.IceTable.readPositionDeleteRows(spark, spanning)
+        .map(_.select("__dfile").distinct().collect().map(_.getString(0)).toSet)
+        .getOrElse(Set.empty[String])
   }
 
   /** Rewrite ALL live data files clustered along a Z-order curve over

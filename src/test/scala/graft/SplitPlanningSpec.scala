@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ColumnarToRowExec
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,15 +12,17 @@ import graft.ice.catalog._
 import graft.ice.connector.{GraftDeleteSpec, GraftFileSplit, GraftPackedSplit,
   SplitPlanning}
 import graft.ice.expr.{Expr => E}
-import graft.ice.meta.{PartitionSpec, SortField, SortOrder}
-import graft.ice.transform.IdentityTransform
+import graft.ice.meta.{PartitionField, PartitionSpec, SortField, SortOrder}
+import graft.ice.transform.{DayTransform, IdentityTransform, MonthTransform}
 import graft.ice.types.{Literal, SparkConv}
 
 /** read.split.* planning (reference table_properties.h:187-195):
   * oversized imported files cut into ranged sub-splits, tiny files
   * bin-packed by open-file cost, adaptive sizing, and the negative
   * controls — sorted scans and pre-planned LIMIT scans keep whole
-  * single-file splits (their contracts are defined over them). */
+  * single-file splits (their contracts are defined over them). Time and
+  * identity specs plan like unpartitioned tables; only a bucket spec
+  * keeps one key-grouped split per file for storage-partitioned joins. */
 class SplitPlanningSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val warehouse =
@@ -121,27 +125,40 @@ class SplitPlanningSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def scanPartitions(name: String): Int =
     spark.table(s"ice.db.$name").rdd.getNumPartitions
 
-  test("an oversized imported file scans as one ranged sub-split per row group") {
-    val raw = spark.read.parquet("/root/testdata/sf0.01/orders.parquet")
-    // one file, many small row groups; 1-byte split target + 1-byte open
-    // cost -> a cut at EVERY recorded row-group offset, no packing
-    val t = IceTable.create(cat, TableIdentifier.parse("db.big_file"),
-      SparkConv.fromSpark(raw.schema),
-      properties = Map(
-        "write.parquet.row-group-size-bytes" -> "65536",
-        "read.split.target-size" -> "1",
-        "read.split.open-file-cost" -> "1"))
-    t.append(spark).appendDataFrame(raw.repartition(1))
-    val entries = t.newScan().planFiles()
-    assert(entries.size == 1)
-    val offsets = entries.head.file.splitOffsets
-    assert(offsets.size >= 4, s"want >=4 row groups, got ${offsets.size}")
-    assert(scanPartitions("big_file") == offsets.size)
-    // ranged reads cover every row exactly once
-    val got = spark.table("ice.db.big_file").agg(
-      count(lit(1)), sum(col("o_orderkey"))).head
-    val want = raw.agg(count(lit(1)), sum(col("o_orderkey"))).head
-    assert(got == want)
+  // a day spec plans like an unpartitioned table: one day's oversized
+  // file is cut, not read as one task per partition value
+  for ((what, oneDay) <- Seq("an oversized imported file" -> false,
+      "a day-partitioned table with one oversized file" -> true)) {
+    test(s"$what scans as one ranged sub-split per row group") {
+      val orders = spark.read.parquet("/root/testdata/sf0.01/orders.parquet")
+      val raw =
+        if (oneDay) orders.withColumn("o_orderdate", lit(java.sql.Date.valueOf("1996-01-02")))
+        else orders
+      val schema = SparkConv.fromSpark(raw.schema)
+      val spec =
+        if (!oneDay) PartitionSpec.unpartitioned
+        else PartitionSpec(0, IndexedSeq(PartitionField(
+          schema.findFieldByName("o_orderdate").get.id, 1000, "o_orderdate_day", DayTransform)))
+      // one file, many small row groups; 1-byte split target + 1-byte open
+      // cost -> a cut at EVERY recorded row-group offset, no packing
+      val name = if (oneDay) "one_day" else "big_file"
+      val t = IceTable.create(cat, TableIdentifier.parse(s"db.$name"), schema, spec,
+        properties = Map(
+          "write.parquet.row-group-size-bytes" -> "65536",
+          "read.split.target-size" -> "1",
+          "read.split.open-file-cost" -> "1"))
+      t.append(spark).appendDataFrame(raw.repartition(1))
+      val entries = t.newScan().planFiles()
+      assert(entries.size == 1)
+      val offsets = entries.head.file.splitOffsets
+      assert(offsets.size >= 4, s"want >=4 row groups, got ${offsets.size}")
+      assert(scanPartitions(name) == offsets.size)
+      // ranged reads cover every row exactly once
+      val got = spark.table(s"ice.db.$name").agg(
+        count(lit(1)), sum(col("o_orderkey"))).head
+      val want = raw.agg(count(lit(1)), sum(col("o_orderkey"))).head
+      assert(got == want)
+    }
   }
 
   test("100 tiny files bin-pack by open-file cost; adaptive sizing splits finer") {
@@ -162,6 +179,34 @@ class SplitPlanningSpec extends AnyFunSuite with BeforeAndAfterAll {
     t.commit(base => base.copy(properties =
       base.properties - "read.split.adaptive-size.enabled"))
     assert(scanPartitions("tiny_files") == 25)
+  }
+
+  test("a month-partitioned table of 24 small files packs into fewer columnar tasks") {
+    val raw = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
+      .filter("o_orderdate >= DATE'1995-01-01' AND o_orderdate < DATE'1997-01-01'")
+    val schema = SparkConv.fromSpark(raw.schema)
+    val t = IceTable.create(cat, TableIdentifier.parse("db.months"), schema,
+      PartitionSpec(0, IndexedSeq(PartitionField(
+        schema.findFieldByName("o_orderdate").get.id, 1000, "o_orderdate_month",
+        MonthTransform))))
+    t.append(spark).appendDataFrame(raw)
+    assert(t.newScan().planFiles().size == 24)
+    val prior = spark.conf.get("spark.sql.sources.v2.bucketing.enabled")
+    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+    try {
+      val df = spark.table("ice.db.months")
+      assert(scanPartitions("months") < 24, s"${scanPartitions("months")} tasks")
+      val plan = df.queryExecution.executedPlan
+      assert(plan.collect { case c: ColumnarToRowExec => c.child }
+        .exists(_.exists(_.isInstanceOf[BatchScanExec])), plan.toString)
+      assert(df.collect().map(_.toString).sorted.toSeq ==
+        raw.collect().map(_.toString).sorted.toSeq)
+      val q = "SELECT o_orderstatus, count(*), round(sum(o_totalprice), 2) FROM %s " +
+        "WHERE o_orderdate < DATE'1996-03-15' GROUP BY o_orderstatus"
+      raw.createOrReplaceTempView("months_oracle")
+      assert(spark.sql(q.format("ice.db.months")).collect().map(_.toString).sorted.toSeq ==
+        spark.sql(q.format("months_oracle")).collect().map(_.toString).sorted.toSeq)
+    } finally spark.conf.set("spark.sql.sources.v2.bucketing.enabled", prior)
   }
 
   test("negative controls: sorted and positional-delete scans keep whole-file splits") {

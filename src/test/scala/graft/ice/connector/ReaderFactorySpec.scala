@@ -3,11 +3,12 @@ package graft.ice.connector
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{ColumnarToRowExec, SparkPlan}
 import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
+import org.scalatest.LoneElement._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ice.IceTable
@@ -20,8 +21,10 @@ import graft.ice.types.{Literal, SparkConv}
 /** The connector's reader factory builds only the reader slots its
   * planned splits can reach. Every parquet/ORC reader build broadcasts
   * the session's Hadoop configuration, so the pinned count of broadcasts
-  * per planned scan is the count of slots built. Each case also checks
-  * the scan's answer against plain Spark over the raw rows. */
+  * per planned scan is the count of slots built. A scan whose splits are
+  * all plain field-id parquet reads is read as columnar batches; every
+  * other scan keeps row reads. Each case also checks the scan's answer
+  * against plain Spark over the raw rows. */
 class ReaderFactorySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val warehouse =
@@ -96,6 +99,22 @@ class ReaderFactorySpec extends AnyFunSuite with BeforeAndAfterAll {
   private def assertAnswer(name: String, oracle: DataFrame): Unit =
     assert(sortedRows(spark.table(s"ice.db.$name")) == sortedRows(oracle), name)
 
+  /** A `ColumnarToRow` sits over the graft `BatchScan` in `df`'s plan. */
+  private def readsColumnar(df: DataFrame): Boolean =
+    df.queryExecution.executedPlan.collect {
+      case c: ColumnarToRowExec => c.child.collectFirst {
+        case b: BatchScanExec if b.readerFactory.isInstanceOf[GraftReaderFactory] => b
+      }
+    }.flatten.nonEmpty
+
+  /** `df` plans a row read (no `ColumnarToRow`, a row-only factory) and
+    * equals `oracle`. */
+  private def assertRowRead(df: DataFrame, oracle: DataFrame, what: String): Unit = {
+    val plan = df.queryExecution.executedPlan
+    assert(!factoryOf(plan).columnar && !readsColumnar(df), s"$what must read rows:\n$plan")
+    assert(sortedRows(df) == sortedRows(oracle), what)
+  }
+
   /** The built data and position-delete slots. */
   private def builtSlots(f: GraftReaderFactory): Set[String] =
     Seq(
@@ -122,7 +141,64 @@ class ReaderFactorySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(n == 1, s"broadcasts per delete-free scan: $n")
     assert(builtSlots(f) == Set("readIds"))
     assert(f.readEqDeletes.isEmpty && f.readEqDeletesOrc.isEmpty)
+    assert(f.columnar && readsColumnar(spark.table("ice.db.free")),
+      spark.table("ice.db.free").queryExecution.executedPlan.toString)
     assertAnswer("free", raw)
+  }
+
+  test("row-path triggers keep row reads and match the oracle") {
+    val all = raw.columns.map(col).toSeq
+    val pos = mkTable("rp_pos")
+    pos.delete(spark).deleteWherePositional(E.lt("o_orderkey", Literal.long(200)))
+    assertRowRead(spark.table("ice.db.rp_pos"), raw.where(col("o_orderkey") >= 200),
+      "position deletes")
+
+    val dv = mkTable("rp_dv", Map("format-version" -> "3"))
+    dv.delete(spark).deleteWhereDV(E.lt("o_orderkey", Literal.long(300)))
+    assertRowRead(spark.table("ice.db.rp_dv"), raw.where(col("o_orderkey") >= 300), "DVs")
+
+    import spark.implicits._
+    val eq = mkTable("rp_eq")
+    eq.delete(spark).deleteByEquality(Seq(1L, 2L, 3L).toDF("o_orderkey"))
+    assertRowRead(spark.table("ice.db.rp_eq"), raw.where(!col("o_orderkey").isin(1L, 2L, 3L)),
+      "equality deletes")
+
+    // a file that predates a defaulted column reads its initial-default
+    mkTable("rp_def").updateSchema()
+      .addColumnWithDefault("tier", graft.ice.types.StringT, Some("STANDARD"), Some("BASIC"))
+      .commit()
+    assertRowRead(spark.table("ice.db.rp_def"), raw.withColumn("tier", lit("STANDARD")),
+      "v3 initial-defaults")
+
+    // a Hive import keeps its partition column in directory names only
+    val hive = java.nio.file.Files.createTempDirectory("rphive").toString + "/src"
+    raw.write.partitionBy("o_orderstatus").parquet(hive)
+    spark.sql(s"CALL ice.system.snapshot_table(source_dir => '$hive', table => 'db.rp_hive')")
+      .collect()
+    assertRowRead(spark.table("ice.db.rp_hive").select(all: _*), raw, "Hive-import constants")
+
+    mkTable("rp_file")
+    val path = IceTable.load(cat, TableIdentifier.parse("db.rp_file")).newScan().planFiles()
+      .map(t => GraftConnectorUtil.normPath(t.file.filePath)).loneElement
+    assertRowRead(spark.table("ice.db.rp_file").select(col("o_orderkey"), col("_file")),
+      raw.select(col("o_orderkey"), lit(path).as("_file")), "_file")
+
+    mkTable("rp_novec", Map("read.parquet.vectorization.enabled" -> "false"))
+    val before = spark.conf.getAll
+    assertRowRead(spark.sql("SELECT * FROM ice.db.rp_novec"), raw, "disabled vectorization")
+    assert(spark.conf.getAll == before)
+  }
+
+  test("vectorization overrides reach the scan's readers, never the caller's session") {
+    mkTable("vec_over", Map("read.parquet.vectorization.batch-size" -> "777"))
+    val before = spark.conf.getAll
+    val df = spark.sql("SELECT * FROM ice.db.vec_over")
+    val (f, n) = broadcastsDuring(factoryOf(df.queryExecution.executedPlan))
+    assert(n == 1, s"broadcasts: $n")
+    assert(f.columnar && readsColumnar(df))
+    assert(sortedRows(df) == sortedRows(raw))
+    assert(spark.conf.getAll == before,
+      (spark.conf.getAll.toSet diff before.toSet).mkString(", "))
   }
 
   test("an unbuilt reader slot fails loudly") {
