@@ -1210,7 +1210,12 @@ final class ScanBuilder(table: IceTable) {
 
   /** Execute as a DataFrame: Spark's vectorized parquet reader over the
     * planned file list, with field-ID-based column resolution and the
-    * residual filter pushed into the scan by Catalyst.
+    * residual filter pushed into the scan by Catalyst. The residual
+    * filter's constants are passed by reference, not inlined
+    * (`ToColumn`, `ParamLiteral`): scans that differ only in their
+    * constants reuse Spark's compiled classes. Never wrap such a
+    * constant in `.cast`; the cast would fold back into an inlined
+    * literal.
     *
     * Merge-on-read deletes: position deletes and deletion vectors filter
     * rows inside the scan task through one per-file mask over

@@ -1,6 +1,7 @@
 package graft.ice.expr
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftColumnBridge}
+import org.apache.spark.sql.catalyst.expressions.{Literal => CatalystLiteral}
 import org.apache.spark.sql.functions.{col, lit}
 
 import graft.ice.transform.{IdentityTransform, Transform}
@@ -240,7 +241,14 @@ object Binder {
   }
 }
 
-/** Bound expression -> Spark Column (SURVEY §3.2: Catalyst does the rest). */
+/** Bound expression -> Spark Column (SURVEY §3.2: Catalyst does the rest).
+  *
+  * Comparison and set constants are passed by reference, not inlined:
+  * each becomes a [[ParamLiteral]] at its term's exact Spark type, so
+  * reads and row-level operations that differ only in their constants
+  * reuse Spark's compiled classes instead of compiling new ones. Never
+  * wrap such a constant in `.cast`: the cast folds back into a plain,
+  * inlined literal. */
 object ToColumn {
   private def litToSpark(l: Literal): Any = l.raw match {
     case u: java.util.UUID => u.toString
@@ -251,6 +259,18 @@ object ToColumn {
     case us: Long if l.tpe == TimestampTzT => java.time.Instant.ofEpochSecond(
       Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L)
     case v => v
+  }
+
+  /** `l` as a [[ParamLiteral]] of the Spark type `functions.lit` would
+    * give it, which is SparkConv's mapping of the term's type. A decimal
+    * keeps its own precision (the column's may be too narrow for it). */
+  private def param(l: Literal): Column = {
+    val v = litToSpark(l)
+    val c = l.tpe match {
+      case _: DecimalT if v != null => CatalystLiteral(v)
+      case t => CatalystLiteral.create(v, SparkConv.toSparkType(t))
+    }
+    GraftColumnBridge.column(new ParamLiteral(c.value, c.dataType))
   }
 
   def apply(b: Bound): Column = b match {
@@ -267,14 +287,14 @@ object ToColumn {
         case Op.NotNull => c.isNotNull
         case Op.IsNan => c.isNaN
         case Op.NotNan => !c.isNaN
-        case Op.Lt => c < lit(litToSpark(p.literals.head))
-        case Op.LtEq => c <= lit(litToSpark(p.literals.head))
-        case Op.Gt => c > lit(litToSpark(p.literals.head))
-        case Op.GtEq => c >= lit(litToSpark(p.literals.head))
-        case Op.Eq => c === lit(litToSpark(p.literals.head))
-        case Op.NotEq => c =!= lit(litToSpark(p.literals.head))
-        case Op.In => c.isin(p.literals.map(litToSpark): _*)
-        case Op.NotIn => !c.isin(p.literals.map(litToSpark): _*)
+        case Op.Lt => c < param(p.literals.head)
+        case Op.LtEq => c <= param(p.literals.head)
+        case Op.Gt => c > param(p.literals.head)
+        case Op.GtEq => c >= param(p.literals.head)
+        case Op.Eq => c === param(p.literals.head)
+        case Op.NotEq => c =!= param(p.literals.head)
+        case Op.In => c.isin(p.literals.map(param): _*)
+        case Op.NotIn => !c.isin(p.literals.map(param): _*)
         case Op.StartsWith => c.startsWith(litToSpark(p.literals.head).toString)
         case Op.NotStartsWith => !c.startsWith(litToSpark(p.literals.head).toString)
       }

@@ -957,7 +957,8 @@ final class RowDelete(table: IceTable, spark: SparkSession) {
 
   /** (file_path, pos) of every row of the `matching` files where `cond`
     * holds — the match set of both merge-on-read deletes. Files carrying
-    * parquet field ids read by id with the table schema. Id-less files
+    * parquet field ids read by id with the table schema, through
+    * `FileListRelation` like every `toDF` read. Id-less files
     * (addFiles registrations, split out by `toDF`'s id test) read through
     * the scan's `_file`/`_pos` columns, so a predicate sees the same
     * values a scan does: name-mapped columns, initial-defaults and
@@ -969,8 +970,10 @@ final class RowDelete(table: IceTable, spark: SparkSession) {
       hasIds(t, ManifestAvro.stripFileScheme(t.file.filePath)))
     val exact = Option.when(withIds.nonEmpty) {
       spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-      spark.read.schema(SparkConv.toSpark(table.schema))
-        .parquet(withIds.map(t => ManifestAvro.stripFileScheme(t.file.filePath)): _*)
+      // file sizes from the manifests: no driver listing or stat per path
+      graft.ice.FileListRelation.parquet(spark, withIds.map(t =>
+          ManifestAvro.stripFileScheme(t.file.filePath) -> t.file.fileSizeInBytes),
+          SparkConv.toSpark(table.schema))
         .filter(cond)
         .select(
           graft.ice.FilePaths.column(col("_metadata.file_path")).as("file_path"),
@@ -1588,31 +1591,38 @@ final class MergeInto(table: IceTable, spark: SparkSession,
     else Some((None, table.currentSnapshot.map(_.sequenceNumber).getOrElse(0L)))
 
   private def commitCoW(): Snapshot = {
-    val sparkSchema = SparkConv.toSpark(table.schema)
     val allTasks = table.newScan().planFiles()
-    val allPaths = allTasks.map(t => ManifestAvro.stripFileScheme(t.file.filePath))
-    if (allPaths.isEmpty && !insertUnmatched)
+    if (allTasks.isEmpty && !insertUnmatched)
       return SnapshotProducer.commit(table, spark, DataOperation.Overwrite, Nil,
         extraProps = props)
-    spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+    // manifests record the ORIGINAL (possibly scheme-carrying) paths;
+    // `_file` holds them without the scheme
+    val origByStripped = allTasks
+      .map(t => ManifestAvro.stripFileScheme(t.file.filePath) -> t.file.filePath).toMap
 
-    def readRaw(paths: Seq[String]): DataFrame =
-      spark.read.schema(sparkSchema).parquet(paths: _*)
+    // every row of `files` (manifest paths) read through the scan, so
+    // id-less files (addFiles registrations) resolve like any scan does;
+    // commit() refuses tables carrying live merge-on-read deletes, so
+    // these are exactly the files' rows
+    def scanOf(files: Iterable[String]) =
+      table.newScan().restrictFiles(files.toSet)
+    val allFiles = allTasks.map(_.file.filePath)
 
-    // pass 1 (column-pruned: keys + file path only): which files hold a match?
+    // pass 1 (column-pruned: keys + file path only): which files hold a
+    // match? As manifest paths.
     val affected: Seq[String] =
-      if (allPaths.isEmpty) Nil
-      else readRaw(allPaths)
-        .select((on.map(col) :+
-          graft.ice.FilePaths.column(col("_metadata.file_path")).as("__file")): _*)
+      if (allTasks.isEmpty) Nil
+      else scanOf(allFiles).withMetadataColumns("_file").toDF(spark)
+        .select((on.map(col) :+ col("_file").as("__file")): _*)
         .join(source.select(on.map(col): _*).distinct(), on, "left_semi")
-        .select("__file").distinct().collect().map(_.getString(0)).toSeq.sorted
+        .select("__file").distinct().collect()
+        .map(r => origByStripped.getOrElse(r.getString(0), r.getString(0))).toSeq.sorted
 
     val tgtCols = table.schema.fields.map(_.name)
     val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
     if (affected.nonEmpty) {
-      val aff = readRaw(affected)
+      val aff = scanOf(affected).toDF(spark)
       // unmatched rows of rewritten files survive as-is
       parts += aff.join(source.select(on.map(col): _*).distinct(), on, "left_anti")
         .select(tgtCols.map(col): _*)
@@ -1639,8 +1649,8 @@ final class MergeInto(table: IceTable, spark: SparkSession,
       tgtCols.foreach(c => require(source.columns.contains(c),
         s"whenNotMatchedInsertAll needs source column $c"))
       val tgtKeys =
-        if (allPaths.isEmpty) null
-        else readRaw(allPaths).select(on.map(col): _*)
+        if (allTasks.isEmpty) null
+        else scanOf(allFiles).toDF(spark).select(on.map(col): _*)
       parts += (if (tgtKeys == null) source.select(tgtCols.map(col): _*)
         else source.join(tgtKeys, on, "left_anti").select(tgtCols.map(col): _*))
     }
@@ -1650,11 +1660,8 @@ final class MergeInto(table: IceTable, spark: SparkSession,
       case Some(df) => SnapshotProducer.writeDataFiles(table, spark, df)
       case None => Nil
     }
-    // manifests record the ORIGINAL (possibly scheme-carrying) paths
-    val origByStripped = allTasks
-      .map(t => ManifestAvro.stripFileScheme(t.file.filePath) -> t.file.filePath).toMap
     SnapshotProducer.commit(table, spark, DataOperation.Overwrite, added,
-      removedPaths = affected.map(p => origByStripped.getOrElse(p, p)).toSet,
+      removedPaths = affected.toSet,
       extraProps = props,
       serializableCheck = mergeIsolationCheck())
   }

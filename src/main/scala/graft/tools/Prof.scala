@@ -2,7 +2,9 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc query profiler (scratch tool): time named SparkEntry queries
-  * in a fresh session. Usage: Prof <sfDir> <query>[,query...] [runs] */
+  * in a fresh session and count the Janino compiles of each run, the
+  * host-independent cost of Spark's code generation. Usage:
+  * Prof <sfDir> <query>[,query...] [runs] */
 object Prof {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/tmp/testdata/sf1"
@@ -24,9 +26,11 @@ object Prof {
       if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rmrf))
       f.delete(); ()
     }
+    val compileTime = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     for (name <- names; r <- 1 to runs) {
       if (sys.env.get("SPARK_GRAFT_PROF_WIPE_SIDECARS").contains("1"))
         rmrf(new java.io.File(graft.Tables.warehouseDir(sfDir), "_sidecars"))
+      val compiles0 = compileTime.getCount
       val (res, scope) = graft.ops.Caches.scoped {
         val t0 = System.nanoTime()
         val df = graft.SparkEntry.queries(name)(spark, sfDir)
@@ -35,7 +39,11 @@ object Prof {
       }
       scope.release()
       graft.ops.Caches.release()
-      println(f"$name run $r: $res%.2f s")
+      // Janino compiles (codegen cache misses) do not depend on the host
+      val compiles = compileTime.getCount - compiles0
+      val meanMs = compileTime.getSnapshot.getMean
+      println(f"$name run $r: $res%.2f s, $compiles janino compiles " +
+        f"(mean $meanMs%.1f ms per compile in this JVM)")
     }
     spark.stop()
   }

@@ -242,12 +242,18 @@ class ScanDeleteMaskSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("compaction of a table holding an id-less addFiles file keeps every row") {
+  /** The orders rows shifted to new keys, written by plain Spark as one
+    * parquet file without field ids, and that file's path. */
+  private def idLessFile(): (DataFrame, String) = {
     val scratch = java.nio.file.Files.createTempDirectory("maskidless").toString
     val ext = raw.withColumn("o_orderkey", col("o_orderkey") + 1000000L)
     ext.coalesce(1).write.parquet(scratch + "/ext")
-    val file = new java.io.File(scratch + "/ext").listFiles().map(_.getPath)
-      .filter(_.endsWith(".parquet")).head
+    (ext, new java.io.File(scratch + "/ext").listFiles().map(_.getPath)
+      .filter(_.endsWith(".parquet")).head)
+  }
+
+  test("compaction of a table holding an id-less addFiles file keeps every row") {
+    val (ext, file) = idLessFile()
     val t = mkTable("idless", 2)
     load("idless").append(spark).addFiles(Seq(file))
     assert(load("idless").newScan().planFiles().size >= 2)
@@ -255,5 +261,17 @@ class ScanDeleteMaskSpec extends AnyFunSuite with BeforeAndAfterAll {
     val after = load("idless")
     assert(after.currentSnapshot.get.summary.contains("compacted-files"))
     assertSameRows(after.newScan().toDF(spark), raw.unionByName(ext), "compacted")
+  }
+
+  test("a copy-on-write merge over a table holding an id-less addFiles file updates both files") {
+    val (ext, file) = idLessFile()
+    mkTable("mergeidless", 2, raw.coalesce(1))
+    load("mergeidless").append(spark).addFiles(Seq(file))
+    val all = raw.unionByName(ext)
+    val updates = all.filter(col("o_orderkey") % 5 === 0)
+      .withColumn("o_orderstatus", lit("M"))
+    load("mergeidless").merge(spark, updates, Seq("o_orderkey")).whenMatchedUpdateAll().commit()
+    assertSameRows(load("mergeidless").newScan().toDF(spark),
+      all.filter(col("o_orderkey") % 5 =!= 0).unionByName(updates), "merged")
   }
 }
