@@ -49,7 +49,11 @@ final class ManifestFileIndex(files: Seq[(String, Long)]) extends FileIndex {
 
 object FileListRelation {
   /** Parquet DataFrame over an explicit file list with a known schema —
-    * how `ScanBuilder.toDF` reads every group of parquet data files. */
+    * how `ScanBuilder.toDF` reads every group of parquet data files.
+    * Columns resolve by parquet field id wherever `schema` carries ids
+    * (name matching otherwise): the setting rides in the relation's own
+    * options, which reach the reader's Hadoop conf, so the caller's
+    * session conf is never touched. */
   def parquet(spark: SparkSession, files: Seq[(String, Long)],
       schema: StructType): DataFrame = {
     val relation = HadoopFsRelation(
@@ -58,7 +62,7 @@ object FileListRelation {
       dataSchema = schema,
       bucketSpec = None,
       fileFormat = new ParquetFileFormat,
-      options = Map.empty)(spark)
+      options = Map("spark.sql.parquet.fieldId.read.enabled" -> "true"))(spark)
     org.apache.spark.sql.GraftColumnBridge.ofRows(spark,
       LogicalRelation(relation, isStreaming = false))
   }

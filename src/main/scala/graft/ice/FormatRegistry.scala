@@ -3,7 +3,7 @@ package graft.ice
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-import graft.ice.manifest.AvroData
+import graft.ice.manifest.{AvroData, ManifestAvro}
 
 /** Reader/writer registry keyed by the manifest's `file_format` string
   * (S16) — the analogue of the reference's ReaderFactoryRegistry /
@@ -31,7 +31,11 @@ object FormatRegistry {
   type Writer = (DataFrame, String) => Seq[String]
 
   private val readers: Map[String, Reader] = Map(
-    "PARQUET" -> ((s, schema, paths, _) => s.read.schema(schema).parquet(paths: _*)),
+    // sizes from one stat per file: these are delete files, never a
+    // table's data plane (toDF reads data files with manifest sizes)
+    "PARQUET" -> ((s, schema, paths, _) => FileListRelation.parquet(s,
+      paths.map(p => p -> java.nio.file.Files.size(
+        java.nio.file.Paths.get(ManifestAvro.stripFileScheme(p)))), schema)),
     "AVRO" -> ((s, schema, paths, nm) =>
       AvroData.readFiles(s, paths, schema, mappedNames = nm)),
     "ORC" -> readOrc _)

@@ -222,13 +222,27 @@ final class IceTable private (
       sparkSchema.add("_change_type", org.apache.spark.sql.types.StringType)
         .add("_commit_snapshot_id", org.apache.spark.sql.types.LongType)
         .add("_change_ordinal", org.apache.spark.sql.types.IntegerType))
-    spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+
+    // rows of `files` as of snapshot `s`, read through the scan (field ids,
+    // name mapping, initial-defaults, identity-partition constants) and
+    // laid out in the current schema by field id; `_deleted` keeps the
+    // rows merge-on-read deletes mask, so these are the files' rows
+    def fileRows(s: Snapshot, files: Set[String], metaCols: String*): DataFrame = {
+      val scan = newScan().useSnapshot(s.snapshotId).restrictFiles(files)
+        .withMetadataColumns(metaCols :+ "_deleted": _*)
+      val old = scan.scanSchema
+      scan.toDF(spark).select(schema.fields.map { f =>
+        old.findFieldById(f.id) match {
+          case Some(o) => col(o.name).as(f.name)
+          case None => lit(null).cast(SparkConv.toSparkType(f.fieldType)).as(f.name)
+        }
+      } ++ metaCols.map(col): _*)
+    }
 
     def insertRows(s: Snapshot): Option[DataFrame] = {
       val entries = dataEntriesOf(s, ManifestStatus.Added)
       if (entries.isEmpty) None
-      else Some(spark.read.schema(sparkSchema)
-        .parquet(entries.map(e => ManifestAvro.stripFileScheme(e.dataFile.filePath)): _*)
+      else Some(fileRows(s, entries.map(_.dataFile.filePath).toSet)
         .withColumn("_change_type", lit("insert")))
     }
 
@@ -276,10 +290,13 @@ final class IceTable private (
                 .map(prior => rawDels.except(prior)).getOrElse(rawDels)
               // read only the referenced data files, join on (file, pos)
               val files = dels.select("__dfile").distinct()
-                .collect().map(_.getString(0)).toSeq
-              val data = spark.read.schema(sparkSchema).parquet(files: _*)
-                .withColumn("__file", FilePaths.column(col("_metadata.file_path")))
-                .withColumn("__pos", col("_metadata.row_index"))
+                .collect().map(_.getString(0)).toSet
+              // delete files name data files without a scheme; match
+              // the manifests' own spelling of the path
+              val data = fileRows(s,
+                files.flatMap(f => Seq(f, s"file:$f", s"file://$f")), "_file", "_pos")
+                .withColumnRenamed("_file", "__file")
+                .withColumnRenamed("_pos", "__pos")
               // manifest-known record counts size the join (see
               // IceTable.sizeDeleteSide): compressed-byte estimates
               // under-count well-compressed delete tables
@@ -1235,7 +1252,6 @@ final class ScanBuilder(table: IceTable) {
     * id-less files with a metadata-stripped schema (pure name matching). */
   def toDF(spark0: SparkSession): DataFrame = {
     val spark = IceTable.scanSession(spark0, table.properties)
-    spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
     val s = scanSchema
     val (tasks, deleteEntries) = planFilesWithDeletes()
     val sparkSchema = SparkConv.toSpark(s)
@@ -1728,17 +1744,29 @@ final class AppendOp(table: IceTable, spark: SparkSession) {
 
   /** Write the data files and build manifest entries WITHOUT committing —
     * the Transaction building block (everything up to the metadata swap;
-    * files are invisible until a snapshot references them). */
+    * files are invisible until a snapshot references them). The rows are
+    * clustered here (partition tuple, then sort order) and handed to the
+    * one task-side writer ([[graft.ice.write.FileWriter]]): each task
+    * writes its files at their final paths and returns them with their
+    * metrics, so the driver only builds the entries. */
   private[ice] def writeEntries(df: DataFrame): (Seq[ManifestEntry], String) = {
+    val (aligned, shaped) = shape(df)
+    val conf = graft.ice.write.FileWriter.dataConf(spark, table, shaped.schema, aligned.schema)
+    val entries = graft.ice.write.FileWriter.write(shaped, conf)
+      .map(f => ManifestEntry(ManifestStatus.Added, None, None, None, f))
+    (graft.ice.write.SnapshotProducer.enrichNanCounts(table, spark, entries),
+      conf.commitId)
+  }
+
+  /** `df` aligned to the table schema, and the aligned rows clustered
+    * for the write (partition tuple in `__gp_` columns, then sort order). */
+  private[ice] def shape(df: DataFrame): (DataFrame, DataFrame) = {
     val schema = table.schema
     val spec = table.spec
-    val sparkSchema = SparkConv.toSpark(schema)
-    val commitUuid = UUID.randomUUID().toString
-    val outDir = s"${table.dataFileDir}/$commitUuid"
 
     // align to table schema: cast to the field's type and alias with
     // field-id metadata (df.to() drops metadata, so alias explicitly —
-    // Spark's parquet writer emits ids only when the schema carries them).
+    // parquet files carry ids only when the schema does).
     // Columns absent from the input materialize their write-default
     // (spec v3 "write-default"; the read-side twin is initial-default
     // injection in ScanBuilder.toDF).
@@ -1758,100 +1786,26 @@ final class AppendOp(table: IceTable, spark: SparkSession) {
         .as(f.name, SparkConv.toSparkField(f).metadata)
     }: _*)
 
-    // write micros (never INT96) so footer stats stay usable for pruning
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-
-    // write.format.default selects the data-file format (S16 registry);
-    // non-parquet formats are unpartitioned-only (partitioned layouts
-    // lean on Spark's parquet partitionBy machinery)
-    val writeFormat = TableProperties.get(table.properties,
-      TableProperties.WriteFormatDefault).toUpperCase(java.util.Locale.ROOT)
-    require(writeFormat == "PARQUET" || spec.isUnpartitioned,
-      s"write.format.default=$writeFormat supports unpartitioned tables only")
-    var avroCounts: Map[String, Long] = Map.empty
-
     val order = table.metadata.defaultSortOrder
-    if (spec.isUnpartitioned) {
+    val shaped =
       // a declared sort order range-clusters the write so per-file bounds
       // are disjoint — the pruning lever at scale
-      val shaped = graft.ice.write.WriteShape.clusterUnpartitioned(aligned, schema, order)
-      writeFormat match {
-        case "PARQUET" => shaped.write.mode("append")
-          .options(graft.ice.write.WriteTuning.parquetData(table.properties))
-          .parquet(outDir)
-        case "AVRO" =>
-          val (avCodec, avLevel) =
-            graft.ice.write.WriteTuning.avroDataCodec(table.properties)
-          avroCounts = AvroData.writeDirWithCounts(shaped, outDir,
-            codec = avCodec, level = avLevel).toMap
-        case "ORC" => shaped.write.mode("append")
-          .options(graft.ice.write.WriteTuning.orcData(table.properties))
-          .orc(outDir)
-        case other => throw new UnsupportedOperationException(
-          s"no writer registered for file format '$other' " +
-            "(PARQUET, AVRO and ORC; PUFFIN is not a row format)")
+      if (spec.isUnpartitioned)
+        graft.ice.write.WriteShape.clusterUnpartitioned(aligned, schema, order)
+      else {
+        // cluster by partition tuple so each task writes whole partitions
+        val dirCols = spec.fields.map(pf => graft.ice.write.PartitionPaths.dirCol(pf.name))
+        val partCols = spec.fields.map { pf =>
+          val src = schema.findFieldById(pf.sourceId).get
+          pf.transform.toColumn(col(src.name), src.fieldType.asInstanceOf[IcePrimitive])
+        }
+        graft.ice.write.WriteShape.sortForPartitionedWrite(
+          aligned
+            .withColumns(dirCols.zip(partCols).toMap)
+            .repartition(dirCols.map(col): _*),
+          schema, order, dirCols)
       }
-    } else {
-      val partCols = spec.fields.map { pf =>
-        val src = schema.findFieldById(pf.sourceId).get
-        pf.transform.toColumn(col(src.name), src.fieldType.asInstanceOf[IcePrimitive])
-      }
-      // cluster by partition tuple so each task writes whole partitions;
-      // __gp_-prefixed dir columns keep identity-partition source columns
-      // inside the data files (partition values are metadata in Iceberg)
-      val dirCols = spec.fields.map(pf => graft.ice.write.PartitionPaths.dirCol(pf.name))
-      graft.ice.write.WriteShape.sortForPartitionedWrite(
-        aligned
-          .withColumns(dirCols.zip(partCols).toMap)
-          .repartition(dirCols.map(col): _*),
-        schema, order, dirCols)
-        .write.mode("append")
-        .options(graft.ice.write.WriteTuning.parquetData(table.properties))
-        .partitionBy(dirCols: _*)
-        .parquet(outDir)
-    }
-
-    val files =
-      if (writeFormat == "AVRO") avroCounts.keys.toSeq.sorted
-      else if (writeFormat == "ORC") listDataFiles(outDir, ".orc")
-      else listParquetFiles(outDir)
-    val orcCounts: Map[String, Long] =
-      if (writeFormat == "ORC") FormatRegistry.orcRowCounts(spark, files)
-      else Map.empty
-    // footer reads are independent driver-side IO — parallelize
-    import scala.collection.parallel.CollectionConverters._
-    val hadoopConf = spark.sessionState.newHadoopConf()
-    // object-store layout: hash-prefix the final paths (partition tuples
-    // parse from the ORIGINAL outDir layout before the move)
-    val relocated = graft.ice.write.ObjectStoreLayout.relocate(
-      table.properties, table.dataFileDir, outDir, commitUuid, files)
-    val metricsCfg = Some(graft.ice.write.MetricsConfig.from(table.properties, schema))
-    val entries = files.par.map { p =>
-      val fp = relocated(p)
-      val m =
-        if (writeFormat == "PARQUET") Metrics.fromParquetFooter(fp, schema, hadoopConf, metricsCfg)
-        else if (writeFormat == "ORC") Metrics.rowCountOnly(orcCounts.getOrElse(p, 0L))
-        // counts recorded at write time; no column bounds -> never pruned
-        else Metrics.rowCountOnly(avroCounts(p))
-      val partition = parsePartitionTuple(p, outDir, spec, schema)
-      ManifestEntry(ManifestStatus.Added, None, None, None,
-        DataFile(FileContent.Data, fp, writeFormat, partition,
-          recordCount = m.rowCount,
-          fileSizeInBytes = Files.size(Paths.get(fp)),
-          columnSizes = m.columnSizes,
-          valueCounts = m.valueCounts,
-          nullValueCounts = m.nullValueCounts,
-          lowerBounds = m.lowerBounds,
-          upperBounds = m.upperBounds,
-          splitOffsets = m.splitOffsets,
-          sortOrderId = Some(table.metadata.defaultSortOrderId)))
-    }.seq
-      // empty shuffle partitions leave zero-row files: no metrics, no
-      // rows — keep them out of the manifest (mirrors writeDataFiles)
-      .filter(_.dataFile.recordCount > 0L)
-    (graft.ice.write.SnapshotProducer.enrichNanCounts(table, spark, entries),
-      commitUuid)
+    (aligned, shaped)
   }
 
   /** Register existing files as table data (no rewrite) — the migration
@@ -2076,21 +2030,4 @@ final class AppendOp(table: IceTable, spark: SparkSession) {
       }
       if (fv >= 3) next.copy(nextRowId = Some(rowCursor)) else next
   }
-
-  private def listParquetFiles(dir: String): Seq[String] =
-    listDataFiles(dir, ".parquet")
-
-  private def listDataFiles(dir: String, suffix: String): Seq[String] = {
-    val root = Paths.get(dir)
-    if (!Files.exists(root)) return Nil
-    Files.walk(root).iterator.asScala
-      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(suffix))
-      .map(_.toString).toSeq.sorted
-  }
-
-  /** Parse the partition tuple back out of the Hive-style path the Spark
-    * writer produced (shared with compaction/overwrite). */
-  private def parsePartitionTuple(file: String, baseDir: String,
-      spec: PartitionSpec, schema: Schema): IndexedSeq[Any] =
-    graft.ice.write.PartitionPaths.parse(file, baseDir, spec, schema)
 }

@@ -1,14 +1,5 @@
 package graft.ice.connector
 
-import java.util.UUID
-
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.hadoop.ParquetWriter
-import org.apache.parquet.hadoop.api.WriteSupport
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
@@ -16,17 +7,16 @@ import org.apache.spark.sql.connector.expressions.{Expressions, NullOrdering, So
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, SupportsDynamicOverwrite, SupportsOverwrite, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.sources.{AlwaysTrue, Filter => V1Filter}
 import org.apache.spark.sql.types._
 
 import graft.ice.IceTable
 import graft.ice.expr.{Binder, Bound, BAnd, BNot, BOr, BPred, BRaw, Expr => IceExpr, InclusiveProjection, PartitionTupleEvaluator}
-import graft.ice.manifest.{DataFile, FileContent, ManifestEntry, ManifestStatus}
-import graft.ice.meta.{DataOperation, PartitionSpec, TableProperties}
+import graft.ice.manifest.{DataFile, ManifestEntry, ManifestStatus}
+import graft.ice.meta.{DataOperation, TableProperties}
 import graft.ice.transform.IdentityTransform
-import graft.ice.types.{IcePrimitive, Schema, SparkConv}
-import graft.ice.write.{Metrics, PartitionPaths, SnapshotProducer}
+import graft.ice.types.SparkConv
+import graft.ice.write.{FileWriteConf, FileWriter, GraftDataWriter, SnapshotProducer}
 
 /** Native DataSourceV2 write path (replaces the former `V1Write`
   * fallback).
@@ -43,15 +33,15 @@ import graft.ice.write.{Metrics, PartitionPaths, SnapshotProducer}
   *    clustered (e.g. read storage-partitioned from another table with
   *    the same bucketing) satisfies the distribution with no exchange
   *    at all — the write-side mirror of the storage-partitioned join.
-  *  - **Commit metadata flows through commit messages, not a driver
-  *    listing.** Each task writes its parquet files, reads its own
-  *    footers, and ships complete `DataFile` entries (counts, bounds,
-  *    split offsets, partition tuple) in its `WriterCommitMessage`.
-  *    The driver never walks the output directory and never opens a
-  *    footer — on an object store with a 100k-file commit that driver
-  *    sweep is the difference between an O(1) commit and minutes of
-  *    sequential HEAD/GET traffic. (The V1 path's `Files.walk` +
-  *    parallel footer reads was local-FS thinking.)
+  *  - **Commit metadata flows through commit messages.** Tasks run the
+  *    library's one file writer (`graft.ice.write.GraftDataWriter`, the
+  *    same one behind appends, compaction and deletes): each writes its
+  *    files at their final paths, computes their metrics and ships
+  *    complete `DataFile` entries (counts, bounds, split offsets,
+  *    partition tuple) in its `WriterCommitMessage`. The driver opens no
+  *    file — on an object store with a 100k-file commit that is the
+  *    difference between an O(1) commit and minutes of sequential
+  *    HEAD/GET traffic. The format is the table's `write.format.default`.
   *
   * The same builder serves batch (INSERT INTO / df.writeTo /
   * INSERT OVERWRITE static+dynamic / CTAS) and Structured Streaming
@@ -161,7 +151,7 @@ final class GraftWrite(table: IceTable, identName: String, warehouse: String,
     partOrder ++ sortExprs
   }
 
-  private def taskConf(): GraftTaskWriteConf = {
+  private def taskConf(): FileWriteConf = {
     // align the query schema (InternalRow layout) with table field ids so
     // executor parquet footers carry ids for id-based projection on read
     val byName = schema.fields.map(f => f.name -> f).toMap
@@ -173,37 +163,7 @@ final class GraftWrite(table: IceTable, identName: String, warehouse: String,
         case None => sf // shouldn't happen post output-resolution
       }
     })
-    GraftTaskWriteConf(
-      writeSchema = writeSchema,
-      schema = schema,
-      spec = spec,
-      outDir = s"${table.dataFileDir}/${UUID.randomUUID().toString}",
-      targetFileSize = TableProperties.get(table.properties,
-        TableProperties.WriteTargetFileSizeBytes),
-      sortOrderId = table.metadata.defaultSortOrderId,
-      compression = TableProperties.get(table.properties,
-        TableProperties.ParquetCompression),
-      compressionLevel = TableProperties.get(table.properties,
-        TableProperties.ParquetCompressionLevel),
-      parquetExtras = graft.ice.write.WriteTuning.parquetColumnExtras(
-        table.properties) ++ Map(
-        "parquet.page.row.count.limit" -> TableProperties.get(
-          table.properties, TableProperties.ParquetPageRowLimit).toString,
-        "parquet.page.size.row.check.min" -> TableProperties.get(table.properties,
-          TableProperties.ParquetRowGroupCheckMinRecordCount).toString,
-        "parquet.page.size.row.check.max" -> TableProperties.get(table.properties,
-          TableProperties.ParquetRowGroupCheckMaxRecordCount).toString),
-      rowGroupSize = TableProperties.get(table.properties,
-        TableProperties.ParquetRowGroupSizeBytes),
-      pageSize = TableProperties.get(table.properties,
-        TableProperties.ParquetPageSizeBytes),
-      dictSize = TableProperties.get(table.properties,
-        TableProperties.ParquetDictSizeBytes),
-      objectStore = graft.ice.write.ObjectStoreLayout.enabled(table.properties),
-      objectStorePartitioned =
-        graft.ice.write.ObjectStoreLayout.partitionedPaths(table.properties),
-      metricsConfig = Some(graft.ice.write.MetricsConfig.from(
-        table.properties, schema)))
+    FileWriter.dataConf(SparkSession.active, table, writeSchema, writeSchema)
   }
 
   override def toBatch: BatchWrite =
@@ -214,30 +174,6 @@ final class GraftWrite(table: IceTable, identName: String, warehouse: String,
     new GraftStreamingWrite(identName, warehouse, mode, info.queryId(), taskConf())
 
   override def description(): String = s"GraftWrite($identName, mode=$mode)"
-}
-
-/** Everything a task needs to write data files: pure case-class state,
-  * serialized once into the writer factory. */
-final case class GraftTaskWriteConf(
-    writeSchema: StructType,
-    schema: Schema,
-    spec: PartitionSpec,
-    outDir: String,
-    targetFileSize: Long,
-    sortOrderId: Int,
-    compression: String,
-    compressionLevel: String = "",
-    parquetExtras: Map[String, String] = Map.empty,
-    rowGroupSize: Long = 128L * 1024 * 1024,
-    pageSize: Long = 1024L * 1024,
-    dictSize: Long = 2L * 1024 * 1024,
-    objectStore: Boolean = false,
-    objectStorePartitioned: Boolean = true,
-    metricsConfig: Option[graft.ice.write.MetricsConfig] = None) {
-  /** outDir is `{dataRoot}/{commitUuid}`; the object-store layout needs
-    * the two components separately. */
-  def dataRoot: String = outDir.substring(0, outDir.lastIndexOf('/'))
-  def commitId: String = outDir.substring(outDir.lastIndexOf('/') + 1)
 }
 
 final case class GraftWriteMessage(files: Seq[DataFile]) extends WriterCommitMessage
@@ -316,10 +252,13 @@ private[connector] object GraftCommit {
               "not supported")
         }
         if (upsert && t.currentSnapshot.isDefined && entries.nonEmpty) {
-          val newPaths = entries.map(_.dataFile.filePath)
-          val keys = spark.read.parquet(newPaths: _*)
-            .select(keyCols.map(org.apache.spark.sql.functions.col): _*)
-            .distinct()
+          // the key columns of the files just written, in their format
+          val keySchema = StructType(keyCols.map(c =>
+            SparkConv.toSparkField(t.schema.findFieldByName(c).get)))
+          val keys = entries.groupBy(_.dataFile.fileFormat).map { case (fmt, es) =>
+            graft.ice.FormatRegistry.reader(fmt)(spark, keySchema,
+              es.map(_.dataFile.filePath), Map.empty)
+          }.reduce(_ unionByName _).distinct()
           val delEntries = t.delete(spark).equalityDeleteEntries(keys)
           SnapshotProducer.commit(t, spark, DataOperation.Overwrite, entries,
             addedDeleteEntries = delEntries,
@@ -388,16 +327,13 @@ private[connector] object GraftCommit {
 
   def abortFiles(messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
-      case GraftWriteMessage(files) => files.foreach { f =>
-        try java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(f.filePath))
-        catch { case _: Exception => () }
-      }
+      case GraftWriteMessage(files) => files.foreach(f => FileWriter.deleteQuietly(f.filePath))
       case _ => ()
     }
 }
 
 final class GraftBatchWrite(identName: String, warehouse: String, mode: String,
-    overwriteFilters: Array[V1Filter], conf: GraftTaskWriteConf,
+    overwriteFilters: Array[V1Filter], conf: FileWriteConf,
     replacedFiles: Option[() => graft.ice.write.ReplaceGroupsState] = None)
     extends BatchWrite {
 
@@ -417,7 +353,7 @@ final class GraftBatchWrite(identName: String, warehouse: String, mode: String,
   * properties — a replayed epoch (sink committed, checkpoint didn't)
   * skips its duplicate commit and removes the replay's files. */
 final class GraftStreamingWrite(identName: String, warehouse: String,
-    mode: String, queryId: String, conf: GraftTaskWriteConf) extends StreamingWrite {
+    mode: String, queryId: String, conf: FileWriteConf) extends StreamingWrite {
 
   private def epochKey = s"graft.stream.epoch.$queryId"
 
@@ -444,232 +380,14 @@ final class GraftStreamingWrite(identName: String, warehouse: String,
     GraftCommit.abortFiles(messages)
 }
 
-final class GraftDataWriterFactory(conf: GraftTaskWriteConf) extends DataWriterFactory {
+final class GraftDataWriterFactory(conf: FileWriteConf) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new GraftDataWriter(conf, partitionId, taskId, epochId = -1L)
 }
 
-final class GraftStreamingDataWriterFactory(conf: GraftTaskWriteConf)
+final class GraftStreamingDataWriterFactory(conf: FileWriteConf)
     extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
     new GraftDataWriter(conf, partitionId, taskId, epochId)
-}
-
-/** Per-task writer: rows arrive (when the plan honored the requested
-  * distribution+ordering) clustered by partition tuple, so one parquet
-  * writer is open at a time; a tuple change or the target file size
-  * rolls the file. Footer metrics are read HERE, executor-side, and the
-  * complete `DataFile` ships in the commit message. */
-final class GraftDataWriter(conf: GraftTaskWriteConf, partitionId: Int,
-    taskId: Long, epochId: Long) extends DataWriter[InternalRow] {
-
-  private val hadoopConf: Configuration = {
-    val c = new Configuration()
-    ParquetWriteSupport.setSchema(conf.writeSchema, c)
-    c.set("spark.sql.parquet.writeLegacyFormat", "false")
-    c.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    c.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    c.set("spark.sql.parquet.datetimeRebaseModeInWrite", "CORRECTED")
-    c.set("spark.sql.parquet.int96RebaseModeInWrite", "CORRECTED")
-    c.set("spark.sql.parquet.variant.annotateLogicalType.enabled", "false")
-    c.set("spark.sql.variant.writeShredding.enabled", "false")
-    // write.parquet.compression-level, same per-codec key the path-based
-    // writers get from WriteTuning — SQL INSERTs and DataFrame appends
-    // must not be tuned differently from Ops.writeDataFiles output
-    if (conf.compressionLevel.nonEmpty) {
-      val codec = if (conf.compression == "none") "uncompressed" else conf.compression
-      c.set(s"parquet.compression.codec.$codec.level", conf.compressionLevel)
-    }
-    // per-column bloom filters / stats toggles / page-row-limit — the
-    // same parquet-java keys WriteTuning hands the path-based writers
-    conf.parquetExtras.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
-
-  // per-spec-field evaluation state: ordinal in the row, spark type,
-  // iceberg source type, transform
-  private case class PartEval(ordinal: Int, sparkType: DataType,
-      iceType: IcePrimitive, transform: graft.ice.transform.Transform,
-      fieldName: String)
-
-  private val partEvals: IndexedSeq[PartEval] = conf.spec.fields.map { pf =>
-    val src = conf.schema.findFieldById(pf.sourceId).getOrElse(
-      throw new IllegalStateException(s"partition source ${pf.sourceId} missing"))
-    val ordinal = conf.writeSchema.fieldIndex(src.name)
-    PartEval(ordinal, conf.writeSchema(ordinal).dataType,
-      src.fieldType.asInstanceOf[IcePrimitive], pf.transform, pf.name)
-  }
-
-  private val done = ArrayBuffer.empty[DataFile]
-  private var writer: ParquetWriter[InternalRow] = _
-  private var curTuple: IndexedSeq[Any] = _
-  private var curPath: String = _
-  private var rowsInFile: Long = 0L
-  private var fileNo: Int = 0
-
-  private def iceValue(row: InternalRow, pe: PartEval): Any = {
-    if (row.isNullAt(pe.ordinal)) return null
-    pe.sparkType match {
-      case StringType => row.getUTF8String(pe.ordinal).toString
-      case IntegerType | DateType => row.getInt(pe.ordinal)
-      case LongType | TimestampType | TimestampNTZType => row.getLong(pe.ordinal)
-      case BooleanType => row.getBoolean(pe.ordinal)
-      case FloatType => row.getFloat(pe.ordinal)
-      case DoubleType => row.getDouble(pe.ordinal)
-      case d: DecimalType =>
-        row.getDecimal(pe.ordinal, d.precision, d.scale).toJavaBigDecimal
-      case BinaryType => row.getBinary(pe.ordinal)
-      case ShortType => row.getShort(pe.ordinal).toInt
-      case ByteType => row.getByte(pe.ordinal).toInt
-      case other => throw new UnsupportedOperationException(
-        s"partition source type $other")
-    }
-  }
-
-  private def tupleOf(row: InternalRow): IndexedSeq[Any] =
-    partEvals.map(pe => pe.transform.apply(iceValue(row, pe), pe.iceType))
-
-  private def sameTuple(a: IndexedSeq[Any], b: IndexedSeq[Any]): Boolean = {
-    var i = 0
-    while (i < a.length) {
-      (a(i), b(i)) match {
-        case (x: Array[Byte], y: Array[Byte]) =>
-          if (!java.util.Arrays.equals(x, y)) return false
-        case (x, y) => if (x != y) return false
-      }
-      i += 1
-    }
-    true
-  }
-
-  private def renderDirValue(v: Any): String = v match {
-    case null => "__HIVE_DEFAULT_PARTITION__"
-    case b: Array[Byte] => b.map("%02x".format(_)).mkString
-    case s: String =>
-      val sb = new StringBuilder
-      s.foreach { c =>
-        if (c.isLetterOrDigit || c == '.' || c == '-' || c == '_') sb.append(c)
-        else if (c < 256) sb.append(f"%%$c%02X")
-        else sb.append(c)
-      }
-      sb.toString
-    case other => other.toString
-  }
-
-  private def dirPath(tuple: IndexedSeq[Any]): String =
-    partEvals.zip(tuple).map { case (pe, v) =>
-      s"${PartitionPaths.dirCol(pe.fieldName)}=${renderDirValue(v)}"
-    }.mkString("/")
-
-  private def newFilePath(tuple: IndexedSeq[Any]): String = {
-    val epoch = if (epochId >= 0) s"-$epochId" else ""
-    fileNo += 1
-    val name = s"part-$partitionId-$taskId$epoch-$fileNo.parquet"
-    val partDirs = if (partEvals.isEmpty) "" else dirPath(tuple)
-    // object-store layout: each file under its own hash-prefix dirs
-    // (computed HERE on the executor — no post-write relocation pass)
-    if (conf.objectStore)
-      graft.ice.write.ObjectStoreLayout.place(conf.dataRoot, conf.commitId,
-        partDirs, name, conf.objectStorePartitioned)
-    else if (partDirs.isEmpty) s"${conf.outDir}/$name"
-    else s"${conf.outDir}/$partDirs/$name"
-  }
-
-  private def openFile(tuple: IndexedSeq[Any]): Unit = {
-    curPath = newFilePath(tuple)
-    curTuple = tuple
-    rowsInFile = 0L
-    val builder0 = new GraftRowParquetWriterBuilder(new HPath(curPath))
-      .withConf(hadoopConf)
-      .withCompressionCodec(CompressionCodecName.fromConf(
-        (if (conf.compression == "none") "uncompressed" else conf.compression)
-          .toUpperCase(java.util.Locale.ROOT)))
-      .withRowGroupSize(conf.targetFileSize.min(conf.rowGroupSize))
-      .withPageSize(conf.pageSize.toInt)
-      .withDictionaryPageSize(conf.dictSize.toInt)
-    // ParquetWriter.Builder does NOT parse per-column conf keys the way
-    // ParquetOutputFormat does — translate them to builder calls so the
-    // connector write path honors the same bloom/stats/page-row knobs
-    val builder = conf.parquetExtras.foldLeft(builder0) { case (b, (k, v)) =>
-      val col = k.substring(k.indexOf('#') + 1)
-      k match {
-        case _ if k.startsWith("parquet.bloom.filter.enabled#") =>
-          b.withBloomFilterEnabled(col, v.toBoolean)
-        case _ if k.startsWith("parquet.bloom.filter.fpp#") =>
-          b.withBloomFilterFPP(col, v.toDouble)
-        case _ if k.startsWith("parquet.column.statistics.enabled#") =>
-          b.withStatisticsEnabled(col, v.toBoolean)
-        case "parquet.bloom.filter.max.bytes" =>
-          b.withMaxBloomFilterBytes(v.toInt)
-        case "parquet.page.row.count.limit" =>
-          b.withPageRowCountLimit(v.toInt)
-        case "parquet.page.size.row.check.min" =>
-          b.withMinRowCountForPageSizeCheck(v.toInt)
-        case "parquet.page.size.row.check.max" =>
-          b.withMaxRowCountForPageSizeCheck(v.toInt)
-        case _ => b
-      }
-    }
-    writer = builder.build()
-  }
-
-  private def closeFile(): Unit = {
-    if (writer == null) return
-    writer.close()
-    val m = Metrics.fromParquetFooter(curPath, conf.schema, hadoopConf,
-      conf.metricsConfig)
-    done += DataFile(FileContent.Data, curPath, "PARQUET", curTuple,
-      recordCount = m.rowCount,
-      fileSizeInBytes = java.nio.file.Files.size(java.nio.file.Paths.get(curPath)),
-      columnSizes = m.columnSizes, valueCounts = m.valueCounts,
-      nullValueCounts = m.nullValueCounts,
-      lowerBounds = m.lowerBounds, upperBounds = m.upperBounds,
-      splitOffsets = m.splitOffsets,
-      sortOrderId = Some(conf.sortOrderId))
-    writer = null
-  }
-
-  override def write(row: InternalRow): Unit = {
-    val tuple = tupleOf(row)
-    if (writer == null) openFile(tuple)
-    else if (!sameTuple(tuple, curTuple)) { closeFile(); openFile(tuple) }
-    else if (rowsInFile > 0 && (rowsInFile & 0x3FF) == 0 &&
-        writer.getDataSize > conf.targetFileSize) {
-      closeFile(); openFile(tuple)
-    }
-    writer.write(row)
-    rowsInFile += 1
-  }
-
-  override def commit(): WriterCommitMessage = {
-    closeFile()
-    GraftWriteMessage(done.toSeq)
-  }
-
-  override def abort(): Unit = {
-    if (writer != null) { try writer.close() catch { case _: Exception => () }; writer = null }
-    done.foreach { f =>
-      try java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(f.filePath))
-      catch { case _: Exception => () }
-    }
-    if (curPath != null) {
-      try java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(curPath))
-      catch { case _: Exception => () }
-    }
-  }
-
-  override def close(): Unit =
-    if (writer != null) { try writer.close() catch { case _: Exception => () }; writer = null }
-}
-
-/** parquet-hadoop builder over Spark's own `ParquetWriteSupport`: the
-  * exact write path Spark's parquet sink uses (same physical encodings,
-  * field-id stamping, timestamp handling), minus the FileFormatWriter
-  * scaffolding we replace with the V2 DataWriter contract. */
-private final class GraftRowParquetWriterBuilder(path: HPath)
-    extends ParquetWriter.Builder[InternalRow, GraftRowParquetWriterBuilder](path) {
-  override def self(): GraftRowParquetWriterBuilder = this
-  override def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] =
-    new ParquetWriteSupport
 }

@@ -73,6 +73,7 @@ object InclusiveProjection {
         transformed(p.literals.head).map(l => mk(Op.LtEq, Seq(l))).getOrElse(BTrue)
       case Op.Gt | Op.GtEq if t.preservesOrder =>
         transformed(p.literals.head).map(l => mk(Op.GtEq, Seq(l))).getOrElse(BTrue)
+      case Op.StartsWith if p.literals.head.isNull => BTrue
       case Op.StartsWith => t match {
         case IdentityTransform => mk(Op.StartsWith, p.literals)
         case TruncateTransform(w) if p.sourceType == StringT =>
@@ -121,6 +122,8 @@ final class PartitionTupleEvaluator(spec: PartitionSpec) {
               case _ => true
             }
             case _ if v == null => false
+            // a NULL prefix makes the predicate NULL on every row
+            case Op.StartsWith | Op.NotStartsWith if p.literals.head.isNull => true
             case Op.StartsWith =>
               v.toString.startsWith(p.literals.head.raw.toString)
             case Op.NotStartsWith =>
@@ -191,6 +194,7 @@ final class ManifestEvaluator(spec: PartitionSpec) {
       case Op.In => p.literals.exists(v =>
         lower.exists(_.compareTo(v).exists(_ <= 0)) && upper.exists(_.compareTo(v).exists(_ >= 0)))
       case Op.NotIn => true
+      case Op.StartsWith if p.literals.head.isNull => true
       case Op.StartsWith =>
         (lower, upper) match {
           case (Some(l), Some(u)) if p.termType == StringT =>
@@ -289,6 +293,7 @@ final class MetricsEvaluator {
             upper.forall(u => u.compareTo(v).forall(_ >= 0))
         }
       case Op.NotEq | Op.NotIn | Op.NotStartsWith => true
+      case Op.StartsWith if p.literals.head.isNull => true
       case Op.StartsWith =>
         (lower, upper) match {
           case (Some(l), Some(u)) if p.sourceType == StringT =>
@@ -340,8 +345,8 @@ final class StrictMetricsEvaluator {
   }
 
   /** Every comparison inside `b` is over a column this file provably
-    * holds no nulls for (IS [NOT] NULL predicates are never NULL-valued
-    * themselves and are exempt). */
+    * holds no nulls for, against no NULL constant (IS [NOT] NULL
+    * predicates are never NULL-valued themselves and are exempt). */
   private def nullFreeOperands(b: Bound, f: DataFile): Boolean = b match {
     case BTrue | BFalse => true
     case BAnd(l, r) => nullFreeOperands(l, f) && nullFreeOperands(r, f)
@@ -350,7 +355,8 @@ final class StrictMetricsEvaluator {
     case BRaw(_) => false
     case p: BPred => p.op match {
       case Op.IsNull | Op.NotNull => true
-      case _ => p.required || f.nullValueCounts.get(p.fieldId).contains(0L)
+      case _ => !p.literals.exists(_.isNull) &&
+        (p.required || f.nullValueCounts.get(p.fieldId).contains(0L))
     }
   }
 
@@ -401,6 +407,7 @@ final class StrictMetricsEvaluator {
       case Op.NotEq => cmpReady && strictNotEq(p.literals.head)
       case Op.In => cmpReady && p.literals.exists(strictEq)
       case Op.NotIn => cmpReady && p.literals.forall(strictNotEq)
+      case Op.StartsWith | Op.NotStartsWith if p.literals.head.isNull => false
       case Op.StartsWith =>
         // string truncation stores a PREFIX of the true min, so a stored
         // lower that starts with the target prefix proves the min does;

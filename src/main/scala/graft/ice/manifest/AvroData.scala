@@ -141,75 +141,6 @@ object AvroData {
     }
   }
 
-  /** Distributed DELETE-plane Avro sink: writes each partition's rows
-    * (assumed sorted so `rollCol`, when set, changes monotonically),
-    * rolling a new container file when the roll column's value changes or
-    * `maxRecords` is hit — the avro analogue of the parquet delete
-    * writer's partitionBy(__group) + maxRecordsPerFile shape. Columns in
-    * `dropCols` are grouping carriers, excluded from the written schema.
-    * Returns (path, rowCount, min(boundsCol), max(boundsCol)) per file;
-    * bounds are tracked at write time (avro has no footer metrics to
-    * harvest afterwards). */
-  def writeDeleteDir(df: DataFrame, dir: String, codec: String,
-      level: String, maxRecords: Long, rollCol: Option[String],
-      boundsCol: String, dropCols: Seq[String] = Nil)
-      : Seq[(String, Long, String, String)] = {
-    val inSchema = df.schema
-    val outFields = inSchema.fields.filterNot(f => dropCols.contains(f.name))
-    val outSchema = StructType(outFields)
-    val schemaJson = avroSchemaJson(outSchema)
-    val rollIdx = rollCol.map(inSchema.fieldIndex)
-    val boundsIdx = inSchema.fieldIndex(boundsCol)
-    val outIdx = outFields.map(f => inSchema.fieldIndex(f.name))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    df.rdd.mapPartitionsWithIndex { (idx, it) =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val schema = new AvroParser().parse(schemaJson)
-        val attempt = Option(org.apache.spark.TaskContext.get())
-          .map(_.taskAttemptId).getOrElse(0L)
-        val out = Vector.newBuilder[(String, Long, String, String)]
-        var writer: DataFileWriter[GenericRecord] = null
-        var sub = 0
-        var path: String = null
-        var tmp: File = null
-        var n = 0L
-        var lo: String = null
-        var hi: String = null
-        var curRoll: Any = null
-        def open(): Unit = {
-          writer = new DataFileWriter[GenericRecord](
-            new GenericDatumWriter[GenericRecord](schema))
-          writer.setCodec(codecFactory(codec, level))
-          path = f"$dir/part-$idx%05d-$sub%03d.avro"; sub += 1
-          tmp = new File(s"$path.$attempt.tmp")
-          writer.create(schema, tmp)
-          n = 0L; lo = null; hi = null
-        }
-        def seal(): Unit = if (writer != null) {
-          writer.close()
-          graft.ice.io.LocalFileIO.atomicSwap(tmp.getPath, path)
-          out += ((path, n, lo, hi))
-          writer = null
-        }
-        it.foreach { row =>
-          val roll = rollIdx.map(row.get).orNull
-          if (writer == null) { open(); curRoll = roll }
-          else if (n >= maxRecords || rollIdx.isDefined && roll != curRoll) {
-            seal(); open(); curRoll = roll
-          }
-          val b = row.getString(boundsIdx)
-          if (lo == null || AvroData.utf8Compare(b, lo) < 0) lo = b
-          if (hi == null || AvroData.utf8Compare(b, hi) > 0) hi = b
-          val proj = Row.fromSeq(outIdx.toIndexedSeq.map(row.get))
-          writer.append(rowToRecord(schema, outFields, proj)); n += 1
-        }
-        seal()
-        out.result().iterator
-      }
-    }.collect().toSeq.sortBy(_._1)
-  }
-
   /** True when the file starts with the Avro container magic `Obj`
     * — scan paths use this to dispatch delete files whose manifests were
     * written by engines that stamp the format only as a string. */

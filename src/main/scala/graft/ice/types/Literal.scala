@@ -27,6 +27,8 @@ final case class Literal(value: LiteralValue, tpe: IcePrimitive) {
   import LiteralValue._
 
   def isSentinel: Boolean = value != null && !value.isInstanceOf[Value]
+  /** A SQL NULL constant: every comparison with it is NULL. */
+  def isNull: Boolean = value == Value(null)
   def raw: Any = value match {
     case Value(v) => v
     case s => throw new IllegalStateException(s"sentinel literal: $s")
@@ -40,7 +42,7 @@ final case class Literal(value: LiteralValue, tpe: IcePrimitive) {
     * Returns None for unsupported combinations. */
   def castTo(target: IcePrimitive): Option[Literal] = {
     if (target == tpe) return Some(this)
-    if (isSentinel) return Some(Literal(value, target))
+    if (isSentinel || isNull) return Some(Literal(value, target))
     val out: Option[LiteralValue] = (tpe, target) match {
       case (IntT, LongT) => Some(Value(raw.asInstanceOf[Int].toLong))
       case (IntT, FloatT) => Some(Value(raw.asInstanceOf[Int].toFloat))
@@ -86,9 +88,11 @@ final case class Literal(value: LiteralValue, tpe: IcePrimitive) {
   }
 
   /** Three-way compare against another literal of the same type
-    * (literal.cc:349). Sentinels and NaN are unordered -> None. */
+    * (literal.cc:349). Sentinels, NaN and NULL are unordered -> None, so
+    * a comparison with a NULL constant proves nothing either way: the
+    * evaluators keep the file (inclusive) or refuse the proof (strict). */
   def compareTo(other: Literal): Option[Int] = {
-    if (isSentinel || other.isSentinel) return None
+    if (isSentinel || other.isSentinel || isNull || other.isNull) return None
     (tpe, other.tpe) match {
       case (a, b) if a != b => None
       case _ =>

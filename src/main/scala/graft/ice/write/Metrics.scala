@@ -122,45 +122,6 @@ object Metrics {
   def rowCountOnly(rows: Long): FileMetrics =
     FileMetrics(rows, Map.empty, Map.empty, Map.empty, Map.empty, Map.empty, Nil)
 
-  /** Footer row count only (cheap; e.g. for delete files whose schema is
-    * not the table schema). */
-  def parquetRowCount(path: String, conf: Configuration = new Configuration()): Long = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(path), conf))
-    try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-    finally reader.close()
-  }
-
-  /** Min/max of the `file_path` column of a position-delete file, as
-    * UTF-8 byte bounds for reserved field 2147483546 — the spec's
-    * scoping mechanism telling planners/validators WHICH data files a
-    * delete file may reference. Full (untruncated) paths: exact bounds
-    * are sound and paths are short. None when stats are unusable. */
-  def parquetPathBounds(path: String,
-      conf: Configuration = new Configuration()): Option[(Array[Byte], Array[Byte])] = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(path), conf))
-    try {
-      var lo: String = null
-      var hi: String = null
-      var ok = true
-      for (block <- reader.getFooter.getBlocks.asScala;
-           chunk <- block.getColumns.asScala
-           if ok && chunk.getPath.toArray.toSeq == Seq("file_path")) {
-        val stats = chunk.getStatistics
-        if (stats == null || !stats.hasNonNullValue) ok = false
-        else {
-          val mn = new String(stats.getMinBytes, java.nio.charset.StandardCharsets.UTF_8)
-          val mx = new String(stats.getMaxBytes, java.nio.charset.StandardCharsets.UTF_8)
-          if (lo == null || graft.ice.manifest.AvroData.utf8Compare(mn, lo) < 0) lo = mn
-          if (hi == null || graft.ice.manifest.AvroData.utf8Compare(mx, hi) > 0) hi = mx
-        }
-      }
-      if (ok && lo != null)
-        Some((lo.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-          hi.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-      else None
-    } finally reader.close()
-  }
-
   /** Read footer metrics for one parquet file. `schema` is the table
     * schema; columns are matched by parquet field id when present, else
     * by top-level name (name-mapping fallback, name_mapping.h). */
@@ -232,37 +193,37 @@ object Metrics {
       }
       statsBroken.foreach { id => mins.remove(id); maxs.remove(id) }
 
-      // per-column metrics mode: `none` withholds counts AND bounds,
-      // `counts` withholds bounds, `truncate(W)` truncates at W, `full`
-      // stores exact bounds (long string/binary bounds then exceed the
-      // truncate width and are simply never PROVABLY exact downstream —
-      // conservative, sound)
-      def keepCounts(id: Int): Boolean =
-        cfg.modeFor(id) != MetricsMode.NoMetrics
-      def gateLower(id: Int, l: Literal): Option[Literal] = cfg.modeFor(id) match {
-        case MetricsMode.Truncate(w) => truncateLower(l, w)
-        case MetricsMode.Full => Some(l)
-        case _ => None
-      }
-      def gateUpper(id: Int, l: Literal): Option[Literal] = cfg.modeFor(id) match {
-        case MetricsMode.Truncate(w) => truncateUpper(l, w)
-        case MetricsMode.Full => Some(l)
-        case _ => None
-      }
-      val lower = mins.toMap.map { case (k, v) => k -> gateLower(k, v) }
-        .collect { case (k, Some(l)) => k -> l.serialize }
-      val upper = maxs.toMap.map { case (k, v) => k -> gateUpper(k, v) }
-        .collect { case (k, Some(l)) => k -> l.serialize }
-
-      FileMetrics(
-        rowCount = blocks.map(_.getRowCount).sum,
-        columnSizes = colSizes.toMap,
-        valueCounts = valCounts.toMap.filter(kv => keepCounts(kv._1)),
-        nullValueCounts = nullCounts.toMap.filter(kv => keepCounts(kv._1)),
-        lowerBounds = lower,
-        upperBounds = upper,
-        splitOffsets = blocks.map(_.getStartingPos).toSeq.sorted)
+      assemble(cfg, blocks.map(_.getRowCount).sum, colSizes.toMap,
+        valCounts.toMap, nullCounts.toMap, mins.toMap, maxs.toMap,
+        blocks.map(_.getStartingPos).toSeq.sorted)
     } finally reader.close()
+  }
+
+  /** A file's metrics from per-column counts and min/max literals,
+    * gated by each column's metrics mode: `none` withholds counts AND
+    * bounds, `counts` withholds bounds, `truncate(W)` truncates at W,
+    * `full` stores exact bounds (long string/binary bounds then exceed
+    * the truncate width and are simply never PROVABLY exact downstream —
+    * conservative, sound). Shared by the parquet footer reader and the
+    * writer's in-task tracking for avro and orc files. */
+  def assemble(cfg: MetricsConfig, rowCount: Long, columnSizes: Map[Int, Long],
+      valueCounts: Map[Int, Long], nullCounts: Map[Int, Long],
+      mins: Map[Int, Literal], maxs: Map[Int, Literal],
+      splitOffsets: Seq[Long]): FileMetrics = {
+    def keepCounts(id: Int): Boolean = cfg.modeFor(id) != MetricsMode.NoMetrics
+    def gate(id: Int, l: Literal, upper: Boolean): Option[Literal] = cfg.modeFor(id) match {
+      case MetricsMode.Truncate(w) => if (upper) truncateUpper(l, w) else truncateLower(l, w)
+      case MetricsMode.Full => Some(l)
+      case _ => None
+    }
+    FileMetrics(
+      rowCount = rowCount,
+      columnSizes = columnSizes,
+      valueCounts = valueCounts.filter(kv => keepCounts(kv._1)),
+      nullValueCounts = nullCounts.filter(kv => keepCounts(kv._1)),
+      lowerBounds = mins.flatMap { case (k, v) => gate(k, v, upper = false).map(k -> _.serialize) },
+      upperBounds = maxs.flatMap { case (k, v) => gate(k, v, upper = true).map(k -> _.serialize) },
+      splitOffsets = splitOffsets)
   }
 
   /** parquet statistics value -> Iceberg literal of the field's type. */

@@ -439,38 +439,40 @@ private[ice] object SnapshotProducer {
   }
 
   /** Write a DataFrame as data files using the table's layout and return
-    * manifest entries (shared by compaction/overwrite; same machinery as
-    * AppendOp but without committing). */
-  /** shapeOverride replaces the default clustering: called with the
+    * manifest entries without committing (compaction, overwrite, CoW and
+    * MoR row-level ops). The rows are clustered here and written by the
+    * one task-side writer ([[FileWriter]]), the same one appends use.
+    *
+    * shapeOverride replaces the default clustering: called with the
     * aligned frame, the computed target file count (0 = unsized) and
     * the partition DIRECTORY columns (empty for unpartitioned tables;
     * when present they are already materialized on the frame and MUST
-    * stay the leading sort keys so partitionBy writes one file run per
-    * directory). */
+    * stay the leading sort keys so each task writes one file run per
+    * partition). */
   def writeDataFiles(table: IceTable, spark: SparkSession, df: DataFrame,
       targetFileSizeBytes: Long = 0L, inputBytes: Long = -1L,
       shapeOverride: Option[(DataFrame, Int, Seq[String]) => DataFrame] = None): Seq[ManifestEntry] = {
+    val (aligned, shaped) = shape(table, df, targetFileSizeBytes, inputBytes, shapeOverride)
+    val entries = FileWriter.write(shaped,
+        FileWriter.dataConf(spark, table, shaped.schema, aligned.schema))
+      .map(f => ManifestEntry(ManifestStatus.Added, None, None, None, f))
+    enrichNanCounts(table, spark, entries)
+  }
+
+  /** `df` aligned to the table schema, and the aligned rows clustered
+    * for [[writeDataFiles]]. */
+  private[ice] def shape(table: IceTable, df: DataFrame, targetFileSizeBytes: Long,
+      inputBytes: Long, shapeOverride: Option[(DataFrame, Int, Seq[String]) => DataFrame])
+      : (DataFrame, DataFrame) = {
     val schema = table.schema
     val spec = table.spec
-    val commitUuid = UUID.randomUUID().toString
-    val outDir = s"${table.dataFileDir}/$commitUuid"
-    // write.format.default selects the data-file format (S16 registry).
-    // Partitioned layouts lean on Spark's parquet partitionBy machinery;
-    // non-parquet formats are unpartitioned-only for now.
-    val writeFormat = TableProperties.get(table.properties,
-      TableProperties.WriteFormatDefault).toUpperCase(java.util.Locale.ROOT)
-    require(writeFormat == "PARQUET" || spec.isUnpartitioned,
-      s"write.format.default=$writeFormat supports unpartitioned tables only")
-    var avroCounts: Map[String, Long] = Map.empty
     val aligned = df.select(schema.fields.map { f =>
       col(f.name).cast(SparkConv.toSparkType(f.fieldType))
         .as(f.name, SparkConv.toSparkField(f).metadata)
     }: _*)
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
 
     val order = table.metadata.defaultSortOrder
-    if (spec.isUnpartitioned) {
+    val shaped = if (spec.isUnpartitioned) {
       // pick file count from input size so output files land near target;
       // callers rewriting a SUBSET pass its byte size explicitly — sizing
       // from the whole table would scatter a small rewrite over many
@@ -482,7 +484,7 @@ private[ice] object SnapshotProducer {
             else table.newScan().planFiles().map(_.file.fileSizeInBytes).sum
           math.max(1, math.ceil(bytes.toDouble / targetFileSizeBytes).toInt)
         } else 0
-      val shaped = shapeOverride match {
+      shapeOverride match {
         case Some(shape) => shape(aligned, n, Nil)
         case None =>
           if (order.fields.nonEmpty) {
@@ -493,31 +495,16 @@ private[ice] object SnapshotProducer {
           } else if (n > 0) aligned.repartition(n)
           else aligned
       }
-      writeFormat match {
-        case "PARQUET" => shaped.write.mode("append")
-          .options(WriteTuning.parquetData(table.properties)).parquet(outDir)
-        case "AVRO" =>
-          val (codec, level) = WriteTuning.avroDataCodec(table.properties)
-          avroCounts = AvroData.writeDirWithCounts(shaped, outDir,
-            codec = codec, level = level).toMap
-        case "ORC" => shaped.write.mode("append")
-          .options(WriteTuning.orcData(table.properties)).orc(outDir)
-        case other =>
-          throw new UnsupportedOperationException(
-            s"no writer registered for file format '$other' " +
-              "(PARQUET, AVRO and ORC; PUFFIN is not a row format)")
-      }
     } else {
       val partCols = spec.fields.map { pf =>
         val src = schema.findFieldById(pf.sourceId).get
         pf.transform.toColumn(col(src.name), src.fieldType.asInstanceOf[IcePrimitive])
       }
-      // partition dirs use a reserved __gp_ prefix: an identity partition
-      // field named like its source column would otherwise be stripped
-      // from file contents by partitionBy and read back as null
+      // partition tuples ride in reserved __gp_ columns for clustering;
+      // the writer computes each file's tuple from the source columns
       val dirCols = spec.fields.map(pf => PartitionPaths.dirCol(pf.name))
       val withDirs = aligned.withColumns(dirCols.zip(partCols).toMap)
-      val shaped = shapeOverride match {
+      shapeOverride match {
         case Some(shape) =>
           val n =
             if (targetFileSizeBytes > 0 && inputBytes >= 0)
@@ -529,62 +516,8 @@ private[ice] object SnapshotProducer {
             withDirs.repartition(dirCols.map(col): _*),
             schema, order, dirCols)
       }
-      shaped
-        .write.mode("append")
-        .options(WriteTuning.parquetData(table.properties))
-        .partitionBy(dirCols: _*)
-        .parquet(outDir)
     }
-
-    // avro: the writer already returned exact (path, count) pairs — keying
-    // a fresh directory walk back against interpolated paths would break on
-    // non-normalized table locations (double slashes)
-    val files =
-      if (writeFormat == "AVRO") avroCounts.keys.toSeq.sorted
-      else {
-        val suffix = if (writeFormat == "ORC") ".orc" else ".parquet"
-        val root = Paths.get(outDir)
-        import scala.jdk.CollectionConverters._
-        Files.walk(root).iterator.asScala
-          .filter(p => Files.isRegularFile(p) && p.toString.endsWith(suffix))
-          .map(_.toString).toSeq.sorted
-      }
-    val orcCounts: Map[String, Long] =
-      if (writeFormat == "ORC") FormatRegistry.orcRowCounts(spark, files)
-      else Map.empty
-    val conf = spark.sessionState.newHadoopConf()
-    // object-store layout: hash-prefix the final paths (partition tuples
-    // are parsed from the ORIGINAL outDir layout before the move)
-    val relocated = ObjectStoreLayout.relocate(table.properties,
-      table.dataFileDir, outDir, commitUuid, files)
-    // footer reads are independent driver-side IO: a 10k-file compaction
-    // commit should be bounded by cores, not files
-    import scala.collection.parallel.CollectionConverters._
-    val metricsCfg = Some(MetricsConfig.from(table.properties, schema))
-    val entries = files.par.map { p =>
-      val fp = relocated(p)
-      val m =
-        if (writeFormat == "PARQUET") Metrics.fromParquetFooter(fp, schema, conf, metricsCfg)
-        else if (writeFormat == "ORC") Metrics.rowCountOnly(orcCounts.getOrElse(p, 0L))
-        // counts were recorded by the executors at write time; avro/orc
-        // files carry no footer bounds here, so pruning includes them
-        else Metrics.rowCountOnly(avroCounts(p))
-      val partition = PartitionPaths.parse(p, outDir, spec, schema)
-      ManifestEntry(ManifestStatus.Added, None, None, None,
-        DataFile(FileContent.Data, fp, writeFormat, partition,
-          recordCount = m.rowCount,
-          fileSizeInBytes = Files.size(Paths.get(fp)),
-          columnSizes = m.columnSizes, valueCounts = m.valueCounts,
-          nullValueCounts = m.nullValueCounts,
-          lowerBounds = m.lowerBounds, upperBounds = m.upperBounds,
-          splitOffsets = m.splitOffsets,
-          sortOrderId = Some(table.metadata.defaultSortOrderId)))
-    }.seq
-      // an empty shuffle partition leaves a zero-row file behind; keep it
-      // out of the manifest — it carries no metrics, defeats metadata-
-      // proved operations, and every scan would open it for nothing
-      .filter(_.dataFile.recordCount > 0L)
-    enrichNanCounts(table, spark, entries)
+    (aligned, shaped)
   }
 
   /** Opt-in (graft.write.nan-counts): per-file NaN counts for float and
@@ -969,7 +902,6 @@ final class RowDelete(table: IceTable, spark: SparkSession) {
     val (withIds, idLess) = matching.partition(t =>
       hasIds(t, ManifestAvro.stripFileScheme(t.file.filePath)))
     val exact = Option.when(withIds.nonEmpty) {
-      spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
       // file sizes from the manifests: no driver listing or stat per path
       graft.ice.FileListRelation.parquet(spark, withIds.map(t =>
           ManifestAvro.stripFileScheme(t.file.filePath) -> t.file.fileSizeInBytes),
@@ -1199,86 +1131,19 @@ final class RowDelete(table: IceTable, spark: SparkSession) {
     * alongside the new data files in ONE snapshot; same-sequence data is
     * unaffected by the strict dataSeq < deleteSeq visibility rule). */
   private[graft] def equalityDeleteEntries(keys: DataFrame): Seq[ManifestEntry] = {
-    val eqCols = keys.columns.toSeq
-    val eqFields = eqCols.map(c => table.schema.findFieldByName(c).getOrElse(
+    val eqFields = keys.columns.toSeq.map(c => table.schema.findFieldByName(c).getOrElse(
       throw new IllegalArgumentException(s"no such column $c")))
-    val eqIds = eqFields.map(_.id)
-    val outDir = s"${table.dataFileDir}/${UUID.randomUUID()}-eqdeletes"
-    // carry field ids so footer metrics yield key BOUNDS per delete file —
-    // compaction uses them to skip data files whose column ranges cannot
-    // contain any deleted key
+    // carry field ids so every delete file gets key BOUNDS — compaction
+    // uses them to skip data files whose column ranges cannot contain
+    // any deleted key
     val aligned = keys.select(eqFields.map { f =>
       col(f.name).cast(SparkConv.toSparkType(f.fieldType))
         .as(f.name, SparkConv.toSparkField(f).metadata)
     }: _*)
-    def eqEntry(file: String, rowCount: Long, format: String,
-        lower: Map[Int, Array[Byte]], upper: Map[Int, Array[Byte]]) =
-      ManifestEntry(ManifestStatus.Added, None, None, None,
-        DataFile(FileContent.EqualityDeletes, file, format,
-          table.spec.fields.map(_ => null: Any).toIndexedSeq,
-          recordCount = rowCount, fileSizeInBytes = Files.size(Paths.get(file)),
-          lowerBounds = lower, upperBounds = upper,
-          equalityIds = eqIds))
-    val fmt = graft.ice.meta.TableProperties.get(table.properties,
-      graft.ice.meta.TableProperties.DeleteFormatDefault)
-    // avro/orc carry no driver-parsable footer metrics: compute the key
-    // bounds with ONE aggregate over the keys and stamp every written
-    // file with the same (inclusive-superset) bounds — pruning and
-    // conflict checks stay sound, just file-granular instead of
-    // exact-per-file
-    lazy val (aggLower, aggUpper) = {
-      val aggCols = eqFields.flatMap(f => Seq(min(col(f.name)), max(col(f.name))))
-      val statsRow =
-        if (aligned.isEmpty) null
-        else aligned.agg(aggCols.head, aggCols.tail: _*).head
-      def boundAt(i: Int): Option[Array[Byte]] =
-        if (statsRow == null || statsRow.isNullAt(i)) None
-        else {
-          val f = eqFields(i / 2)
-          f.fieldType match {
-            case p: graft.ice.types.IcePrimitive =>
-              Literal.fromSparkValue(p, statsRow.get(i)).map(_.serialize)
-            case _ => None
-          }
-        }
-      (eqFields.indices.flatMap(j => boundAt(2 * j).map(eqIds(j) -> _)).toMap,
-        eqFields.indices.flatMap(j => boundAt(2 * j + 1).map(eqIds(j) -> _)).toMap)
-    }
-    val entries =
-      if (fmt == "avro") {
-        val (codec, level) = WriteTuning.avroDeleteCodec(table.properties)
-        AvroData.writeDirWithCounts(aligned, outDir, codec, level)
-          .filter(_._2 > 0)
-          .map { case (file, n) => eqEntry(file, n, "AVRO", aggLower, aggUpper) }
-      } else if (fmt == "orc") {
-        aligned.write.options(WriteTuning.orcDelete(table.properties)).orc(outDir)
-        val files = {
-          import scala.jdk.CollectionConverters._
-          Files.walk(Paths.get(outDir)).iterator.asScala
-            .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".orc"))
-            .map(_.toString).toSeq.sorted
-        }
-        graft.ice.FormatRegistry.orcRowCounts(spark, files).toSeq.sortBy(_._1)
-          .filter(_._2 > 0)
-          .map { case (file, n) => eqEntry(file, n, "ORC", aggLower, aggUpper) }
-      } else {
-        spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-        aligned.write.options(WriteTuning.parquetDelete(table.properties))
-          .parquet(outDir)
-        val conf = spark.sessionState.newHadoopConf()
-        val files = {
-          import scala.jdk.CollectionConverters._
-          Files.walk(Paths.get(outDir)).iterator.asScala
-            .filter(p => p.toString.endsWith(".parquet")).map(_.toString).toSeq.sorted
-        }
-        files.flatMap { file =>
-          val m = Metrics.fromParquetFooter(file, table.schema, conf)
-          if (m.rowCount == 0) None
-          else Some(eqEntry(file, m.rowCount, "PARQUET",
-            m.lowerBounds, m.upperBounds))
-        }
-      }
-    entries
+    val conf = FileWriter.deleteConf(spark, table, FileContent.EqualityDeletes,
+      aligned.schema, aligned.schema, "-eqdeletes").copy(equalityIds = eqFields.map(_.id))
+    FileWriter.write(aligned, conf)
+      .map(f => ManifestEntry(ManifestStatus.Added, None, None, None, f))
   }
 }
 
@@ -1319,7 +1184,6 @@ object RowDelete {
       graft.ice.meta.TableProperties.DeleteGranularity)
     val targetBytes = graft.ice.meta.TableProperties.get(table.properties,
       graft.ice.meta.TableProperties.DeleteTargetFileSizeBytes)
-    val outDir = s"${table.dataFileDir}/${UUID.randomUUID()}-deletes"
     // target sizing as a record cap: (path, pos) rows cost roughly the
     // path length + 8 bytes pre-encoding; parquet dictionary + zstd only
     // shrink that, so the cap errs toward files UNDER target, never over
@@ -1327,24 +1191,14 @@ object RowDelete {
       if (partitionOf.isEmpty) 128L
       else partitionOf.keysIterator.map(_.length.toLong).sum / partitionOf.size
     val maxRecords = math.max(1L, targetBytes / (avgPathLen + 8L))
-    val fmt = graft.ice.meta.TableProperties.get(table.properties,
-      graft.ice.meta.TableProperties.DeleteFormatDefault)
-    // cluster per granularity: (rows sorted within partitions, the
-    // rolling/grouping column when one applies). The parquet writer rolls
-    // via partitionBy(__group) + maxRecordsPerFile; the avro writer rolls
-    // on group change + the record cap inside its partition writer.
-    val (clustered, groupCol): (DataFrame, Option[String]) = granularity match {
+    // cluster per granularity: rows sorted within partitions (spec
+    // ordering (file_path, pos) inside each group) and the column whose
+    // value change rolls a delete file, when one applies
+    val (clustered, rollCol): (DataFrame, Option[String]) = granularity match {
       case "file" =>
-        // one delete file per referenced DATA file: cluster by path, roll
-        // per path. The grouping value is a SHA-256 digest of the path,
-        // NOT the path itself: partitionBy URL-escapes '/' (%2F),
-        // tripling the length, and a realistic warehouse path would blow
-        // the filesystem's 255-byte filename limit at write time. The
-        // digest is fixed-width; the delete file's scope still comes
-        // from its file_path column bounds.
-        (dels.withColumn("__group", sha2(col("file_path"), 256))
-          .repartition(col("file_path"))
-          .sortWithinPartitions("file_path", "pos"), Some("__group"))
+        // one delete file per referenced DATA file
+        (dels.repartition(col("file_path"))
+          .sortWithinPartitions("file_path", "pos"), Some("file_path"))
       case _ if partitionOf.nonEmpty && !table.spec.isUnpartitioned =>
         // partition granularity: cluster delete rows by the data file's
         // partition — one (size-rolled) delete file per touched partition
@@ -1364,85 +1218,15 @@ object RowDelete {
         (dels.repartition(nParts, col("file_path"))
           .sortWithinPartitions("file_path", "pos"), None)
     }
-    def entry(file: String, rowCount: Long, format: String,
-        lo: Array[Byte], hi: Array[Byte]): ManifestEntry =
-      // file_path bounds (reserved field 2147483546): the spec's way
-      // of scoping WHICH data files this delete file may reference —
-      // planners and commit-conflict validation use them to skip
-      // delete files that provably cannot cover a given data file
-      ManifestEntry(ManifestStatus.Added, None, None, None,
-        DataFile(FileContent.PositionDeletes, file, format,
-          table.spec.fields.map(_ => null: Any).toIndexedSeq,
-          recordCount = rowCount, fileSizeInBytes = Files.size(Paths.get(file)),
-          lowerBounds =
-            if (lo == null) Map.empty
-            else Map(RowDelete.PathBoundFieldId -> lo),
-          upperBounds =
-            if (hi == null) Map.empty
-            else Map(RowDelete.PathBoundFieldId -> hi)))
-    if (fmt == "avro") {
-      val (codec, level) = WriteTuning.avroDeleteCodec(table.properties)
-      val utf8 = java.nio.charset.StandardCharsets.UTF_8
-      AvroData.writeDeleteDir(clustered, outDir, codec, level, maxRecords,
-        rollCol = groupCol, boundsCol = "file_path",
-        dropCols = groupCol.toSeq)
-        .filter(_._2 > 0)
-        .map { case (file, n, lo, hi) =>
-          entry(file, n, "AVRO",
-            if (lo == null) null else lo.getBytes(utf8),
-            if (hi == null) null else hi.getBytes(utf8))
-        }
-    } else {
-      // parquet | orc: Spark's file sink handles the partitionBy groups
-      // and the per-file record cap for both
-      val writer0 = groupCol match {
-        case Some(g) => clustered.write.partitionBy(g)
-        case None => clustered.write
-      }
-      val writer = writer0.option("maxRecordsPerFile", maxRecords)
-      val ext = s".$fmt"
-      if (fmt == "orc")
-        writer.options(WriteTuning.orcDelete(table.properties)).orc(outDir)
-      else
-        writer.options(WriteTuning.parquetDelete(table.properties)).parquet(outDir)
-      val files = {
-        import scala.jdk.CollectionConverters._
-        // isRegularFile guards against partitionBy __group= directories
-        // being mistaken for data (historically they encoded raw paths
-        // ending in ".parquet"; now they are fixed-width digests)
-        Files.walk(Paths.get(outDir)).iterator.asScala
-          .filter(p => Files.isRegularFile(p) && p.toString.endsWith(ext))
-          .map(_.toString).toSeq.sorted
-      }
-      if (fmt == "orc") {
-        // ORC footers aren't parsed driver-side the way parquet's are:
-        // ONE distributed job yields per-file counts + path bounds
-        if (files.isEmpty) Nil
-        else spark.read.orc(files: _*)
-          .groupBy(input_file_name().as("__f"))
-          .agg(count(lit(1)).as("__n"),
-            min("file_path").as("__lo"), max("file_path").as("__hi"))
-          .collect()
-          .map { r =>
-            val utf8 = java.nio.charset.StandardCharsets.UTF_8
-            entry(graft.ice.FilePaths.fromSpark(r.getString(0)),
-              r.getLong(1), "ORC",
-              Option(r.getString(2)).map(_.getBytes(utf8)).orNull,
-              Option(r.getString(3)).map(_.getBytes(utf8)).orNull)
-          }.toSeq.sortBy(_.dataFile.filePath)
-      } else {
-        val conf = spark.sessionState.newHadoopConf()
-        files.flatMap { file =>
-          val rowCount = Metrics.parquetRowCount(file, conf)
-          if (rowCount == 0) None // empty shuffle partitions write empty files
-          else {
-            val bounds = Metrics.parquetPathBounds(file, conf)
-            Some(entry(file, rowCount, "PARQUET",
-              bounds.map(_._1).orNull, bounds.map(_._2).orNull))
-          }
-        }
-      }
-    }
+    val written = org.apache.spark.sql.types.StructType(
+      Seq("file_path", "pos").map(c => clustered.schema(c)))
+    val conf = FileWriter.deleteConf(spark, table, FileContent.PositionDeletes,
+      clustered.schema, written, "-deletes").copy(
+      rollOrdinal = rollCol.map(clustered.schema.fieldIndex).getOrElse(-1),
+      maxRecords = maxRecords)
+    FileWriter.write(clustered, conf)
+      .map(f => ManifestEntry(ManifestStatus.Added, None, None, None, f))
+      .sortBy(_.dataFile.filePath)
   }
 }
 
@@ -2321,20 +2105,20 @@ private[ice] object WriteShape {
       df.repartitionByRange(cols: _*).sortWithinPartitions(cols: _*)
     }
 
-  /** Partitioned: keep the partition clustering, add the sort order as a
-    * SECONDARY key so the file writer's required partition-column
-    * ordering is already satisfied and our sort survives. */
+  /** Partitioned: sort each task's rows by partition tuple, so the file
+    * writer sees each partition's rows as one run (one file), with the
+    * sort order as the SECONDARY key. */
   def sortForPartitionedWrite(df: DataFrame, schema: Schema, order: SortOrder,
       dirCols: Seq[String]): DataFrame =
-    if (order.fields.isEmpty) df
-    else df.sortWithinPartitions(dirCols.map(col) ++ sortCols(schema, order): _*)
+    df.sortWithinPartitions(dirCols.map(col) ++ sortCols(schema, order): _*)
 }
 
-/** Hive-style partition path parsing shared by append/rewrite. */
+/** Partition directory names of written files, and Hive-style partition
+  * path parsing for `addFiles` imports. */
 private[ice] object PartitionPaths {
-  /** Physical directory-column name for a partition field: reserved
-    * prefix keeps partitionBy from swallowing a source data column when
-    * an identity partition field shares its name (the Iceberg default). */
+  /** Clustering column, and directory name, of a partition field: the
+    * reserved prefix keeps it apart from a source data column when an
+    * identity partition field shares its name (the Iceberg default). */
   def dirCol(name: String): String = "__gp_" + name
 
   def parse(file: String, baseDir: String, spec: PartitionSpec,

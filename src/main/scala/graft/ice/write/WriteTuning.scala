@@ -252,36 +252,10 @@ object ObjectStoreLayout {
     if (partitioned && partDirs.nonEmpty)
       s"$dataRoot/$dirs/$commitId/$partDirs/$fileName"
     else {
-      // no partition dirs in the path: Spark part-file basenames repeat
-      // across partition directories of one job, so an 8-hex-digit key
-      // hash keeps the flattened names unique
+      // no partition dirs in the path: an 8-hex-digit key hash keeps the
+      // flattened names unique however the writer names its files
       val h8 = f"${scala.util.hashing.MurmurHash3.stringHash(key)}%08x"
       s"$dataRoot/$dirs/$commitId-$h8-$fileName"
     }
-  }
-
-  /** Move freshly-written files from their `outDir` layout to the
-    * object-store layout; returns original -> final path (identity map
-    * when the layout is disabled). Driver-side renames: one metadata op
-    * per file, parallelized — never a data copy on a real filesystem. */
-  def relocate(props: Map[String, String], dataRoot: String, outDir: String,
-      commitId: String, files: Seq[String]): Map[String, String] = {
-    if (!enabled(props)) return files.map(f => f -> f).toMap
-    val partitioned = partitionedPaths(props)
-    val prefix = if (outDir.endsWith("/")) outDir else outDir + "/"
-    import scala.collection.parallel.CollectionConverters._
-    files.par.map { orig =>
-      val rel = if (orig.startsWith(prefix)) orig.substring(prefix.length)
-        else new java.io.File(orig).getName
-      val slash = rel.lastIndexOf('/')
-      val (partDirs, name) =
-        if (slash < 0) ("", rel) else (rel.substring(0, slash), rel.substring(slash + 1))
-      val dst = place(dataRoot, commitId, partDirs, name, partitioned)
-      val dstPath = java.nio.file.Paths.get(dst)
-      Option(dstPath.getParent).foreach(java.nio.file.Files.createDirectories(_))
-      java.nio.file.Files.move(java.nio.file.Paths.get(orig), dstPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      orig -> dst
-    }.seq.toMap
   }
 }

@@ -274,4 +274,25 @@ class ScanDeleteMaskSpec extends AnyFunSuite with BeforeAndAfterAll {
     assertSameRows(load("mergeidless").newScan().toDF(spark),
       all.filter(col("o_orderkey") % 5 =!= 0).unionByName(updates), "merged")
   }
+
+  test("changes and net changes over an own append plus an id-less addFiles file") {
+    val (ext, file) = idLessFile()
+    mkTable("cdcidless", 2, raw.coalesce(1))
+    val from = load("cdcidless").currentSnapshot.get.snapshotId
+    load("cdcidless").append(spark).addFiles(Seq(file))
+    load("cdcidless").delete(spark).deleteWherePositional(E.raw("o_orderkey % 5 = 0"))
+    val t = load("cdcidless")
+    val to = t.currentSnapshot.get.snapshotId
+    val all = raw.unionByName(ext)
+    def kind(df: DataFrame, k: String) = df.filter(col("_change_type") === k)
+    val changes = t.planChanges(spark, from, to)
+    assertSameRows(kind(changes, "insert"), ext, "inserted rows")
+    assertSameRows(kind(changes, "delete"), all.filter(col("o_orderkey") % 5 === 0),
+      "deleted rows")
+    val net = t.planNetChanges(spark, from, to)
+    assertSameRows(kind(net, "insert"), ext.filter(col("o_orderkey") % 5 =!= 0),
+      "net inserts")
+    assertSameRows(kind(net, "delete"), raw.filter(col("o_orderkey") % 5 === 0),
+      "net deletes")
+  }
 }
