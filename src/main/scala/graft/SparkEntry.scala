@@ -3823,12 +3823,13 @@ object Fixtures {
           raw.filter(s"o_orderkey % $nSnaps = $i").repartition(1))
     }
     val out = s"$wh/_paced_out"
-    if (!new java.io.File(out).exists()) {
+    val ckpt = s"$wh/_paced_ckpt"
+    Tables.sidecar(out, ckpt) {
       val q = s.readStream.format("graft-table")
         .option("warehouse", wh).option("table", "tpch.orders_paced")
         .option("max-files-per-trigger", "1").load()
         .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", s"$wh/_paced_ckpt")
+        .option("path", out).option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
@@ -3836,7 +3837,6 @@ object Fixtures {
       require(batches.size == nSnaps,
         s"max-files-per-trigger=1 must make $nSnaps single-file batches, got $batches")
     }
-    out
   }
 
   /** Fixture for the graft-table STREAMING SOURCE: a three-append table

@@ -59,6 +59,23 @@ object Tables {
         throw e
     }
 
+  /** The directory `out`, which `write` fills unless an earlier call left
+    * it there. A `write` that throws (a gate `require` included) has `out`
+    * and `scratch` (its checkpoint, say) deleted before its error is
+    * rethrown, so a later call, in this JVM or the next, runs it and its
+    * gate again instead of reusing what a failed run left. */
+  def sidecar(out: String, scratch: String*)(write: => Unit): String = {
+    if (!Files.exists(Paths.get(out)))
+      try write
+      catch {
+        case e: Throwable =>
+          (out +: scratch).foreach(d =>
+            org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
+          throw e
+      }
+    out
+  }
+
   def warehouseDir(sfDir: String): String = {
     val tag = sfDir.replaceAll("[^a-zA-Z0-9]", "_")
     s"${System.getProperty("java.io.tmpdir")}/graft_wh$tag"

@@ -31,8 +31,8 @@ object FormatRegistry {
   type Writer = (DataFrame, String) => Seq[String]
 
   private val readers: Map[String, Reader] = Map(
-    // sizes from one stat per file: these are delete files, never a
-    // table's data plane (toDF reads data files with manifest sizes)
+    // sizes from one stat per file: an upsert's key read of the files it
+    // just wrote, never a scan (toDF reads parquet with manifest sizes)
     "PARQUET" -> ((s, schema, paths, _) => FileListRelation.parquet(s,
       paths.map(p => p -> java.nio.file.Files.size(
         java.nio.file.Paths.get(ManifestAvro.stripFileScheme(p)))), schema)),

@@ -179,9 +179,10 @@ final class IceTable private (
   /** CDC changes scan over (fromSnapshotId, toSnapshotId]: one row per
     * changed row with `_change_type` ("insert" | "delete") and
     * `_commit_snapshot_id` columns. Inserts come from added data files;
-    * merge-on-read deletes from delete files — position deletes resolve
-    * their (file, pos) tuples back to rows, equality deletes join their
-    * keys against the pre-delete table state. Copy-on-write removals
+    * merge-on-read deletes from delete files — the rows a snapshot's added
+    * position deletes mask (and its parent's deletion vectors did not),
+    * and the parent's rows an added equality-delete file masks; no delete
+    * side is joined. Copy-on-write removals
     * (truncate, INSERT OVERWRITE, dynamic overwrite, CoW UPDATE/MERGE/
     * DELETE) diff at the FILE level: the removed files' rows — read at
     * the parent snapshot with its MoR deletes applied, so already-dead
@@ -247,87 +248,52 @@ final class IceTable private (
     }
 
     def deleteRows(s: Snapshot): Option[DataFrame] = {
-          // delete files ADDED by this snapshot
-          val added = ManifestAvro.readManifestList(s.manifestList)
-            .filter(m => m.content == ManifestContent.Deletes &&
-              m.addedSnapshotId == s.snapshotId)
-            .flatMap { m =>
-              val mSpec = meta.specById(m.partitionSpecId).getOrElse(PartitionSpec.unpartitioned)
-              ManifestAvro.readManifest(m.manifestPath,
-                mSpec.partitionType(schema), Some(m))
-                .filter(e => e.status == ManifestStatus.Added)
-            }
-          val pos = added.filter(_.dataFile.content == FileContent.PositionDeletes)
-          val eq = added.filter(_.dataFile.content == FileContent.EqualityDeletes)
-          val posRows =
-            if (pos.isEmpty) None
-            else {
-              // deletion vectors expand executor-side; parquet delete
-              // files read natively — union both into one (file,pos) set
-              val (dvPos, pqPos) = pos.partition(_.dataFile.contentOffset.isDefined)
-              val pqDels = IceTable.readPositionDeleteRows(spark, pqPos)
-              val rawDels = (pqDels.toSeq ++
-                IceTable.expandDeletionVectors(spark, dvPos).toSeq)
-                .reduce(_ unionByName _)
-                // two delete files may cover the same (file, pos): dedupe so
-                // the join marks each row once, not once per covering file
-                .distinct()
-              // a replacement DV carries the CUMULATIVE bitmap (it ORs the
-              // superseded vector in — v3's one-DV-per-file invariant), so
-              // the snapshot's row-level delta is new minus the parent's
-              // vector for the same data files
-              val dvRefFiles = dvPos.flatMap(_.dataFile.referencedDataFile)
-                .map(ManifestAvro.stripFileScheme).toSet
-              val parentDV =
-                if (dvRefFiles.isEmpty) Nil
-                else s.parentSnapshotId.flatMap(meta.snapshotById).toSeq
-                  .flatMap(planDeleteEntries)
-                  .filter(e => e.dataFile.content == FileContent.PositionDeletes &&
-                    e.dataFile.contentOffset.isDefined &&
-                    e.dataFile.referencedDataFile.exists(r =>
-                      dvRefFiles.contains(ManifestAvro.stripFileScheme(r))))
-              val dels = IceTable.expandDeletionVectors(spark, parentDV)
-                .map(prior => rawDels.except(prior)).getOrElse(rawDels)
-              // read only the referenced data files, join on (file, pos)
-              val files = dels.select("__dfile").distinct()
-                .collect().map(_.getString(0)).toSet
-              // delete files name data files without a scheme; match
-              // the manifests' own spelling of the path
-              val data = fileRows(s,
-                files.flatMap(f => Seq(f, s"file:$f", s"file://$f")), "_file", "_pos")
-                .withColumnRenamed("_file", "__file")
-                .withColumnRenamed("_pos", "__pos")
-              // manifest-known record counts size the join (see
-              // IceTable.sizeDeleteSide): compressed-byte estimates
-              // under-count well-compressed delete tables
-              val delsSized = IceTable.sizeDeleteSide(dels,
-                pos.map(_.dataFile.recordCount).sum)
-              Some(data.join(delsSized,
-                data("__file") === delsSized("__dfile") && data("__pos") === delsSized("__dpos"))
-                .drop("__file", "__pos", "__dfile", "__dpos")
-                .withColumn("_change_type", lit("delete")))
-            }
-          val eqRows = eq.map { e =>
-            val eqCols = e.dataFile.equalityIds.flatMap(id =>
-              schema.findFieldById(id).map(_.name))
-            val keys = IceTable.sizeDeleteSide(
-              IceTable.readEqualityDeleteRows(spark, schema, e)
-                .select(eqCols.map(c => col(c).as(s"__k_$c")): _*).distinct(),
-              e.dataFile.recordCount)
-            // rows as of the PARENT snapshot that match the deleted keys
-            val before = newScan()
-              .useSnapshot(s.parentSnapshotId.getOrElse(
-                throw new IllegalStateException("delete snapshot without parent")))
-              .toDF(spark)
-            before.join(keys,
-              eqCols.map(c => before(c) <=> keys(s"__k_$c")).reduce(_ && _), "left_semi")
-              .withColumn("_change_type", lit("delete"))
-          }
-          Seq(posRows, Some(eqRows.reduceOption(_ unionByName _)).flatten).flatten match {
-            case Nil => None
-            case one :: Nil => Some(one)
-            case many => Some(many.reduce(_ unionByName _))
-          }
+      // delete files ADDED by this snapshot
+      val added = ManifestAvro.readManifestList(s.manifestList)
+        .filter(m => m.content == ManifestContent.Deletes &&
+          m.addedSnapshotId == s.snapshotId)
+        .flatMap { m =>
+          val mSpec = meta.specById(m.partitionSpecId).getOrElse(PartitionSpec.unpartitioned)
+          ManifestAvro.readManifest(m.manifestPath,
+            mSpec.partitionType(schema), Some(m))
+            .filter(e => e.status == ManifestStatus.Added)
+        }
+      val pos = added.filter(_.dataFile.content == FileContent.PositionDeletes)
+      val eq = added.filter(_.dataFile.content == FileContent.EqualityDeletes)
+      lazy val parentId = s.parentSnapshotId.getOrElse(
+        throw new IllegalStateException("delete snapshot without parent"))
+      // the rows of the files the added deletes name that their mask marks
+      // and the parent's deletion vectors did not: a replacement DV
+      // carries the CUMULATIVE bitmap (it ORs the superseded vector in —
+      // v3's one-DV-per-file invariant), so the snapshot's row-level delta
+      // is the new vector minus the parent's
+      val posRows = Option.when(pos.nonEmpty) {
+        val targets = compact(spark).positionDeleteTargets(pos).map(FilePaths.fromSpark)
+        val parentDVs = meta.snapshotById(parentId).toSeq.flatMap(planDeleteEntries)
+          .filter(e => e.dataFile.content == FileContent.PositionDeletes &&
+            e.dataFile.contentOffset.isDefined)
+        def mask(entries: Seq[ManifestEntry]): Column = {
+          val refs = targets.map(p => p -> PositionDeletes.applicable(p, 0L, entries))
+            .filterNot(_._2.isEmpty).toMap
+          val (parquet, orc) = PositionDeletes.readers(spark, refs.values.flatMap(_.files))
+          PositionDeletes.mask(col("_file"), col("_pos"), refs, parquet, orc)
+        }
+        // manifests may spell the paths with a scheme
+        fileRows(s, targets.flatMap(f => Seq(f, s"file:$f", s"file://$f")), "_file", "_pos")
+          .filter(mask(pos) && !mask(parentDVs))
+          .drop("_file", "_pos")
+          .withColumn("_change_type", lit("delete"))
+      }
+      // the parent's rows that one added equality-delete file's mask marks
+      val eqRows = eq.map { e =>
+        val scan = newScan().useSnapshot(parentId)
+        val before = scan.toDF(spark)
+        val f = EqualityDeletes.file(e, scan.scanSchema.findFieldById(_).map(_.name))
+        before.filter(EqualityDeletes.mask(Seq(f),
+            EqualityDeletes.readers(spark, Seq(f), SparkConv.toSpark(scan.scanSchema)(_))))
+          .withColumn("_change_type", lit("delete"))
+      }
+      (posRows.toSeq ++ eqRows).reduceOption(_ unionByName _)
     }
 
     // REPLACE snapshots are content-preserving and emit no changelog
@@ -846,52 +812,6 @@ object IceTable {
     * parquet field ids: "all" | "none" | "mixed" (stamped by addFiles). */
   val FieldIdsSummaryKey = "graft.field-ids"
 
-  /** Manifest-driven sizing for the DELETE side of an equality-delete or
-    * CDC join: Spark's
-    * own estimate is the delete files' COMPRESSED size, so a
-    * well-compressed multi-million-row delete table can slip under the
-    * broadcast threshold and stall the scan behind a single-threaded
-    * broadcast build (measured 2x the whole query when zstd became the
-    * declared codec default). The manifests carry the EXACT record
-    * count — at or under the cap, broadcast explicitly (tiny deletes
-    * stay a map-side anti-join at any codec); above it, force a
-    * SHUFFLE_HASH build on the delete side so the data side is hashed,
-    * never sorted by its long path strings. */
-  private[ice] val DeleteBroadcastRowCap: Long = 1000000L
-  private[ice] def sizeDeleteSide(df: DataFrame, records: Long): DataFrame =
-    if (records <= DeleteBroadcastRowCap)
-      org.apache.spark.sql.functions.broadcast(df)
-    else df.hint("SHUFFLE_HASH")
-
-  /** v3 deletion vectors: expand puffin blobs to (__dfile, __dpos) rows
-    * ON THE EXECUTORS — one task per vector; the driver only ships
-    * (path, offset, length, referenced-file) descriptors. Shared by the
-    * scan's delete application and the CDC changes scan. */
-  private[ice] def expandDeletionVectors(spark: SparkSession,
-      entries: Seq[graft.ice.manifest.ManifestEntry]): Option[DataFrame] = {
-    if (entries.isEmpty) return None
-    import spark.implicits._
-    val refs = entries.map { e =>
-      val p = e.dataFile.filePath
-      (ManifestAvro.stripFileScheme(p),
-        e.dataFile.contentOffset.getOrElse(
-          throw new IllegalStateException(s"DV entry $p missing content_offset")),
-        e.dataFile.contentSizeInBytes.getOrElse(
-          throw new IllegalStateException(s"DV entry $p missing content_size_in_bytes")),
-        ManifestAvro.stripFileScheme(e.dataFile.referencedDataFile.getOrElse(
-          throw new IllegalStateException(s"DV entry $p missing referenced_data_file"))))
-    }
-    Some(spark.createDataset(refs)
-      .repartition(math.min(refs.size, spark.sparkContext.defaultParallelism))
-      .flatMap { case (path, off, len, refFile) =>
-        val it = graft.ice.manifest.Puffin.readDV(path, off, len).iterator()
-        new Iterator[(String, Long)] {
-          def hasNext: Boolean = it.hasNext
-          def next(): (String, Long) = (refFile, it.next())
-        }
-      }.toDF("__dfile", "__dpos"))
-  }
-
   /** `read.{parquet,orc}.vectorization.*` (reference table_properties.h:
     * 197-203) → the Spark reader configuration the path scans execute
     * under. Only EXPLICITLY-set table properties are applied (a table
@@ -954,37 +874,6 @@ object IceTable {
       } else { bins.last += it; used += len }
     }
     bins.filter(_.nonEmpty).map(_.toSeq).toSeq
-  }
-
-  /** (file_path, pos) rows of position-delete FILE entries (never DVs),
-    * format-dispatched through FormatRegistry — the delete plane may be
-    * parquet or avro per `write.delete.format.default`. Returns columns
-    * (__dfile, __dpos) with paths normalized. */
-  private[ice] def readPositionDeleteRows(spark: SparkSession,
-      entries: Seq[graft.ice.manifest.ManifestEntry]): Option[DataFrame] = {
-    if (entries.isEmpty) return None
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val posSchema = StructType(Seq(
-      StructField("file_path", StringType), StructField("pos", LongType)))
-    Some(entries.groupBy(_.dataFile.fileFormat.toUpperCase(java.util.Locale.ROOT))
-      .map { case (fmt, es) =>
-        graft.ice.FormatRegistry.reader(fmt)(spark, posSchema,
-          es.map(e => ManifestAvro.stripFileScheme(e.dataFile.filePath)),
-          Map.empty)
-      }.reduce(_ unionByName _)
-      .select(FilePaths.storedColumn(col("file_path")).as("__dfile"),
-        col("pos").as("__dpos")))
-  }
-
-  /** The key columns of one equality-delete file, format-dispatched
-    * (schema'd by the file's equality ids against the table schema). */
-  private[ice] def readEqualityDeleteRows(spark: SparkSession, schema: Schema,
-      e: graft.ice.manifest.ManifestEntry): DataFrame = {
-    val eqFields = e.dataFile.equalityIds.flatMap(schema.findFieldById)
-    val sparkSchema = org.apache.spark.sql.types.StructType(
-      eqFields.map(SparkConv.toSparkField))
-    graft.ice.FormatRegistry.reader(e.dataFile.fileFormat)(spark, sparkSchema,
-      Seq(ManifestAvro.stripFileScheme(e.dataFile.filePath)), Map.empty)
   }
 
   def from(ref: TableRef): IceTable =
@@ -1137,21 +1026,19 @@ final class ScanBuilder(table: IceTable) {
     }
   }
 
-  def scanSchema: Schema = {
+  def scanSchema: Schema = projection match {
+    case Some(cols) => baseSchema.select(cols, caseSensitive)
+    case None => baseSchema
+  }
+
+  private def baseSchema: Schema =
     // snapshot schema pinning applies only to explicit time travel
     // (table_scan.cc:217-220); a current-snapshot scan always uses the
     // table's current schema so evolution is visible immediately.
-    val timeTraveling = snapshotId.isDefined || branchOrTag.isDefined
-    val base =
-      if (timeTraveling)
-        resolveSnapshot().flatMap(_.schemaId).flatMap(table.metadata.schemaById)
-          .getOrElse(table.schema)
-      else table.schema
-    projection match {
-      case Some(cols) => base.select(cols, caseSensitive)
-      case None => base
-    }
-  }
+    if (snapshotId.isDefined || branchOrTag.isDefined)
+      resolveSnapshot().flatMap(_.schemaId).flatMap(table.metadata.schemaById)
+        .getOrElse(table.schema)
+    else table.schema
 
   def planFiles(): Seq[FileScanTask] = plan(withDeletes = false)._1
 
@@ -1239,9 +1126,12 @@ final class ScanBuilder(table: IceTable) {
     * `_metadata.file_path`/`_metadata.row_index` (`PositionDeletes`, the
     * code the V2 connector's reader also uses), so they add no join, no
     * shuffle and no extra job; under `_deleted` the mask marks instead
-    * of filtering. Equality deletes anti-join (or, for `_deleted`,
-    * left-join) their key columns per group of data files that share the
-    * same visible equality-delete set.
+    * of filtering. Equality deletes are a mask too (`EqualityDeletes`):
+    * each group of data files that share the same visible equality-delete
+    * set tests its rows' keys, after initial-defaults and identity
+    * constants are in place, against the delete files' key sets inside
+    * the task. A key column the projection dropped is read for the test
+    * and dropped again.
     *
     * Field-ID resolution (P3): files written by this library carry parquet
     * field ids and are matched by id (rename/evolution-safe); files
@@ -1252,13 +1142,18 @@ final class ScanBuilder(table: IceTable) {
     * id-less files with a metadata-stripped schema (pure name matching). */
   def toDF(spark0: SparkSession): DataFrame = {
     val spark = IceTable.scanSession(spark0, table.properties)
-    val s = scanSchema
+    val projected = scanSchema
     val (tasks, deleteEntries) = planFilesWithDeletes()
-    val sparkSchema = SparkConv.toSpark(s)
     if (tasks.isEmpty) {
       return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sparkSchema)
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], SparkConv.toSpark(projected))
     }
+    val eqDeletes = deleteEntries.filter(_.dataFile.content == FileContent.EqualityDeletes)
+    // equality-delete keys the projection dropped: read, tested, dropped
+    val eqOnly = eqDeletes.flatMap(_.dataFile.equalityIds).distinct
+      .filter(projected.findFieldById(_).isEmpty).flatMap(baseSchema.findFieldById)
+    val s = projected.copy(fields = projected.fields ++ eqOnly)
+    val sparkSchema = SparkConv.toSpark(s)
     val plainSchema = org.apache.spark.sql.types.StructType(
       sparkSchema.fields.map(_.copy(metadata = org.apache.spark.sql.types.Metadata.empty)))
     // manifest-known file sizes feed ManifestFileIndex (zero driver
@@ -1299,17 +1194,18 @@ final class ScanBuilder(table: IceTable) {
 
     // merge-on-read deletes (§2.8): every delete-bearing file maps to its
     // visible position deletes (dataSeq <= deleteSeq), which the read
-    // masks; equality deletes (dataSeq < deleteSeq) null-safe anti-join
-    // on their id columns. An incremental scan planned no deletes
-    // (append-only semantics). `_deleted` switches MoR from filtering to
-    // MARKING: every row stays, with a flag saying whether a delete
-    // applies (metadata_columns.h)
+    // masks; equality deletes (dataSeq < deleteSeq) mask each group of
+    // files below. An incremental scan planned no deletes (append-only
+    // semantics). `_deleted` switches MoR from filtering to MARKING:
+    // every row stays, with a flag saying whether a delete applies
+    // (metadata_columns.h)
     val posDeletes = deleteEntries.filter(_.dataFile.content == FileContent.PositionDeletes)
-    val eqDeletes = deleteEntries.filter(_.dataFile.content == FileContent.EqualityDeletes)
     val posByFile: Map[String, FileDeletes] =
       if (posDeletes.isEmpty) Map.empty
-      else tasks.map(t => ManifestAvro.stripFileScheme(t.file.filePath) ->
-        PositionDeletes.applicable(t, posDeletes)).filterNot(_._2.isEmpty).toMap
+      else tasks.map { t =>
+        val p = ManifestAvro.stripFileScheme(t.file.filePath)
+        p -> PositionDeletes.applicable(p, t.sequenceForVisibility, posDeletes)
+      }.filterNot(_._2.isEmpty).toMap
     // the delete-file readers, built once per scan and only for the
     // container formats its delete files use
     lazy val (posReadParquet, posReadOrc) =
@@ -1504,40 +1400,23 @@ final class ScanBuilder(table: IceTable) {
       }
     }
 
-    // data files group by the exact set of applicable equality deletes
-    var df = tasks.groupBy(t => eqDeletes
-        .filter(_.sequenceNumber.getOrElse(0L) > t.sequenceForVisibility)
-        .map(_.dataFile.filePath))
-      .map { case (eqPaths, groupTasks) =>
-        var g = readPaths(groupTasks)
-        var markers = Seq.empty[String]
-        for ((eqPath, i) <- eqPaths.zipWithIndex) {
-          val eqEntry = eqDeletes.find(_.dataFile.filePath == eqPath).get
-          val eqCols = eqEntry.dataFile.equalityIds.flatMap(id =>
-            table.schema.findFieldById(id).map(_.name))
-          val dels = IceTable.sizeDeleteSide(
-            IceTable.readEqualityDeleteRows(spark, table.schema, eqEntry)
-              .select(eqCols.map(col): _*),
-            eqEntry.dataFile.recordCount)
-          if (!wantDeleted)
-            g = g.join(dels, eqCols.map(c => g(c) <=> dels(c)).reduce(_ && _), "left_anti")
-          else {
-            // distinct: a duplicated key must mark, not multiply, rows
-            val marked = dels.distinct()
-              .select(eqCols.map(c => col(c).as(s"__eq${i}_$c")) :+
-                lit(1).as(s"__ed$i"): _*)
-            markers :+= s"__ed$i"
-            g = g.join(marked,
-              eqCols.map(c => g(c) <=> marked(s"__eq${i}_$c")).reduce(_ && _), "left")
-              .drop(eqCols.map(c => s"__eq${i}_$c"): _*)
-          }
+    // data files group by the equality deletes visible to them; the
+    // group's mask filters (or, under `_deleted`, marks) its rows
+    val eqByTask = tasks.map(t => t -> EqualityDeletes.applicable(
+      t.sequenceForVisibility, eqDeletes, s.findFieldById(_).map(_.name)))
+    lazy val eqReaders = EqualityDeletes.readers(spark, eqByTask.flatMap(_._2).distinct,
+      sparkSchema(_))
+    var df = eqByTask.groupBy(_._2).map { case (eqs, group) =>
+        val g = readPaths(group.map(_._1))
+        val mask = Option.when(eqs.nonEmpty)(EqualityDeletes.mask(eqs, eqReaders))
+        (mask, wantDeleted) match {
+          case (Some(m), false) => g.filter(!m)
+          case (Some(m), true) => g.withColumn("_deleted", col("__pd") || m).drop("__pd")
+          case (None, true) => g.withColumnRenamed("__pd", "_deleted")
+          case (None, false) => g
         }
-        if (wantDeleted)
-          g = g.withColumn("_deleted",
-            markers.map(m => col(m).isNotNull).foldLeft(col("__pd"))(_ || _))
-            .drop("__pd" +: markers: _*)
-        g
       }.reduce(_ unionByName _)
+    if (eqOnly.nonEmpty) df = df.drop(eqOnly.map(_.name): _*)
     if (wantFilePos) {
       if (metaCols.exists(Set("_spec_id", "_partition", "_row_id",
           "_last_updated_sequence_number"))) {

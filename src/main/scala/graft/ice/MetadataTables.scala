@@ -163,43 +163,12 @@ object MetadataTables {
   }
 
   /** `position_deletes` metadata table: the (data file, position)
-    * tuples of every LIVE position delete — parquet delete files read
-    * natively, deletion vectors expanded executor-side — plus the
-    * delete file each tuple came from. */
-  def positionDeletes(spark: SparkSession, table: IceTable): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val entries = table.currentSnapshot.map(table.planDeleteEntries)
-      .getOrElse(Nil)
-      .filter(_.dataFile.content == FileContent.PositionDeletes)
-    val (dv, pq) = entries.partition(_.dataFile.contentOffset.isDefined)
-    val pqRows =
-      if (pq.isEmpty) None
-      else Some(pq.map { e =>
-        spark.read.parquet(ManifestAvro.stripFileScheme(e.dataFile.filePath))
-          .select(col("file_path"), col("pos"),
-            lit(e.dataFile.filePath).as("delete_file_path"))
-      }.reduce(_ unionByName _))
-    val dvRows = IceTable.expandDeletionVectors(spark, dv).map { df =>
-      // v3 allows at most one live DV per data file, so the referenced
-      // data file uniquely identifies the puffin file a position came
-      // from — join the (DV-entry-sized, broadcast) mapping back so DV
-      // rows report their real delete_file_path like parquet rows do.
-      import spark.implicits._
-      val dvPaths = dv.map(e => (
-        graft.ice.manifest.ManifestAvro.stripFileScheme(
-          e.dataFile.referencedDataFile.getOrElse("")),
-        e.dataFile.filePath)).toDF("__dfile", "delete_file_path")
-      df.join(broadcast(dvPaths), Seq("__dfile"))
-        .select(col("__dfile").as("file_path"), col("__dpos").as("pos"),
-          col("delete_file_path"))
-    }
-    (pqRows.toSeq ++ dvRows.toSeq).reduceOption(_ unionByName _)
-      .getOrElse {
-        import spark.implicits._
-        Seq.empty[(String, Long, String)]
-          .toDF("file_path", "pos", "delete_file_path")
-      }
-  }
+    * tuples of every LIVE position delete, deletion vectors included,
+    * plus the delete file each tuple came from ([[PositionDeletes.tuples]]:
+    * any delete format, one task per delete file). */
+  def positionDeletes(spark: SparkSession, table: IceTable): DataFrame =
+    PositionDeletes.tuples(spark, table.currentSnapshot.map(table.planDeleteEntries)
+      .getOrElse(Nil).filter(_.dataFile.content == FileContent.PositionDeletes))
 
   def partitions(spark: SparkSession, table: IceTable): DataFrame = {
     import spark.implicits._

@@ -4,16 +4,18 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.{Column, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnsafeRow}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BoundReference, Expression, UnaryExpression, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.optimizer.NormalizeNaNAndZero
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.functions.{col, struct}
 import org.apache.spark.sql.sources.{Filter => V1Filter}
-import org.apache.spark.sql.types.{BooleanType, DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, FloatType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
 import org.roaringbitmap.longlong.Roaring64Bitmap
@@ -31,12 +33,14 @@ final case class FileDeletes(
   def isEmpty: Boolean = dvs.isEmpty && files.isEmpty
 }
 
-/** Merge-on-read position deletes as a per-data-file row mask: the one
-  * implementation behind both `ScanBuilder.toDF` (through
-  * [[PositionDeleteMask]]) and the V2 connector's reader. A data file's
-  * deleted positions are the union of its deletion vectors and of the
-  * rows naming it in the visible position-delete files; delete files
-  * are parsed once per executor JVM ([[DeleteFileCache]]). */
+/** Merge-on-read position deletes as a per-data-file row mask, and the
+  * one reader of delete files: `ScanBuilder.toDF` (through
+  * [[PositionDeleteMask]]), the V2 connector's reader, the changelog,
+  * the `position_deletes` metadata table and compaction all read them
+  * here, and none of them joins a delete side. A data file's deleted
+  * positions are the union of its deletion vectors and of the rows
+  * naming it in the visible position-delete files; delete files are
+  * parsed once per executor JVM ([[DeleteFileCache]]). */
 object PositionDeletes {
   type Read = PartitionedFile => Iterator[InternalRow]
 
@@ -44,14 +48,17 @@ object PositionDeletes {
   val Schema: StructType = StructType(Seq(
     StructField("file_path", StringType), StructField("pos", LongType)))
 
-  /** The position deletes visible to `t`: a delete applies to data files
-    * with dataSeq <= deleteSeq, and a deletion vector only to the file it
-    * references. Every visible delete file applies; its rows name the
-    * data files it covers. */
-  def applicable(t: FileScanTask, posDeletes: Seq[ManifestEntry]): FileDeletes = {
-    val p = ManifestAvro.stripFileScheme(t.file.filePath)
+  /** The schema of [[tuples]]. */
+  val TupleSchema: StructType = Schema.add("delete_file_path", StringType)
+
+  /** The position deletes visible to the data file at `p` (a manifest
+    * path without scheme) of data sequence number `dataSeq`: a delete
+    * applies to data files with dataSeq <= deleteSeq, and a deletion
+    * vector only to the file it references. Every visible delete file
+    * applies; its rows name the data files it covers. */
+  def applicable(p: String, dataSeq: Long, posDeletes: Seq[ManifestEntry]): FileDeletes = {
     val (dvs, files) = posDeletes
-      .filter(_.sequenceNumber.getOrElse(0L) >= t.sequenceForVisibility)
+      .filter(_.sequenceNumber.getOrElse(0L) >= dataSeq)
       .partition(_.dataFile.contentOffset.isDefined)
     lazy val forms = FilePaths.storedForms(p)
     FileDeletes(
@@ -96,7 +103,10 @@ object PositionDeletes {
   /** Spark's reader for parquet files of `schema`, with `filters` pushed
     * into the row-group reader. With `batches` it yields `ColumnarBatch`es
     * (cast to the row type; [[rows]] unpacks them), which needs
-    * `ParquetFileFormat.supportBatch` to hold for `schema` under `spark`. */
+    * `ParquetFileFormat.supportBatch` to hold for `schema` under `spark`.
+    * Columns resolve by field id wherever `schema` carries ids (by name
+    * otherwise): the setting rides in the reader's own Hadoop conf, so
+    * the session's conf is never touched. */
   def parquetReader(spark: SparkSession, schema: StructType, filters: Seq[V1Filter],
       batches: Boolean = false): Read =
     new ParquetFileFormat().buildReaderWithPartitionValues(
@@ -106,7 +116,8 @@ object PositionDeletes {
       requiredSchema = schema,
       filters = filters,
       options = Map(FileFormat.OPTION_RETURNING_BATCH -> batches.toString),
-      hadoopConf = spark.sessionState.newHadoopConfWithOptions(Map.empty))
+      hadoopConf = spark.sessionState.newHadoopConfWithOptions(
+        Map("spark.sql.parquet.fieldId.read.enabled" -> "true")))
 
   /** The ORC twin of [[parquetReader]], unfiltered. */
   def orcReader(spark: SparkSession, schema: StructType): Read =
@@ -158,6 +169,42 @@ object PositionDeletes {
         else if (isOrcFile(path)) rows(orc, whole)
         else rows(parquet, whole)
     }
+  }
+
+  /** The (file_path, pos, delete_file_path) tuples of the position-delete
+    * `entries`, deletion vectors included. One task per entry reads its
+    * file through [[fileRows]] with the manifest format and size, or its
+    * vector through `Puffin.readDV`, so the driver opens nothing.
+    * `file_path` is stripped of its `file:` scheme, the form
+    * [[DeleteFileCache]] keys by; `delete_file_path` is the manifest's. */
+  def tuples(spark: SparkSession, entries: Seq[ManifestEntry]): DataFrame = {
+    val files = entries.map { e =>
+      val f = e.dataFile
+      (ManifestAvro.stripFileScheme(f.filePath), f.fileSizeInBytes, f.fileFormat, f.filePath,
+        f.contentOffset.map(off => (off, f.contentSizeInBytes.getOrElse(
+          throw new IllegalStateException(s"DV ${f.filePath} missing content size")),
+          ManifestAvro.stripFileScheme(f.referencedDataFile.getOrElse(
+            throw new IllegalStateException(s"DV ${f.filePath} missing referenced file"))))))
+    }
+    val (parquet, orc) = readers(spark, files.collect { case (p, size, fmt, _, None) => (p, size, fmt) })
+    val rows = spark.sparkContext.parallelize(files, math.max(1, files.size)).flatMap {
+      case (path, size, fmt, manifestPath, dv) =>
+        val from = UTF8String.fromString(manifestPath)
+        dv match {
+          case Some((off, len, target)) =>
+            val t = UTF8String.fromString(target)
+            Puffin.readDV(path, off, len).iterator().asScala
+              .map(pos => InternalRow(t, pos.longValue, from))
+          case None =>
+            val scheme = UTF8String.fromString("file:")
+            fileRows(parquet, orc, Schema, path, size, fmt).filter(!_.isNullAt(0)).map { r =>
+              val p = r.getUTF8String(0)
+              InternalRow(if (p.startsWith(scheme)) UTF8String.fromString(
+                ManifestAvro.stripFileScheme(p.toString)) else p.clone(), r.getLong(1), from)
+            }
+        }
+    }
+    GraftColumnBridge.ofInternalRows(spark, rows, TupleSchema)
   }
 
   /** True when the file starts with the ORC magic `ORC` (fallback only).
@@ -226,21 +273,136 @@ final case class PositionDeleteMask(left: Expression, right: Expression,
       ${p.code}
       ${r.code}
       boolean ${ev.value} = !${p.isNull} && $self.deleted(${p.value}, ${r.value});""",
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
+      isNull = FalseLiteral)
   }
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): PositionDeleteMask = copy(left = newLeft, right = newRight)
 }
 
-/** Per-executor cache of PARSED delete-file content. A position-delete
-  * file covers many data files, and every data SPLIT used to re-read and
-  * re-decompress the whole delete file just to pick out its own rows —
-  * O(splits × delete-file bytes) decompression, the dominant cost of a
-  * wide MoR scan once the delete plane is zstd (the declared default).
-  * Parsing once per executor JVM makes it O(delete files): the natural
-  * cluster shape, where each executor touches a delete file once and
-  * serves all its local splits from the parsed form.
+/** Merge-on-read equality deletes as an in-task row test: a row is
+  * deleted when its key columns equal a row of a visible
+  * equality-delete file, compared as Spark's `<=>` compares them (nulls
+  * match, `-0.0` equals `0.0`, NaN equals NaN). Keys are compared after
+  * initial-defaults and identity constants are in place. The one
+  * implementation behind `ScanBuilder.toDF` (through
+  * [[EqualityDeleteMask]]), the V2 connector's reader and the changelog;
+  * each file's keys are parsed once per executor JVM
+  * ([[DeleteFileCache]]) through [[PositionDeletes.fileRows]]. */
+object EqualityDeletes {
+  import PositionDeletes.Read
+
+  /** One equality-delete file: (path without scheme, size, key column
+    * names, manifest format). */
+  type File = (String, Long, Seq[String], String)
+
+  /** The key readers of a scan's equality-delete files, per key-column
+    * list: the key schema and the (parquet, ORC) readers. */
+  final case class Readers(schemas: Map[Seq[String], StructType],
+      parquet: Map[Seq[String], Read], orc: Map[Seq[String], Read])
+
+  /** `e` as a [[File]], its key columns named through `nameOf`. */
+  def file(e: ManifestEntry, nameOf: Int => Option[String]): File = {
+    val cols = e.dataFile.equalityIds.flatMap(nameOf(_))
+    require(cols.size == e.dataFile.equalityIds.size,
+      s"equality delete ${e.dataFile.filePath} references unknown field ids")
+    (ManifestAvro.stripFileScheme(e.dataFile.filePath), e.dataFile.fileSizeInBytes, cols,
+      e.dataFile.fileFormat)
+  }
+
+  /** The equality deletes visible to data of sequence number `dataSeq`:
+    * those with dataSeq < deleteSeq. */
+  def applicable(dataSeq: Long, eqDeletes: Seq[ManifestEntry],
+      nameOf: Int => Option[String]): Seq[File] =
+    eqDeletes.filter(_.sequenceNumber.getOrElse(0L) > dataSeq).map(file(_, nameOf))
+
+  /** The key readers `files` need, their key fields from `fieldOf`: a
+    * field carrying a field id reads the delete file's column by id, so a
+    * key column renamed after the delete was written still matches. Each
+    * container reader is built only when some file's format needs it:
+    * every build broadcasts the session's Hadoop conf. */
+  def readers(spark: SparkSession, files: Seq[File], fieldOf: String => StructField): Readers = {
+    val byCols = files.groupBy(_._3)
+    val schemas = byCols.map { case (cols, _) => cols -> StructType(cols.map(fieldOf)) }
+    def slots(name: String, needs: ((Boolean, Boolean)) => Boolean)(
+        build: StructType => Read): Map[Seq[String], Read] =
+      byCols.map { case (cols, fs) =>
+        cols -> (if (fs.exists(f => needs(PositionDeletes.readersFor(f._4)))) build(schemas(cols))
+          else PositionDeletes.unbuilt(cols.mkString(s"$name(", ",", ")")))
+      }
+    Readers(schemas,
+      slots("readEqDeletes", _._1)(PositionDeletes.parquetReader(spark, _, Nil)),
+      slots("readEqDeletesOrc", _._2)(PositionDeletes.orcReader(spark, _)))
+  }
+
+  /** Whether a row of `rowSchema` is deleted by any of `files`. */
+  def test(files: Seq[File], rowSchema: StructType, readers: Readers): InternalRow => Boolean = {
+    val checks = files.groupBy(_._3).toSeq.map { case (cols, fs) =>
+      val keySchema = readers.schemas(cols)
+      val keySets = fs.map { case (path, size, _, fmt) =>
+        DeleteFileCache.eqKeysFor(path, size, keySchema.fields.map(_.toDDL).toSeq, { () =>
+          val key = keyOf(keySchema, keySchema.fields.indices)
+          PositionDeletes.fileRows(readers.parquet(cols), readers.orc(cols), keySchema,
+            path, size, fmt).map(r => key(r).copy())
+        })
+      }
+      val key = keyOf(rowSchema, cols.map(rowSchema.fieldIndex))
+      (row: InternalRow) => { val k = key(row); keySets.exists(_.contains(k)) }
+    }
+    row => checks.exists(_(row))
+  }
+
+  /** The key at `ordinals` of `schema`'s rows as an `UnsafeRow`, whose
+    * byte equality is `<=>` once floating point is normalised. */
+  private def keyOf(schema: StructType, ordinals: Seq[Int]): UnsafeProjection =
+    UnsafeProjection.create(ordinals.map { i =>
+      val ref = BoundReference(i, schema(i).dataType, nullable = true)
+      schema(i).dataType match {
+        case FloatType | DoubleType => NormalizeNaNAndZero(ref)
+        case _ => ref
+      }
+    })
+
+  /** True for rows `files` delete, over the columns they key on. */
+  def mask(files: Seq[File], readers: Readers): Column =
+    GraftColumnBridge.column(EqualityDeleteMask(GraftColumnBridge.expression(
+      struct(files.flatMap(_._3).distinct.map(col): _*)), files, readers))
+}
+
+/** `graft_equality_deletes(keys)`: whether `files` delete a row, over a
+  * struct of the key columns they name. */
+final case class EqualityDeleteMask(child: Expression, files: Seq[EqualityDeletes.File],
+    readers: EqualityDeletes.Readers) extends UnaryExpression {
+  override def dataType: DataType = BooleanType
+  override def nullable: Boolean = false
+  override def prettyName: String = "graft_equality_deletes"
+  override def toString: String = s"$prettyName($child, ${files.size} files)"
+
+  @transient private[this] lazy val test =
+    EqualityDeletes.test(files, child.dataType.asInstanceOf[StructType], readers)
+
+  def deleted(keys: InternalRow): Boolean = test(keys)
+
+  override def eval(input: InternalRow): Any = deleted(child.eval(input).asInstanceOf[InternalRow])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("equalityDeletes", this)
+    val k = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${k.code}
+      boolean ${ev.value} = $self.deleted(${k.value});""", isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(c: Expression): EqualityDeleteMask = copy(child = c)
+}
+
+/** Per-executor cache of PARSED delete-file content: position-delete
+  * files as per-data-file bitmaps, equality-delete files as key sets.
+  * A position-delete file covers many data files, and an equality-delete
+  * file every older data file, so each split would otherwise re-read and
+  * re-decompress it. Parsing once per executor JVM makes that
+  * O(delete files): each executor holds the positions and keys of the
+  * delete files its tasks touched, up to the cap below.
   *
   * Keyed by (path, length) — table files are immutable, so a same-path
   * rewrite (different length) can never serve stale positions; identical
@@ -305,7 +467,8 @@ object DeleteFileCache {
 
   /** The delete-key set of an equality-delete file, parsed once per JVM
     * (safe to share: the set is read-only after construction and safely
-    * published through the map). `parse` yields projected UnsafeRows. */
+    * published through the map). `parse` yields projected UnsafeRows of
+    * the key columns `cols` describes (name and type). */
   def eqKeysFor(path: String, size: Long, cols: Seq[String],
       parse: () => Iterator[UnsafeRow]): mutable.HashSet[UnsafeRow] = {
     val key = s"$path#$size#${cols.mkString(",")}"

@@ -19,7 +19,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
-import graft.ice.{DeleteFileCache, FileDeletes, FileScanTask, IceTable, PositionDeletes, ScanBuilder}
+import graft.ice.{EqualityDeletes, FileDeletes, FileScanTask, IceTable, PositionDeletes, ScanBuilder}
 import graft.ice.expr.{Expr => IceExpr}
 import graft.ice.manifest.{FileContent, ManifestAvro, ManifestEntry}
 import graft.ice.transform.{BucketTransform, DayTransform, HourTransform, IdentityTransform, MonthTransform, TruncateTransform, YearTransform}
@@ -61,9 +61,8 @@ import graft.ice.types.{SparkConv, TimestampT, TimestampTzT}
   * counting against the raw row stream; parquet predicate pushdown is
   * disabled for delete-bearing files so positions stay exact), through
   * the same `PositionDeletes` code and visibility rule `ScanBuilder.toDF`
-  * uses. Equality deletes are applied as an executor-side hash-set
-  * anti-filter over the delete files' key columns, with toDF's
-  * sequence-number rule (deleteSeq > dataSeq). */
+  * uses. Equality deletes test each row's key columns against the
+  * delete files' key sets through the same `EqualityDeletes` code. */
 final class GraftSparkTable(val table: IceTable, catalogName: String,
     identName: String, warehouse: String,
     pinnedSnapshotId: Option[Long] = None) extends Table with SupportsRead
@@ -794,17 +793,10 @@ private[connector] final class GraftBatchScan(table: IceTable,
     val eqDeletes = deleteEntries.filter(_.dataFile.content == FileContent.EqualityDeletes)
 
     def deletesFor(t: FileScanTask): GraftDeleteSpec = {
-      val pos = PositionDeletes.applicable(t, posDeletes)
-      val eqs = eqDeletes.filter(_.sequenceNumber.getOrElse(0L) > t.sequenceForVisibility)
-        .map { e =>
-          val cols = e.dataFile.equalityIds.flatMap(id =>
-            table.schema.findFieldById(id).map(_.name))
-          require(cols.size == e.dataFile.equalityIds.size,
-            s"equality delete ${e.dataFile.filePath} references unknown field ids")
-          (GraftConnectorUtil.normPath(e.dataFile.filePath),
-            e.dataFile.fileSizeInBytes, cols, e.dataFile.fileFormat)
-        }
-      GraftDeleteSpec(pos.dvs, pos.files, eqs)
+      val pos = PositionDeletes.applicable(GraftConnectorUtil.normPath(t.file.filePath),
+        t.sequenceForVisibility, posDeletes)
+      GraftDeleteSpec(pos.dvs, pos.files, EqualityDeletes.applicable(
+        t.sequenceForVisibility, eqDeletes, table.schema.findFieldById(_).map(_.name)))
     }
 
     val dataDirPrefixes = table.dataRoots.map(GraftConnectorUtil.normPath)
@@ -1031,11 +1023,11 @@ private[connector] final class GraftBatchScan(table: IceTable,
     val splits = plan.splits
     // the readers snapshot their session's conf at build time, so build
     // them under the table's scan session: its read.*.vectorization.*
-    // settings then reach this scan and never the caller's shared session
+    // settings then reach this scan and never the caller's shared session.
+    // Our own files resolve columns by field id (rename-safe), through the
+    // readers' own Hadoop conf; files without ids (addFiles-registered)
+    // read by current name
     val spark = IceTable.scanSession(SparkSession.active, table.properties)
-    // field-id column resolution for our own files (rename-safe); files
-    // without ids (addFiles-registered) read by current name
-    spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
 
     // `_file` / `_last_updated_sequence_number` are metadata columns
     // (SupportsMetadataColumns): they never reach the parquet reader —
@@ -1046,26 +1038,18 @@ private[connector] final class GraftBatchScan(table: IceTable,
     val dataRequired = StructType(required.fields.filterNot(f =>
       f.name == "_file" || f.name == "_last_updated_sequence_number"))
 
-    val eqCols: Seq[String] = splits.flatMap(_.deletes.eqDeletes.flatMap(_._3)).distinct
+    val eqFiles = splits.flatMap(_.deletes.eqDeletes).distinct
     val fullByName = SparkConv.toSpark(table.schema).fields.map(f => f.name -> f).toMap
     // the executor must SEE equality-delete key columns even when the
-    // query pruned them away; read them, anti-filter, then project back
-    val extraEq = eqCols.filterNot(c => dataRequired.fieldNames.contains(c))
+    // query pruned them away; read them, test them, then project back
+    val extraEq = eqFiles.flatMap(_._3).distinct
+      .filterNot(c => dataRequired.fieldNames.contains(c))
       .flatMap(fullByName.get)
     val readSchemaIds = StructType(dataRequired.fields ++ extraEq)
     val plain = StructType(readSchemaIds.fields.map(_.copy(metadata = Metadata.empty)))
 
     def mkReader(schema: StructType, filters: Seq[V1Filter]) =
       PositionDeletes.parquetReader(spark, schema, filters)
-    // ORC twin, for delete planes written under
-    // write.delete.format.default=orc
-    def mkOrcReader(schema: StructType) = PositionDeletes.orcReader(spark, schema)
-
-    val posDeleteSchema = PositionDeletes.Schema
-    val eqSchemas: Map[Seq[String], StructType] =
-      splits.flatMap(_.deletes.eqDeletes.map(_._3)).distinct
-        .map(cols => cols -> StructType(cols.map(c =>
-          fullByName(c).copy(metadata = Metadata.empty)))).toMap
 
     // build only the reader slots the planned splits can reach: every
     // reader build broadcasts the session's Hadoop conf, so a delete-free
@@ -1076,12 +1060,8 @@ private[connector] final class GraftBatchScan(table: IceTable,
     def slot(name: String, needed: Boolean)(build: => Read): Read =
       if (needed) build else PositionDeletes.unbuilt(name)
     val dataCombos = splits.map(s => (s.useFieldIds, s.deletes.hasPositional)).toSet
-    val posNeeds = splits.flatMap(_.deletes.posDeleteFiles)
-      .map(f => PositionDeletes.readersFor(f._3))
-    val eqNeeds: Map[Seq[String], Seq[(Boolean, Boolean)]] =
-      splits.flatMap(_.deletes.eqDeletes).groupBy(_._3).map { case (cols, fs) =>
-        cols -> fs.map(f => PositionDeletes.readersFor(f._4))
-      }
+    val (readPosDeletes, readPosDeletesOrc) =
+      PositionDeletes.readers(spark, splits.flatMap(_.deletes.posDeleteFiles))
 
     // v3 initial-defaults as catalyst values keyed by field id, with the
     // ordinal each occupies in the read schema (absent when the query
@@ -1144,20 +1124,10 @@ private[connector] final class GraftBatchScan(table: IceTable,
         mkReader(plain, v1Filters.toSeq)),
       readPlainRaw = slot("readPlainRaw", dataCombos((false, true)))(
         mkReader(plain, Nil)),
-      readPosDeletes = slot("readPosDeletes", posNeeds.exists(_._1))(
-        mkReader(posDeleteSchema, Nil)),
-      readEqDeletes = eqSchemas.map { case (cols, s) =>
-        cols -> slot(cols.mkString("readEqDeletes(", ",", ")"),
-          eqNeeds(cols).exists(_._1))(mkReader(s, Nil))
-      },
-      readPosDeletesOrc = slot("readPosDeletesOrc", posNeeds.exists(_._2))(
-        mkOrcReader(posDeleteSchema)),
-      readEqDeletesOrc = eqSchemas.map { case (cols, s) =>
-        cols -> slot(cols.mkString("readEqDeletesOrc(", ",", ")"),
-          eqNeeds(cols).exists(_._2))(mkOrcReader(s))
-      },
+      readPosDeletes = readPosDeletes,
+      readPosDeletesOrc = readPosDeletesOrc,
+      eqReaders = EqualityDeletes.readers(spark, eqFiles, fullByName),
       readSchema = readSchemaIds,
-      eqSchemas = eqSchemas,
       outputTemplate = outputTemplate,
       defaultsFill = defaultsFill,
       constSlots = constSlots,
@@ -1399,11 +1369,9 @@ private[connector] final case class GraftReaderFactory(
     readPlain: PartitionedFile => Iterator[InternalRow],
     readPlainRaw: PartitionedFile => Iterator[InternalRow],
     readPosDeletes: PartitionedFile => Iterator[InternalRow],
-    readEqDeletes: Map[Seq[String], PartitionedFile => Iterator[InternalRow]],
     readPosDeletesOrc: PartitionedFile => Iterator[InternalRow],
-    readEqDeletesOrc: Map[Seq[String], PartitionedFile => Iterator[InternalRow]],
+    eqReaders: EqualityDeletes.Readers,
     readSchema: StructType,
-    eqSchemas: Map[Seq[String], StructType],
     // output field -> read-schema ordinal, or -1 for the `_file`
     // metadata column (filled with the split's path); None = identity
     outputTemplate: Option[Array[Int]],
@@ -1418,6 +1386,10 @@ private[connector] final case class GraftReaderFactory(
     columnar: Boolean = false) extends PartitionReaderFactory {
 
   override def supportColumnarReads(p: InputPartition): Boolean = columnar
+
+  /** The equality-delete key readers, by key-column list. */
+  def readEqDeletes: Map[Seq[String], PartitionedFile => Iterator[InternalRow]] = eqReaders.parquet
+  def readEqDeletesOrc: Map[Seq[String], PartitionedFile => Iterator[InternalRow]] = eqReaders.orc
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     readerOf(splitsOf(p).flatMap(rowsOf))
@@ -1458,30 +1430,7 @@ private[connector] final case class GraftReaderFactory(
       PositionDeletes.deletedPositions(split.path,
         FileDeletes(del.dvs, del.posDeleteFiles), readPosDeletes, readPosDeletesOrc)
 
-    // equality-delete keys: one hash set per delete schema, matched via
-    // UnsafeRow bytes (null-safe by construction: null bits participate)
-    lazy val eqFilters: Seq[InternalRow => Boolean] =
-      del.eqDeletes.groupBy(_._3).map { case (cols, files) =>
-        val delSchema = eqSchemas(cols)
-        // per-file key sets parsed once per executor JVM (cache); the
-        // split-level union is cheap set containment over shared sets
-        val keySets = files.map { case (path, size, _, fmt) =>
-          DeleteFileCache.eqKeysFor(path, size, cols, { () =>
-            val delProj = UnsafeProjection.create(delSchema.fields.indices.map(i =>
-              BoundReference(i, delSchema.fields(i).dataType, nullable = true)))
-            PositionDeletes.fileRows(readEqDeletes(cols), readEqDeletesOrc(cols),
-              delSchema, path, size, fmt)
-              .map(r => delProj(r).copy())
-          })
-        }
-        val dataIdx = cols.map(c => readSchema.fieldIndex(c))
-        val dataProj = UnsafeProjection.create(dataIdx.map(i =>
-          BoundReference(i, readSchema.fields(i).dataType, nullable = true)))
-        (row: InternalRow) => {
-          val k = dataProj(row)
-          !keySets.exists(_.contains(k))
-        }
-      }.toSeq
+    lazy val eqDeleted = EqualityDeletes.test(del.eqDeletes, readSchema, eqReaders)
 
     val needExactPositions = del.hasPositional
     val read =
@@ -1529,9 +1478,7 @@ private[connector] final case class GraftReaderFactory(
           })
         it0.map(proj.apply)
       }
-    val it1 =
-      if (del.eqDeletes.isEmpty) itD
-      else itD.filter(r => eqFilters.forall(f => f(r)))
+    val it1 = if (del.eqDeletes.isEmpty) itD else itD.filterNot(eqDeleted)
     outputTemplate match {
       case None => it1
       case Some(tpl) =>

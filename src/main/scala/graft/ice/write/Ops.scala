@@ -1534,8 +1534,8 @@ final class Compaction(table: IceTable, spark: SparkSession) {
     * them for a deletion vector (its referenced file) and for a delete
     * file whose `file_path` lower and upper bounds are equal (the
     * writers store untruncated paths). Only delete files whose bounds
-    * span several paths or are missing are read, in one distributed
-    * distinct whose output is bounded by the live file count. */
+    * span several paths or are missing are read, one task per file, in
+    * one distinct whose output is bounded by the live file count. */
   private[ice] def positionDeleteTargets(posDeletes: Seq[ManifestEntry]): Set[String] = {
     def onePath(e: ManifestEntry): Option[String] =
       (e.dataFile.lowerBounds.get(RowDelete.PathBoundFieldId),
@@ -1548,9 +1548,9 @@ final class Compaction(table: IceTable, spark: SparkSession) {
     val (single, spanning) = files.partition(onePath(_).isDefined)
     (dvs.flatMap(_.dataFile.referencedDataFile) ++ single.flatMap(onePath))
       .map(ManifestAvro.stripFileScheme).toSet ++
-      graft.ice.IceTable.readPositionDeleteRows(spark, spanning)
-        .map(_.select("__dfile").distinct().collect().map(_.getString(0)).toSet)
-        .getOrElse(Set.empty[String])
+      (if (spanning.isEmpty) Set.empty[String]
+        else graft.ice.PositionDeletes.tuples(spark, spanning).select("file_path").distinct()
+          .collect().map(_.getString(0)).toSet)
   }
 
   /** Rewrite ALL live data files clustered along a Z-order curve over
@@ -1626,8 +1626,7 @@ final class Compaction(table: IceTable, spark: SparkSession) {
     if (posParquet.isEmpty) return snap
     val liveFiles = table.newScan().planFiles()
       .map(t => ManifestAvro.stripFileScheme(t.file.filePath)).toDF("__live")
-    val dels = graft.ice.IceTable.readPositionDeleteRows(spark, posParquet).get
-      .select(col("__dfile").as("file_path"), col("__dpos").as("pos"))
+    val dels = graft.ice.PositionDeletes.tuples(spark, posParquet).select("file_path", "pos")
       .distinct() // overlapping merges may have deleted the same position twice
       .join(broadcast(liveFiles), col("file_path") === col("__live"), "left_semi")
     val entries = RowDelete.writePositionDeleteEntries(table, spark, dels,

@@ -15,6 +15,12 @@ object GraftColumnBridge {
   def ofRows(session: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession], plan)
+  /** A DataFrame over catalyst rows of `schema` (internalCreateDataFrame
+    * is private[sql]): no per-row conversion from external types. */
+  def ofInternalRows(session: SparkSession,
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    session.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
   /** Clone a session: same SparkContext, full copy of session state
     * including runtime conf (private[sql] in Spark 4). Used to scope a
     * table's reader-conf overrides to one scan without mutating the

@@ -106,6 +106,28 @@ class FixtureSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(err.getSuppressed.toSeq == Seq(dropError))
   }
 
+  test("a sidecar whose gate fails is deleted with its checkpoint, so the next call runs the gate") {
+    val root = java.nio.file.Files.createTempDirectory("sidecar")
+    val out = root.resolve("_out").toString
+    val ckpt = root.resolve("_ckpt").toString
+    def exists(d: String) = java.nio.file.Files.exists(java.nio.file.Paths.get(d))
+    val runs = new AtomicInteger
+    def attempt(gatePasses: Boolean): String =
+      Tables.sidecar(out, ckpt) {
+        runs.incrementAndGet()
+        spark.range(rows).write.parquet(out)
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(ckpt, "offsets"))
+        require(gatePasses, "sidecar gate failed")
+      }
+    val err = intercept[IllegalArgumentException](attempt(gatePasses = false))
+    assert(err.getMessage.contains("sidecar gate failed"))
+    assert(!exists(out) && !exists(ckpt))
+    assert(attempt(gatePasses = true) == out)
+    assert(runs.get == 2 && spark.read.parquet(out).count() == rows)
+    attempt(gatePasses = false) // the output exists: no run, no gate
+    assert(runs.get == 2)
+  }
+
   test("memoised builds run once per key per JVM; a failed one runs again") {
     val runs = new AtomicInteger
     val k1 = uniqueKey("a")

@@ -94,7 +94,7 @@ class CompactionDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     * distributed distinct over every non-DV delete file's rows. */
   private def readEveryDeleteFile(entries: Seq[ManifestEntry]): Set[String] =
     entries.flatMap(_.dataFile.referencedDataFile).map(ManifestAvro.stripFileScheme).toSet ++
-      IceTable.readPositionDeleteRows(spark, entries.filter(_.dataFile.contentOffset.isEmpty))
+      DeleteJoins.readPositionDeleteRows(spark, entries.filter(_.dataFile.contentOffset.isEmpty))
         .map(_.select("__dfile").distinct().collect().map(_.getString(0)).toSet)
         .getOrElse(Set.empty[String])
 

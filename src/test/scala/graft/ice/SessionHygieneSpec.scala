@@ -13,9 +13,11 @@ import graft.ice.types._
 
 /** Table operations leave the caller's session conf as they found it:
   * write settings ride in each write's own job conf and field-id reads
-  * in each relation's options, never in `spark.conf`, which other users
-  * of a shared session see. */
+  * in each relation's options or each connector reader's Hadoop conf,
+  * never in `spark.conf`, which other users of a shared session see. */
 class SessionHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private lazy val warehouse = java.nio.file.Files.createTempDirectory("hygiene").toString
 
   /** The session, and its conf before any table operation ran on it. */
   private lazy val (spark, initial) = {
@@ -24,6 +26,8 @@ class SessionHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = SparkSession.builder()
       .master("local[2]")
       .config("spark.sql.shuffle.partitions", "2")
+      .config("spark.sql.catalog.ice", "graft.ice.connector.GraftCatalogPlugin")
+      .config("spark.sql.catalog.ice.warehouse", warehouse)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     (s, s.conf.getAll)
@@ -36,7 +40,7 @@ class SessionHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
     NestedField(2, "ts", TimestampTzT, required = false)))
 
   private lazy val table = {
-    val cat = new DirCatalog(java.nio.file.Files.createTempDirectory("hygiene").toString)
+    val cat = new DirCatalog(warehouse)
     val t = IceTable.create(cat, TableIdentifier.parse("db.t"), schema,
       PartitionSpec(0, IndexedSeq(PartitionField(2, 1000, "ts_day", DayTransform))),
       properties = Map("format-version" -> "2"))
@@ -74,5 +78,10 @@ class SessionHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("rewriteDataFiles leaves spark.conf unchanged") {
     unchanged(_.compact(spark).rewriteDataFiles(smallFileThreshold = Long.MaxValue))
+  }
+
+  test("a connector SELECT leaves spark.conf unchanged") {
+    unchanged(t => assert(spark.sql("SELECT count(*) FROM ice.db.t WHERE id < 100")
+      .head().getLong(0) == t.newScan().filter(E.lt("id", Literal.long(100))).toDF(spark).count()))
   }
 }
