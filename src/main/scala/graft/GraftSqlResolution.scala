@@ -31,11 +31,9 @@ import graft.ice.types.{Literal => IceLit}
   * Spark-first counterpart of the reference's catalog lookup path,
   * catalog.h:108-136, which has no query engine to hand the table to).
   *
-  * This is deliberately a RESOLUTION rule, not a DSv2 connector: the
-  * scan subtree Catalyst receives is ordinary parquet relations plus
-  * our anti-join delete shaping, so every downstream optimization
-  * (filter pushdown into the parquet scan, column pruning, AQE) applies
-  * unchanged — nothing new to teach the optimizer. */
+  * The substituted subtree is the connector's scan over the planned
+  * files, so filter pushdown into the parquet reader, column pruning and
+  * AQE apply to it as to any V2 scan. */
 final case class GraftTableResolution(session: SparkSession) extends Rule[LogicalPlan] {
 
   private val ConfKey = "spark.graft.warehouse"

@@ -3723,7 +3723,7 @@ object Fixtures {
   // S16 fixtures: tables whose data files are AVRO — one registered
   // externally (FormatRegistry avro writer + addFiles(format=AVRO)), one
   // written by the engine itself via write.format.default=avro. Both scan
-  // back through the registry's per-format dispatch.
+  // back through the connector's per-split format dispatch.
 
   def avroAdded(spark: SparkSession, sfDir: String): IceTable =
     Tables.tpch(sfDir, "region_avro") { (cat, ident) =>

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.StructType
 
 /** Scan relation fed DIRECTLY from the planned file list (path + length
   * from manifest metadata) instead of `spark.read.parquet(paths: _*)` —
-  * the data-file read of every `ScanBuilder.toDF`.
+  * the exact field-id read of a merge-on-read delete's match set.
   *
   * The path-list API builds an InMemoryFileIndex, which globs each path,
   * issues one driver-side filesystem getFileStatus per path and keeps
@@ -43,13 +43,16 @@ final class ManifestFileIndex(files: Seq[(String, Long)]) extends FileIndex {
   override def refresh(): Unit = ()
   override def sizeInBytes: Long = files.map(_._2).sum
   override def partitionSchema: StructType = new StructType()
-  override def toString: String =
-    s"ManifestFileIndex(${files.size} files, $sizeInBytes bytes)"
+  override def toString: String = ManifestFileIndex.describe(files.size, sizeInBytes)
+}
+
+object ManifestFileIndex {
+  /** How a file list fed from manifest metadata shows in a plan. */
+  def describe(files: Int, bytes: Long): String = s"ManifestFileIndex($files files, $bytes bytes)"
 }
 
 object FileListRelation {
-  /** Parquet DataFrame over an explicit file list with a known schema —
-    * how `ScanBuilder.toDF` reads every group of parquet data files.
+  /** Parquet DataFrame over an explicit file list with a known schema.
     * Columns resolve by parquet field id wherever `schema` carries ids
     * (name matching otherwise): the setting rides in the relation's own
     * options, which reach the reader's Hadoop conf, so the caller's

@@ -737,6 +737,14 @@ final class IceTable private (
     }
   }
 
+  /** Whether `t`'s file may hold rows matching `bound`, by its partition
+    * tuple and column metrics: the per-file test of [[planDataEntries]]. */
+  private[graft] def mayContain(t: FileScanTask, bound: Bound): Boolean = {
+    val spec = meta.specById(t.specId).getOrElse(PartitionSpec.unpartitioned)
+    new PartitionTupleEvaluator(spec).eval(InclusiveProjection.project(bound, spec),
+      t.file.partition) && new MetricsEvaluator().canContainRows(bound, t.file)
+  }
+
   /** Executor-side planning: one task per manifest group reads, inherits
     * and prunes entries with the SAME evaluators as the driver path (the
     * evaluator classes are plain Scala over case classes — they run
@@ -845,12 +853,13 @@ object IceTable {
     * overrides to a per-scan session means one table's batch-size choice
     * can never leak into other tables' scans or plain parquet reads, and
     * two tables' DataFrames built before either executes can't race on
-    * shared conf — the connector path gets the same isolation from its
-    * build-time conf snapshot. */
+    * shared conf — the scan's readers get the same isolation from their
+    * build-time conf snapshot. A session that already carries the
+    * overrides is its own scan session. */
   private[ice] def scanSession(spark: SparkSession,
       props: Map[String, String]): SparkSession = {
     val overrides = readVectorizationOverrides(props)
-    if (overrides.isEmpty) spark
+    if (overrides.forall { case (k, v) => spark.conf.getOption(k).contains(v) }) spark
     else {
       val scoped = org.apache.spark.sql.GraftColumnBridge.cloneSession(spark)
       overrides.foreach { case (k, v) => scoped.conf.set(k, v) }
@@ -1009,9 +1018,7 @@ final class ScanBuilder(table: IceTable) {
     * file first_row_id + position; null for pre-lineage files),
     * `_deleted` (merge-on-read deletes mark rows instead of filtering). */
   def withMetadataColumns(cols: String*): ScanBuilder = {
-    val known = Set("_file", "_pos", "_spec_id", "_partition", "_row_id",
-      "_deleted", "_last_updated_sequence_number")
-    val bad = cols.filterNot(known)
+    val bad = cols.filterNot(graft.ice.connector.GraftMetadataColumns.names)
     require(bad.isEmpty, s"unknown metadata columns: ${bad.mkString(",")}")
     metaCols = cols.toSeq
     this
@@ -1112,350 +1119,38 @@ final class ScanBuilder(table: IceTable) {
       }
   }
 
-  /** Execute as a DataFrame: Spark's vectorized parquet reader over the
-    * planned file list, with field-ID-based column resolution and the
-    * residual filter pushed into the scan by Catalyst. The residual
-    * filter's constants are passed by reference, not inlined
-    * (`ToColumn`, `ParamLiteral`): scans that differ only in their
-    * constants reuse Spark's compiled classes. Never wrap such a
-    * constant in `.cast`; the cast would fold back into an inlined
-    * literal.
+  /** Execute as a DataFrame: the connector's scan
+    * (`GraftBatchScan`) over exactly the files this builder planned,
+    * with the residual filter, the projection and the limit on top. A
+    * scan has one set of read semantics whether it comes from here or
+    * from SQL over the `ice` catalog:
     *
-    * Merge-on-read deletes: position deletes and deletion vectors filter
-    * rows inside the scan task through one per-file mask over
-    * `_metadata.file_path`/`_metadata.row_index` (`PositionDeletes`, the
-    * code the V2 connector's reader also uses), so they add no join, no
-    * shuffle and no extra job; under `_deleted` the mask marks instead
-    * of filtering. Equality deletes are a mask too (`EqualityDeletes`):
-    * each group of data files that share the same visible equality-delete
-    * set tests its rows' keys, after initial-defaults and identity
-    * constants are in place, against the delete files' key sets inside
-    * the task. A key column the projection dropped is read for the test
-    * and dropped again.
+    *  - Columns resolve by parquet field id; id-less files (addFiles,
+    *    Hive imports) resolve through `schema.name-mapping.default`, then
+    *    by current name. ORC and Avro data files read per split too.
+    *  - v3 initial-defaults, identity-partition constants and the
+    *    metadata columns (`withMetadataColumns`) are served per split.
+    *  - Merge-on-read position deletes, deletion vectors and equality
+    *    deletes are masks inside the scan task (`PositionDeletes`,
+    *    `EqualityDeletes`); under `_deleted` they mark instead of
+    *    filtering.
     *
-    * Field-ID resolution (P3): files written by this library carry parquet
-    * field ids and are matched by id (rename/evolution-safe); files
-    * registered via addFiles may lack ids and fall back to name matching
-    * (the reference's name-mapping path, name_mapping.h). Spark cannot mix
-    * both strategies in one read, so the file list splits into two scans
-    * union'd together — id-matched files read with the id-carrying schema,
-    * id-less files with a metadata-stripped schema (pure name matching). */
+    * The filter reaches the parquet reader as pushed filters, and its
+    * constants are passed by reference, not inlined (`ToColumn`,
+    * `ParamLiteral`): scans that differ only in their constants reuse
+    * Spark's compiled classes. Never wrap such a constant in `.cast`;
+    * the cast would fold back into an inlined literal. */
   def toDF(spark0: SparkSession): DataFrame = {
     val spark = IceTable.scanSession(spark0, table.properties)
-    val projected = scanSchema
-    val (tasks, deleteEntries) = planFilesWithDeletes()
-    if (tasks.isEmpty) {
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], SparkConv.toSpark(projected))
-    }
-    val eqDeletes = deleteEntries.filter(_.dataFile.content == FileContent.EqualityDeletes)
-    // equality-delete keys the projection dropped: read, tested, dropped
-    val eqOnly = eqDeletes.flatMap(_.dataFile.equalityIds).distinct
-      .filter(projected.findFieldById(_).isEmpty).flatMap(baseSchema.findFieldById)
-    val s = projected.copy(fields = projected.fields ++ eqOnly)
-    val sparkSchema = SparkConv.toSpark(s)
-    val plainSchema = org.apache.spark.sql.types.StructType(
-      sparkSchema.fields.map(_.copy(metadata = org.apache.spark.sql.types.Metadata.empty)))
-    // manifest-known file sizes feed ManifestFileIndex (zero driver
-    // listing or stat calls)
-    val lenByPath: Map[String, Long] = tasks.map(t =>
-      ManifestAvro.stripFileScheme(t.file.filePath) -> t.file.fileSizeInBytes).toMap
-
-    // spec name mapping (C8): id-less external files resolve their
-    // columns through schema.name-mapping.default before falling back to
-    // pure current-name matching
-    val nameMapping = table.properties.get(NameMapping.PropertyKey)
-      .map(NameMapping.fromJson)
-
-    val fileHasIds = ScanBuilder.fieldIdTest(table, spark)
-    // v3 default values in scope of this scan's projection: fields whose
-    // initial-default must surface for rows in files written before the
-    // column existed. Presence is proven per file from manifest metrics
-    // (valueCounts/columnSizes are footer-sourced and cover every column
-    // in the file) — metadata-only at any scale; metric-less legacy files
-    // fall back to one cached footer probe.
-    val defaultedFields = s.fields.filter(f =>
-      f.initialDefault.isDefined && f.fieldType.isInstanceOf[IcePrimitive])
-    def absentDefaulted(t: FileScanTask, p: String): Set[Int] =
-      if (defaultedFields.isEmpty) Set.empty
-      else {
-        val m = t.file
-        val hasMetrics = m.valueCounts.nonEmpty || m.columnSizes.nonEmpty
-        defaultedFields.collect {
-          case f if (if (hasMetrics)
-              !m.valueCounts.contains(f.id) && !m.columnSizes.contains(f.id)
-            else !ScanBuilder.footerFieldIds(p, spark).contains(f.id)) => f.id
-        }.toSet
-      }
-    def defaultLit(f: NestedField) =
-      lit(graft.ice.meta.SingleValueJson.toSparkValue(
-        f.fieldType.asInstanceOf[IcePrimitive], f.initialDefault.get))
-        .cast(SparkConv.toSparkType(f.fieldType))
-
-    // merge-on-read deletes (§2.8): every delete-bearing file maps to its
-    // visible position deletes (dataSeq <= deleteSeq), which the read
-    // masks; equality deletes (dataSeq < deleteSeq) mask each group of
-    // files below. An incremental scan planned no deletes (append-only
-    // semantics). `_deleted` switches MoR from filtering to MARKING:
-    // every row stays, with a flag saying whether a delete applies
-    // (metadata_columns.h)
-    val posDeletes = deleteEntries.filter(_.dataFile.content == FileContent.PositionDeletes)
-    val posByFile: Map[String, FileDeletes] =
-      if (posDeletes.isEmpty) Map.empty
-      else tasks.map { t =>
-        val p = ManifestAvro.stripFileScheme(t.file.filePath)
-        p -> PositionDeletes.applicable(p, t.sequenceForVisibility, posDeletes)
-      }.filterNot(_._2.isEmpty).toMap
-    // the delete-file readers, built once per scan and only for the
-    // container formats its delete files use
-    lazy val (posReadParquet, posReadOrc) =
-      PositionDeletes.readers(spark, posByFile.values.flatMap(_.files))
-    // metadata columns (P6): _file/_pos ride the parquet reader's
-    // _metadata struct; _spec_id/_partition broadcast-join a driver-built
-    // (file -> spec/partition) lookup, which is metadata-sized
-    val wantFilePos = metaCols.nonEmpty
-    val wantDeleted = metaCols.contains("_deleted")
-    // columns every read carries beside the schema's: the file and
-    // position for metadata columns, the position-delete mark for
-    // `_deleted`
-    val helperCols: Seq[Column] =
-      (if (wantFilePos) Seq(col("__file"), col("__pos")) else Nil) ++
-        (if (wantDeleted) Seq(col("__pd")) else Nil)
-
-    // per-format dispatch (S16): parquet keeps the specialized path below
-    // (field-id projection, _metadata cols); everything else reads through
-    // the FormatRegistry. _file/_pos ride the PARQUET reader's _metadata
-    // struct, so metadata columns and MoR position deletes require
-    // parquet data files — a non-parquet file in such a scan fails loudly.
-    def readPaths(ts: Seq[FileScanTask]): DataFrame =
-      ts.groupBy(_.file.fileFormat.toUpperCase(java.util.Locale.ROOT))
-        .toSeq.sortBy(_._1).map {
-          case ("PARQUET", pts) => readParquetPaths(pts)
-          case (fmt, fts) =>
-            require(!wantFilePos && !fts.exists(t =>
-                posByFile.contains(ManifestAvro.stripFileScheme(t.file.filePath))),
-              s"metadata columns and position deletes require parquet data files; got $fmt")
-            // sparkSchema keeps field-id metadata so the Avro reader can
-            // resolve columns by id (rename-safe); id-less files fall back
-            // to the table's name mapping, then current names. BY-NAME
-            // formats (ORC carries no field ids) additionally get every
-            // name each field id carried across SCHEMA HISTORY, so rename
-            // evolution resolves old-name files instead of nulling the
-            // column (metadata-sized: schemas live in table metadata)
-            val explicitNm = nameMapping.map(nm => nm.fields.flatMap(mf =>
-              mf.fieldId.map(id => id.toLong -> mf.names)).toMap)
-              .getOrElse(Map.empty)
-            val currentNames = s.fields.map(f => f.id -> f.name).toMap
-            val historicalNm: Map[Long, Seq[String]] =
-              table.metadata.schemas.flatMap(_.fields)
-                .groupBy(_.id)
-                .collect { case (id, fs) if currentNames.contains(id) =>
-                  id.toLong -> fs.map(_.name).distinct.filterNot(_ == currentNames(id))
-                }
-                .filter(_._2.nonEmpty).toMap
-            val mergedNm = (explicitNm.keySet ++ historicalNm.keySet).map(id =>
-              id -> (explicitNm.getOrElse(id, Nil) ++ historicalNm.getOrElse(id, Nil)).distinct)
-              .toMap
-            val read = FormatRegistry.reader(fmt)(spark, sparkSchema,
-              fts.map(t => ManifestAvro.stripFileScheme(t.file.filePath)), mergedNm)
-            if (wantDeleted) read.withColumn("__pd", lit(false)) else read
-        }.reduce(_ unionByName _)
-
-    def readParquetPaths(ts: Seq[FileScanTask]): DataFrame = {
-      val (internalPairs, externalPairs) =
-        ts.map(t => (t, ManifestAvro.stripFileScheme(t.file.filePath)))
-          .partition { case (t, p) => fileHasIds(t, p) }
-      def read(schema: org.apache.spark.sql.types.StructType, ps: Seq[String]) = {
-        // the file list and sizes come from manifest metadata
-        // (ManifestFileIndex): no glob, no per-path driver stat, no
-        // path-list plan
-        val base = FileListRelation.parquet(spark, ps.map(p => p -> lenByPath(p)), schema)
-        val refs = ps.flatMap(p => posByFile.get(p).map(p -> _)).toMap
-        val mask = Option.when(refs.nonEmpty)(PositionDeletes.mask(
-          col("_metadata.file_path"), col("_metadata.row_index"), refs,
-          posReadParquet, posReadOrc))
-        val kept = mask match {
-          case Some(m) if !wantDeleted => base.filter(!m)
-          case _ => base
-        }
-        val extra =
-          (if (wantFilePos) Seq(FilePaths.column(col("_metadata.file_path")).as("__file"),
-            col("_metadata.row_index").as("__pos")) else Nil) ++
-            (if (wantDeleted) Seq(mask.getOrElse(lit(false)).as("__pd")) else Nil)
-        if (extra.isEmpty) kept else kept.select(col("*") +: extra: _*)
-      }
-      def readExternal(ps: Seq[String]): DataFrame = nameMapping match {
-        case None if defaultedFields.isEmpty => read(plainSchema, ps)
-        case None =>
-          // no name mapping, but defaults exist: group by footer column
-          // set so files that physically lack a defaulted column surface
-          // its initial-default instead of null
-          ps.groupBy(p => ScanBuilder.footerColumns(p, spark)).map {
-            case (fileCols, files) =>
-              val present = plainSchema.fields.toSeq.zip(s.fields)
-                .filter { case (sf, f) =>
-                  fileCols.contains(sf.name) || f.initialDefault.isEmpty }
-              val base = read(org.apache.spark.sql.types.StructType(
-                present.map(_._1)), files)
-              base.select(plainSchema.fields.toSeq.zip(s.fields).map {
-                case (sf, f) =>
-                  if (!fileCols.contains(sf.name) && f.initialDefault.isDefined)
-                    defaultLit(f).as(sf.name)
-                  else col(sf.name)
-              } ++ helperCols: _*)
-          }.reduce(_ unionByName _)
-        case Some(nm) =>
-          // group files by their footer column set; within a group each
-          // target field reads from the first mapped name present
-          ps.groupBy(p => ScanBuilder.footerColumns(p, spark)).map {
-            case (fileCols, files) =>
-              val srcFor = plainSchema.fields.toSeq.zip(s.fields).map {
-                case (sf, f) =>
-                  val candidates = nm.namesFor(f.id) :+ f.name
-                  (sf, f, candidates.find(fileCols.contains))
-              }
-              val readSchema = org.apache.spark.sql.types.StructType(
-                srcFor.collect { case (sf, _, Some(src)) => sf.copy(name = src) })
-              val base = read(readSchema, files)
-              base.select(srcFor.map {
-                case (sf, _, Some(src)) => col(src).as(sf.name)
-                case (sf, f, None) if f.initialDefault.isDefined =>
-                  defaultLit(f).as(sf.name)
-                case (sf, _, None) => lit(null).cast(sf.dataType).as(sf.name)
-              } ++ helperCols: _*)
-          }.reduce(_ unionByName _)
-      }
-      // id-carrying files group by which defaulted fields they predate
-      // (normally one or two groups — before/after the ADD COLUMN); each
-      // group reads without the absent columns, then injects the
-      // initial-default as a literal in schema position
-      def readInternal(pairs: Seq[(FileScanTask, String)]): DataFrame =
-        pairs.groupBy { case (t, p) => absentDefaulted(t, p) }.toSeq
-          .sortBy(_._1.toSeq.sorted.mkString(","))
-          .map { case (absent, grp) =>
-            val ps = grp.map(_._2)
-            if (absent.isEmpty) read(sparkSchema, ps)
-            else {
-              val readSchema = org.apache.spark.sql.types.StructType(
-                sparkSchema.fields.zip(s.fields).collect {
-                  case (sf, f) if !absent(f.id) => sf })
-              read(readSchema, ps).select(s.fields.map { f =>
-                if (absent(f.id))
-                  defaultLit(f).as(f.name, SparkConv.toSparkField(f).metadata)
-                else col(f.name)
-              } ++ helperCols: _*)
-            }
-          }.reduce(_ unionByName _)
-      // identity-partition constant injection (Iceberg's constants-map
-      // semantics): identity-partitioned columns of EXTERNAL files are
-      // served from the manifest partition tuple, never from the file —
-      // Hive-imported files don't physically contain them. Internal
-      // files keep identity source columns in-file by this engine's
-      // write convention and need no injection.
-      def identityConsts(t: FileScanTask): Seq[(String, Any)] = {
-        val mSpec = table.metadata.specById(t.specId)
-          .getOrElse(PartitionSpec.unpartitioned)
-        mSpec.fields.zipWithIndex.collect {
-          case (pf, i) if pf.transform == graft.ice.transform.IdentityTransform &&
-              i < t.file.partition.size =>
-            table.schema.findFieldById(pf.sourceId).collect {
-              case src if src.fieldType.isInstanceOf[IcePrimitive] =>
-                src.name -> Option(t.file.partition(i)).map(v =>
-                  graft.ice.meta.SingleValueJson.toSparkValue(
-                    src.fieldType.asInstanceOf[IcePrimitive], v)).orNull
-            }
-        }.flatten
-      }
-      // group key is a LENGTH-PREFIXED encoding of the constant list —
-      // injective, unlike a '/'-joined "name=value" string, where legal
-      // '/' or '=' characters inside an unescaped string partition value
-      // could collide two distinct constant sets into one group and
-      // inject the wrong partition values
-      def constsKey(t: FileScanTask): String =
-        identityConsts(t).map { case (n, v) =>
-          val vs = if (v == null) "N" else {
-            val sv = String.valueOf(v); s"V${sv.length}:$sv"
-          }
-          s"${n.length}:$n$vs"
-        }.mkString
-      def readExternalInjected(pairs: Seq[(FileScanTask, String)]): DataFrame =
-        pairs.groupBy(p => constsKey(p._1)).toSeq
-          .sortBy(_._1)
-          .map { case (_, grp) =>
-            val consts = identityConsts(grp.head._1).toMap
-            val base = readExternal(grp.map(_._2))
-            if (consts.isEmpty) base
-            else base.select(plainSchema.fields.map { sf =>
-              consts.get(sf.name) match {
-                case Some(v) => lit(v).cast(sf.dataType).as(sf.name)
-                case None => col(sf.name)
-              }
-            }.toSeq ++
-              helperCols: _*)
-          }.reduce(_ unionByName _)
-      (internalPairs, externalPairs) match {
-        case (ps, Nil) => readInternal(ps)
-        case (Nil, ps) => readExternalInjected(ps)
-        case (ips, eps) => readInternal(ips).unionByName(readExternalInjected(eps))
-      }
-    }
-
-    // data files group by the equality deletes visible to them; the
-    // group's mask filters (or, under `_deleted`, marks) its rows
-    val eqByTask = tasks.map(t => t -> EqualityDeletes.applicable(
-      t.sequenceForVisibility, eqDeletes, s.findFieldById(_).map(_.name)))
-    lazy val eqReaders = EqualityDeletes.readers(spark, eqByTask.flatMap(_._2).distinct,
-      sparkSchema(_))
-    var df = eqByTask.groupBy(_._2).map { case (eqs, group) =>
-        val g = readPaths(group.map(_._1))
-        val mask = Option.when(eqs.nonEmpty)(EqualityDeletes.mask(eqs, eqReaders))
-        (mask, wantDeleted) match {
-          case (Some(m), false) => g.filter(!m)
-          case (Some(m), true) => g.withColumn("_deleted", col("__pd") || m).drop("__pd")
-          case (None, true) => g.withColumnRenamed("__pd", "_deleted")
-          case (None, false) => g
-        }
-      }.reduce(_ unionByName _)
-    if (eqOnly.nonEmpty) df = df.drop(eqOnly.map(_.name): _*)
-    if (wantFilePos) {
-      if (metaCols.exists(Set("_spec_id", "_partition", "_row_id",
-          "_last_updated_sequence_number"))) {
-        import spark.implicits._
-        // _last_updated_sequence_number = the file's data sequence number
-        // (metadata_columns.h:95; rows carry their file's last update —
-        // row-level updates rewrite/re-sequence the file, so the file
-        // number IS the row's)
-        val lookup = tasks.map { t =>
-          (ManifestAvro.stripFileScheme(t.file.filePath), t.specId,
-            t.file.partition.map(v => if (v == null) "null" else v.toString)
-              .mkString("/"),
-            t.file.firstRowId, t.dataSequenceNumber)
-        }.toDF("__lookup_file", "_spec_id", "_partition", "__first_row_id",
-          "_last_updated_sequence_number")
-        df = df.join(broadcast(lookup), df("__file") === lookup("__lookup_file"), "left")
-          .drop("__lookup_file")
-        if (metaCols.contains("_row_id"))
-          df = df.withColumn("_row_id", col("__first_row_id") + col("__pos"))
-        df = df.drop("__first_row_id")
-      }
-      if (metaCols.contains("_file")) df = df.withColumnRenamed("__file", "_file")
-      if (metaCols.contains("_pos")) df = df.withColumnRenamed("__pos", "_pos")
-      df = df.drop("__file", "__pos")
-        .drop(Seq("_spec_id", "_partition", "_last_updated_sequence_number")
-          .filterNot(metaCols.contains): _*)
-    }
-    filterExpr.foreach { e =>
-      // bind against the full snapshot schema: filters may reference
-      // non-projected columns only if projected; keep it simple — bind on
-      // the scan schema when projected, else the table schema.
-      val bindSchema = projection match {
-        case Some(_) => s
-        case None => table.schema
-      }
-      df = df.filter(ToColumn(Binder.bind(e, bindSchema, caseSensitive)))
-    }
-    limitRows.foreach(n => df = df.limit(
-      math.min(n, Int.MaxValue.toLong).toInt))
+    val (tasks, deletes) = planFilesWithDeletes()
+    val files = graft.ice.connector.PlannedFiles(tasks, deletes,
+      resolveSnapshot().map(_.snapshotId), keepDeleted = metaCols.contains("_deleted"))
+    var df = graft.ice.connector.GraftPlannedTable.read(spark, table, baseSchema, files)
+    filterExpr.foreach(e => df = df.filter(ToColumn(Binder.bind(e, baseSchema, caseSensitive))))
+    if (projection.isDefined || metaCols.nonEmpty)
+      df = df.select((scanSchema.fields.map(f => col(s"`${f.name.replace("`", "``")}`")) ++
+        metaCols.map(col)): _*)
+    limitRows.foreach(n => df = df.limit(math.min(n, Int.MaxValue.toLong).toInt))
     df
   }
 
@@ -1556,18 +1251,25 @@ object ScanBuilder {
       } catch { case _: Exception => Set.empty }
     })
 
-  /** Cached top-level footer column names of an external parquet file
-    * (drives name-mapping resolution). */
-  private val footerColsCache = new java.util.concurrent.ConcurrentHashMap[String, Set[String]]()
-  def footerColumns(path: String, spark: SparkSession): Set[String] =
-    footerColsCache.computeIfAbsent(path, { p =>
-      try {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(p), spark.sessionState.newHadoopConf())
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getFooter.getFileMetaData.getSchema.getFields.asScala
-          .map(_.getName).toSet
-        finally r.close()
+  /** Cached top-level column names of a data file — its parquet footer's,
+    * or its ORC or Avro schema's: name-mapping resolution of id-less
+    * files, and initial-default presence where manifests hold no
+    * metrics. */
+  private val fileColsCache = new java.util.concurrent.ConcurrentHashMap[String, Set[String]]()
+  def fileColumns(path: String, format: String, spark: SparkSession): Set[String] =
+    fileColsCache.computeIfAbsent(path, { p =>
+      val conf = spark.sessionState.newHadoopConf()
+      try format.toUpperCase(java.util.Locale.ROOT) match {
+        case "AVRO" => AvroData.fieldNames(p)
+        case "ORC" =>
+          val r = org.apache.orc.OrcFile.createReader(new org.apache.hadoop.fs.Path(p),
+            org.apache.orc.OrcFile.readerOptions(conf))
+          try r.getSchema.getFieldNames.asScala.toSet finally r.close()
+        case _ =>
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p), conf))
+          try r.getFooter.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSet
+          finally r.close()
       } catch { case _: Exception => Set.empty }
     })
 }
@@ -1647,8 +1349,8 @@ final class AppendOp(table: IceTable, spark: SparkSession) {
     // field-id metadata (df.to() drops metadata, so alias explicitly —
     // parquet files carry ids only when the schema does).
     // Columns absent from the input materialize their write-default
-    // (spec v3 "write-default"; the read-side twin is initial-default
-    // injection in ScanBuilder.toDF).
+    // (spec v3 "write-default"; the read-side twin is the scan's
+    // initial-default injection).
     val inputCols = df.columns.toSet
     val aligned = df.select(schema.fields.map { f =>
       val src =
@@ -1710,7 +1412,7 @@ final class AppendOp(table: IceTable, spark: SparkSession) {
         "Hive-layout import supports identity partition specs only")
     val fmt = format.toUpperCase(java.util.Locale.ROOT)
     require(FormatRegistry.supportedFormats.contains(fmt),
-      s"addFiles: no reader registered for format '$format'")
+      s"addFiles: unsupported data file format '$format'")
     val schema = table.schema
     val commitUuid = UUID.randomUUID().toString
     val conf = spark.sessionState.newHadoopConf()

@@ -34,9 +34,9 @@ final case class FileDeletes(
 }
 
 /** Merge-on-read position deletes as a per-data-file row mask, and the
-  * one reader of delete files: `ScanBuilder.toDF` (through
-  * [[PositionDeleteMask]]), the V2 connector's reader, the changelog,
-  * the `position_deletes` metadata table and compaction all read them
+  * one reader of delete files: the scan's reader, the changelog
+  * (through [[PositionDeleteMask]]), the `position_deletes` metadata
+  * table and compaction all read them
   * here, and none of them joins a delete side. A data file's deleted
   * positions are the union of its deletion vectors and of the rows
   * naming it in the visible position-delete files; delete files are
@@ -285,9 +285,9 @@ final case class PositionDeleteMask(left: Expression, right: Expression,
   * equality-delete file, compared as Spark's `<=>` compares them (nulls
   * match, `-0.0` equals `0.0`, NaN equals NaN). Keys are compared after
   * initial-defaults and identity constants are in place. The one
-  * implementation behind `ScanBuilder.toDF` (through
-  * [[EqualityDeleteMask]]), the V2 connector's reader and the changelog;
-  * each file's keys are parsed once per executor JVM
+  * implementation behind the scan's reader and the changelog (through
+  * [[EqualityDeleteMask]]); each file's keys are parsed once per
+  * executor JVM
   * ([[DeleteFileCache]]) through [[PositionDeletes.fileRows]]. */
 object EqualityDeletes {
   import PositionDeletes.Read

@@ -6,7 +6,6 @@ import org.apache.spark.sql.connector.write.{LogicalWriteInfo, RowLevelOperation
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.ice.IceTable
-import graft.ice.types.SparkConv
 
 /** Group-based (copy-on-write) row-level operation for Spark's native
   * DML planning (`SupportsRowLevelOperations`): UPDATE / MERGE / DELETE
@@ -56,8 +55,7 @@ private[graft] final class GraftRowLevelOperation(table: IceTable,
   override def command(): RowLevelOperation.Command = cmd
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): V2ScanBuilder =
-    new GraftScanBuilder(table, SparkConv.toSpark(table.schema),
-        pruneOnly = true) {
+    new GraftScanBuilder(table, table.schema, pruneOnly = true) {
       override def build(): Scan = super.build() match {
         case b: GraftBatchScan => builtScan = b; b
         case other => other // unreachable: no aggregate/limit pushdown here

@@ -6,30 +6,35 @@ import java.util.{Locale, Map => JMap, Set => JSet}
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
+import org.apache.spark.sql.catalyst.expressions.{Add, BoundReference, Coalesce, Expression, JoinedRow, SpecificInternalRow, UnsafeProjection}
+import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.expressions.{Expressions, NullOrdering, SortDirection, SortOrder => V2SortOrder, Transform => V2Transform}
 import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder => V2ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportOrdering, SupportsReportPartitioning, SupportsReportStatistics}
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.{Filter => V1Filter}
-import org.apache.spark.sql.types.{DataType, LongType, Metadata, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType, LongType, Metadata, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
-import graft.ice.{EqualityDeletes, FileDeletes, FileScanTask, IceTable, PositionDeletes, ScanBuilder}
-import graft.ice.expr.{Expr => IceExpr}
-import graft.ice.manifest.{FileContent, ManifestAvro, ManifestEntry}
+import graft.ice.{EqualityDeletes, FileDeletes, FileScanTask, IceTable, ManifestFileIndex, PositionDeletes, ScanBuilder}
+import graft.ice.expr.{Binder, ParamLiteral, Expr => IceExpr}
+import graft.ice.manifest.{AvroData, FileContent, ManifestAvro, ManifestEntry}
+import graft.ice.meta.NameMapping
 import graft.ice.transform.{BucketTransform, DayTransform, HourTransform, IdentityTransform, MonthTransform, TruncateTransform, YearTransform}
-import graft.ice.types.{SparkConv, TimestampT, TimestampTzT}
+import graft.ice.types.{IcePrimitive, Schema, SparkConv, TimestampT, TimestampTzT}
 
-/** DataSourceV2 batch-read surface over an Ice table — the read path
-  * that lets CATALYST see the table's physical layout. The DataFrame
-  * scan (`ScanBuilder.toDF`) stays the general path (full MoR,
-  * name-mapping, metadata columns); this connector exists for what only
-  * a V2 relation can express:
+/** DataSourceV2 batch-read surface over an Ice table, and the one scan
+  * executor: SQL over `ice.*` reads through it, and so does
+  * `ScanBuilder.toDF`, which hands it the files it planned
+  * ([[GraftPlannedTable]]). Per file it applies the table's read
+  * semantics: field-id or name-mapped column resolution, v3
+  * initial-defaults, identity-partition constants, merge-on-read deletes
+  * and the metadata columns ([[GraftMetadataColumns]]), over parquet,
+  * ORC and Avro data files. Beyond that it expresses what only a V2
+  * relation can:
   *
   *  - **Storage-partitioned joins**: over a bucket spec (every field a
   *    `bucket` transform) the scan reports `KeyGroupedPartitioning` and
@@ -57,44 +62,26 @@ import graft.ice.types.{SparkConv, TimestampT, TimestampTzT}
   * seam.
   *
   * Read correctness under row-level deletes: position deletes and v3
-  * deletion vectors are applied executor-side per split (position
-  * counting against the raw row stream; parquet predicate pushdown is
-  * disabled for delete-bearing files so positions stay exact), through
-  * the same `PositionDeletes` code and visibility rule `ScanBuilder.toDF`
-  * uses. Equality deletes test each row's key columns against the
-  * delete files' key sets through the same `EqualityDeletes` code. */
+  * deletion vectors are applied executor-side per split, against each
+  * row's file position (the parquet reader's row index; ORC and Avro
+  * rows counted over whole files), through the one `PositionDeletes`
+  * implementation and visibility rule.
+  * Equality deletes test each row's key columns against the delete
+  * files' key sets through `EqualityDeletes`. */
 final class GraftSparkTable(val table: IceTable, catalogName: String,
     identName: String, warehouse: String,
     pinnedSnapshotId: Option[Long] = None) extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations
-    with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
+    with SupportsMetadataColumns {
 
-  /** `_file` as a connector metadata column (the V2 face of the
-    * DataFrame path's metadata columns, IceTable.scala): selectable in
-    * queries AND the groups handle Spark's group-based row-level
-    * rewrites key on — ReplaceData only routes rows through its
-    * data/metadata projections when the operation requests metadata
-    * attributes, so [[GraftRowLevelOperation.requiredMetadataAttributes]]
-    * names this column. */
-  override def metadataColumns(): Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
-    Array(
-      new org.apache.spark.sql.connector.catalog.MetadataColumn {
-        override def name(): String = "_file"
-        override def dataType(): DataType = StringType
-        override def isNullable: Boolean = false
-        override def comment(): String = "data file path of the row"
-      },
-      new org.apache.spark.sql.connector.catalog.MetadataColumn {
-        override def name(): String = "_last_updated_sequence_number"
-        override def dataType(): DataType = org.apache.spark.sql.types.LongType
-        // nullable: pre-lineage files (manifest entries without a
-        // sequence number) have no recorded last update — null, not 0
-        override def isNullable: Boolean = true
-        override def comment(): String =
-          "data sequence number of the commit that last updated the row"
-      })
+  /** The metadata columns: selectable in queries, and `_file` is the
+    * group handle Spark's group-based row-level rewrites key on —
+    * ReplaceData only routes rows through its data/metadata projections
+    * when the operation requests metadata attributes, so
+    * [[GraftRowLevelOperation.requiredMetadataAttributes]] names it. */
+  override def metadataColumns(): Array[MetadataColumn] = GraftMetadataColumns.columns
 
   /** Native V2 row-level DML (UPDATE / MERGE / DELETE-by-rewrite) — lets
     * Spark's own RewriteUpdateTable / RewriteMergeIntoTable /
@@ -108,13 +95,16 @@ final class GraftSparkTable(val table: IceTable, catalogName: String,
     () => new GraftRowLevelOperation(table, identName, warehouse, info.command())
 
   override def name(): String = s"$catalogName.$identName"
+
+  // time travel pins the snapshot's schema (ScanBuilder.scanSchema
+  // semantics); a current read always sees the current schema
+  private def iceSchema: Schema = pinnedSnapshotId
+    .flatMap(id => table.metadata.snapshotById(id))
+    .flatMap(_.schemaId).flatMap(table.metadata.schemaById)
+    .getOrElse(table.schema)
+
   override def schema(): StructType = {
-    // time travel pins the snapshot's schema (ScanBuilder.scanSchema
-    // semantics); a current read always sees the current schema
-    val s = pinnedSnapshotId
-      .flatMap(id => table.metadata.snapshotById(id))
-      .flatMap(_.schemaId).flatMap(table.metadata.schemaById)
-      .getOrElse(table.schema)
+    val s = iceSchema
     // advertise v3 defaults through Spark's column-default metadata so
     // INSERTs with partial column lists fill the write-default (Spark's
     // ResolveDefaultColumns reads these keys off Table.columns())
@@ -188,9 +178,88 @@ final class GraftSparkTable(val table: IceTable, catalogName: String,
     val streamOpts = new java.util.HashMap[String, String](opts)
     streamOpts.put("warehouse", warehouse)
     streamOpts.put("table", identName)
-    new GraftScanBuilder(table, schema(),
+    new GraftScanBuilder(table, iceSchema,
       Some(new CaseInsensitiveStringMap(streamOpts)), pinnedSnapshotId)
   }
+}
+
+/** The relation `ScanBuilder.toDF` reads through: the connector's scan
+  * over the files a `ScanBuilder` planned, in that builder's schema
+  * (the snapshot's under time travel). The plan arrives complete —
+  * restricted files, incremental appends, a metadata-truncated limit,
+  * join-key pruning — so the scan never answers from planning of its
+  * own. Its name says what the plan reads: the table, its file count
+  * and the delete masks that apply. */
+private[graft] final class GraftPlannedTable(table: IceTable, iceSchema: Schema,
+    files: PlannedFiles) extends Table with SupportsRead with SupportsMetadataColumns {
+
+  private lazy val label: String = {
+    def mask(content: Int, name: String) = {
+      val n = files.deletes.count(_.dataFile.content == content)
+      if (n > 0) s", $name: $n delete files" else ""
+    }
+    s"${table.ident} (${files.tasks.size} files" +
+      mask(FileContent.PositionDeletes, "graft_position_deletes") +
+      mask(FileContent.EqualityDeletes, "graft_equality_deletes") + ")"
+  }
+  override def name(): String = label
+  override def schema(): StructType = SparkConv.toSpark(iceSchema)
+  override def capabilities(): JSet[TableCapability] =
+    java.util.EnumSet.of(TableCapability.BATCH_READ)
+  override def metadataColumns(): Array[MetadataColumn] = GraftMetadataColumns.columns
+  override def newScanBuilder(opts: CaseInsensitiveStringMap): V2ScanBuilder =
+    new GraftScanBuilder(table, iceSchema, pinnedSnapshotId = files.snapshotId,
+      planned = Some(files))
+}
+
+private[graft] object GraftPlannedTable {
+  /** A DataFrame over `files`, read through the connector's scan in
+    * `schema`. */
+  def read(spark: SparkSession, table: IceTable, schema: Schema,
+      files: PlannedFiles): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.GraftColumnBridge.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+        new GraftPlannedTable(table, schema, files), None, None,
+        CaseInsensitiveStringMap.empty()))
+}
+
+/** Data files a scan reads as planned before it: a `ScanBuilder`'s plan
+  * with the delete entries it must apply, or the few files a pushed
+  * LIMIT or top-N needs (`minimal`: read whole, never sub-split).
+  * `keepDeleted` marks deleted rows instead of dropping them even when
+  * the query prunes `_deleted` away. */
+private[graft] final case class PlannedFiles(tasks: Seq[FileScanTask],
+    deletes: Seq[ManifestEntry], snapshotId: Option[Long], minimal: Boolean = false,
+    keepDeleted: Boolean = false)
+
+/** The scan's metadata columns (reserved ids metadata_columns.h:38-115).
+  * Each is served per split beside the data columns: the file, the row's
+  * position in it, whether a merge-on-read delete applies (`_deleted`
+  * marks deleted rows instead of dropping them), the file's spec id and
+  * partition tuple (as `a/b`), the v3 row id (the file's first row id
+  * plus `_pos`; null for pre-lineage files) and the file's data
+  * sequence number (null where the manifest records none). */
+private[graft] object GraftMetadataColumns {
+  private val defs: Seq[(String, DataType, Boolean, String)] = Seq(
+    ("_file", StringType, false, "data file path of the row"),
+    ("_pos", LongType, false, "position of the row in its data file"),
+    ("_deleted", BooleanType, false, "whether a merge-on-read delete applies to the row"),
+    ("_spec_id", IntegerType, false, "partition spec id of the row's data file"),
+    ("_partition", StringType, false, "partition tuple of the row's data file"),
+    ("_row_id", LongType, true, "row lineage id: the file's first row id plus _pos"),
+    ("_last_updated_sequence_number", LongType, true,
+      "data sequence number of the commit that last updated the row"))
+
+  val names: Set[String] = defs.map(_._1).toSet
+
+  val columns: Array[MetadataColumn] = defs.map { case (n, dt, nullable, doc) =>
+    new MetadataColumn {
+      override def name(): String = n
+      override def dataType(): DataType = dt
+      override def isNullable: Boolean = nullable
+      override def comment(): String = doc
+    }: MetadataColumn
+  }.toArray
 }
 
 private[connector] object GraftConnectorUtil {
@@ -256,22 +325,42 @@ private[connector] object GraftConnectorUtil {
   }
 
   def normPath(p: String): String = ManifestAvro.stripFileScheme(p)
+
+  /** The table's `schema.name-mapping.default`, if it sets one. */
+  def nameMapping(table: IceTable): Option[NameMapping] =
+    table.properties.get(NameMapping.PropertyKey).map(NameMapping.fromJson)
+
+  /** The names other than its current one that field `f`'s column may
+    * carry in a data file read by name: its names in `mapping`, then its
+    * names across the table's schema history. */
+  def otherNames(table: IceTable, mapping: Option[NameMapping],
+      f: graft.ice.types.NestedField): Seq[String] =
+    (mapping.toSeq.flatMap(_.namesFor(f.id)) ++
+      table.metadata.schemas.flatMap(_.fields).filter(_.id == f.id).map(_.name))
+      .distinct.filterNot(_ == f.name)
 }
 
+/** `schema` is the Iceberg schema the scan reads (the snapshot's under
+  * time travel). A `planned` scan reads exactly those files: pushed
+  * filters reach the parquet reader but never re-plan it, and it refuses
+  * aggregate, LIMIT and top-N pushdown, which would answer from planning
+  * of its own. */
 private[graft] class GraftScanBuilder(table: IceTable,
-    fullSchema: StructType,
+    schema: Schema,
     streamOpts: Option[CaseInsensitiveStringMap] = None,
     pinnedSnapshotId: Option[Long] = None,
     // row-level-operation scans: pushed DML predicates prune manifests
     // and files but must NEVER reach the parquet reader — a group-based
     // rewrite needs EVERY row of a matched file (the non-matching rows
     // are what survives), so reader-level filtering would lose data
-    pruneOnly: Boolean = false) extends V2ScanBuilder
+    pruneOnly: Boolean = false,
+    planned: Option[PlannedFiles] = None) extends V2ScanBuilder
     with SupportsPushDownRequiredColumns with SupportsPushDownFilters
     with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
     with org.apache.spark.sql.connector.read.SupportsPushDownLimit
     with org.apache.spark.sql.connector.read.SupportsPushDownTopN {
 
+  private val fullSchema: StructType = SparkConv.toSpark(schema)
   private var required: StructType = fullSchema
   private var pruneExpr: Option[IceExpr] = None
   private var pushed: Array[V1Filter] = Array.empty
@@ -280,8 +369,9 @@ private[graft] class GraftScanBuilder(table: IceTable,
   // pushAggregation back to back; cache by identity so the manifest
   // walk + per-file strict evaluation runs once, not twice
   private var aggCache: Option[(AnyRef, Option[(StructType, Seq[Array[Any]])])] = None
-  private var limitFiles: Option[Seq[FileScanTask]] = None
-  private var limitSnapshotId: Option[Long] = None
+  // the files a pushed LIMIT or top-N planned, on the snapshot it proved
+  // delete-free
+  private var limitFiles: Option[PlannedFiles] = None
 
   override def pruneColumns(requiredSchema: StructType): Unit = {
     // re-anchor on the table schema so field-id metadata survives pruning
@@ -311,6 +401,7 @@ private[graft] class GraftScanBuilder(table: IceTable,
   private def planAggregate(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
       : Option[(StructType, Seq[Array[Any]])] = aggCache match {
+    case _ if planned.isDefined => None
     case Some((key, res)) if key eq agg => res
     case _ =>
       val res = MetadataAggregate.plan(table, pinnedSnapshotId, pruneExpr, agg)
@@ -340,18 +431,18 @@ private[graft] class GraftScanBuilder(table: IceTable,
     * execution must not mix its delete files with this file list.
     * Partial by contract: Spark re-applies the limit. */
   override def pushLimit(limit: Int): Boolean = {
-    if (pruneExpr.isDefined || pushed.nonEmpty) return false
+    if (planned.isDefined || pruneExpr.isDefined || pushed.nonEmpty) return false
     val probe = table.newScan()
     pinnedSnapshotId.foreach(probe.useSnapshot)
     probe.resolveSnapshot() match {
       case None =>
-        limitFiles = Some(Nil)
+        limitFiles = Some(PlannedFiles(Nil, Nil, None, minimal = true))
         true
       case Some(s) =>
         if (table.planDeleteEntries(s).nonEmpty) return false
-        limitFiles = Some(
-          table.newScan().useSnapshot(s.snapshotId).limit(limit.toLong).planFiles())
-        limitSnapshotId = Some(s.snapshotId)
+        limitFiles = Some(PlannedFiles(
+          table.newScan().useSnapshot(s.snapshotId).limit(limit.toLong).planFiles(),
+          Nil, Some(s.snapshotId), minimal = true))
         true
     }
   }
@@ -364,19 +455,18 @@ private[graft] class GraftScanBuilder(table: IceTable,
     * precondition and snapshot pinning as pushLimit. */
   override def pushTopN(orders: Array[org.apache.spark.sql.connector.expressions.SortOrder],
       limit: Int): Boolean = {
-    if (pruneExpr.isDefined || pushed.nonEmpty) return false
+    if (planned.isDefined || pruneExpr.isDefined || pushed.nonEmpty) return false
     val probe = table.newScan()
     pinnedSnapshotId.foreach(probe.useSnapshot)
     probe.resolveSnapshot() match {
       case None =>
-        limitFiles = Some(Nil)
+        limitFiles = Some(PlannedFiles(Nil, Nil, None, minimal = true))
         true
       case Some(s) =>
         if (table.planDeleteEntries(s).nonEmpty) return false
         TopNPlanner.plan(table, s.snapshotId, orders, limit) match {
           case Some((sel, total)) =>
-            limitFiles = Some(sel)
-            limitSnapshotId = Some(s.snapshotId)
+            limitFiles = Some(PlannedFiles(sel, Nil, Some(s.snapshotId), minimal = true))
             GraftTopNStats.pushes.incrementAndGet()
             GraftTopNStats.lastPlanned = sel.size
             GraftTopNStats.lastTotal = total
@@ -393,9 +483,10 @@ private[graft] class GraftScanBuilder(table: IceTable,
       GraftAggPushStats.lastRows = rows.size
       new GraftMetadataAggScan(schema, rows, table.metadata.location)
     case None =>
-      new GraftBatchScan(table, required, pruneExpr,
+      val files = planned.orElse(limitFiles)
+      new GraftBatchScan(table, schema, required, pruneExpr,
         if (pruneOnly) Array.empty else pushed, streamOpts,
-        pinnedSnapshotId.orElse(limitSnapshotId), limitFiles)
+        files.flatMap(_.snapshotId).orElse(pinnedSnapshotId), files)
   }
 }
 
@@ -649,63 +740,61 @@ private[graft] final case class GraftDeleteSpec(
   def hasPositional: Boolean = dvs.nonEmpty || posDeleteFiles.nonEmpty
 }
 
-private[graft] sealed trait GraftScanSplit extends InputPartition {
-  def path: String
-  def fileSize: Long
-  def useFieldIds: Boolean
-  def deletes: GraftDeleteSpec
-  /** Field ids of v3-defaulted columns this file predates (proven absent
-    * from manifest metrics at plan time) — the reader injects each
-    * column's initial-default in place of the null the parquet reader
-    * would return. */
-  def absentDefaults: Seq[Int]
-  /** (source field id, Iceberg runtime value) constants for identity-
-    * partitioned columns of EXTERNAL files (Hive imports): the column
-    * lives in the manifest tuple, not the file — the reader serves it
-    * as a per-split constant (Iceberg's constants-map semantics). */
-  def identityConsts: Seq[(Int, Any)]
-  /** The file's data sequence number — served per split as the
-    * `_last_updated_sequence_number` metadata column
-    * (metadata_columns.h:95: a row's last update is its file's). None
-    * for pre-lineage files (no sequence number in the manifest entry);
-    * the column serves null for those rows. */
-  def dataSeq: Option[Long]
-  /** Byte range of THIS split within the file (read.split.target-size
-    * sub-file splits): whole file by default. The parquet reader assigns
-    * each row group to the range holding its midpoint, so any disjoint
-    * cover of the file reads every row exactly once. */
-  def rangeStart: Long = 0L
-  def rangeLength: Long = fileSize
-}
+/** One data file, or a byte range of it, as the reader factory reads it.
+  *
+  *  - `absentDefaults`: field ids of v3-defaulted columns the file
+  *    predates (proven absent at plan time); the reader injects each
+  *    column's initial-default in place of the null the file would give.
+  *  - `identityConsts`: (source field id, Iceberg runtime value) for the
+  *    identity-partitioned columns of EXTERNAL files (Hive imports),
+  *    which live in the manifest tuple, not the file: the reader serves
+  *    them as per-split constants (Iceberg's constants-map semantics).
+  *  - `dataSeq`: the file's data sequence number, served as
+  *    `_last_updated_sequence_number` (metadata_columns.h:95: a row's
+  *    last update is its file's); None for pre-lineage files, whose rows
+  *    serve null.
+  *  - `rangeStart`/`rangeLen`: the byte range of a read.split.target-size
+  *    sub-split (the whole file by default). Parquet assigns each row
+  *    group to the range holding its midpoint, ORC each stripe to the
+  *    range holding its start, Avro each block to the range its sync
+  *    marker follows, so any disjoint cover reads every row once.
+  *  - `format`: the manifest's file format, upper case.
+  *  - `renames`: (field id, file column) for the columns of an id-less
+  *    parquet file that `schema.name-mapping.default` resolves to a name
+  *    other than the field's current one.
+  *  - `specId`, `partition` (the tuple as `a/b`), `firstRowId`: the
+  *    `_spec_id`, `_partition` and `_row_id` metadata columns. */
 private[graft] final case class GraftFileSplit(path: String, fileSize: Long,
     useFieldIds: Boolean, deletes: GraftDeleteSpec,
     absentDefaults: Seq[Int] = Nil,
     identityConsts: Seq[(Int, Any)] = Nil,
     dataSeq: Option[Long] = None,
-    override val rangeStart: Long = 0L,
-    rangeLen: Long = -1L) extends GraftScanSplit {
-  override def rangeLength: Long = if (rangeLen < 0) fileSize else rangeLen
+    rangeStart: Long = 0L,
+    rangeLen: Long = -1L,
+    format: String = "PARQUET",
+    renames: Seq[(Int, String)] = Nil,
+    specId: Int = 0,
+    partition: String = "",
+    firstRowId: Option[Long] = None) extends InputPartition {
+  def rangeLength: Long = if (rangeLen < 0) fileSize else rangeLen
 }
 /** Several small splits bin-packed into ONE task
   * (read.split.open-file-cost): the reader concatenates the member
   * iterators — per-member delete/default state stays per-member. */
-private[graft] final case class GraftPackedSplit(members: Seq[GraftScanSplit])
+private[graft] final case class GraftPackedSplit(members: Seq[GraftFileSplit])
     extends InputPartition
-private[connector] final case class GraftKeyedFileSplit(path: String, fileSize: Long,
-    useFieldIds: Boolean, deletes: GraftDeleteSpec,
-    key: InternalRow, absentDefaults: Seq[Int] = Nil,
-    identityConsts: Seq[(Int, Any)] = Nil,
-    dataSeq: Option[Long] = None) extends GraftScanSplit
-    with HasPartitionKey {
+/** One whole file of a bucket spec, keyed by its partition tuple. */
+private[connector] final case class GraftKeyedFileSplit(file: GraftFileSplit,
+    key: InternalRow) extends InputPartition with HasPartitionKey {
   override def partitionKey(): InternalRow = key
 }
 
-private[connector] final class GraftBatchScan(table: IceTable,
+private[connector] final class GraftBatchScan(table: IceTable, schema: Schema,
     required: StructType, pruneExpr: Option[IceExpr],
     v1Filters: Array[V1Filter],
     streamOpts: Option[CaseInsensitiveStringMap] = None,
     pinnedSnapshotId: Option[Long] = None,
-    limitFiles: Option[Seq[FileScanTask]] = None) extends Scan with Batch
+    preplanned: Option[PlannedFiles] = None) extends Scan with Batch
     with SupportsReportPartitioning with SupportsReportStatistics
     with SupportsReportOrdering
     with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
@@ -719,14 +808,27 @@ private[connector] final class GraftBatchScan(table: IceTable,
     val plain = StructType(required.fields.map(_.copy(metadata = Metadata.empty)))
     new graft.streaming.GraftMicroBatchStream(plain, opts)
   }
+
+  /** What the scan reads, the way Spark's file scans describe it: the
+    * manifest-fed file list, the filters handed to the parquet reader and
+    * the read schema. */
   override def description(): String = {
-    val f = pruneExpr.map(e => s", pruned: $e").getOrElse("")
-    s"graft ${table.metadata.location}$f"
+    val files = planned.splits
+    val pruned = pruneExpr.filter(_ => preplanned.isEmpty).map(e => s", pruned: $e").getOrElse("")
+    s"graft ${table.metadata.location}$pruned, " +
+      s"Location: ${ManifestFileIndex.describe(files.size, files.map(_.fileSize).sum)}, " +
+      s"PushedFilters: [${v1Filters.mkString(", ")}], ReadSchema: ${required.catalogString}"
   }
+
+  // metadata columns the query reads, and whether they need each row's
+  // exact position in its file
+  private val metaCols = required.fieldNames.filter(GraftMetadataColumns.names)
+  private val wantsPositions = metaCols.exists(c => c == "_pos" || c == "_row_id")
+  private val marksDeleted = metaCols.contains("_deleted") || preplanned.exists(_.keepDeleted)
 
   // ---- planning (driver) ----
 
-  private final case class PlannedScan(splits: Seq[GraftScanSplit],
+  private final case class PlannedScan(splits: Seq[GraftFileSplit],
       parts: Seq[InputPartition],
       nKeys: Option[Int], totalRows: Long, snapshotId: Option[Long],
       // manifest-form (possibly scheme-carrying) paths of the planned
@@ -738,10 +840,7 @@ private[connector] final class GraftBatchScan(table: IceTable,
       // every surviving file's manifest sort_order_id equals the table's
       // CURRENT sort order — the precondition for reporting per-split
       // output ordering (SupportsReportOrdering)
-      filesSorted: Boolean,
-      // every surviving data file is parquet: a precondition of the
-      // columnar read (the batch reader is parquet's)
-      parquetOnly: Boolean)
+      filesSorted: Boolean)
 
   /** Final planned file set in manifest path form (after static pushdown
     * AND any runtime group filter) — the groups a row-level operation's
@@ -774,61 +873,71 @@ private[connector] final class GraftBatchScan(table: IceTable,
   }
 
   private def doPlan(): PlannedScan = {
-    val builder = {
-      val b = table.newScan()
-      replanSnapshotId.foreach(b.useSnapshot)
-      pruneExpr.foreach(b.filter)
-      runtimeExpr.foreach(b.filter)
-      b
-    }
-    val snap = builder.resolveSnapshot()
-    // a pushed LIMIT pre-planned just enough files (delete-free scan by
-    // construction); a later runtime filter would re-plan past it, but
-    // Spark never pushes a limit under a join, so the two cannot meet
-    val (tasks, deleteEntries) = limitFiles match {
-      case Some(ts) => (ts, snap.map(table.planDeleteEntries).getOrElse(Nil))
-      case None => builder.planFilesWithDeletes()
+    // planned files only narrow: a runtime filter keeps the files whose
+    // partition tuple and column metrics may match it
+    val (snapId, tasks, deleteEntries) = preplanned match {
+      case Some(p) =>
+        val bound = runtimeExpr.map(Binder.bind(_, table.schema))
+        (p.snapshotId, p.tasks.filter(t => bound.forall(table.mayContain(t, _))), p.deletes)
+      case None =>
+        val b = table.newScan()
+        replanSnapshotId.foreach(b.useSnapshot)
+        pruneExpr.foreach(b.filter)
+        runtimeExpr.foreach(b.filter)
+        val (ts, ds) = b.planFilesWithDeletes()
+        (b.resolveSnapshot().map(_.snapshotId), ts, ds)
     }
     val posDeletes = deleteEntries.filter(_.dataFile.content == FileContent.PositionDeletes)
     val eqDeletes = deleteEntries.filter(_.dataFile.content == FileContent.EqualityDeletes)
+    val spark = SparkSession.active
 
     def deletesFor(t: FileScanTask): GraftDeleteSpec = {
       val pos = PositionDeletes.applicable(GraftConnectorUtil.normPath(t.file.filePath),
         t.sequenceForVisibility, posDeletes)
       GraftDeleteSpec(pos.dvs, pos.files, EqualityDeletes.applicable(
-        t.sequenceForVisibility, eqDeletes, table.schema.findFieldById(_).map(_.name)))
+        t.sequenceForVisibility, eqDeletes, schema.findFieldById(_).map(_.name)))
     }
 
-    val dataDirPrefixes = table.dataRoots.map(GraftConnectorUtil.normPath)
-    val idSummaryBySnap: Map[Long, String] = table.metadata.snapshots
-      .flatMap(s => s.summary.get(IceTable.FieldIdsSummaryKey)
-        .map(s.snapshotId -> _)).toMap
-    def fileHasIds(t: FileScanTask, p: String): Boolean =
-      dataDirPrefixes.exists(p.startsWith) ||
-        t.snapshotId.flatMap(idSummaryBySnap.get).contains("all")
+    val hasIds = ScanBuilder.fieldIdTest(table, spark)
+    // id-less parquet files resolve columns through the table's name
+    // mapping: each field reads the first of its mapped names, then its
+    // current name, that the file's footer holds
+    val mapping = GraftConnectorUtil.nameMapping(table)
+    def sourceOf(f: graft.ice.types.NestedField, fileCols: Set[String]): Option[String] =
+      (mapping.toSeq.flatMap(_.namesFor(f.id)) :+ f.name).find(fileCols.contains)
 
     // v3 default values: which defaulted columns does each file predate?
-    // Proven from manifest metrics (metadata-only); cached footer probe
-    // only for metric-less legacy files — mirrors ScanBuilder.toDF.
-    val defaultedIds = table.schema.fields.filter(f =>
-      f.initialDefault.isDefined && f.fieldType.isInstanceOf[graft.ice.types.IcePrimitive])
-      .map(_.id)
-    def absentFor(t: FileScanTask, p: String): Seq[Int] =
-      if (defaultedIds.isEmpty) Nil
+    // Proven from manifest metrics (metadata-only) where the manifest has
+    // them; otherwise from one cached probe of the file's columns: by
+    // field id for parquet with ids, else by name
+    val defaulted = schema.fields.filter(f =>
+      f.initialDefault.isDefined && f.fieldType.isInstanceOf[IcePrimitive])
+    def absentFor(t: FileScanTask, p: String, ids: Boolean, format: String): Seq[Int] =
+      if (defaulted.isEmpty) Nil
       else {
         val m = t.file
-        val hasMetrics = m.valueCounts.nonEmpty || m.columnSizes.nonEmpty
-        defaultedIds.filter { id =>
-          if (hasMetrics) !m.valueCounts.contains(id) && !m.columnSizes.contains(id)
-          else !ScanBuilder.footerFieldIds(p, SparkSession.active).contains(id)
-        }
+        lazy val cols = ScanBuilder.fileColumns(p, format, spark)
+        if (format == "PARQUET" && !ids) defaulted.filter(sourceOf(_, cols).isEmpty).map(_.id)
+        else if (m.valueCounts.nonEmpty || m.columnSizes.nonEmpty)
+          defaulted.map(_.id).filter(id => !m.valueCounts.contains(id) && !m.columnSizes.contains(id))
+        else if (format == "PARQUET") {
+          val inFile = ScanBuilder.footerFieldIds(p, spark)
+          defaulted.map(_.id).filterNot(inFile)
+        } else defaulted.filterNot(f => (f.name +: GraftConnectorUtil.otherNames(table, mapping, f))
+          .exists(cols.contains)).map(_.id)
+      }
+    def renamesFor(p: String, ids: Boolean, format: String): Seq[(Int, String)] =
+      if (mapping.isEmpty || ids || format != "PARQUET") Nil
+      else {
+        val cols = ScanBuilder.fileColumns(p, format, spark)
+        schema.fields.flatMap(f => sourceOf(f, cols).filter(_ != f.name).map(f.id -> _))
       }
 
     // identity-partition constants for EXTERNAL (name-resolved) files:
     // Hive imports don't contain the partition columns — ship the
     // manifest tuple values with the split so the reader injects them
-    def identityConstsFor(t: FileScanTask, hasIds: Boolean): Seq[(Int, Any)] =
-      if (hasIds || t.file.partition.isEmpty) Nil
+    def identityConstsFor(t: FileScanTask, ids: Boolean): Seq[(Int, Any)] =
+      if (ids || t.file.partition.isEmpty) Nil
       else {
         val mSpec = table.metadata.specById(t.specId)
           .getOrElse(graft.ice.meta.PartitionSpec.unpartitioned)
@@ -838,6 +947,17 @@ private[connector] final class GraftBatchScan(table: IceTable,
             (pf.sourceId, t.file.partition(i))
         }
       }
+
+    def splitOf(t: FileScanTask): GraftFileSplit = {
+      val p = GraftConnectorUtil.normPath(t.file.filePath)
+      val format = t.file.fileFormat.toUpperCase(Locale.ROOT)
+      val ids = hasIds(t, p)
+      GraftFileSplit(p, t.file.fileSizeInBytes, ids, deletesFor(t),
+        absentFor(t, p, ids, format), identityConstsFor(t, ids), t.dataSequenceNumber,
+        format = format, renames = renamesFor(p, ids, format), specId = t.specId,
+        partition = t.file.partition.map(v => if (v == null) "null" else v.toString).mkString("/"),
+        firstRowId = t.file.firstRowId)
+    }
 
     // SPJ grouping is reported only for a bucket spec: its fixed key
     // count exists for co-location, which storage-partitioned joins need.
@@ -854,37 +974,39 @@ private[connector] final class GraftBatchScan(table: IceTable,
       GraftConnectorUtil.toV2Transforms(table).exists(_.length == spec.fields.length)
 
     val totalRows = tasks.map(_.file.recordCount).sum
-    val snapId = snap.map(_.snapshotId)
     val origPaths = tasks.map(_.file.filePath).toSet
     val deletePaths = deleteEntries.map(_.dataFile.filePath).toSet
     val filesSorted = table.metadata.defaultSortOrder.fields.nonEmpty &&
       tasks.nonEmpty &&
       tasks.forall(_.file.sortOrderId.contains(table.metadata.defaultSortOrderId))
-    val parquetOnly = tasks.forall(_.file.fileFormat.equalsIgnoreCase("PARQUET"))
+    val whole = tasks.map(t => (t, splitOf(t)))
     if (!groupable) {
-      val whole = tasks.map { t =>
-        val p = GraftConnectorUtil.normPath(t.file.filePath)
-        val hasIds = fileHasIds(t, p)
-        (t, GraftFileSplit(p, t.file.fileSizeInBytes, hasIds, deletesFor(t),
-          absentFor(t, p), identityConstsFor(t, hasIds), t.dataSequenceNumber))
-      }
       // read.split.* sizing: only when the scan is NOT claiming per-split
       // ordering (that contract is defined over whole single-file splits)
-      // and is not a pre-planned LIMIT scan (already minimal). Files with
-      // positional deletes stay whole — the reader counts row positions
-      // from the file start.
+      // and is not a pre-planned LIMIT scan (already minimal). The target
+      // is the table's read.split.target-size, or Spark's file-split size
+      // when the table sets none. A file read by position (positional
+      // deletes, `_pos`, `_row_id`) is cut only at the row groups its
+      // manifest records, where the parquet reader reports each row's
+      // file position: a byte range holding no row group would still
+      // open the file and its deletes. ORC and Avro rows are counted from
+      // the file start, so such files stay whole.
       val meta = table.metadata
       import graft.ice.meta.TableProperties
       val parts: Seq[InputPartition] =
-        if (filesSorted || limitFiles.isDefined) whole.map(_._2)
+        if (filesSorted || preplanned.exists(_.minimal)) whole.map(_._2)
         else {
-          val parallelism = SparkSession.active.sparkContext.defaultParallelism
-          val target = SplitPlanning.adjustTarget(
-            meta.property(TableProperties.SplitTargetSize),
+          val parallelism = spark.sparkContext.defaultParallelism
+          val declared =
+            if (meta.properties.contains(TableProperties.SplitTargetSize.name))
+              meta.property(TableProperties.SplitTargetSize)
+            else spark.sessionState.conf.filesMaxPartitionBytes
+          val target = SplitPlanning.adjustTarget(declared,
             tasks.map(_.file.fileSizeInBytes).sum, parallelism,
             meta.property(TableProperties.SplitAdaptiveEnabled))
           val subs = whole.flatMap { case (t, s) =>
-            if (s.deletes.hasPositional) Seq(s)
+            val positioned = s.deletes.hasPositional || wantsPositions
+            if (positioned && (s.format != "PARQUET" || t.file.splitOffsets.size < 2)) Seq(s)
             else SplitPlanning.subSplit(s, t.file.splitOffsets, target)
           }
           SplitPlanning.pack(subs, target,
@@ -892,20 +1014,15 @@ private[connector] final class GraftBatchScan(table: IceTable,
             meta.property(TableProperties.SplitLookback))
         }
       PlannedScan(whole.map(_._2), parts, None, totalRows, snapId, origPaths,
-        deletePaths, filesSorted, parquetOnly)
+        deletePaths, filesSorted)
     } else {
-      val keyed = tasks.map { t =>
-        val p = GraftConnectorUtil.normPath(t.file.filePath)
-        val hasIds = fileHasIds(t, p)
-        val key = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          t.file.partition.map(GraftConnectorUtil.toInternalValue).toArray)
-        GraftKeyedFileSplit(p, t.file.fileSizeInBytes, hasIds,
-          deletesFor(t), key, absentFor(t, p),
-          identityConstsFor(t, hasIds), t.dataSequenceNumber): GraftScanSplit
+      val keyed = whole.map { case (t, s) =>
+        GraftKeyedFileSplit(s, new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+          t.file.partition.map(GraftConnectorUtil.toInternalValue).toArray))
       }
       val nKeys = tasks.map(_.file.partition).distinct.size
-      PlannedScan(keyed, keyed, Some(nKeys), totalRows, snapId, origPaths, deletePaths,
-        filesSorted, parquetOnly)
+      PlannedScan(whole.map(_._2), keyed, Some(nKeys), totalRows, snapId, origPaths,
+        deletePaths, filesSorted)
     }
   }
 
@@ -917,13 +1034,14 @@ private[connector] final class GraftBatchScan(table: IceTable,
     * time (the dim side's join keys); converting it into the engine's
     * expression tree re-prunes manifests and files, so a fact scan
     * reads only the partitions the dim actually references — the
-    * V2-native form of `IceTable.pruneByJoinKeys`. */
+    * V2-native form of `IceTable.pruneByJoinKeys`. Only columns the
+    * scan reads qualify: Spark resolves them against its output. */
   override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
     table.metadata.defaultSpec.fields
-      .flatMap(f => table.schema.findFieldById(f.sourceId))
-      .map(f => Expressions.column(f.name)
-        : org.apache.spark.sql.connector.expressions.NamedReference)
-      .distinct.toArray
+      .flatMap(f => table.schema.findFieldById(f.sourceId)).map(_.name)
+      .filter(required.fieldNames.contains).distinct
+      .map(c => Expressions.column(c): org.apache.spark.sql.connector.expressions.NamedReference)
+      .toArray
 
   override def filter(predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit = {
     val converted = predicates.toSeq.flatMap(p => V2PredicateToIce.convert(p, table))
@@ -1025,31 +1143,47 @@ private[connector] final class GraftBatchScan(table: IceTable,
     // them under the table's scan session: its read.*.vectorization.*
     // settings then reach this scan and never the caller's shared session.
     // Our own files resolve columns by field id (rename-safe), through the
-    // readers' own Hadoop conf; files without ids (addFiles-registered)
-    // read by current name
+    // readers' own Hadoop conf; id-less files read by name
     val spark = IceTable.scanSession(SparkSession.active, table.properties)
 
-    // `_file` / `_last_updated_sequence_number` are metadata columns
-    // (SupportsMetadataColumns): they never reach the parquet reader —
-    // each split injects its own path / data sequence number via the
-    // output projection below
-    val wantsFile = required.fieldNames.contains("_file")
-    val wantsSeq = required.fieldNames.contains("_last_updated_sequence_number")
-    val dataRequired = StructType(required.fields.filterNot(f =>
-      f.name == "_file" || f.name == "_last_updated_sequence_number"))
+    // metadata columns never reach a file reader: each split serves its
+    // own through the output projection
+    val dataRequired = StructType(required.fields.filterNot(f => GraftMetadataColumns.names(f.name)))
 
     val eqFiles = splits.flatMap(_.deletes.eqDeletes).distinct
-    val fullByName = SparkConv.toSpark(table.schema).fields.map(f => f.name -> f).toMap
+    val fullByName = SparkConv.toSpark(schema).fields.map(f => f.name -> f).toMap
     // the executor must SEE equality-delete key columns even when the
     // query pruned them away; read them, test them, then project back
     val extraEq = eqFiles.flatMap(_._3).distinct
       .filterNot(c => dataRequired.fieldNames.contains(c))
       .flatMap(fullByName.get)
-    val readSchemaIds = StructType(dataRequired.fields ++ extraEq)
-    val plain = StructType(readSchemaIds.fields.map(_.copy(metadata = Metadata.empty)))
+    // nullable throughout: a required column a file predates reads as
+    // null and takes its initial-default
+    val readSchemaIds = StructType((dataRequired.fields ++ extraEq).map(_.copy(nullable = true)))
+    val fields = readSchemaIds.fields.toSeq.map(f =>
+      schema.findFieldById(f.metadata.getLong(SparkConv.FieldIdKey).toInt).get)
+    val plain = readSchemaIds.fields.toSeq.map(_.copy(metadata = Metadata.empty))
 
-    def mkReader(schema: StructType, filters: Seq[V1Filter]) =
-      PositionDeletes.parquetReader(spark, schema, filters)
+    // every other name a field's column may carry in a file: the table's
+    // name mapping, then the names it had across schema history (ORC and
+    // Avro resolve by name; Avro also by id where the file has ids)
+    lazy val altNames: Map[Int, Seq[String]] = {
+      val mapping = GraftConnectorUtil.nameMapping(table)
+      fields.map(f => f.id -> GraftConnectorUtil.otherNames(table, mapping, f))
+        .filter(_._2.nonEmpty).toMap
+    }
+    // a by-name read schema: the fields' current names, then every other
+    // name `names` gives them, typed as the field
+    def byName(names: Map[Int, Seq[String]]): StructType = {
+      val extra = fields.zip(plain).flatMap { case (f, sf) =>
+        names.getOrElse(f.id, Nil).map(n => sf.copy(name = n)) }
+      StructType(plain ++ extra.filterNot(e => plain.exists(_.name == e.name))
+        .groupBy(_.name).map(_._2.head).toSeq.sortBy(_.name))
+    }
+    val plainRead = byName(splits.flatMap(_.renames).groupBy(_._1).map {
+      case (id, rs) => id -> rs.map(_._2).distinct })
+    val hasOrc = splits.exists(_.format == "ORC")
+    val orcRead = if (hasOrc) byName(altNames) else plainRead
 
     // build only the reader slots the planned splits can reach: every
     // reader build broadcasts the session's Hadoop conf, so a delete-free
@@ -1059,50 +1193,40 @@ private[connector] final class GraftBatchScan(table: IceTable,
     type Read = PartitionedFile => Iterator[InternalRow]
     def slot(name: String, needed: Boolean)(build: => Read): Read =
       if (needed) build else PositionDeletes.unbuilt(name)
-    val dataCombos = splits.map(s => (s.useFieldIds, s.deletes.hasPositional)).toSet
+    val dataCombos = splits.filter(_.format == "PARQUET")
+      .map(s => (s.useFieldIds, GraftReaderFactory.readsRaw(s, wantsPositions))).toSet
     val (readPosDeletes, readPosDeletesOrc) =
       PositionDeletes.readers(spark, splits.flatMap(_.deletes.posDeleteFiles))
 
     // v3 initial-defaults as catalyst values keyed by field id, with the
     // ordinal each occupies in the read schema (absent when the query
     // projected the column away — nothing to inject then)
-    val defaultsFill: Map[Int, (Int, Any, org.apache.spark.sql.types.DataType)] =
-      table.schema.fields.filter(_.initialDefault.isDefined).flatMap { f =>
-        val ord = readSchemaIds.fieldNames.indexOf(f.name)
-        if (ord < 0) None
-        else {
-          val dt = SparkConv.toSparkType(f.fieldType)
-          val ext = graft.ice.meta.SingleValueJson.toSparkValue(
-            f.fieldType.asInstanceOf[graft.ice.types.IcePrimitive], f.initialDefault.get)
-          val cat = org.apache.spark.sql.catalyst.CatalystTypeConverters
-            .convertToCatalyst(ext)
-          Some(f.id -> ((ord, cat, dt)))
-        }
+    def catalyst(p: IcePrimitive, v: Any): Any =
+      org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToCatalyst(
+        graft.ice.meta.SingleValueJson.toSparkValue(p, v))
+    val defaultsFill: Map[Int, (Int, Any, DataType)] =
+      fields.zipWithIndex.collect {
+        case (f, ord) if f.initialDefault.isDefined && f.fieldType.isInstanceOf[IcePrimitive] =>
+          f.id -> ((ord, catalyst(f.fieldType.asInstanceOf[IcePrimitive], f.initialDefault.get),
+            SparkConv.toSparkType(f.fieldType)))
       }.toMap
-
-    // final output projection: required order, `_file` (-1) filled with
-    // the split's path, `_last_updated_sequence_number` (-2) with the
-    // split's data sequence number; identity when nothing was appended
-    val outputTemplate: Option[Array[Int]] =
-      if (!wantsFile && !wantsSeq && extraEq.isEmpty) None
-      else Some(required.fields.map(f =>
-        if (f.name == "_file") -1
-        else if (f.name == "_last_updated_sequence_number") -2
-        else readSchemaIds.fieldIndex(f.name)))
 
     // identity-constant target slots: field id -> (read-schema ordinal,
     // spark type, iceberg primitive); consulted per split for Hive-
     // imported files whose partition columns exist only in the tuple
-    val constSlots: Map[Int, (Int, org.apache.spark.sql.types.DataType,
-        graft.ice.types.IcePrimitive)] =
-      table.schema.fields.flatMap { f =>
-        val ord = readSchemaIds.fieldNames.indexOf(f.name)
-        f.fieldType match {
-          case p: graft.ice.types.IcePrimitive if ord >= 0 =>
-            Some(f.id -> ((ord, SparkConv.toSparkType(f.fieldType), p)))
-          case _ => None
-        }
+    val constSlots: Map[Int, (Int, DataType, IcePrimitive)] =
+      fields.zipWithIndex.collect { case (f, ord) if f.fieldType.isInstanceOf[IcePrimitive] =>
+        f.id -> ((ord, SparkConv.toSparkType(f.fieldType), f.fieldType.asInstanceOf[IcePrimitive]))
       }.toMap
+
+    // final output projection: required order, each metadata column by
+    // name and each data column by its read-schema ordinal; identity when
+    // the read schema is the output
+    val output: Option[Seq[Either[String, Int]]] =
+      if (metaCols.isEmpty && extraEq.isEmpty) None
+      else Some(required.fields.toSeq.map(f =>
+        if (GraftMetadataColumns.names(f.name)) Left(f.name)
+        else Right(readSchemaIds.fieldIndex(f.name))))
 
     // columnar batches when the session's parquet vectorization accepts
     // the read schema; row consumers unpack them (PositionDeletes.rows).
@@ -1111,24 +1235,30 @@ private[connector] final class GraftBatchScan(table: IceTable,
     // row splits, and deletes, defaults, constants and metadata columns
     // are applied row by row
     val batches = new ParquetFileFormat().supportBatch(spark, readSchemaIds)
-    val columnar = batches && plan.parquetOnly && outputTemplate.isEmpty &&
-      splits.forall(s => s.useFieldIds && s.deletes.isEmpty &&
+    val columnar = batches && output.isEmpty &&
+      splits.forall(s => s.format == "PARQUET" && s.useFieldIds && s.deletes.isEmpty &&
         s.absentDefaults.isEmpty && s.identityConsts.isEmpty)
 
     GraftReaderFactory(
       readIds = slot("readIds", dataCombos((true, false)))(
         PositionDeletes.parquetReader(spark, readSchemaIds, v1Filters.toSeq, batches)),
       readIdsRaw = slot("readIdsRaw", dataCombos((true, true)))(
-        mkReader(readSchemaIds, Nil)),
+        PositionDeletes.parquetReader(spark, GraftReaderFactory.positioned(readSchemaIds), Nil)),
       readPlain = slot("readPlain", dataCombos((false, false)))(
-        mkReader(plain, v1Filters.toSeq)),
+        PositionDeletes.parquetReader(spark, plainRead, v1Filters.toSeq)),
       readPlainRaw = slot("readPlainRaw", dataCombos((false, true)))(
-        mkReader(plain, Nil)),
+        PositionDeletes.parquetReader(spark, GraftReaderFactory.positioned(plainRead), Nil)),
+      readOrc = slot("readOrc", hasOrc)(PositionDeletes.orcReader(spark, orcRead)),
       readPosDeletes = readPosDeletes,
       readPosDeletesOrc = readPosDeletesOrc,
       eqReaders = EqualityDeletes.readers(spark, eqFiles, fullByName),
       readSchema = readSchemaIds,
-      outputTemplate = outputTemplate,
+      plainRead = plainRead,
+      orcRead = orcRead,
+      altNames = if (hasOrc || splits.exists(_.format == "AVRO")) altNames else Map.empty,
+      output = output,
+      wantsPositions = wantsPositions,
+      marksDeleted = marksDeleted,
       defaultsFill = defaultsFill,
       constSlots = constSlots,
       columnar = columnar)
@@ -1363,27 +1493,48 @@ private[connector] final case class GraftAggReaderFactory() extends PartitionRea
   }
 }
 
+/** Reads each split of a [[GraftBatchScan]] by its file format, applies
+  * its merge-on-read deletes and serves its defaults, constants and
+  * metadata columns. The read slots are built on the driver, only for
+  * the formats and delete shapes the planned splits need. Every
+  * per-split value enters the projections by reference
+  * ([[ParamLiteral]]), so splits that differ only in their values share
+  * one compiled class. */
 private[connector] final case class GraftReaderFactory(
+    // parquet by field id and, for id-less files, by name: with the
+    // scan's pushed filters, and raw ([[GraftReaderFactory.readsRaw]])
     readIds: PartitionedFile => Iterator[InternalRow],
     readIdsRaw: PartitionedFile => Iterator[InternalRow],
     readPlain: PartitionedFile => Iterator[InternalRow],
     readPlainRaw: PartitionedFile => Iterator[InternalRow],
+    readOrc: PartitionedFile => Iterator[InternalRow],
     readPosDeletes: PartitionedFile => Iterator[InternalRow],
     readPosDeletesOrc: PartitionedFile => Iterator[InternalRow],
     eqReaders: EqualityDeletes.Readers,
+    // the data columns every split yields: the query's, then any
+    // equality-delete key columns it pruned
     readSchema: StructType,
-    // output field -> read-schema ordinal, or -1 for the `_file`
-    // metadata column (filled with the split's path); None = identity
-    outputTemplate: Option[Array[Int]],
-    defaultsFill: Map[Int, (Int, Any, org.apache.spark.sql.types.DataType)] =
-      Map.empty,
+    // the by-name read schemas of id-less parquet and of ORC files:
+    // `readSchema`'s columns, then the other names they may carry
+    plainRead: StructType,
+    orcRead: StructType,
+    // field id -> the other names its column may carry (ORC, Avro)
+    altNames: Map[Int, Seq[String]],
+    // output column -> metadata column name or read-schema ordinal;
+    // None = the read schema is the output
+    output: Option[Seq[Either[String, Int]]],
+    // the query reads `_pos` or `_row_id`
+    wantsPositions: Boolean,
+    // deleted rows are marked (`_deleted`) instead of dropped
+    marksDeleted: Boolean,
+    // field id -> (read ordinal, initial-default, spark type)
+    defaultsFill: Map[Int, (Int, Any, DataType)],
     // field id -> (read ordinal, spark type, iceberg primitive) for
     // per-split identity-partition constant injection (Hive imports)
-    constSlots: Map[Int, (Int, org.apache.spark.sql.types.DataType,
-      graft.ice.types.IcePrimitive)] = Map.empty,
+    constSlots: Map[Int, (Int, DataType, IcePrimitive)],
     // every split of the scan is a plain field-id parquet read and
     // `readIds` returns batches: Spark reads the scan as columnar
-    columnar: Boolean = false) extends PartitionReaderFactory {
+    columnar: Boolean) extends PartitionReaderFactory {
 
   override def supportColumnarReads(p: InputPartition): Boolean = columnar
 
@@ -1401,9 +1552,10 @@ private[connector] final case class GraftReaderFactory(
   // a packed split concatenates its members' iterators — every member
   // keeps its own delete/default/projection state (built lazily, so a
   // 50-file bin opens files one at a time)
-  private def splitsOf(p: InputPartition): Iterator[GraftScanSplit] = p match {
+  private def splitsOf(p: InputPartition): Iterator[GraftFileSplit] = p match {
     case GraftPackedSplit(members) => members.iterator
-    case s: GraftScanSplit => Iterator.single(s)
+    case GraftKeyedFileSplit(s, _) => Iterator.single(s)
+    case s: GraftFileSplit => Iterator.single(s)
   }
 
   private def readerOf[T](it: Iterator[T]): PartitionReader[T] =
@@ -1416,83 +1568,151 @@ private[connector] final case class GraftReaderFactory(
     }
 
   // the split's byte range (whole file unless read.split.target-size
-  // cut it); position-counted reads are whole-file by construction
-  private def fileOf(split: GraftScanSplit): PartitionedFile =
+  // cut it); ORC and Avro reads that count positions are whole files
+  private def fileOf(split: GraftFileSplit): PartitionedFile =
     PartitionedFile(InternalRow.empty, SparkPath.fromPathString(split.path),
       split.rangeStart, split.rangeLength, Array.empty[String], 0L, split.fileSize, Map.empty)
 
-  private def rowsOf(split: GraftScanSplit): Iterator[InternalRow] = {
-    val del = split.deletes
+  /** The split's rows, in the layout the file reader yields them, and
+    * the ordinal of each row's file position in that layout (-1: the
+    * reader gives none, so the rows of a whole file are counted).
+    * Field-id parquet and Avro rows are `readSchema`'s, id-less parquet
+    * rows `plainRead`'s and ORC rows `orcRead`'s; a raw parquet read
+    * appends the position. */
+  private def fileRows(split: GraftFileSplit): (Iterator[InternalRow], StructType, Int) =
+    split.format match {
+      case "ORC" => (PositionDeletes.rows(readOrc, fileOf(split)), orcRead, -1)
+      case "AVRO" =>
+        val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .createToCatalystConverter(readSchema)
+        (AvroData.readFileRows(split.path, readSchema, split.rangeStart,
+          split.rangeStart + split.rangeLength, altNames.map { case (id, ns) => id.toLong -> ns })
+          .map(r => toRow(r).asInstanceOf[InternalRow]), readSchema, -1)
+      case _ =>
+        val raw = GraftReaderFactory.readsRaw(split, wantsPositions)
+        val (read, base) = (split.useFieldIds, raw) match {
+          case (true, true) => (readIdsRaw, readSchema)
+          case (true, false) => (readIds, readSchema)
+          case (false, true) => (readPlainRaw, plainRead)
+          case (false, false) => (readPlain, plainRead)
+        }
+        val layout = if (raw) GraftReaderFactory.positioned(base) else base
+        (PositionDeletes.rows(read, fileOf(split)), layout, if (raw) base.length else -1)
+    }
 
+  /** The projection from the file reader's `layout` onto `readSchema`:
+    * mapped and historical names, v3 initial-defaults and identity
+    * constants. None when the file's rows already are `readSchema`'s. */
+  private def fillOf(split: GraftFileSplit, layout: StructType): Option[UnsafeProjection] = {
+    val fields = readSchema.fields.toSeq
+    def ref(name: String) =
+      BoundReference(layout.fieldIndex(name), layout(name).dataType, nullable = true)
+    def idOf(ord: Int) = fields(ord).metadata.getLong(SparkConv.FieldIdKey).toInt
+    val resolved: Map[Int, Expression] = split.format match {
+      case "ORC" => fields.indices.flatMap { i =>
+        altNames.get(idOf(i)).map(alts => i -> (Coalesce((fields(i).name +: alts).map(ref)): Expression))
+      }.toMap
+      case "PARQUET" if !split.useFieldIds => split.renames.flatMap {
+        case (id, src) => fields.indices.find(idOf(_) == id).map(_ -> (ref(src): Expression))
+      }.toMap
+      case _ => Map.empty
+    }
+    val constants = (split.absentDefaults.flatMap(defaultsFill.get) ++
+      split.identityConsts.flatMap { case (fid, v) =>
+        constSlots.get(fid).map { case (ord, dt, prim) =>
+          val cat = if (v == null) null
+            else org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToCatalyst(
+              graft.ice.meta.SingleValueJson.toSparkValue(prim, v))
+          (ord, cat, dt)
+        }
+      }).map { case (ord, v, dt) => ord -> (new ParamLiteral(v, dt): Expression) }.toMap
+    val fills = resolved ++ constants
+    Option.when(fills.nonEmpty || layout.length > readSchema.length)(
+      UnsafeProjection.create(fields.indices.map(i =>
+        fills.getOrElse(i, BoundReference(i, fields(i).dataType, nullable = true)))))
+  }
+
+  /** The output projection over (data row, (position, deleted)). */
+  private def outputOf(split: GraftFileSplit, cols: Seq[Either[String, Int]]): UnsafeProjection = {
+    val n = readSchema.length
+    val pos = BoundReference(n, LongType, nullable = false)
+    def param(v: Any, dt: DataType): Expression = new ParamLiteral(v, dt)
+    UnsafeProjection.create(cols.map {
+      case Right(i) => BoundReference(i, readSchema(i).dataType, nullable = true)
+      case Left("_file") => param(UTF8String.fromString(split.path), StringType)
+      case Left("_pos") => pos
+      case Left("_deleted") => BoundReference(n + 1, BooleanType, nullable = false)
+      case Left("_spec_id") => param(split.specId, IntegerType)
+      case Left("_partition") => param(UTF8String.fromString(split.partition), StringType)
+      case Left("_row_id") => Add(param(split.firstRowId.map(Long.box).orNull, LongType), pos)
+      case Left("_last_updated_sequence_number") =>
+        param(split.dataSeq.map(Long.box).orNull, LongType)
+      case Left(other) => throw new IllegalArgumentException(s"unknown metadata column $other")
+    })
+  }
+
+  private def rowsOf(split: GraftFileSplit): Iterator[InternalRow] = {
+    val del = split.deletes
     // positions deleted from THIS file: DV bitmaps + position-delete
     // files, each parsed once per executor JVM (PositionDeletes)
-    lazy val deletedPos: org.roaringbitmap.longlong.Roaring64Bitmap =
-      PositionDeletes.deletedPositions(split.path,
+    val deletedPos =
+      if (!del.hasPositional) null
+      else PositionDeletes.deletedPositions(split.path,
         FileDeletes(del.dvs, del.posDeleteFiles), readPosDeletes, readPosDeletesOrc)
-
-    lazy val eqDeleted = EqualityDeletes.test(del.eqDeletes, readSchema, eqReaders)
-
-    val needExactPositions = del.hasPositional
-    val read =
-      (split.useFieldIds, needExactPositions) match {
-        // parquet predicate pushdown skips rows, which would corrupt
-        // position counting — delete-bearing files read unfiltered
-        case (true, true) => readIdsRaw
-        case (true, false) => readIds
-        case (false, true) => readPlainRaw
-        case (false, false) => readPlain
-      }
-
-    val base = PositionDeletes.rows(read, fileOf(split))
+    val eqDeleted =
+      if (del.eqDeletes.isEmpty) null
+      else EqualityDeletes.test(del.eqDeletes, readSchema, eqReaders)
+    // v3 initial-defaults are in place BEFORE equality-delete matching,
+    // so deletes keyed on a defaulted column see the virtual value
+    val (rows, layout, posOrd) = fileRows(split)
+    val fill = fillOf(split, layout).orNull
+    val out = output.map(outputOf(split, _)).orNull
+    // (position, deleted) beside each data row, for the output projection
+    val meta = new SpecificInternalRow(Seq(LongType, BooleanType))
+    val joined = new JoinedRow
     var pos = -1L
-    val it0 =
-      if (!needExactPositions) base
-      else base.filter { _ => pos += 1; !deletedPos.contains(pos) }
-    // v3 initial-defaults: files that predate a defaulted column inject
-    // its default in place of the reader's null — BEFORE equality-delete
-    // matching, so deletes keyed on the column see the virtual value.
-    // Identity-partition constants of Hive-imported files inject through
-    // the same projection (the column exists only in the manifest tuple).
-    val constOrds = split.identityConsts.flatMap { case (fid, v) =>
-      constSlots.get(fid).map { case (ord, dt, prim) =>
-        val cat =
-          if (v == null) null
-          else org.apache.spark.sql.catalyst.CatalystTypeConverters
-            .convertToCatalyst(
-              graft.ice.meta.SingleValueJson.toSparkValue(prim, v))
-        (ord, cat, dt)
+
+    // one row in, the row out or null when a delete drops it
+    def step(raw: InternalRow): InternalRow = {
+      pos = if (posOrd >= 0) raw.getLong(posOrd) else pos + 1
+      var dead = deletedPos != null && deletedPos.contains(pos)
+      if (dead && !marksDeleted) return null
+      val row = if (fill == null) raw else fill(raw)
+      if (!dead && eqDeleted != null) dead = eqDeleted(row)
+      if (dead && !marksDeleted) null
+      else if (out == null) row
+      else {
+        meta.setLong(0, pos)
+        meta.setBoolean(1, dead)
+        out(joined(row, meta))
       }
     }
-    val fillOrds = split.absentDefaults.flatMap(defaultsFill.get) ++ constOrds
-    val itD =
-      if (fillOrds.isEmpty) it0
-      else {
-        val proj = UnsafeProjection.create(
-          readSchema.fields.toIndexedSeq.zipWithIndex.map { case (f, i) =>
-            fillOrds.find(_._1 == i) match {
-              case Some((_, v, dt)) =>
-                org.apache.spark.sql.catalyst.expressions.Literal(v, dt)
-                  : org.apache.spark.sql.catalyst.expressions.Expression
-              case None => BoundReference(i, f.dataType, nullable = true)
-            }
-          })
-        it0.map(proj.apply)
+
+    new Iterator[InternalRow] {
+      private var nextRow: InternalRow = _
+      override def hasNext: Boolean = {
+        while (nextRow == null && rows.hasNext) nextRow = step(rows.next())
+        nextRow != null
       }
-    val it1 = if (del.eqDeletes.isEmpty) itD else itD.filterNot(eqDeleted)
-    outputTemplate match {
-      case None => it1
-      case Some(tpl) =>
-        val proj = UnsafeProjection.create(tpl.toIndexedSeq.map {
-          case -1 => org.apache.spark.sql.catalyst.expressions.Literal(
-            UTF8String.fromString(split.path), StringType)
-            : org.apache.spark.sql.catalyst.expressions.Expression
-          case -2 => org.apache.spark.sql.catalyst.expressions.Literal(
-            split.dataSeq.map(Long.box).orNull,
-            org.apache.spark.sql.types.LongType)
-            : org.apache.spark.sql.catalyst.expressions.Expression
-          case i => BoundReference(i, readSchema.fields(i).dataType, nullable = true)
-        })
-        it1.map(proj.apply)
+      override def next(): InternalRow = {
+        if (!hasNext) throw new NoSuchElementException
+        val r = nextRow
+        nextRow = null
+        r
+      }
     }
   }
+}
+
+private[connector] object GraftReaderFactory {
+  /** Whether a parquet `split` reads raw: every row of its range, with
+    * no pushed filter (a name-mapped file's filters would name the wrong
+    * columns) and each row's position in the file (position deletes,
+    * `_pos`, `_row_id`). */
+  def readsRaw(split: GraftFileSplit, wantsPositions: Boolean): Boolean =
+    split.deletes.hasPositional || wantsPositions || split.renames.nonEmpty
+
+  /** `schema` and the parquet reader's file-relative row position. */
+  def positioned(schema: StructType): StructType =
+    schema.add(StructField(ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType))
 }

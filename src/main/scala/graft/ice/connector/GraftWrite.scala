@@ -252,13 +252,11 @@ private[connector] object GraftCommit {
               "not supported")
         }
         if (upsert && t.currentSnapshot.isDefined && entries.nonEmpty) {
-          // the key columns of the files just written, in their format
-          val keySchema = StructType(keyCols.map(c =>
-            SparkConv.toSparkField(t.schema.findFieldByName(c).get)))
-          val keys = entries.groupBy(_.dataFile.fileFormat).map { case (fmt, es) =>
-            graft.ice.FormatRegistry.reader(fmt)(spark, keySchema,
-              es.map(_.dataFile.filePath), Map.empty)
-          }.reduce(_ unionByName _).distinct()
+          // the key columns of the files just written, read through the
+          // scan: no deletes apply to them yet
+          val keys = GraftPlannedTable.read(spark, t, t.schema, PlannedFiles(
+              entries.map(e => graft.ice.FileScanTask(e.dataFile, e.specId)), Nil, None))
+            .select(keyCols.map(org.apache.spark.sql.functions.col): _*).distinct()
           val delEntries = t.delete(spark).equalityDeleteEntries(keys)
           SnapshotProducer.commit(t, spark, DataOperation.Overwrite, entries,
             addedDeleteEntries = delEntries,

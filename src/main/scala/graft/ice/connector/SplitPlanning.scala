@@ -79,12 +79,12 @@ private[graft] object SplitPlanning {
     * new item tries each before sealing the oldest), keeping packing
     * O(n·k) and roughly input-ordered, which preserves any locality the
     * planner's file order carries. */
-  def pack(items: Seq[GraftScanSplit], target: Long, openCost: Long,
+  def pack(items: Seq[GraftFileSplit], target: Long, openCost: Long,
       lookback: Int): Seq[InputPartition] = {
     val out = ArrayBuffer[InputPartition]()
-    def emit(members: ArrayBuffer[GraftScanSplit]): Unit =
+    def emit(members: ArrayBuffer[GraftFileSplit]): Unit =
       out += (if (members.size == 1) members.head else GraftPackedSplit(members.toSeq))
-    val bins = ArrayBuffer[(ArrayBuffer[GraftScanSplit], Long)]()
+    val bins = ArrayBuffer[(ArrayBuffer[GraftFileSplit], Long)]()
     items.foreach { it =>
       val w = math.max(openCost, it.rangeLength)
       // overflow-safe fit test: `used + w <= target` wraps negative for

@@ -213,7 +213,7 @@ object AvroData {
       case _ => v
     }
 
-  private def readFileRows(path: String, schema: StructType,
+  private[ice] def readFileRows(path: String, schema: StructType,
       start: Long, end: Long,
       mappedNames: Map[Long, Seq[String]]): Iterator[Row] = {
     val reader = new DataFileReader[GenericRecord](
@@ -292,10 +292,12 @@ object AvroData {
     readFiles(spark, files, schema)
   }
 
-  /** Read one Avro file back into a DataFrame. Executor-side like
-    * readFiles — kept as the single-file convenience entry. */
-  def read(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    readFiles(spark, Seq(path), schema)
+  /** Top-level field names of an Avro data file's schema. */
+  def fieldNames(path: String): Set[String] = {
+    val reader = new DataFileReader[GenericRecord](
+      new File(path), ManifestAvro.genericDatumReader())
+    try reader.getSchema.getFields.asScala.map(_.name).toSet finally reader.close()
+  }
 
   /** Record count from block headers only — no datum decoding (each Avro
     * block header carries its object count). Driver-side migration

@@ -891,9 +891,9 @@ final class RowDelete(table: IceTable, spark: SparkSession) {
   /** (file_path, pos) of every row of the `matching` files where `cond`
     * holds — the match set of both merge-on-read deletes. Files carrying
     * parquet field ids read by id with the table schema, through
-    * `FileListRelation` like every `toDF` read. Id-less files
-    * (addFiles registrations, split out by `toDF`'s id test) read through
-    * the scan's `_file`/`_pos` columns, so a predicate sees the same
+    * `FileListRelation`. Id-less files (addFiles registrations, split
+    * out by the scan's id test) read through the scan's `_file`/`_pos`
+    * columns, so a predicate sees the same
     * values a scan does: name-mapped columns, initial-defaults and
     * identity-partition constants. */
   private def matchedPositions(matching: Seq[FileScanTask],

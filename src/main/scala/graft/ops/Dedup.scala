@@ -67,12 +67,9 @@ object Dedup {
 
   private def ensureParallelism(df: DataFrame): DataFrame = Par.ensure(df)
 
-  /** [[TextExprs.noPushdown]] with the A/B escape hatch
-    * (SPARK_GRAFT_NO_KERNEL_BARRIER re-exposes the r18 duplicate-eval
-    * plans for same-window measurement). */
-  private def barrier(c: Column): Column =
-    if (Flags.on("SPARK_GRAFT_NO_KERNEL_BARRIER")) c
-    else TextExprs.noPushdown(c)
+  /** [[TextExprs.noPushdown]]: keeps inferred filters from re-running a
+    * kernel beneath its projection (r19: sf0.1 1.46x, sf1 3.30 -> 2.89 s). */
+  private def barrier(c: Column): Column = TextExprs.noPushdown(c)
 
   /** (doc_id, signature[k]) minhash signatures, computed entirely
     * per-row by a codegen Expression (TextExprs.minhash): MAP-ONLY — no
@@ -420,8 +417,8 @@ object Dedup {
     // noPushdown barrier (guide §4.4, r19): posexplode's inferred
     // size>0/isnotnull filters otherwise push beneath the projection and
     // re-run the window-hash kernel up to twice more per row inside the
-    // scan filter (seen in the r18 d12 plan dumps; sf1 warm A/B via
-    // SPARK_GRAFT_NO_KERNEL_BARRIER: d12 4.62 -> 2.11 s).
+    // scan filter (seen in the r18 d12 plan dumps; sf1 warm A/B without
+    // the barrier: d12 4.62 -> 2.11 s).
     // The two `wins` consumers (the flagged aggregate and the hits join)
     // still plan as separate subtrees — they prune different columns, so
     // no exchange reuse — and the double scan is DELIBERATE (r18 ADVICE

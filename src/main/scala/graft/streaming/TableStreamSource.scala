@@ -110,8 +110,7 @@ private[streaming] final class GraftStreamTable(schema0: StructType,
       new GraftCdcScanBuilder(schema0, options)
     else {
       val t = GraftTableStream.load(options)
-      new graft.ice.connector.GraftScanBuilder(t,
-        graft.ice.types.SparkConv.toSpark(t.schema), Some(options))
+      new graft.ice.connector.GraftScanBuilder(t, t.schema, Some(options))
     }
   }
 }

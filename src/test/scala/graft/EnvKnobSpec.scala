@@ -6,9 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the `SPARK_GRAFT_*` names the main sources read. Program
   * behaviour takes no switches from the environment: the allowed names
-  * are the Bench/Verify/ListQueries/ScaleGen/Prof harness contract, the
-  * one open A/B hatch and the scratch-directory deployment path. A new
-  * name has to be added here on purpose. */
+  * are the Bench/Verify/ListQueries/ScaleGen/Prof harness contract and
+  * the scratch-directory deployment path. A new name has to be added
+  * here on purpose. */
 class EnvKnobSpec extends AnyFunSuite {
 
   private val harness = Set(
@@ -23,8 +23,6 @@ class EnvKnobSpec extends AnyFunSuite {
     "PROF_CPUS", "PROF_SHUFFLE", "PROF_WIPE_SIDECARS")
 
   private val allowed = (harness ++ Set(
-    // Dedup's noPushdown barrier, open until the d3 re-check (ops.Flags)
-    "NO_KERNEL_BARRIER",
     // scratch directory for d9's multi-pass posting join
     "SCRATCH")).map("SPARK_GRAFT_" + _)
 

@@ -46,13 +46,12 @@ class FileIOSpec extends AnyFunSuite {
   test("format registry: parquet+avro+orc registered, puffin fails loudly") {
     import graft.ice.FormatRegistry
     assert(FormatRegistry.supportedFormats == Set("PARQUET", "AVRO", "ORC"))
-    FormatRegistry.reader("avro") // case-insensitive lookup
-    FormatRegistry.reader("orc")
+    FormatRegistry.writer("avro") // case-insensitive lookup
+    FormatRegistry.writer("orc")
     // PUFFIN is a DV/statistics container (read by Puffin.scala), never
-    // a row source
-    val e = intercept[UnsupportedOperationException](FormatRegistry.reader("PUFFIN"))
+    // a row format
+    val e = intercept[UnsupportedOperationException](FormatRegistry.writer("PUFFIN"))
     assert(e.getMessage.contains("PUFFIN"))
-    intercept[UnsupportedOperationException](FormatRegistry.writer("PUFFIN"))
   }
 
   test("commit race through the FileIO seam: one winner, losers see false") {

@@ -400,8 +400,11 @@ class GraftSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
     def scannedFiles(sql: String): Int = {
       val plan = spark.sql(sql).queryExecution.executedPlan
       plan.collectLeaves().collect {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-          s.relation.location.inputFiles.length
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+          b.inputPartitions.flatMap {
+            case graft.ice.connector.GraftPackedSplit(members) => members
+            case s: graft.ice.connector.GraftFileSplit => Seq(s)
+          }.map(_.path).distinct.size
       }.sum
     }
     val all = scannedFiles("SELECT * FROM graft.db.pr")

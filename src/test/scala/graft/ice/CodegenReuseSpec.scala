@@ -30,6 +30,8 @@ class CodegenReuseSpec extends AnyFunSuite with BeforeAndAfterAll {
     SparkSession.clearDefaultSession()
     SparkSession.builder()
       .master("local[2]")
+      .config("spark.sql.catalog.ice", "graft.ice.connector.GraftCatalogPlugin")
+      .config("spark.sql.catalog.ice.warehouse", warehouse)
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
@@ -108,6 +110,43 @@ class CodegenReuseSpec extends AnyFunSuite with BeforeAndAfterAll {
       "PushedFilters: [In(l_linenumber, [2,5])]")
     assert(pushed(E.equal("l_returnflag", Literal.string("R"))) ==
       "PushedFilters: [IsNotNull(l_returnflag), EqualTo(l_returnflag,R)]")
+  }
+
+  test("per-split sequence numbers compile nothing new: 1 append, then 8") {
+    val k = spark.range(40).select(col("id").as("k"), col("id").cast("string").as("v"))
+    def appended(name: String, n: Int): Unit = {
+      val t = IceTable.create(cat, TableIdentifier.parse(s"db.$name"),
+        SparkConv.fromSpark(k.schema), properties = Map("format-version" -> "2"))
+      (0 until n).foreach(_ => t.append(spark).appendDataFrame(k.coalesce(1)))
+    }
+    appended("seq1", 1)
+    appended("seq8", 8)
+    def read(name: String) = spark.sql(
+      s"SELECT k, v, _last_updated_sequence_number FROM ice.db.$name").collect()
+    read("seq1")
+    var rows: Array[Row] = null
+    assert(compiles { rows = read("seq8") } == 0)
+    assert(rows.length == 8 * 40)
+    assert(rows.map(_.getLong(2)).toSet == (1L to 8L).toSet)
+  }
+
+  test("a Hive import with other identity-partition values compiles nothing new") {
+    def imported(name: String, parts: Seq[Int]): DataFrame = {
+      val src = lineitem.limit(600).withColumn("part",
+        element_at(array(parts.map(lit): _*), (col("l_orderkey") % parts.size + 1).cast("int")))
+      val dir = java.nio.file.Files.createTempDirectory(s"hive_$name").toString + "/src"
+      src.write.partitionBy("part").parquet(dir)
+      spark.sql(s"CALL ice.system.snapshot_table(source_dir => '$dir', table => 'db.$name')")
+        .collect()
+      src
+    }
+    imported("hive_a", Seq(1, 2, 3, 4, 5, 6))
+    val b = imported("hive_b", Seq(11, 12, 13, 14, 15, 16))
+    def scan(name: String) = load(name).newScan().toDF(spark)
+    scan("hive_a").collect()
+    assert(compiles { scan("hive_b").collect() } == 0)
+    def sorted(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(sorted(scan("hive_b").select(b.columns.map(col): _*)) == sorted(b))
   }
 
   // ---- every ToColumn operator over every primitive type, against plain Spark ----

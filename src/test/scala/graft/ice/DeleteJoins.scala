@@ -40,8 +40,18 @@ object DeleteJoins {
       }.toDF("__dfile", "__dpos"))
   }
 
-  /** (__dfile, __dpos) rows of position-delete FILE entries (never DVs),
-    * read through `FormatRegistry`. */
+  /** Files of one container format as a DataFrame of `schema`, read by
+    * Spark's own sources (Avro through `AvroData`); parquet columns
+    * resolve by field id where `schema` carries ids. */
+  def readFiles(spark: SparkSession, format: String, schema: StructType,
+      paths: Seq[String]): DataFrame = format.toUpperCase(java.util.Locale.ROOT) match {
+    case "AVRO" => graft.ice.manifest.AvroData.readFiles(spark, paths, schema)
+    case "ORC" => spark.read.schema(schema).orc(paths: _*)
+    case _ => FileListRelation.parquet(spark,
+      paths.map(p => p -> java.nio.file.Files.size(java.nio.file.Paths.get(p))), schema)
+  }
+
+  /** (__dfile, __dpos) rows of position-delete FILE entries (never DVs). */
   def readPositionDeleteRows(spark: SparkSession,
       entries: Seq[ManifestEntry]): Option[DataFrame] = {
     if (entries.isEmpty) return None
@@ -49,8 +59,8 @@ object DeleteJoins {
       StructField("file_path", StringType), StructField("pos", LongType)))
     Some(entries.groupBy(_.dataFile.fileFormat.toUpperCase(java.util.Locale.ROOT))
       .map { case (fmt, es) =>
-        FormatRegistry.reader(fmt)(spark, posSchema,
-          es.map(e => ManifestAvro.stripFileScheme(e.dataFile.filePath)), Map.empty)
+        readFiles(spark, fmt, posSchema,
+          es.map(e => ManifestAvro.stripFileScheme(e.dataFile.filePath)))
       }.reduce(_ unionByName _)
       .select(FilePaths.storedColumn(col("file_path")).as("__dfile"),
         col("pos").as("__dpos")))
@@ -60,9 +70,8 @@ object DeleteJoins {
   def readEqualityDeleteRows(spark: SparkSession, schema: Schema,
       e: ManifestEntry): DataFrame = {
     val eqFields = e.dataFile.equalityIds.flatMap(schema.findFieldById)
-    FormatRegistry.reader(e.dataFile.fileFormat)(spark,
-      StructType(eqFields.map(SparkConv.toSparkField)),
-      Seq(ManifestAvro.stripFileScheme(e.dataFile.filePath)), Map.empty)
+    readFiles(spark, e.dataFile.fileFormat, StructType(eqFields.map(SparkConv.toSparkField)),
+      Seq(ManifestAvro.stripFileScheme(e.dataFile.filePath)))
   }
 
   /** `rows` without the rows any of `eqDeletes` deletes: one null-safe

@@ -122,10 +122,10 @@ class DeletePlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** Applies each of `deletes` to table `name` (rows `all`) as one
     * equality-delete commit, then checks `toDF`, `_deleted`, the
-    * connector (unless `connector` is false) and `planChanges` against
-    * the plain-Spark oracle and the join form. */
-  private def checkEqualityDeletes(name: String, all: DataFrame, deletes: Seq[DataFrame],
-      connector: Boolean = true): Unit = {
+    * connector and `planChanges` against the plain-Spark oracle and the
+    * join form. */
+  private def checkEqualityDeletes(name: String, all: DataFrame,
+      deletes: Seq[DataFrame]): Unit = {
     val from = load(name).currentSnapshot.get.snapshotId
     deletes.foreach(k => load(name).delete(spark).deleteByEquality(k))
     val t = load(name)
@@ -147,7 +147,7 @@ class DeletePlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
     assertSameRows(marked.filter(!col("_deleted")).drop("_deleted"), live, s"$name unmarked")
     assertSameRows(marked.filter(col("_deleted")).drop("_deleted"), dead, s"$name marked")
 
-    if (connector) assertSameRows(spark.table(s"ice.db.$name"), live, s"$name connector")
+    assertSameRows(spark.table(s"ice.db.$name"), live, s"$name connector")
 
     val changes = t.planChanges(spark, from, to)
     assert(!hasJoin(changes), changes.queryExecution.optimizedPlan.toString)
@@ -216,10 +216,8 @@ class DeletePlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
       properties = Map(NameMapping.PropertyKey -> mapping.toJson, "format-version" -> "2"))
     t.append(spark).addFiles(Seq(file))
     import spark.implicits._
-    // the connector reads id-less files by current name and does not
-    // resolve name mappings at all, deletes or not: only toDF does
     checkEqualityDeletes("eq_mapped", src.toDF("record_id", "label"),
-      Seq(Seq(3L, 7L, 11L).toDF("record_id"), Seq("row-2").toDF("label")), connector = false)
+      Seq(Seq(3L, 7L, 11L).toDF("record_id"), Seq("row-2").toDF("label")))
   }
 
   test("an equality delete still applies after its key column is renamed") {
