@@ -57,15 +57,13 @@ object GraftFunctions {
 }
 
 /** `spark.sql.extensions` entry point: the codegen function surface
-  * plus SQL table resolution over `graft.<ns>.<table>` identifiers
-  * (see GraftTableResolution). */
+  * plus the DDL Spark's grammar lacks (partition evolution, refs, write
+  * order, identifier fields; see GraftSqlParser). Tables resolve through
+  * a registered [[graft.ice.connector.GraftCatalogPlugin]] catalog
+  * whether or not these extensions are installed. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.functions.foreach(ext.injectFunction)
-    // hint-resolution batch: runs BEFORE ResolveRelations, which would
-    // otherwise reject the 3-part `graft.db.t` name against the V1
-    // session catalog (requiresSinglePartNamespace) before our rule fires
-    ext.injectHintResolutionRule(session => GraftTableResolution(session))
     // partition-evolution DDL that Spark's grammar lacks
     ext.injectParser((_, parser) => new GraftSqlParser(parser))
   }

@@ -24,9 +24,9 @@ import graft.ice.transform.{BucketTransform, DayTransform, HourTransform, Identi
   * Everything else falls through to Spark's parser verbatim. The
   * statement grammar is intentionally narrow (multipart identifiers and
   * the FIELD keyword, which Spark's ADD PARTITION grammar lacks), so
-  * the regex front-end cannot shadow any standard SQL. Identifiers
-  * resolve catalog-aware: `ice.db.t` uses catalog `ice`'s warehouse,
-  * `graft.db.t` the `spark.graft.warehouse` conf. */
+  * the regex front-end cannot shadow any standard SQL. The identifier's
+  * head names a registered [[graft.ice.connector.GraftCatalogPlugin]]
+  * catalog (`ice.db.t`, `graft.db.t`), whose warehouse serves the table. */
 class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
 
   override def parsePlan(sqlText: String): LogicalPlan =
@@ -53,9 +53,9 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
 private[graft] object GraftPartitionDdl {
 
   // any multipart identifier: partition evolution must be reachable for
-  // tables addressed through a GraftCatalogPlugin catalog (ice.db.t),
-  // not only the graft.* conf root. The FIELD keyword keeps Hive-style
-  // `ADD PARTITION (spec)` out of this grammar.
+  // tables under any GraftCatalogPlugin catalog (ice.db.t, graft.db.t).
+  // The FIELD keyword keeps Hive-style `ADD PARTITION (spec)` out of
+  // this grammar.
   private val Add =
     """(?is)\s*ALTER\s+TABLE\s+(\w+(?:\.\w+)+)\s+ADD\s+PARTITION\s+FIELD\s+(.+?)(?:\s+AS\s+(\w+))?\s*;?\s*""".r
   private val Drop =
@@ -139,26 +139,17 @@ private[graft] object GraftPartitionDdl {
 }
 
 private[graft] object GraftPartitionCommands {
-  /** Warehouse resolution, catalog-aware: a leading part naming a
-    * registered [[graft.ice.connector.GraftCatalogPlugin]] resolves via
-    * THAT catalog's warehouse option (ice.db.t); otherwise the
-    * `spark.graft.warehouse` conf serves, with a `graft` head stripped
-    * as a catalog label and any other multipart name taken as
-    * namespace.table under the conf root. */
+  /** The table `parts` names: its head is a registered
+    * [[graft.ice.connector.GraftCatalogPlugin]] catalog, the rest the
+    * namespace and table under that catalog's warehouse. */
   def loadTable(session: SparkSession, parts: Seq[String]): IceTable = {
-    val viaCatalog =
-      try session.sessionState.catalogManager.catalog(parts.head) match {
-        case g: graft.ice.connector.GraftCatalogPlugin =>
-          Some((g.warehouseLocation, parts.tail))
-        case _ => None
-      } catch { case _: Throwable => None }
-    val (wh, rel) = viaCatalog.getOrElse {
-      val w = session.conf.getOption("spark.graft.warehouse").getOrElse(
-        throw new IllegalStateException(
-          s"'${parts.mkString(".")}' is not under a graft catalog; set " +
-            "spark.graft.warehouse to address tables by bare namespace"))
-      (w, if (parts.head.equalsIgnoreCase("graft")) parts.tail else parts)
+    val wh = session.sessionState.catalogManager.catalog(parts.head) match {
+      case g: graft.ice.connector.GraftCatalogPlugin => g.warehouseLocation
+      case other => throw new IllegalArgumentException(
+        s"'${parts.mkString(".")}' is not under a graft catalog " +
+          s"(catalog '${parts.head}' is ${other.getClass.getName})")
     }
+    val rel = parts.tail
     IceTable.load(new DirCatalog(wh),
       TableIdentifier(rel.slice(0, rel.length - 1), rel.last))
   }

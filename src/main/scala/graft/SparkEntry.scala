@@ -388,8 +388,7 @@ object SparkEntry {
     // cover reads every row exactly once
     "t_split_read" -> ((s, dir) => {
       Fixtures.splitRead(s, dir)
-      s.conf.set("spark.sql.catalog.ice", "graft.ice.connector.GraftCatalogPlugin")
-      s.conf.set("spark.sql.catalog.ice.warehouse", Tables.warehouseDir(dir))
+      Tables.sqlCatalogs(s, dir)
       s.table("ice.tpch.lineitem_bigfile")
         .filter(col("l_quantity") > 0)
         .groupBy(col("l_returnflag"))
@@ -577,8 +576,7 @@ object SparkEntry {
     // data rewrite — then reads like any other table
     "proc_snapshot_table" -> ((s, dir) => {
       import graft.ice.catalog._
-      s.conf.set("spark.sql.catalog.ice", "graft.ice.connector.GraftCatalogPlugin")
-      s.conf.set("spark.sql.catalog.ice.warehouse", Tables.warehouseDir(dir))
+      Tables.sqlCatalogs(s, dir)
       Tables.ensure(Tables.catalog(dir), TableIdentifier(Seq("catq"), "region_snap")) {
         s.sql(s"""CALL ice.system.snapshot_table(
                  |  source_dir => '$dir/region.parquet',
@@ -593,8 +591,7 @@ object SparkEntry {
     // branch flavor is t2_wap's fast_forward). Oracle = the whole table.
     "proc_cherrypick" -> ((s, dir) => {
       import graft.ice.catalog._
-      s.conf.set("spark.sql.catalog.ice", "graft.ice.connector.GraftCatalogPlugin")
-      s.conf.set("spark.sql.catalog.ice.warehouse", Tables.warehouseDir(dir))
+      Tables.sqlCatalogs(s, dir)
       val cat = Tables.catalog(dir)
       val ident = TableIdentifier(Seq("catq"), "orders_cherry")
       Tables.ensure(cat, ident) {
@@ -622,8 +619,7 @@ object SparkEntry {
     // original rows — a wrong/null injected value hash-mismatches.
     "proc_add_files_hive" -> ((s, dir) => {
       import graft.ice.catalog._
-      s.conf.set("spark.sql.catalog.ice", "graft.ice.connector.GraftCatalogPlugin")
-      s.conf.set("spark.sql.catalog.ice.warehouse", Tables.warehouseDir(dir))
+      Tables.sqlCatalogs(s, dir)
       val cat = Tables.catalog(dir)
       Tables.ensure(cat, TableIdentifier(Seq("catq"), "orders_hive")) {
         val orders = Tables.raw(s, dir, "orders")
@@ -937,12 +933,12 @@ object SparkEntry {
     "maint_compaction" -> ((s, dir) => Fixtures.compaction(s, dir).newScan().toDF(s)
       .select("o_orderkey", "o_orderstatus", "o_totalprice")),
 
-    // pure-SQL surface: the analyzer rule resolves graft.<ns>.<table>
-    // identifiers to full metadata-planned scans (GraftTableResolution);
+    // pure-SQL surface: graft.<ns>.<table> resolves through the `graft`
+    // catalog to the connector's metadata-planned scan;
     // time-travel SQL forms are pinned in GraftSqlSpec
     "sql_catalog" -> ((s, dir) => {
       Tables.ice(s, dir, "nation"); Tables.ice(s, dir, "region")
-      s.conf.set("spark.graft.warehouse", Tables.warehouseDir(dir))
+      Tables.sqlCatalogs(s, dir)
       s.sql(
         """SELECT r.r_name, count(*) AS n_nations
           |FROM graft.tpch.nation n
@@ -985,7 +981,7 @@ object SparkEntry {
     "sql_branch_ddl" -> ((s, dir) => {
       import graft.ice._, graft.ice.catalog._
       import graft.ice.types.SparkConv
-      s.conf.set("spark.graft.warehouse", Tables.warehouseDir(dir))
+      Tables.sqlCatalogs(s, dir)
       val cat = Tables.catalog(dir)
       val ident = TableIdentifier(Seq("sqlq"), "supp_refddl")
       Tables.ensure(cat, ident) {
@@ -1147,8 +1143,7 @@ object SparkEntry {
     "proc_changelog_view" -> ((s, dir) => {
       val t = Fixtures.netCdc(s, dir)
       val first = t.snapshots.sortBy(_.sequenceNumber).head.snapshotId
-      s.conf.set("spark.sql.catalog.ice", "graft.ice.connector.GraftCatalogPlugin")
-      s.conf.set("spark.sql.catalog.ice.warehouse", Tables.warehouseDir(dir))
+      Tables.sqlCatalogs(s, dir)
       s.sql(s"""CALL ice.system.create_changelog_view(
               |  table => 'tpch.orders_netcdc',
               |  changelog_view => 'orders_netcdc_ncv',
@@ -1840,8 +1835,7 @@ object SparkEntry {
     // co-located fact-fact join.
     "spj_join" -> ((s, dir) => {
       Fixtures.spjTables(s, dir)
-      s.conf.set("spark.sql.catalog.ice", "graft.ice.connector.GraftCatalogPlugin")
-      s.conf.set("spark.sql.catalog.ice.warehouse", Tables.warehouseDir(dir))
+      Tables.sqlCatalogs(s, dir)
       val prev = Seq("spark.sql.sources.v2.bucketing.enabled",
         "spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.enabled")
         .map(k => k -> s.conf.getOption(k))
@@ -1870,8 +1864,7 @@ object SparkEntry {
     // that still re-sorts every partition it didn't shuffle.
     "spj_sorted_join" -> ((s, dir) => {
       Fixtures.spjSortedTables(s, dir)
-      s.conf.set("spark.sql.catalog.ice", "graft.ice.connector.GraftCatalogPlugin")
-      s.conf.set("spark.sql.catalog.ice.warehouse", Tables.warehouseDir(dir))
+      Tables.sqlCatalogs(s, dir)
       val prev = Seq("spark.sql.sources.v2.bucketing.enabled",
         "spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.enabled")
         .map(k => k -> s.conf.getOption(k))
@@ -1904,8 +1897,7 @@ object SparkEntry {
     // the stats say the build side is small.
     "q_stats_broadcast" -> ((s, dir) => {
       Fixtures.stats(s, dir)
-      s.conf.set("spark.sql.catalog.ice", "graft.ice.connector.GraftCatalogPlugin")
-      s.conf.set("spark.sql.catalog.ice.warehouse", Tables.warehouseDir(dir))
+      Tables.sqlCatalogs(s, dir)
       val prev = Seq("spark.sql.autoBroadcastJoinThreshold",
         "spark.sql.adaptive.enabled").map(k => k -> s.conf.getOption(k))
       // threshold sits BETWEEN the ndv-scaled estimate (~bytes) and the
@@ -1942,8 +1934,7 @@ object SparkEntry {
     // from the raw parquet.
     "q_agg_pushdown" -> ((s, dir) => {
       Fixtures.aggPush(s, dir)
-      s.conf.set("spark.sql.catalog.ice", "graft.ice.connector.GraftCatalogPlugin")
-      s.conf.set("spark.sql.catalog.ice.warehouse", Tables.warehouseDir(dir))
+      Tables.sqlCatalogs(s, dir)
       import graft.ice.connector.GraftAggPushStats
       val before = GraftAggPushStats.pushes.get()
       val df = s.sql(
@@ -1970,8 +1961,7 @@ object SparkEntry {
     // in-query: the push fires AND plans fewer files than the table has.
     "q_topn_pushdown" -> ((s, dir) => {
       Fixtures.topN(s, dir)
-      s.conf.set("spark.sql.catalog.ice", "graft.ice.connector.GraftCatalogPlugin")
-      s.conf.set("spark.sql.catalog.ice.warehouse", Tables.warehouseDir(dir))
+      Tables.sqlCatalogs(s, dir)
       import graft.ice.connector.GraftTopNStats
       val before = GraftTopNStats.pushes.get()
       val df = s.table("ice.tpch.topn_orders")
@@ -1993,8 +1983,7 @@ object SparkEntry {
     // at 100 TB ("count per partition") costs a driver metadata walk.
     "q_agg_pushdown_grouped" -> ((s, dir) => {
       Fixtures.aggPushGrouped(s, dir)
-      s.conf.set("spark.sql.catalog.ice", "graft.ice.connector.GraftCatalogPlugin")
-      s.conf.set("spark.sql.catalog.ice.warehouse", Tables.warehouseDir(dir))
+      Tables.sqlCatalogs(s, dir)
       import graft.ice.connector.GraftAggPushStats
       val before = GraftAggPushStats.pushes.get()
       val df = s.sql(
@@ -2020,8 +2009,7 @@ object SparkEntry {
     // — a zero NaN count plus exact bounds makes the double provable
     "q_agg_pushdown_float" -> ((s, dir) => {
       Fixtures.aggPushFloat(s, dir)
-      s.conf.set("spark.sql.catalog.ice", "graft.ice.connector.GraftCatalogPlugin")
-      s.conf.set("spark.sql.catalog.ice.warehouse", Tables.warehouseDir(dir))
+      Tables.sqlCatalogs(s, dir)
       import graft.ice.connector.GraftAggPushStats
       val before = GraftAggPushStats.pushes.get()
       val df = s.sql(
@@ -2038,8 +2026,7 @@ object SparkEntry {
     // roll back through SQL — the surviving table must equal the original
     "proc_rollback" -> ((s, dir) => {
       val t = Fixtures.procTable(s, dir)
-      s.conf.set("spark.sql.catalog.ice", "graft.ice.connector.GraftCatalogPlugin")
-      s.conf.set("spark.sql.catalog.ice.warehouse", Tables.warehouseDir(dir))
+      Tables.sqlCatalogs(s, dir)
       s.table("ice.tpch.proc_orders")
     })
   )
@@ -3270,9 +3257,7 @@ object Fixtures {
         // grow, then roll the growth back and expire it via CALL — the
         // surviving table must equal the first append exactly
         t.append(spark).appendDataFrame(df.limit(100))
-        spark.conf.set("spark.sql.catalog.ice",
-          "graft.ice.connector.GraftCatalogPlugin")
-        spark.conf.set("spark.sql.catalog.ice.warehouse", Tables.warehouseDir(sfDir))
+        Tables.sqlCatalogs(spark, sfDir)
         spark.sql(s"CALL ice.system.rollback_to_snapshot('tpch.proc_orders', $keep)")
         // explicit older_than_ms: a bare CALL now defaults to now-5d
         // (near-no-op maintenance), and this fixture WANTS the rolled-back
@@ -3464,8 +3449,9 @@ object Fixtures {
     }
 
   /** `write.update.mode=merge-on-read` (reference table_properties.h,
-    * the third mode twin): the SQL rule path supersedes matching rows
-    * with position deletes and re-appends them updated. The build gate
+    * the third mode twin): SQL UPDATE runs as Spark's delta write,
+    * superseding matching rows with position deletes and re-appending
+    * them updated. The build gate
     * pins the MoR contract — every pre-update data file still live
     * (nothing rewritten), a delete plane present. */
   def updateMor(spark: SparkSession, sfDir: String): IceTable =
@@ -3475,8 +3461,7 @@ object Fixtures {
         properties = Map("write.update.mode" -> "merge-on-read"))
       t.append(spark).appendDataFrame(raw)
       val before = t.newScan().planFiles().map(_.file.filePath).toSet
-      spark.conf.set("spark.sql.catalog.ice", "graft.ice.connector.GraftCatalogPlugin")
-      spark.conf.set("spark.sql.catalog.ice.warehouse", Tables.warehouseDir(sfDir))
+      Tables.sqlCatalogs(spark, sfDir)
       spark.sql("UPDATE ice.tpch.orders_upd_mor " +
         "SET o_totalprice = o_totalprice * 2 WHERE o_orderkey % 10 = 0")
       val t2 = IceTable.load(cat, ident)
@@ -3956,11 +3941,10 @@ object Fixtures {
   }
 
   /** Tables for the driver-oracled SQL-path queries: all mutations run
-    * through `spark.sql` (the GraftExtensions surface), once per
-    * warehouse (the DirCatalog persists across JVMs, so the existence
-    * check is the guard and the per-JVM memo only saves re-checking).
-    * The conf is set on every call because `spark.graft.warehouse` is
-    * session conf.
+    * through `spark.sql` on `graft.*` names, once per warehouse (the
+    * DirCatalog persists across JVMs, so the existence check is the guard
+    * and the per-JVM memo only saves re-checking). The catalogs are
+    * registered on every call because their warehouse is session conf.
     *
     * Fixture-ensure stays OUTSIDE the timed region: the existence probes
     * (one metadata load per table per call) are memoized per JVM, so
@@ -3968,7 +3952,7 @@ object Fixtures {
     * conf.set — a fork-iso child's timed number measures the QUERY, not
     * re-probing. */
   def sqlDml(s: SparkSession, sfDir: String): Unit = {
-    s.conf.set("spark.graft.warehouse", Tables.warehouseDir(sfDir))
+    Tables.sqlCatalogs(s, sfDir)
     Tables.once(s"$sfDir/sqlq") {
       val cat = Tables.catalog(sfDir)
 
@@ -4039,17 +4023,14 @@ object Fixtures {
   /** Row-level DML exercised ONLY through V2 catalog identifiers
     * (`ice.catq.*`) — the catalog-symmetry counterpart of `sqlDml`:
     * same statement shapes, different mutations, so each family has an
-    * independent DuckDB oracle. `spark.graft.warehouse` is deliberately
-    * NOT required: the commands take the warehouse from the owning
-    * catalog plugin.
+    * independent DuckDB oracle.
     *
     * Memoized like `sqlDml`: the three existence probes ran INSIDE the
     * timed region on every run — a scan-split A/B (r16) measured them as
     * the whole 1.4x "regression" on sql_catalog_update's fork-iso number
     * (fixture-ensure noise, not the query). */
   def catalogDml(s: SparkSession, sfDir: String): Unit = {
-    s.conf.set("spark.sql.catalog.ice", "graft.ice.connector.GraftCatalogPlugin")
-    s.conf.set("spark.sql.catalog.ice.warehouse", Tables.warehouseDir(sfDir))
+    Tables.sqlCatalogs(s, sfDir)
     Tables.once(s"$sfDir/catq") {
       val cat = Tables.catalog(sfDir)
 

@@ -83,6 +83,15 @@ object Tables {
 
   def catalog(sfDir: String): DirCatalog = new DirCatalog(warehouseDir(sfDir))
 
+  /** Registers the SQL catalogs `ice` and `graft` over `sfDir`'s
+    * warehouse in `s`. Set on every call: the warehouse is session conf,
+    * and each catalog reads it per call. */
+  def sqlCatalogs(s: SparkSession, sfDir: String): Unit =
+    Seq("ice", "graft").foreach { name =>
+      s.conf.set(s"spark.sql.catalog.$name", "graft.ice.connector.GraftCatalogPlugin")
+      s.conf.set(s"spark.sql.catalog.$name.warehouse", warehouseDir(sfDir))
+    }
+
   /** Partition specs chosen for scale: facts partition on time (+bucket
     * for the biggest), dims stay unpartitioned. At 100 TB this is the
     * layout that keeps scans pruned and writes clustered. */

@@ -178,33 +178,49 @@ object PositionDeletes {
     * `file_path` is stripped of its `file:` scheme, the form
     * [[DeleteFileCache]] keys by; `delete_file_path` is the manifest's. */
   def tuples(spark: SparkSession, entries: Seq[ManifestEntry]): DataFrame = {
-    val files = entries.map { e =>
-      val f = e.dataFile
-      (ManifestAvro.stripFileScheme(f.filePath), f.fileSizeInBytes, f.fileFormat, f.filePath,
-        f.contentOffset.map(off => (off, f.contentSizeInBytes.getOrElse(
-          throw new IllegalStateException(s"DV ${f.filePath} missing content size")),
-          ManifestAvro.stripFileScheme(f.referencedDataFile.getOrElse(
-            throw new IllegalStateException(s"DV ${f.filePath} missing referenced file"))))))
-    }
-    val (parquet, orc) = readers(spark, files.collect { case (p, size, fmt, _, None) => (p, size, fmt) })
-    val rows = spark.sparkContext.parallelize(files, math.max(1, files.size)).flatMap {
-      case (path, size, fmt, manifestPath, dv) =>
-        val from = UTF8String.fromString(manifestPath)
-        dv match {
-          case Some((off, len, target)) =>
-            val t = UTF8String.fromString(target)
-            Puffin.readDV(path, off, len).iterator().asScala
-              .map(pos => InternalRow(t, pos.longValue, from))
-          case None =>
-            val scheme = UTF8String.fromString("file:")
-            fileRows(parquet, orc, Schema, path, size, fmt).filter(!_.isNullAt(0)).map { r =>
-              val p = r.getUTF8String(0)
-              InternalRow(if (p.startsWith(scheme)) UTF8String.fromString(
-                ManifestAvro.stripFileScheme(p.toString)) else p.clone(), r.getLong(1), from)
-            }
+    val reads = tupleReads(entries)
+    val (parquet, orc) = tupleReaders(spark, reads)
+    val rows = spark.sparkContext.parallelize(reads, math.max(1, reads.size))
+      .flatMap(tupleRows(parquet, orc, _))
+    GraftColumnBridge.ofInternalRows(spark, rows, TupleSchema)
+  }
+
+  /** One entry of [[tuples]] as its task reads it; also the input
+    * partition of the connector's `position_deletes` scan. `dv` holds a
+    * deletion vector's (offset, length, referenced data file). */
+  final case class TupleRead(path: String, size: Long, format: String,
+      manifestPath: String, dv: Option[(Long, Long, String)])
+      extends org.apache.spark.sql.connector.read.InputPartition
+
+  def tupleReads(entries: Seq[ManifestEntry]): Seq[TupleRead] = entries.map { e =>
+    val f = e.dataFile
+    TupleRead(ManifestAvro.stripFileScheme(f.filePath), f.fileSizeInBytes, f.fileFormat, f.filePath,
+      f.contentOffset.map(off => (off, f.contentSizeInBytes.getOrElse(
+        throw new IllegalStateException(s"DV ${f.filePath} missing content size")),
+        ManifestAvro.stripFileScheme(f.referencedDataFile.getOrElse(
+          throw new IllegalStateException(s"DV ${f.filePath} missing referenced file"))))))
+  }
+
+  /** The delete-file readers `reads` need (deletion vectors need none). */
+  def tupleReaders(spark: SparkSession, reads: Seq[TupleRead]): (Read, Read) =
+    readers(spark, reads.collect { case r if r.dv.isEmpty => (r.path, r.size, r.format) })
+
+  /** The tuples of one entry, read on the executor. */
+  def tupleRows(parquet: Read, orc: Read, r: TupleRead): Iterator[InternalRow] = {
+    val from = UTF8String.fromString(r.manifestPath)
+    r.dv match {
+      case Some((off, len, target)) =>
+        val t = UTF8String.fromString(target)
+        Puffin.readDV(r.path, off, len).iterator().asScala
+          .map(pos => InternalRow(t, pos.longValue, from))
+      case None =>
+        val scheme = UTF8String.fromString("file:")
+        fileRows(parquet, orc, Schema, r.path, r.size, r.format).filter(!_.isNullAt(0)).map { row =>
+          val p = row.getUTF8String(0)
+          InternalRow(if (p.startsWith(scheme)) UTF8String.fromString(
+            ManifestAvro.stripFileScheme(p.toString)) else p.clone(), row.getLong(1), from)
         }
     }
-    GraftColumnBridge.ofInternalRows(spark, rows, TupleSchema)
   }
 
   /** True when the file starts with the ORC magic `ORC` (fallback only).

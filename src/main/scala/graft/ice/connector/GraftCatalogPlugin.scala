@@ -23,15 +23,19 @@ import graft.ice.meta.{PartitionField, PartitionSpec}
 import graft.ice.transform.{BucketTransform, DayTransform, HourTransform, MonthTransform, Transform => IceTransform, TruncateTransform, YearTransform}
 import graft.ice.types.{BinaryT, DateT, DecimalT, IcePrimitive, IntT, LongT, SparkConv, StringT, TimestampT, TimestampTzT}
 
-/** Spark CatalogPlugin over a graft warehouse — the session-catalog
-  * face of the library (C1/C2 exposed to Spark's catalog manager):
+/** Spark CatalogPlugin over a graft warehouse, and the library's one
+  * SQL front end (C1/C2 exposed to Spark's catalog manager). Any name
+  * serves, `graft` included:
   *
   * {{{
-  *   spark.sql.catalog.ice = graft.ice.connector.GraftCatalogPlugin
-  *   spark.sql.catalog.ice.warehouse = /path/to/warehouse
+  *   spark.sql.catalog.graft = graft.ice.connector.GraftCatalogPlugin
+  *   spark.sql.catalog.graft.warehouse = /path/to/warehouse
   * }}}
   *
-  * Three V2 capabilities ride on it beyond table lookup:
+  * Reads, writes, DDL and row-level DML ([[GraftSparkTable]]) have the
+  * same semantics whether or not `GraftExtensions` is installed; the
+  * extensions add only functions and the DDL Spark's grammar lacks.
+  * Beyond table lookup:
   *  - **FunctionCatalog**: the partition-transform function family
   *    (`bucket`, `truncate`, `years/months/days/hours`) resolvable by
   *    Catalyst — REQUIRED for storage-partitioned joins, where Spark
@@ -42,34 +46,35 @@ import graft.ice.types.{BinaryT, DateT, DecimalT, IcePrimitive, IntT, LongT, Spa
   *    remove_orphan_files, zorder, rollback_to_snapshot, fast_forward)
   *    — the SQL face of the Compaction/ManageSnapshots/TableMaintenance
   *    ops.
-  *  - V2 reads via [[GraftSparkTable]] (storage-partitioned joins,
-  *    connector pushdown).
-  *
-  * The `graft.*` SQL rule surface (GraftTableResolution) keeps working
-  * unchanged — it resolves earlier in analysis; this plugin serves what
-  * rules cannot: CALL statements and partitioning-aware V2 scans. */
+  *  - Inspection tables (`<catalog>.db.t.snapshots`, ...,
+  *    `position_deletes`; [[GraftMetadataTables]]). */
 class GraftCatalogPlugin extends TableCatalog with SupportsNamespaces
     with FunctionCatalog with ProcedureCatalog {
 
   private var catalogName: String = _
-  private var warehouse: String = _
+  private var initWarehouse: Option[String] = None
 
-  private def cat = new DirCatalog(warehouse)
+  private def cat = new DirCatalog(warehouseLocation)
   private def toId(ident: Identifier): TableIdentifier =
     TableIdentifier(ident.namespace.toSeq, ident.name)
 
   override def initialize(name: String, options: CaseInsensitiveStringMap): Unit = {
     catalogName = name
-    warehouse = Option(options.get("warehouse")).getOrElse(
-      throw new IllegalArgumentException(
-        s"catalog '$name' requires option spark.sql.catalog.$name.warehouse"))
+    initWarehouse = Option(options.get("warehouse"))
   }
   override def name(): String = catalogName
 
-  /** The configured warehouse root — read by the SQL rule surface to
-    * dispatch row-level commands (UPDATE/MERGE/DELETE) on this catalog's
-    * identifiers through the same ops as `graft.*` names. */
-  def warehouseLocation: String = warehouse
+  /** The warehouse root: the active session's
+    * `spark.sql.catalog.<name>.warehouse`, read on every call (Spark's
+    * catalog manager keeps the plugin it first built, so re-pointing or
+    * unsetting the key takes effect at once); outside a session, the
+    * option the plugin was initialized with. */
+  def warehouseLocation: String =
+    SparkSession.getActiveSession
+      .map(_.conf.getOption(s"spark.sql.catalog.$catalogName.warehouse"))
+      .getOrElse(initWarehouse)
+      .getOrElse(throw new IllegalArgumentException(
+        s"catalog '$catalogName' requires option spark.sql.catalog.$catalogName.warehouse"))
 
   // ---- TableCatalog ----
 
@@ -78,11 +83,13 @@ class GraftCatalogPlugin extends TableCatalog with SupportsNamespaces
       .map(i => Identifier.of(i.namespace.toArray, i.name)).toArray
 
   override def loadTable(ident: Identifier): Table = {
+    val wh = warehouseLocation
+    val c = new DirCatalog(wh)
     val id = toId(ident)
-    if (cat.tableExists(id))
-      new GraftSparkTable(IceTable.load(cat, id), catalogName,
-        (ident.namespace :+ ident.name).mkString("."), warehouse)
-    else GraftMetadataTables.resolve(cat, ident, catalogName).getOrElse(
+    if (c.tableExists(id))
+      new GraftSparkTable(IceTable.load(c, id), catalogName,
+        (ident.namespace :+ ident.name).mkString("."), wh)
+    else GraftMetadataTables.resolve(c, ident, catalogName).getOrElse(
       throw new NoSuchTableException(ident))
   }
 
@@ -93,26 +100,28 @@ class GraftCatalogPlugin extends TableCatalog with SupportsNamespaces
     * empty or overlong digit string fails cleanly, not with a
     * NumberFormatException). */
   override def loadTable(ident: Identifier, version: String): Table = {
-    val t = IceTable.load(cat, toId(ident))
+    val wh = warehouseLocation
+    val t = IceTable.load(new DirCatalog(wh), toId(ident))
     val snapId = t.refs.get(version).map(_.snapshotId)
       .orElse(version.toLongOption
         .filter(id => t.metadata.snapshotById(id).isDefined))
       .getOrElse(throw new IllegalArgumentException(
         s"$ident: '$version' names neither a ref nor a snapshot id"))
     new GraftSparkTable(t, catalogName,
-      (ident.namespace :+ ident.name).mkString("."), warehouse, Some(snapId))
+      (ident.namespace :+ ident.name).mkString("."), wh, Some(snapId))
   }
 
   /** `TIMESTAMP AS OF` through the catalog; Spark hands MICROseconds. */
   override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
-    val t = IceTable.load(cat, toId(ident))
+    val wh = warehouseLocation
+    val t = IceTable.load(new DirCatalog(wh), toId(ident))
     val ms = timestampMicros / 1000L
     val snapId = t.metadata.snapshotLog.filter(_.timestampMs <= ms)
       .lastOption.map(_.snapshotId).getOrElse(
         throw new IllegalArgumentException(
           s"no snapshot in $ident as of ${java.time.Instant.ofEpochMilli(ms)}"))
     new GraftSparkTable(t, catalogName,
-      (ident.namespace :+ ident.name).mkString("."), warehouse, Some(snapId))
+      (ident.namespace :+ ident.name).mkString("."), wh, Some(snapId))
   }
 
   override def tableExists(ident: Identifier): Boolean = cat.tableExists(toId(ident))
@@ -187,6 +196,9 @@ class GraftCatalogPlugin extends TableCatalog with SupportsNamespaces
       val up = t.updateSchema()
       schemaChanges.foreach {
         case a: TableChange.AddColumn =>
+          // a new column takes the next field id and goes last
+          require(a.position() == null,
+            s"ADD COLUMN ${top(a.fieldNames)} ... FIRST/AFTER is not supported")
           // a DEFAULT clause maps to v3 defaults: the literal becomes both
           // the initial-default (what rows in pre-existing files read) and
           // the write-default (what future column-less writes fill)
@@ -250,6 +262,10 @@ class GraftCatalogPlugin extends TableCatalog with SupportsNamespaces
 
   override def dropTable(ident: Identifier): Boolean = cat.dropTable(toId(ident))
 
+  /** `DROP TABLE ... PURGE`: drops the table and deletes its files. */
+  override def purgeTable(ident: Identifier): Boolean =
+    cat.dropTable(toId(ident), purge = true)
+
   override def renameTable(from: Identifier, to: Identifier): Unit =
     cat.renameTable(toId(from), toId(to))
 
@@ -289,7 +305,7 @@ class GraftCatalogPlugin extends TableCatalog with SupportsNamespaces
   override def loadProcedure(ident: Identifier): UnboundProcedure = {
     require(ident.namespace.sameElements(Array("system")),
       s"procedures live in the 'system' namespace, got ${ident.namespace.mkString(".")}")
-    GraftProcedures.load(ident.name, () => warehouse).getOrElse(
+    GraftProcedures.load(ident.name, () => warehouseLocation).getOrElse(
       throw new UnsupportedOperationException(s"no such procedure: ${ident.name}"))
   }
 
@@ -302,12 +318,15 @@ private[connector] object CatalogV2Compat {
 }
 
 /** Inspection tables as catalog identifiers:
-  * `SELECT * FROM <catalog>.db.t.snapshots` (same suffix vocabulary as
-  * the `graft.db.t.<name>` SQL rule surface). Served as a LocalScan —
-  * inspection output is metadata-sized by construction. */
+  * `SELECT * FROM <catalog>.db.t.snapshots` — unless a real table
+  * shadows the suffix name. The metadata-sized ones are served as a
+  * LocalScan; `position_deletes` is delete-sized and served as a
+  * distributed scan ([[GraftPositionDeletesTable]]). */
 private[connector] object GraftMetadataTables {
   import org.apache.spark.sql.{DataFrame, SparkSession => SS}
   import graft.ice.MetadataTables
+
+  private val PositionDeletesName = "position_deletes"
 
   private val tables: Map[String, (SS, IceTable) => DataFrame] = Map(
     "snapshots" -> (MetadataTables.snapshots _),
@@ -322,22 +341,20 @@ private[connector] object GraftMetadataTables {
     "entries" -> (MetadataTables.entries _),
     "all_files" -> (MetadataTables.allFiles _),
     "metadata_log_entries" -> (MetadataTables.metadataLogEntries _))
-    // position_deletes is deliberately NOT here: its row count is
-    // delete-sized, not metadata-sized, and this surface collects into
-    // a LocalScan — use the graft.db.t.position_deletes rule surface,
-    // which substitutes the distributed plan
 
   def resolve(cat: DirCatalog, ident: Identifier,
       catalogName: String): Option[Table] = {
     val metaName = ident.name.toLowerCase(java.util.Locale.ROOT)
-    if (ident.namespace.isEmpty || !tables.contains(metaName)) return None
+    if (ident.namespace.isEmpty ||
+        !(tables.contains(metaName) || metaName == PositionDeletesName)) return None
     val parent = TableIdentifier(
       ident.namespace.dropRight(1).toSeq, ident.namespace.last)
     if (!cat.tableExists(parent)) return None
     val t = IceTable.load(cat, parent)
-    val df = tables(metaName)(SparkSession.active, t)
-    Some(new GraftMetadataTable(
-      s"$catalogName.${(ident.namespace :+ ident.name).mkString(".")}", df))
+    val name = s"$catalogName.${(ident.namespace :+ ident.name).mkString(".")}"
+    Some(
+      if (metaName == PositionDeletesName) new GraftPositionDeletesTable(name, t)
+      else new GraftMetadataTable(name, tables(metaName)(SparkSession.active, t)))
   }
 }
 
@@ -360,6 +377,47 @@ private[connector] final class GraftMetadataTable(nameStr: String,
           df.queryExecution.executedPlan.executeCollect()
       }
     }
+}
+
+/** `<catalog>.db.t.position_deletes`: the (file_path, pos,
+  * delete_file_path) tuples of every live position-delete file and
+  * deletion vector of the current snapshot. One input partition per
+  * delete file, read on the executor by `PositionDeletes`' per-entry
+  * reader, so the driver opens no delete file. */
+private[connector] final class GraftPositionDeletesTable(nameStr: String,
+    table: IceTable) extends Table with org.apache.spark.sql.connector.catalog.SupportsRead {
+  import org.apache.spark.sql.connector.catalog.TableCapability
+  import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, ScanBuilder}
+  import graft.ice.PositionDeletes
+
+  override def name(): String = nameStr
+  override def schema(): StructType = PositionDeletes.TupleSchema
+  override def capabilities(): java.util.Set[TableCapability] =
+    java.util.EnumSet.of(TableCapability.BATCH_READ)
+  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
+    new ScanBuilder {
+      override def build(): Scan = new Scan with Batch {
+        private lazy val reads = PositionDeletes.tupleReads(
+          table.currentSnapshot.map(table.planDeleteEntries).getOrElse(Nil)
+            .filter(_.dataFile.content == graft.ice.manifest.FileContent.PositionDeletes))
+        override def readSchema(): StructType = PositionDeletes.TupleSchema
+        override def toBatch: Batch = this
+        override def planInputPartitions(): Array[InputPartition] = reads.toArray
+        override def createReaderFactory(): PartitionReaderFactory = {
+          val (parquet, orc) = PositionDeletes.tupleReaders(SparkSession.active, reads)
+          PositionDeleteTupleReaders(parquet, orc)
+        }
+      }
+    }
+}
+
+private[connector] final case class PositionDeleteTupleReaders(
+    parquet: graft.ice.PositionDeletes.Read, orc: graft.ice.PositionDeletes.Read)
+    extends org.apache.spark.sql.connector.read.PartitionReaderFactory {
+  import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    GraftReaderFactory.readerOf(graft.ice.PositionDeletes.tupleRows(parquet, orc,
+      p.asInstanceOf[graft.ice.PositionDeletes.TupleRead]))
 }
 
 // ===================================================================

@@ -83,16 +83,15 @@ final class GraftSparkTable(val table: IceTable, catalogName: String,
     * [[GraftRowLevelOperation.requiredMetadataAttributes]] names it. */
   override def metadataColumns(): Array[MetadataColumn] = GraftMetadataColumns.columns
 
-  /** Native V2 row-level DML (UPDATE / MERGE / DELETE-by-rewrite) — lets
-    * Spark's own RewriteUpdateTable / RewriteMergeIntoTable /
-    * RewriteDeleteFromTable plan group-based copy-on-write against this
-    * table with NO GraftExtensions installed (the extension rule surface
-    * in GraftSqlResolution remains and intercepts first when present).
-    * See [[GraftRowLevelOperation]]. */
+  /** Row-level DML (DELETE / UPDATE / MERGE) planned by Spark's own
+    * RewriteDeleteFromTable / RewriteUpdateTable / RewriteMergeIntoTable:
+    * copy-on-write ([[GraftRowLevelOperation]]) or merge-on-read
+    * ([[GraftDeltaOperation]]) per the table's
+    * `write.{delete,update,merge}.mode`. See GraftRowLevel.scala. */
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder =
-    () => new GraftRowLevelOperation(table, identName, warehouse, info.command())
+    () => GraftRowLevel.operation(table, identName, warehouse, info.command())
 
   override def name(): String = s"$catalogName.$identName"
 
@@ -135,7 +134,7 @@ final class GraftSparkTable(val table: IceTable, catalogName: String,
   /** `DELETE FROM <catalog>.<ns>.<t> WHERE ...` — accepted when the
     * whole predicate translates to the engine's expression tree (the
     * translated form both PRUNES planning and evaluates exactly), then
-    * dispatched on `write.delete.mode` like the SQL rule surface:
+    * dispatched on `write.delete.mode` as the Scala API does:
     * copy-on-write rewrite, or merge-on-read position deletes
     * (deletion vectors on v3 tables). */
   override def canDeleteWhere(filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
@@ -852,6 +851,11 @@ private[connector] final class GraftBatchScan(table: IceTable, schema: Schema,
     * replaced file means a concurrent delete our rewrite would erase). */
   private[connector] def plannedDeletePaths: Set[String] = planned.deletePaths
 
+  /** The pushed predicate and the snapshot the plan read: a row-level
+    * commit's serializable-isolation scope. */
+  private[connector] def isolationScope: (Option[IceExpr], Option[Long]) =
+    (pruneExpr, planned.snapshotId)
+
   /** Runtime (DPP) filter, ANDed into planning when Spark pushes one at
     * execution time; setting it invalidates the plan cache so the next
     * `planInputPartitions` re-prunes manifests/files. */
@@ -1543,10 +1547,10 @@ private[connector] final case class GraftReaderFactory(
   def readEqDeletesOrc: Map[Seq[String], PartitionedFile => Iterator[InternalRow]] = eqReaders.orc
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    readerOf(splitsOf(p).flatMap(rowsOf))
+    GraftReaderFactory.readerOf(splitsOf(p).flatMap(rowsOf))
 
   override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] =
-    readerOf(splitsOf(p).flatMap(s =>
+    GraftReaderFactory.readerOf(splitsOf(p).flatMap(s =>
       readIds(fileOf(s)).asInstanceOf[Iterator[ColumnarBatch]]))
 
   // a packed split concatenates its members' iterators — every member
@@ -1557,15 +1561,6 @@ private[connector] final case class GraftReaderFactory(
     case GraftKeyedFileSplit(s, _) => Iterator.single(s)
     case s: GraftFileSplit => Iterator.single(s)
   }
-
-  private def readerOf[T](it: Iterator[T]): PartitionReader[T] =
-    new PartitionReader[T] {
-      private var cur: T = _
-      override def next(): Boolean =
-        if (it.hasNext) { cur = it.next(); true } else false
-      override def get(): T = cur
-      override def close(): Unit = ()
-    }
 
   // the split's byte range (whole file unless read.split.target-size
   // cut it); ORC and Avro reads that count positions are whole files
@@ -1705,6 +1700,16 @@ private[connector] final case class GraftReaderFactory(
 }
 
 private[connector] object GraftReaderFactory {
+  /** A partition reader over `it`. */
+  def readerOf[T](it: Iterator[T]): PartitionReader[T] =
+    new PartitionReader[T] {
+      private var cur: T = _
+      override def next(): Boolean =
+        if (it.hasNext) { cur = it.next(); true } else false
+      override def get(): T = cur
+      override def close(): Unit = ()
+    }
+
   /** Whether a parquet `split` reads raw: every row of its range, with
     * no pushed filter (a name-mapped file's filters would name the wrong
     * columns) and each row's position in the file (position deletes,

@@ -83,15 +83,15 @@ private[connector] object GraftWriteModes {
   /** Row-level CoW: replace exactly the files the operation's scan
     * planned (see GraftRowLevel.scala). */
   val ReplaceGroups = "replace-groups"
+  /** Row-level MoR: add data and delete files (see GraftRowLevel.scala). */
+  val Delta = "delta"
 }
 
 final class GraftWrite(table: IceTable, identName: String, warehouse: String,
     info: LogicalWriteInfo, mode: String, overwriteFilters: Array[V1Filter],
-    // replace-groups (row-level CoW): the files this write replaces and
-    // the delete files the scan applied, resolved at COMMIT time from
-    // the operation's scan (after runtime group filtering) — validated
-    // against the current base on every commit attempt
-    replacedFiles: Option[() => graft.ice.write.ReplaceGroupsState] = None)
+    // replace-groups (row-level CoW): the operation's scan, whose planned
+    // files (after runtime group filtering) this write replaces at commit
+    rowLevel: Option[RowLevelScope] = None)
     extends Write with RequiresDistributionAndOrdering {
 
   private val spec = table.spec
@@ -151,11 +151,24 @@ final class GraftWrite(table: IceTable, identName: String, warehouse: String,
     partOrder ++ sortExprs
   }
 
-  private def taskConf(): FileWriteConf = {
-    // align the query schema (InternalRow layout) with table field ids so
-    // executor parquet footers carry ids for id-based projection on read
-    val byName = schema.fields.map(f => f.name -> f).toMap
-    val writeSchema = StructType(info.schema().fields.map { sf =>
+  override def toBatch: BatchWrite =
+    new GraftBatchWrite(identName, warehouse, mode, overwriteFilters,
+      GraftWrite.dataConf(table, info.schema()), rowLevel)
+
+  override def toStreaming: StreamingWrite =
+    new GraftStreamingWrite(identName, warehouse, mode, info.queryId(),
+      GraftWrite.dataConf(table, info.schema()))
+
+  override def description(): String = s"GraftWrite($identName, mode=$mode)"
+}
+
+object GraftWrite {
+  /** The task conf for rows laid out as `input`: the query schema aligned
+    * with the table's field ids, so executor parquet footers carry ids
+    * for id-based projection on read. */
+  private[connector] def dataConf(table: IceTable, input: StructType): FileWriteConf = {
+    val byName = table.schema.fields.map(f => f.name -> f).toMap
+    val writeSchema = StructType(input.fields.map { sf =>
       byName.get(sf.name) match {
         case Some(f) =>
           val t = SparkConv.toSparkField(f)
@@ -165,15 +178,6 @@ final class GraftWrite(table: IceTable, identName: String, warehouse: String,
     })
     FileWriter.dataConf(SparkSession.active, table, writeSchema, writeSchema)
   }
-
-  override def toBatch: BatchWrite =
-    new GraftBatchWrite(identName, warehouse, mode, overwriteFilters, taskConf(),
-      replacedFiles)
-
-  override def toStreaming: StreamingWrite =
-    new GraftStreamingWrite(identName, warehouse, mode, info.queryId(), taskConf())
-
-  override def description(): String = s"GraftWrite($identName, mode=$mode)"
 }
 
 final case class GraftWriteMessage(files: Seq[DataFile]) extends WriterCommitMessage
@@ -196,7 +200,7 @@ private[connector] object GraftCommit {
   def commit(warehouse: String, identName: String, mode: String,
       overwriteFilters: Array[V1Filter], entries: Seq[ManifestEntry],
       extraProps: Map[String, String] = Map.empty,
-      replacedFiles: Option[() => graft.ice.write.ReplaceGroupsState] = None): Unit = {
+      rowLevel: Option[RowLevelScope] = None): Unit = {
     val t = freshTable(warehouse, identName)
     val spark = SparkSession.active
     // Iceberg's session-level WAP staging: with spark.wap.id set, an
@@ -220,13 +224,9 @@ private[connector] object GraftCommit {
         s"spark.wap.id staging supports append writes only, not '$mode'; " +
           "use a branch (toBranch/fast_forward) to stage row-level changes")
     mode match {
-      case GraftWriteModes.ReplaceGroups =>
-        val st = replacedFiles.map(_.apply())
-          .getOrElse(graft.ice.write.ReplaceGroupsState(Set.empty, Set.empty))
-        SnapshotProducer.commit(t, spark, DataOperation.Overwrite, entries,
-          removedPaths = st.replaced,
-          expectedReplaced = Some(st),
-          extraProps = extraProps, extraSummary = wapStamp)
+      case GraftWriteModes.ReplaceGroups | GraftWriteModes.Delta =>
+        rowLevel.get.commit(t, spark, entries,
+          copyOnWrite = mode == GraftWriteModes.ReplaceGroups, wapStamp)
       case GraftWriteModes.Append =>
         // `write.upsert.enabled` (table_properties.h:271): the V2 surface
         // honors the table's declaration exactly like the Scala append
@@ -332,7 +332,7 @@ private[connector] object GraftCommit {
 
 final class GraftBatchWrite(identName: String, warehouse: String, mode: String,
     overwriteFilters: Array[V1Filter], conf: FileWriteConf,
-    replacedFiles: Option[() => graft.ice.write.ReplaceGroupsState] = None)
+    rowLevel: Option[RowLevelScope] = None)
     extends BatchWrite {
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
@@ -340,7 +340,7 @@ final class GraftBatchWrite(identName: String, warehouse: String, mode: String,
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     GraftCommit.commit(warehouse, identName, mode, overwriteFilters,
-      GraftCommit.entriesOf(messages), replacedFiles = replacedFiles)
+      GraftCommit.entriesOf(messages), rowLevel = rowLevel)
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     GraftCommit.abortFiles(messages)

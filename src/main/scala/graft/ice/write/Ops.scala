@@ -409,6 +409,8 @@ private[ice] object SnapshotProducer {
           ++ PartitionSummaries.build(base.properties,
             addedDataEntries.map(e => spec -> e.dataFile),
             removedForSummary.toSeq)
+          ++ Option.when(removedDVForFiles.nonEmpty)(
+            "replaced-deletion-vectors" -> removedDVForFiles.size.toString)
           ++ extraSummary ++ stageWapId.map("wap.id" -> _),
         schemaId = Some(base.currentSchemaId),
         firstRowId = baseRowId)
@@ -973,102 +975,35 @@ final class RowDelete(table: IceTable, spark: SparkSession) {
       return SnapshotProducer.commit(table, spark, DataOperation.Delete, Nil)
     SnapshotProducer.commit(table, spark, DataOperation.Delete, Nil,
       addedDeleteEntries = entries, removedDVForFiles = superseded,
-      extraSummary =
-        if (superseded.isEmpty) Map.empty
-        else Map("replaced-deletion-vectors" -> superseded.size.toString),
       expectedDVs = Some(expected),
       serializableCheck = isolationCheck(TableProperties.WriteDeleteIsolation, bound))
   }
 
   /** Build one deletion vector per touched data file from a
-    * `(file_path, pos)` DataFrame (positions clustered per file on the
-    * executors, puffin files written through the task-commit rename
-    * protocol, only blob descriptors returning to the driver). Returns
+    * `(file_path, pos)` DataFrame: positions are clustered per file on
+    * the executors, where the task-side [[DVWriter]] writes each task's
+    * puffin file, so only blob descriptors return to the driver. Returns
     * (delete entries, superseded prior-DV paths, expected per-file DV
-    * sets for the commit's race validation). Shared by deleteWhereDV and
-    * the merge-on-read UPDATE path. */
-  private def buildDVEntries(dels: DataFrame, nFiles: Int)
+    * sets for the commit's race validation). Shared by deleteWhereDV, the
+    * merge-on-read UPDATE and the merge-on-read MERGE. */
+  private[write] def buildDVEntries(dels: DataFrame, nFiles: Int)
       : (Seq[ManifestEntry], Set[String], Map[String, Set[String]]) = {
-    // prior DVs per referenced data file (metadata-sized): executors read
-    // and union these so each new vector fully replaces its predecessor
-    val priorDV: Map[String, Seq[(String, Long, Long)]] =
-      table.currentSnapshot.map(table.planDeleteEntries).getOrElse(Nil)
-        .filter(e => e.dataFile.content == FileContent.PositionDeletes &&
-          e.dataFile.fileFormat == "PUFFIN" && e.dataFile.referencedDataFile.isDefined)
-        .groupBy(e => ManifestAvro.stripFileScheme(e.dataFile.referencedDataFile.get))
-        .view.mapValues(_.map(e => (
-          ManifestAvro.stripFileScheme(e.dataFile.filePath),
-          e.dataFile.contentOffset.getOrElse(throw new IllegalStateException(
-            s"DV entry for ${e.dataFile.filePath} missing content_offset")),
-          e.dataFile.contentSizeInBytes.getOrElse(throw new IllegalStateException(
-            s"DV entry for ${e.dataFile.filePath} missing content_size_in_bytes")))))
-        .toMap
+    val conf = DVWriteConf(table)
     val nParts = math.max(1, math.min(
       spark.sessionState.conf.numShufflePartitions, nFiles))
-    val dataDir = table.dataFileDir
-    Files.createDirectories(Paths.get(dataDir))
-    val commitUuid = UUID.randomUUID().toString
     import spark.implicits._
-    // per-ref descriptor rows: (puffinPath, puffinSize, refFile, offset, length, cardinality)
-    val refRows: Seq[(String, Long, String, Long, Long, Long)] = dels
+    val files = dels
       .repartition(nParts, col("file_path"))
       .sortWithinPartitions("file_path", "pos")
-      .as[(String, Long)]
+      .as[(String, Long)].rdd
       .mapPartitions { it =>
-        val byFile = scala.collection.mutable.LinkedHashMap
-          .empty[String, org.roaringbitmap.longlong.Roaring64Bitmap]
-        it.foreach { case (f, p) =>
-          byFile.getOrElseUpdate(f,
-            new org.roaringbitmap.longlong.Roaring64Bitmap()).addLong(p)
-        }
-        if (byFile.isEmpty) Iterator.empty
-        else {
-          // union in the prior vector (if any) so the new DV supersedes it
-          byFile.foreach { case (f, bm) =>
-            priorDV.getOrElse(f, Nil).foreach { case (pp, off, len) =>
-              bm.or(Puffin.readDV(pp, off, len))
-            }
-          }
-          val dvs = byFile.iterator.map { case (f, bm) =>
-            bm.runOptimize()
-            val out = new java.io.ByteArrayOutputStream()
-            bm.serialize(new java.io.DataOutputStream(out))
-            (f, out.toByteArray, bm.getLongCardinality)
-          }.toSeq.sortBy(_._1)
-          val ctx = org.apache.spark.TaskContext.get()
-          val idx = Option(ctx).map(_.partitionId()).getOrElse(0)
-          val attempt = Option(ctx).map(_.taskAttemptId).getOrElse(0L)
-          val path = f"$dataDir/$commitUuid-deletes-p$idx%05d.puffin"
-          // task-commit protocol: attempt-unique temp + atomic publish, so
-          // a retried/speculative attempt never exposes a torn puffin file
-          val tmp = s"$path.$attempt.tmp"
-          val refs = Puffin.writeDVFile(tmp, dvs)
-          graft.ice.io.LocalFileIO.atomicSwap(tmp, path)
-          val size = Files.size(Paths.get(path))
-          refs.iterator.map(r =>
-            (path, size, r.referencedDataFile, r.offset, r.length, r.cardinality))
-        }
-      }.collect().toSeq.sortBy(r => (r._1, r._3))
-    val entries = refRows.map { case (puffinPath, size, refFile, off, len, card) =>
-      ManifestEntry(ManifestStatus.Added, None, None, None,
-        DataFile(FileContent.PositionDeletes, puffinPath, "PUFFIN",
-          table.spec.fields.map(_ => null: Any).toIndexedSeq,
-          recordCount = card,
-          fileSizeInBytes = size,
-          referencedDataFile = Some(refFile),
-          contentOffset = Some(off),
-          contentSizeInBytes = Some(len)))
-    }
-    val superseded = refRows.map(_._3).toSet.filter(priorDV.contains)
-    // what the planner believed the live DV set was, per touched data
-    // file (empty set = "had no DV"): the commit re-validates this on
-    // every attempt so a lost race cannot silently supersede a
-    // concurrently-written vector
-    val expected: Map[String, Set[String]] =
-      refRows.map(r => ManifestAvro.stripFileScheme(r._3)).distinct
-        .map(ref => ref -> priorDV.getOrElse(ref, Nil).map(_._1).toSet)
-        .toMap
-    (entries, superseded, expected)
+        val ctx = org.apache.spark.TaskContext.get()
+        val w = conf.writer(ctx.partitionId(), ctx.taskAttemptId())
+        it.foreach { case (f, p) => w.delete(f, p) }
+        w.commit().iterator
+      }.collect().toSeq.sortBy(f => (f.filePath, f.referencedDataFile.getOrElse("")))
+    val (superseded, expected) = conf.supersedes(files)
+    (files.map(f => ManifestEntry(ManifestStatus.Added, None, None, None, f)), superseded, expected)
   }
 
   /** Merge-on-read UPDATE (`write.update.mode=merge-on-read`, reference
@@ -1108,9 +1043,6 @@ final class RowDelete(table: IceTable, spark: SparkSession) {
     val added = SnapshotProducer.writeDataFiles(table, spark, updated)
     SnapshotProducer.commit(table, spark, DataOperation.Overwrite, added,
       addedDeleteEntries = delEntries, removedDVForFiles = superseded,
-      extraSummary =
-        if (superseded.isEmpty) Map.empty
-        else Map("replaced-deletion-vectors" -> superseded.size.toString),
       expectedDVs =
         if (table.metadata.formatVersion >= 3) Some(expected) else None,
       serializableCheck = isolationCheck(TableProperties.WriteUpdateIsolation, bound))
@@ -1230,6 +1162,96 @@ object RowDelete {
   }
 }
 
+/** What a task needs to write deletion vectors for `table`: the
+  * table's data directory, one commit id, the live vectors the new ones
+  * supersede (per referenced data file, as puffin (path, offset,
+  * length); executors OR them into the new bitmaps) and the spec arity
+  * of the all-null partition tuple delete files carry. */
+final case class DVWriteConf(dataDir: String, commitId: String,
+    priorDV: Map[String, Seq[(String, Long, Long)]], specArity: Int) {
+  def writer(partitionId: Int, attemptId: Long): DVWriter =
+    new DVWriter(this, partitionId, attemptId)
+
+  /** The prior-DV side of a commit of `written` vectors: the data files
+    * whose prior vector the new one supersedes, and per touched data file
+    * the live vector paths the writers saw (empty = none), which the
+    * commit re-validates on every attempt so a lost race never silently
+    * supersedes a concurrently written vector. */
+  def supersedes(written: Seq[DataFile]): (Set[String], Map[String, Set[String]]) = {
+    val refs = written.flatMap(_.referencedDataFile).map(ManifestAvro.stripFileScheme).toSet
+    (refs.filter(priorDV.contains),
+      refs.map(r => r -> priorDV.getOrElse(r, Nil).map(_._1).toSet).toMap)
+  }
+}
+
+object DVWriteConf {
+  /** Deletion vectors over `table`'s current snapshot. */
+  def apply(table: IceTable): DVWriteConf = {
+    require(table.metadata.formatVersion >= 3,
+      s"deletion vectors require format-version 3, table is v${table.metadata.formatVersion}")
+    val priorDV = table.currentSnapshot.map(table.planDeleteEntries).getOrElse(Nil)
+      .filter(e => e.dataFile.content == FileContent.PositionDeletes &&
+        e.dataFile.fileFormat == "PUFFIN" && e.dataFile.referencedDataFile.isDefined)
+      .groupBy(e => ManifestAvro.stripFileScheme(e.dataFile.referencedDataFile.get))
+      .view.mapValues(_.map(e => (
+        ManifestAvro.stripFileScheme(e.dataFile.filePath),
+        e.dataFile.contentOffset.getOrElse(throw new IllegalStateException(
+          s"DV entry for ${e.dataFile.filePath} missing content_offset")),
+        e.dataFile.contentSizeInBytes.getOrElse(throw new IllegalStateException(
+          s"DV entry for ${e.dataFile.filePath} missing content_size_in_bytes")))))
+      .toMap
+    Files.createDirectories(Paths.get(table.dataFileDir))
+    DVWriteConf(table.dataFileDir, UUID.randomUUID().toString, priorDV,
+      table.spec.fields.size)
+  }
+}
+
+/** Task-side deletion-vector writer: one roaring bitmap per data file
+  * the task deletes from, each ORed with the file's prior vector (so
+  * the new one supersedes it: at most one DV per data file,
+  * manifest_entry.h:157-177), written as one puffin file per task. The
+  * caller must route every position of a data file to one task. The
+  * file is written to an attempt-unique temp path and published
+  * atomically, so a retried or speculative attempt never exposes a torn
+  * file. */
+final class DVWriter(conf: DVWriteConf, partitionId: Int, attemptId: Long) {
+  private val byFile = scala.collection.mutable.LinkedHashMap
+    .empty[String, org.roaringbitmap.longlong.Roaring64Bitmap]
+  private var written: Option[String] = None
+
+  def delete(file: String, pos: Long): Unit =
+    byFile.getOrElseUpdate(file, new org.roaringbitmap.longlong.Roaring64Bitmap()).addLong(pos)
+
+  /** Writes the task's puffin file; one delete-file entry per vector. */
+  def commit(): Seq[DataFile] = {
+    if (byFile.isEmpty) return Nil
+    val dvs = byFile.iterator.map { case (f, bm) =>
+      conf.priorDV.getOrElse(f, Nil).foreach { case (pp, off, len) =>
+        bm.or(Puffin.readDV(pp, off, len))
+      }
+      bm.runOptimize()
+      val out = new java.io.ByteArrayOutputStream()
+      bm.serialize(new java.io.DataOutputStream(out))
+      (f, out.toByteArray, bm.getLongCardinality)
+    }.toSeq.sortBy(_._1)
+    val path = f"${conf.dataDir}/${conf.commitId}-deletes-p$partitionId%05d.puffin"
+    val tmp = s"$path.$attemptId.tmp"
+    val refs = Puffin.writeDVFile(tmp, dvs)
+    graft.ice.io.LocalFileIO.atomicSwap(tmp, path)
+    written = Some(path)
+    val size = Files.size(Paths.get(path))
+    refs.map(r => DataFile(FileContent.PositionDeletes, path, "PUFFIN",
+      IndexedSeq.fill(conf.specArity)(null: Any),
+      recordCount = r.cardinality,
+      fileSizeInBytes = size,
+      referencedDataFile = Some(r.referencedDataFile),
+      contentOffset = Some(r.offset),
+      contentSizeInBytes = Some(r.length)))
+  }
+
+  def abort(): Unit = written.foreach(FileWriter.deleteQuietly)
+}
+
 /** MERGE INTO (upsert), copy-on-write — §2.8 extension; the reference
   * models no row-level operation at all (table_scan.cc:288-291 rejects
   * even reading deletes). ANSI MERGE semantics with one WHEN MATCHED
@@ -1317,19 +1339,27 @@ final class MergeInto(table: IceTable, spark: SparkSession,
 
   /** Merge-on-read commit: one pass discovers matched (_file, _pos) and
     * builds updated rows; inserts anti-join the (key-pruned) scan; both
-    * the new data files and the position-delete files land in ONE
-    * overwrite snapshot. */
+    * the new data files and the delete plane (position-delete files, or
+    * deletion vectors on v3) land in ONE overwrite snapshot. */
   private def commitMoR(): Snapshot = {
     val tgtCols = table.schema.fields.map(_.name)
     val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var delEntries: Seq[ManifestEntry] = Nil
+    var dvSuperseded = Set.empty[String]
+    var expectedDVs: Option[Map[String, Set[String]]] = None
     if (table.currentSnapshot.isDefined) {
       val scanDF = table.newScan().withMetadataColumns("_file", "_pos").toDF(spark)
       val joined = scanDF.as("t").join(source.as("s"),
         on.map(c => col(s"t.$c") === col(s"s.$c")).reduce(_ && _), "inner")
       val dels = joined.select(col("t._file").as("file_path"), col("t._pos").as("pos"))
       val tasks = table.newScan().planFiles()
-      delEntries = RowDelete.writePositionDeleteEntries(table, spark, dels,
+      if (table.metadata.formatVersion >= 3) {
+        val (entries, superseded, expected) =
+          new RowDelete(table, spark).buildDVEntries(dels, tasks.size)
+        delEntries = entries
+        dvSuperseded = superseded
+        expectedDVs = Some(expected)
+      } else delEntries = RowDelete.writePositionDeleteEntries(table, spark, dels,
         tasks.size, RowDelete.partitionKeys(table, tasks))
       matched match {
         case UpdateAll =>
@@ -1360,7 +1390,8 @@ final class MergeInto(table: IceTable, spark: SparkSession,
       case None => Nil
     }
     SnapshotProducer.commit(table, spark, DataOperation.Overwrite, added,
-      addedDeleteEntries = delEntries, extraProps = props,
+      addedDeleteEntries = delEntries, removedDVForFiles = dvSuperseded,
+      expectedDVs = expectedDVs, extraProps = props,
       serializableCheck = mergeIsolationCheck())
   }
 

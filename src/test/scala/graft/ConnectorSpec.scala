@@ -705,6 +705,31 @@ class ConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq("o_orderkey", "price"))
   }
 
+  test("ALTER TABLE ADD COLUMN ... FIRST/AFTER is refused; the schema is unchanged") {
+    val raw = spark.range(0, 5).selectExpr("id", "id * 2 AS v")
+    IceTable.create(cat, TableIdentifier.parse("db.addpos"),
+      SparkConv.fromSpark(raw.schema)).append(spark).appendDataFrame(raw)
+    intercept[Exception](spark.sql("ALTER TABLE ice.db.addpos ADD COLUMN x INT FIRST"))
+    intercept[Exception](spark.sql("ALTER TABLE ice.db.addpos ADD COLUMN x INT AFTER id"))
+    assert(spark.table("ice.db.addpos").schema.fieldNames.toSeq == Seq("id", "v"))
+    spark.sql("ALTER TABLE ice.db.addpos ADD COLUMN x INT")
+    assert(spark.table("ice.db.addpos").schema.fieldNames.toSeq == Seq("id", "v", "x"))
+  }
+
+  test("DROP TABLE ... PURGE drops the table and deletes its files") {
+    val raw = spark.range(0, 5).selectExpr("id")
+    val t = IceTable.create(cat, TableIdentifier.parse("db.purged"),
+      SparkConv.fromSpark(raw.schema))
+    t.append(spark).appendDataFrame(raw)
+    val dataFiles = t.newScan().planFiles().map(_.file.filePath)
+    assert(dataFiles.nonEmpty)
+    spark.sql("DROP TABLE ice.db.purged PURGE")
+    assert(!cat.tableExists(TableIdentifier.parse("db.purged")))
+    dataFiles.foreach(p => assert(!new java.io.File(
+      graft.ice.manifest.ManifestAvro.stripFileScheme(p)).exists(), s"$p survived PURGE"))
+    intercept[Exception](spark.table("ice.db.purged").collect())
+  }
+
   test("ALTER TABLE DROP COLUMN refuses a partition source; the table stays appendable") {
     val raw = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")

@@ -8,7 +8,7 @@ import graft.ice._
 import graft.ice.catalog._
 import graft.ice.types._
 
-/** Pure-SQL table resolution (GraftTableResolution): `graft.<ns>.<t>`
+/** Pure-SQL access through the `graft` catalog: `graft.<ns>.<t>`
   * identifiers, VERSION AS OF (snapshot id AND branch/tag names),
   * TIMESTAMP AS OF — each pinned equal to the Scala scan API. */
 class GraftSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -20,6 +20,7 @@ class GraftSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
     SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.sql.catalog.graft", "graft.ice.connector.GraftCatalogPlugin")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
@@ -46,7 +47,7 @@ class GraftSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
     val first = t.currentSnapshot.get.snapshotId
     t.manageSnapshots().createBranch("audit", first)
     t.append(spark).appendDataFrame(spark.range(5, 10).selectExpr("id", "id * 10 as v"))
-    spark.conf.set("spark.graft.warehouse", warehouse)
+    spark.conf.set("spark.sql.catalog.graft.warehouse", warehouse)
     t
   }
 
@@ -110,7 +111,7 @@ class GraftSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
     val t = IceTable.create(cat, TableIdentifier.parse("db.ow"),
       SparkConv.fromSpark(df.schema))
     t.append(spark).appendDataFrame(df)
-    spark.conf.set("spark.graft.warehouse", warehouse)
+    spark.conf.set("spark.sql.catalog.graft.warehouse", warehouse)
     spark.sql("INSERT OVERWRITE graft.db.ow VALUES (7, 70)")
     val rows = spark.sql("SELECT id, v FROM graft.db.ow").collect()
     assert(rows.length == 1 && rows.head.getLong(0) == 7L)
@@ -128,7 +129,7 @@ class GraftSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
     val t = IceTable.create(cat, TableIdentifier.parse("db.rl"),
       SparkConv.fromSpark(df.schema))
     t.append(spark).appendDataFrame(df.repartitionByRange(4, org.apache.spark.sql.functions.col("id")))
-    spark.conf.set("spark.graft.warehouse", warehouse)
+    spark.conf.set("spark.sql.catalog.graft.warehouse", warehouse)
 
     spark.sql("DELETE FROM graft.db.rl WHERE id >= 90")
     assert(spark.sql("SELECT count(*) AS n FROM graft.db.rl")
@@ -160,7 +161,7 @@ class GraftSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("UPDATE under write.update.mode=merge-on-read supersedes, never rewrites") {
     val cat = new DirCatalog(warehouse)
     val df = spark.range(0, 1000).selectExpr("id", "id * 10 as v")
-    spark.conf.set("spark.graft.warehouse", warehouse)
+    spark.conf.set("spark.sql.catalog.graft.warehouse", warehouse)
 
     // v2: position-delete parquet plane
     val t = IceTable.create(cat, TableIdentifier.parse("db.updmor"),
@@ -219,7 +220,7 @@ class GraftSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
       SparkConv.fromSpark(df.schema),
       properties = Map("write.delete.mode" -> "merge-on-read"))
     t.append(spark).appendDataFrame(df)
-    spark.conf.set("spark.graft.warehouse", warehouse)
+    spark.conf.set("spark.sql.catalog.graft.warehouse", warehouse)
     spark.sql("DELETE FROM graft.db.rlmor WHERE id >= 40")
     assert(spark.sql("SELECT count(*) AS n FROM graft.db.rlmor")
       .collect().head.getLong(0) == 40L)
@@ -234,7 +235,7 @@ class GraftSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
     val t = IceTable.create(cat, TableIdentifier.parse("db.mt"),
       SparkConv.fromSpark(df.schema))
     t.append(spark).appendDataFrame(df)
-    spark.conf.set("spark.graft.warehouse", warehouse)
+    spark.conf.set("spark.sql.catalog.graft.warehouse", warehouse)
 
     // upsert: ids 8,9 update (v += source v), ids 10,11 insert
     spark.range(8, 12).selectExpr("id", "id * 100 as v")
@@ -298,7 +299,7 @@ class GraftSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
     val t = IceTable.create(cat, TableIdentifier.parse("db.alt"),
       SparkConv.fromSpark(df.schema))
     t.append(spark).appendDataFrame(df)
-    spark.conf.set("spark.graft.warehouse", warehouse)
+    spark.conf.set("spark.sql.catalog.graft.warehouse", warehouse)
 
     spark.sql("ALTER TABLE graft.db.alt ADD COLUMNS (tag STRING, score DOUBLE)")
     // new columns read NULL from pre-evolution files (field-id absence)
@@ -330,7 +331,7 @@ class GraftSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("ALTER COLUMN TYPE promotes int->long; old files read through") {
     val cat = new DirCatalog(warehouse)
-    spark.conf.set("spark.graft.warehouse", warehouse)
+    spark.conf.set("spark.sql.catalog.graft.warehouse", warehouse)
     spark.sql("CREATE TABLE graft.db.promo (id BIGINT, n INT, f FLOAT)")
     spark.sql("INSERT INTO graft.db.promo VALUES (1, 100, CAST(1.5 AS FLOAT))," +
       " (2, 200, CAST(2.5 AS FLOAT))")
@@ -395,7 +396,7 @@ class GraftSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
       graft.ice.meta.PartitionSpec(0, IndexedSeq(
         graft.ice.meta.PartitionField(bktId, 1000, "bkt", graft.ice.transform.IdentityTransform))))
     t.append(spark).appendDataFrame(df)
-    spark.conf.set("spark.graft.warehouse", warehouse)
+    spark.conf.set("spark.sql.catalog.graft.warehouse", warehouse)
 
     def scannedFiles(sql: String): Int = {
       val plan = spark.sql(sql).queryExecution.executedPlan
@@ -428,7 +429,7 @@ class GraftSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = spark.range(0, 1).selectExpr("id", "id as v")
     IceTable.create(cat, TableIdentifier.parse("db.cc"),
       SparkConv.fromSpark(df.schema))
-    spark.conf.set("spark.graft.warehouse", warehouse)
+    spark.conf.set("spark.sql.catalog.graft.warehouse", warehouse)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration._
@@ -459,14 +460,14 @@ class GraftSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows == Seq(2L, 3L, 4L), s"got $rows")
   }
 
-  test("without the warehouse conf the rule stays inert") {
+  test("without the warehouse conf the graft catalog resolves nothing") {
     table // force fixture (sets the conf)
-    spark.conf.unset("spark.graft.warehouse")
+    spark.conf.unset("spark.sql.catalog.graft.warehouse")
     try {
-      // without the conf the name falls through to Spark's own catalogs
-      // and fails analysis (exact error class is Spark's business)
+      // without the conf the catalog has no warehouse to resolve the
+      // name in, and analysis fails
       intercept[Exception](spark.sql("SELECT * FROM graft.db.t").collect())
-    } finally spark.conf.set("spark.graft.warehouse", warehouse)
+    } finally spark.conf.set("spark.sql.catalog.graft.warehouse", warehouse)
     // resolution returns once the conf is back (>= 10: the INSERT test
     // may have already grown the table)
     assert(spark.sql("SELECT count(*) AS n FROM graft.db.t")
@@ -476,12 +477,12 @@ class GraftSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("UPDATE/MERGE/DELETE on V2 catalog identifiers match the graft.* rule path") {
     // catalog symmetry (round-7 gap): the same row-level statements must
     // work on ice.db.* names as on graft.db.* names, with identical
-    // results — and without requiring spark.graft.warehouse
+    // results — and without the graft catalog's warehouse
     val whIce = java.nio.file.Files.createTempDirectory("whice").toString
     spark.conf.set("spark.sql.catalog.icesql", "graft.ice.connector.GraftCatalogPlugin")
     spark.conf.set("spark.sql.catalog.icesql.warehouse", whIce)
-    val savedConf = spark.conf.getOption("spark.graft.warehouse")
-    spark.conf.unset("spark.graft.warehouse")
+    val savedConf = spark.conf.getOption("spark.sql.catalog.graft.warehouse")
+    spark.conf.unset("spark.sql.catalog.graft.warehouse")
     try {
       spark.range(0, 100).selectExpr("id", "id % 5 AS grp", "CAST(id AS DOUBLE) AS v")
         .createOrReplaceTempView("rl_src")
@@ -508,8 +509,8 @@ class GraftSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
         .map(id => (id, id % 5, id.toDouble * 3))
       assert(got == (merged ++ inserted).toSet)
 
-      // and the SAME statements through the graft.* rule path agree
-      spark.conf.set("spark.graft.warehouse", whIce)
+      // and the SAME statements through graft.* names agree
+      spark.conf.set("spark.sql.catalog.graft.warehouse", whIce)
       spark.sql("CREATE TABLE graft.db.rl2 AS SELECT * FROM rl_src")
       spark.sql("UPDATE graft.db.rl2 SET v = v * 10 WHERE grp = 2")
       spark.sql("DELETE FROM graft.db.rl2 WHERE grp = 4")
@@ -521,20 +522,20 @@ class GraftSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       assert(viaRule == got)
     } finally {
-      spark.conf.unset("spark.graft.warehouse")
-      savedConf.foreach(spark.conf.set("spark.graft.warehouse", _))
+      spark.conf.unset("spark.sql.catalog.graft.warehouse")
+      savedConf.foreach(spark.conf.set("spark.sql.catalog.graft.warehouse", _))
     }
   }
 
   test("partition evolution DDL works on V2 catalog identifiers") {
     // the parser's grammar must reach catalog-addressed tables
     // (ice.db.t), resolving through THAT catalog's warehouse — not only
-    // graft.* names under spark.graft.warehouse
+    // graft.* names
     val whIce = java.nio.file.Files.createTempDirectory("whicepart").toString
     spark.conf.set("spark.sql.catalog.icepart", "graft.ice.connector.GraftCatalogPlugin")
     spark.conf.set("spark.sql.catalog.icepart.warehouse", whIce)
-    val savedConf = spark.conf.getOption("spark.graft.warehouse")
-    spark.conf.unset("spark.graft.warehouse")
+    val savedConf = spark.conf.getOption("spark.sql.catalog.graft.warehouse")
+    spark.conf.unset("spark.sql.catalog.graft.warehouse")
     try {
       spark.sql("CREATE TABLE icepart.db.pevo (id BIGINT, cat STRING, v BIGINT)")
       spark.sql("INSERT INTO icepart.db.pevo SELECT id, 'a', id FROM range(0, 50)")
@@ -546,7 +547,7 @@ class GraftSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(t2.metadata.defaultSpec.fields.isEmpty)
       assert(spark.table("icepart.db.pevo").count() == 50)
     } finally {
-      savedConf.foreach(spark.conf.set("spark.graft.warehouse", _))
+      savedConf.foreach(spark.conf.set("spark.sql.catalog.graft.warehouse", _))
     }
   }
 

@@ -256,6 +256,49 @@ class WriteOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(t.newScan().toDF(spark).count() == raw.count() + 2)
   }
 
+  test("mergeInto withMergeOnRead on a v3 table writes one deletion vector per data file") {
+    val (t0, raw) = freshTable("mrgmor3")
+    t0.upgradeFormatVersion(3)
+    val t = t0.refresh()
+    val dataFilesBefore = t.newScan().planFiles().map(_.file.filePath).toSet
+    def dvsPerFile(): Map[String, Seq[graft.ice.manifest.ManifestEntry]] = {
+      t.refresh()
+      val dels = t.planDeleteEntries(t.currentSnapshot.get)
+      assert(dels.nonEmpty && dels.forall(_.dataFile.fileFormat == "PUFFIN"),
+        s"delete formats: ${dels.map(_.dataFile.fileFormat)}")
+      val perFile = dels.groupBy(_.dataFile.referencedDataFile.get)
+      assert(perFile.values.forall(_.size == 1), "a data file has two deletion vectors")
+      perFile
+    }
+    def oracle(every: Int, price: Double) = raw.select(col("o_orderkey"),
+      when(col("o_orderkey") % every === 0, lit(price)).otherwise(col("o_totalprice")).as("p"))
+    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Boolean =
+      a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+    def got = t.newScan().toDF(spark).select(col("o_orderkey"), col("o_totalprice").as("p"))
+
+    t.merge(spark, raw.filter(col("o_orderkey") % 4 === 0).withColumn("o_totalprice", lit(11.25)),
+      Seq("o_orderkey")).whenMatchedUpdateAll().withMergeOnRead().commit()
+    val first = dvsPerFile()
+    assert(dataFilesBefore.subsetOf(t.newScan().planFiles().map(_.file.filePath).toSet))
+    assert(same(got, oracle(4, 11.25)))
+
+    // the same keys and more: the original files' new vectors supersede
+    // (and contain) the first ones; the rows the first merge re-added get
+    // vectors of their own
+    t.merge(spark, raw.filter(col("o_orderkey") % 2 === 0).withColumn("o_totalprice", lit(99.75)),
+      Seq("o_orderkey")).whenMatchedUpdateAll().withMergeOnRead().commit()
+    val second = dvsPerFile()
+    val firstPaths = first.values.flatten.map(e => (e.dataFile.filePath, e.dataFile.contentOffset)).toSet
+    assert(second.values.flatten.forall(e =>
+      !firstPaths.contains((e.dataFile.filePath, e.dataFile.contentOffset))),
+      "the second merge must supersede the first vectors")
+    first.foreach { case (file, Seq(dv)) =>
+      assert(second(file).head.dataFile.recordCount > dv.dataFile.recordCount) }
+    assert(t.currentSnapshot.get.summary.get("replaced-deletion-vectors")
+      .contains(first.size.toString))
+    assert(same(got, oracle(2, 99.75)))
+  }
+
   test("rewritePositionDeletes compacts delete files, data untouched") {
     val (t, raw) = freshTable("rpd")
     // three successive MoR merges -> three generations of delete files
